@@ -5,16 +5,20 @@
 #  - http (default): the JVM's own REST face (graft.search.HttpSearchServer)
 #    — the wire shape a reference client speaks (bin/search.py issues
 #    GET /<bucket>?search=<urlencoded where> and reads a JSON array;
-#    POST /search takes the line-protocol JSON object). All requests
-#    serialize onto the warm session inside the JVM; no sidecar needed.
+#    POST /search takes the line-protocol JSON object). Requests run on a
+#    pool of one handler thread per core over the warm session inside the
+#    JVM; no sidecar needed.
 #  - line: the stdin/stdout-JSONL protocol fronted by socat — one request
 #    line per connection, answered with one response line, connections
 #    serialized on a lock (kept for gateways that already speak it).
 #
 # Either way all connections multiplex onto the same warm process, so the
-# per-bucket snapshot cache amortizes across every client — the reference
-# achieves the same with Livy fronting its resident MetadataQueryExecutor
-# (clueso-docker-livy/entrypoint.sh).
+# per-bucket snapshot cache amortizes across every client: each bucket's
+# snapshot is written once to parquet and cached as a plain scan, a warm
+# search is one Spark stage over it, and a superseded snapshot is dropped
+# only after spark.graft.derived.purgeGraceMs so running requests finish
+# on it. The reference achieves the same with Livy fronting its resident
+# MetadataQueryExecutor (clueso-docker-livy/entrypoint.sh).
 #
 # Port 8998 is Livy's default — kept so a reference deployment's gateway
 # config ports over unchanged.

@@ -19,7 +19,9 @@ fi
 out="${SPARK_GRAFT_BENCH_OUT:-bench-out.json}"
 # Bench's own stdout (the same JSON) is routed to stderr so the file's
 # content is printed exactly once on stdout, as the last line.
+# A crashed run must not re-emit an earlier run's file as its result.
+rm -f "$out"
 scripts/run_main.sh graft.Bench 1>&2
 rc=$?
-[ -f "$out" ] && cat "$out"
+[ "$rc" -eq 0 ] && [ -f "$out" ] && cat "$out"
 exit $rc

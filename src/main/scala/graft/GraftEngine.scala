@@ -44,12 +44,14 @@ class GraftEngine(spark: SparkSession, val config: GraftConfig) {
     else df
   }
 
-  /** Search against the TTL-cached materialized snapshot of the bucket —
+  /** Search against the cached parquet-backed snapshot of the bucket —
     * the hot-bucket path (reference: SessionCacheManager): repeated
-    * searches reuse one persisted merge until the TTL lapses.
+    * searches reuse one materialized merge until the TTL lapses or a
+    * compaction stamps a new epoch (the same path as
+    * [[graft.search.SearchServer]]).
     */
   def searchCached(q: SearchQuery): DataFrame =
-    searcher.searchSnapshot(cache.get(q.bucket)(searcher.bucketSnapshot(q.bucket)), q)
+    searcher.searchSnapshot(searcher.cachedSnapshot(cache, q.bucket), q)
 
   /** S3 ListObjectsV2 page over the live snapshot (delimiter rollup +
     * leaf objects; see [[MetadataSearch.listObjects]]). */
@@ -128,11 +130,10 @@ class GraftEngine(spark: SparkSession, val config: GraftConfig) {
 
   /** Fold closed landing op-groups into staging for all buckets; returns
     * per-bucket failures (empty when everything compacted). */
-  def compact(numPartitions: Int, force: Boolean = false): Map[String, Throwable] = {
-    val failures = compactor.compactAll(numPartitions, force)
-    cache.clear() // snapshots may now read stale landing paths
-    failures
-  }
+  def compact(numPartitions: Int, force: Boolean = false): Map[String, Throwable] =
+    // each compacted bucket stamps a new epoch, which retires its cached
+    // snapshot on the next searchCached
+    compactor.compactAll(numPartitions, force)
 }
 
 object GraftEngine {

@@ -232,9 +232,10 @@ object Dedup {
       //    now known before the first job. Still data-proportional,
       //    still capped at 2048, still floored at the session width.
       //  - (na, nb) ride the pair exchange PACKED: one long per side
-      //    (`doc_id·2³² + n`) instead of two — 24-byte pair rows instead
-      //    of 40 — whenever the dataset's doc ids fit 31 bits (verified
-      //    per build; the unpacked shape remains the fallback). The
+      //    (`doc_id·2²⁰ + n`, see DnRadix) instead of two — 24-byte pair
+      //    rows instead of 40 — whenever 0 ≤ doc_id < Long.MaxValue/2²⁰
+      //    and every capped size n < 2²⁰ (verified per build; the
+      //    unpacked shape remains the fallback). The
       //    shard-pass sizing uses the packed bytes/pair constant, so the
       //    same scratch budget needs 3 passes instead of 4 at ×1000
       //    (each pass re-probes the full posting list — fewer passes is

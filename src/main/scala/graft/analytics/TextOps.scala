@@ -410,7 +410,10 @@ object TextOps {
       // old build exchanged the RAW token stream to aggregate tf —
       // 270.7M (doc, term) rows and 110 s of the 186 s ×1000 build. The
       // per-doc term counts are computable in-row (graft_term_counts,
-      // identical counts by construction, spec-pinned), so tf now
+      // identical counts by construction, spec-pinned — PRECONDITION:
+      // doc_id is unique in documents.parquet; a duplicated doc_id row
+      // would emit its tf rows twice and count the doc twice in df,
+      // where the old groupBy(doc_id, term) folded them), so tf now
       // emerges MAP-SIDE from one compiled pass; the one exchange left
       // clusters the already-aggregated tf rows (116M at ×1000) by term,
       // and both df (count over the term partition — a window, so the

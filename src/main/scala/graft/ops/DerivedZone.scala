@@ -297,7 +297,7 @@ private[graft] object DerivedZone {
     * into a FileNotFound in the reader, so superseded zones are kept for a
     * grace window first — the same tolerance pattern the compactor applies
     * to replaced source files (see Compactor purge tolerance). */
-  private[ops] def purgeGraceMs(spark: SparkSession): Long =
+  private[graft] def purgeGraceMs(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.derived.purgeGraceMs").flatMap { v =>
       // a malformed tuning value must degrade to the default, not fail the
       // query from inside get()/publish

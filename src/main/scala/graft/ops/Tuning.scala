@@ -55,7 +55,8 @@ object Tuning {
   val PairScratchBytesPerPair: Long = 96L
 
   /** [[PairScratchBytesPerPair]] for the round-16 PACKED pair rows: the
-    * pair shuffle now carries 2 longs (`(doc<<32|n)` per side, 24-byte
+    * pair shuffle now carries 2 longs (`doc_id·2²⁰ + n` per side, ids
+    * bounded by `Long.MaxValue / 2²⁰`; 24-byte
     * UnsafeRows) instead of 4 (40 bytes) — 0.6× the measured 96 B/pair
     * high-water is 57.6, rounded up to 64 for margin (the constant is a
     * high-water bound, so rounding must go up). Verified at ×1000: the

@@ -12,9 +12,10 @@ import org.apache.spark.sql.SparkSession
   * are separate JVMs with no channel between them, so the coupling rides
   * the zone itself: [[graft.compact.Compactor]] stamps a fresh epoch under
   * `bucket=<b>/` after every successful compaction, and
-  * [[graft.search.SearchServer]] revalidates its cached snapshot's epoch
-  * before serving — a changed epoch drops the snapshot and rebuilds exactly
-  * once, with no explicit invalidate round-trip needed.
+  * [[graft.search.SessionCache]] revalidates the cached snapshot's epoch
+  * on every [[graft.search.SearchServer]] request — a changed epoch swaps
+  * in a rebuilt snapshot exactly once, with no explicit invalidate
+  * round-trip needed.
   *
   * The marker is one `_`-prefixed file (hidden to Spark's file index, so it
   * never pollutes zone scans); reading it is a metadata-sized operation —

@@ -1,7 +1,7 @@
 package graft.search
 
 import graft.model.ObjectEvent
-import graft.ops.LatestState
+import graft.ops.{LatestState, ZoneEpoch}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -86,6 +86,14 @@ class MetadataSearch(spark: SparkSession, landingDir: String, stagingDir: String
   }
 
   def search(q: SearchQuery): DataFrame = searchSnapshot(bucketSnapshot(q.bucket), q)
+
+  /** The bucket's snapshot from `cache`: built once per compaction epoch
+    * (and TTL), revalidated against the zone's epoch marker on every call
+    * — the one warm path [[SearchServer]] and
+    * [[graft.GraftEngine.searchCached]] share.
+    */
+  def cachedSnapshot(cache: SessionCache, bucket: String): DataFrame =
+    cache.get(bucket, ZoneEpoch.read(spark, stagingDir, bucket))(bucketSnapshot(bucket))
 
   /** Apply the WHERE / cursor / projection / page stages to an
     * already-built snapshot (lets callers search a cached snapshot —
@@ -184,6 +192,25 @@ class MetadataSearch(spark: SparkSession, landingDir: String, stagingDir: String
     */
   def searchJson(q: SearchQuery): Array[String] =
     org.apache.spark.graft.metrics.SearchMetricsSource.recordSearch {
-      search(q).toJSON.collect()
+      MetadataSearch.jsonRows(search(q))
     }
+}
+
+object MetadataSearch {
+
+  /** Collect a page as one JSON object per row, rendered inside the page's
+    * own plan: `to_json(struct(<every column>))` over `ORDER BY … LIMIT n`
+    * plans as ONE TakeOrderedAndProject (per-partition top-n, merged on the
+    * driver), where `Dataset.toJSON` runs the page through the RDD path
+    * and adds a single-partition shuffle and a second stage. The text is
+    * byte-identical to `toJSON` (same generator and session options;
+    * spec-pinned).
+    */
+  def jsonRows(page: DataFrame): Array[String] =
+    jsonPage(page).collect().map(_.getString(0))
+
+  /** The plan [[jsonRows]] collects: one string column per row. */
+  private[graft] def jsonPage(page: DataFrame): DataFrame =
+    page.select(to_json(struct(page.columns.toIndexedSeq.map(c =>
+      col("`" + c.replace("`", "``") + "`")): _*)))
 }

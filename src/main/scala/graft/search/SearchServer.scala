@@ -2,7 +2,7 @@ package graft.search
 
 import java.io.{BufferedReader, InputStreamReader, PrintWriter}
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
+import java.util.concurrent.atomic.AtomicBoolean
 
 import org.apache.spark.graft.metrics.SearchMetricsSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -17,9 +17,18 @@ import org.json4s.jackson.JsonMethods
   * gateway as a single JSON-array line over stdout (the reference's
   * `executeAndPrint` contract, :57-60). The point of the mode is
   * amortization: the first query on a bucket pays the landing∪staging
-  * snapshot merge + persist; every later query on that bucket (until TTL
-  * or an explicit invalidation after compaction) plans against the
-  * already-materialized snapshot — no re-scan, no re-merge.
+  * snapshot merge, its one parquet write and the cached read-back
+  * ([[SessionCache]]); every later query on that bucket (until TTL, a new
+  * compaction epoch or an explicit invalidation) is one Spark stage over
+  * the cached scan — no re-scan, no re-merge, and the JSON page rendered
+  * inside the plan ([[MetadataSearch.jsonRows]]). A superseded snapshot
+  * is dropped only after the zone purge grace
+  * (`spark.graft.derived.purgeGraceMs`), so requests still running on it
+  * finish.
+  *
+  * Concurrency: [[handle]] is safe to call from many threads —
+  * [[HttpSearchServer]] runs a pool of them; the stdin line protocol
+  * ([[serve]]) answers one line at a time.
   *
   * Request protocol (one JSON object per line on stdin):
   *  - `{"bucket":"b","where":"<sql>","startKey":"k","limit":100}` →
@@ -46,16 +55,11 @@ class SearchServer(spark: SparkSession, landingDir: String, stagingDir: String,
 
   val searcher = new MetadataSearch(spark, landingDir, stagingDir)
   private val cache = new SessionCache(cacheTtlMillis)
-  private val rebuilds = new AtomicLong(0L)
-  // compaction epoch each cached snapshot was built at — revalidated per
-  // request so a compactor in ANOTHER process invalidates this server's
-  // cache just by finishing (see graft.ops.ZoneEpoch)
-  private val epochs = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Cache-miss snapshot builds since start. A warm second query on a
     * bucket must NOT move this — the spec's no-re-scan assertion.
     */
-  def snapshotRebuilds: Long = rebuilds.get()
+  def snapshotRebuilds: Long = cache.rebuilds
 
   // The reference keeps a background thread re-registering RDD gauges
   // with the metrics system while the executor is resident
@@ -77,32 +81,20 @@ class SearchServer(spark: SparkSession, landingDir: String, stagingDir: String,
       Some(t)
     }
 
-  private def snapshot(bucket: String): DataFrame = {
-    // one metadata-sized read per request: a compaction that completed
-    // since this bucket's snapshot was cached changes the epoch, and the
-    // stale snapshot is dropped HERE — compactor completion drives the
-    // invalidation, no explicit invalidate round-trip required
-    val epoch = graft.ops.ZoneEpoch.read(spark, stagingDir, bucket)
-    if (epochs.getOrDefault(bucket, "") != epoch) cache.invalidate(bucket)
-    cache.get(bucket) {
-      rebuilds.incrementAndGet()
-      epochs.put(bucket, epoch)
-      searcher.bucketSnapshot(bucket)
-    }
-  }
-
   /** Plan one search against the warm snapshot (reference `execute`,
     * MetadataQueryExecutor.scala:62-95, with cache delegation :42-50).
     */
   def execute(q: SearchQuery): DataFrame =
-    searcher.searchSnapshot(snapshot(q.bucket), q)
+    searcher.searchSnapshot(searcher.cachedSnapshot(cache, q.bucket), q)
 
   /** Materialize one search as the reference's stdout contract: a single
-    * JSON-array line (`executeAndPrint`, MetadataQueryExecutor.scala:57-60).
-    * Latency/rows/failures land in the `graft.search` metrics source.
+    * JSON-array line (`executeAndPrint`, MetadataQueryExecutor.scala:57-60),
+    * rendered inside the page plan ([[MetadataSearch.jsonRows]]: one stage,
+    * no shuffle). Latency/rows/failures land in the `graft.search` metrics
+    * source.
     */
   def executeJson(q: SearchQuery): String =
-    "[" + SearchMetricsSource.recordSearch(execute(q).toJSON.collect())
+    "[" + SearchMetricsSource.recordSearch(MetadataSearch.jsonRows(execute(q)))
       .mkString(",") + "]"
 
   /** Drop a bucket's cached snapshot (compaction rewrote its zones). */
@@ -178,7 +170,7 @@ class SearchServer(spark: SparkSession, landingDir: String, stagingDir: String,
   override def close(): Unit = {
     metricsCancel.set(true)
     metricsThread.foreach(_.interrupt())
-    cache.clear()
+    cache.close()
   }
 }
 
@@ -197,16 +189,20 @@ class SearchServer(spark: SparkSession, landingDir: String, stagingDir: String,
   *  - `GET /metrics` — the `graft.search` counters
   *  - `POST /invalidate?bucket=<b>` — drop a bucket's snapshot
   *
-  * Requests serialize onto one handler thread — the backend is one warm
-  * session and the snapshot cache is what makes serialized answers fast,
-  * exactly like the socat gateway's flock (docker/images/server).
+  * Requests run on a fixed pool of `availableProcessors` handler threads
+  * over the one warm session: each search is a one-stage scan of the
+  * bucket's parquet-backed cached snapshot, so concurrent requests
+  * overlap their planning and scheduling instead of queueing behind one
+  * another. A snapshot rebuild blocks only requests on that bucket, and
+  * the snapshot it replaces is dropped after the purge grace.
   */
 class HttpSearchServer(server: SearchServer, port: Int = 0)
     extends AutoCloseable {
   import com.sun.net.httpserver.{HttpExchange, HttpServer => JdkHttp}
 
   private val http = JdkHttp.create(new java.net.InetSocketAddress(port), 0)
-  private val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+  private val pool = java.util.concurrent.Executors.newFixedThreadPool(
+    Runtime.getRuntime.availableProcessors)
   @volatile private var stopRequested = false
 
   private def queryParams(ex: HttpExchange): Map[String, String] =

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.search.{MetadataSearch, SearchQuery, SessionCache}
+import graft.search.{MetadataSearch, SearchQuery}
 import org.apache.spark.sql.SparkSession
 
 /** CLI search entrypoint

@@ -342,6 +342,86 @@ class SessionCacheSpec extends AnyFunSuite {
     assert(cache.get("slow-bucket")(fail("must be cached")).count() == 1)
     cache.clear()
   }
+
+  private def snapshotDirs(): Set[java.io.File] =
+    Option(new java.io.File(graft.ops.DerivedZone.root(spark), "search-snapshot").listFiles)
+      .map(_.toSet).getOrElse(Set.empty)
+
+  /** Run a cache call that builds, returning the frame and its new directory. */
+  private def built(get: => org.apache.spark.sql.DataFrame)
+      : (org.apache.spark.sql.DataFrame, java.io.File) = {
+    val before = snapshotDirs()
+    val df = get
+    val added = snapshotDirs() -- before
+    assert(added.size == 1, s"one snapshot directory per build: $added")
+    (df, added.head)
+  }
+
+  test("a superseded snapshot is dropped after the purge grace; clear drops everything now") {
+    spark.conf.set("spark.graft.derived.purgeGraceMs", "1000")
+    val cache = new SessionCache(ttlMillis = 600000)
+    try {
+      val (d1, dir1) = built(cache.get("g", "e1")(Seq((1, "x")).toDF("id", "v")))
+      // a new epoch swaps in a new snapshot; the old one outlives the swap
+      val (d2, dir2) = built(cache.get("g", "e2")(Seq((2, "y")).toDF("id", "v")))
+      assert(cache.rebuilds == 2 && (cache.get("g", "e2")(fail("cached")) eq d2))
+      assert(d1.storageLevel.useMemory && dir1.isDirectory,
+        "a request still running on the old snapshot keeps its files")
+      assert(d1.as[(Int, String)].collect().toSeq == Seq((1, "x")))
+      val deadline = System.currentTimeMillis() + 30000L
+      while (dir1.exists && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(!dir1.exists, "superseded snapshot files outlived the grace")
+      assert(!d1.storageLevel.useMemory, "superseded snapshot still persisted")
+
+      // invalidate retires with the same grace; clear() drops it at once
+      cache.invalidate("g")
+      assert(d2.storageLevel.useMemory && dir2.isDirectory)
+      val (d3, dir3) = built(cache.get("g", "e2")(Seq((3, "z")).toDF("id", "v")))
+      cache.clear()
+      assert(!dir2.exists && !dir3.exists)
+      assert(!d2.storageLevel.useMemory && !d3.storageLevel.useMemory)
+    } finally {
+      cache.close()
+      spark.conf.unset("spark.graft.derived.purgeGraceMs")
+    }
+  }
+
+  test("8 threads across an epoch change build exactly once per (bucket, epoch)") {
+    val cache = new SessionCache(ttlMillis = 600000)
+    val epochs = Map("a" -> new java.util.concurrent.atomic.AtomicReference("a0"),
+      "b" -> new java.util.concurrent.atomic.AtomicReference("b0"),
+      "c" -> new java.util.concurrent.atomic.AtomicReference("c0"))
+    val builds = new java.util.concurrent.ConcurrentHashMap[(String, String), Int]()
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    try {
+      val threads = (0 until 8).map { t =>
+        val th = new Thread(() =>
+          try (0 until 60).foreach { i =>
+            val b = Seq("a", "b", "c")((t + i) % 3)
+            val df = cache.get(b, epochs(b).get) {
+              builds.merge((b, epochs(b).get), 1, _ + _)
+              Thread.sleep(30) // widen the window a second stale reader could race into
+              Seq((b, epochs(b).get)).toDF("bucket", "epoch")
+            }
+            assert(df.as[(String, String)].head()._1 == b)
+            if (calls.incrementAndGet() == 120) epochs("b").set("b1")
+          } catch { case e: Throwable => errors.add(e) })
+        th.start()
+        th
+      }
+      threads.foreach(_.join(120000L))
+      assert(errors.isEmpty, errors)
+      assert(builds.get(("b", "b1")) == 1)
+      assert(builds.values.stream.allMatch(_ == 1) && builds.size == 4, builds)
+      assert(cache.rebuilds == 4)
+      // a request that read the epoch before the change does not rebuild:
+      // the miss re-reads the epoch under the bucket lock
+      val reads = Iterator("b0", "b1")
+      cache.get("b", reads.next())(fail("a stale reader rebuilt the snapshot"))
+      assert(cache.rebuilds == 4)
+    } finally cache.close()
+  }
 }
 
 class SearchMetricsSpec extends AnyFunSuite {

@@ -1,9 +1,19 @@
 package graft
 
 import java.io.{BufferedReader, PrintWriter, StringReader, StringWriter}
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicIntegerArray}
 
-import graft.search.{SearchQuery, SearchServer}
+import graft.ingest.IngestPipeline
+import graft.search.{HttpSearchServer, MetadataSearch, SearchQuery, SearchServer}
 import graft.tools.Populator
+import org.apache.spark.sql.execution.{FileSourceScanExec, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.WindowExecBase
 import org.json4s.DefaultFormats
 import org.json4s.jackson.JsonMethods
 import org.scalatest.funsuite.AnyFunSuite
@@ -35,6 +45,20 @@ class SearchServerSpec extends AnyFunSuite {
 
   private def keysOf(jsonArrayLine: String): Seq[String] =
     JsonMethods.parse(jsonArrayLine).children.map(c => (c \ "key").extract[String])
+
+  private def request(port: Int, method: String, pathAndQuery: String,
+                      body: String = ""): (Int, String) = {
+    val conn = java.net.URI.create(s"http://127.0.0.1:$port$pathAndQuery").toURL
+      .openConnection().asInstanceOf[java.net.HttpURLConnection]
+    conn.setRequestMethod(method)
+    if (body.nonEmpty) {
+      conn.setDoOutput(true)
+      conn.getOutputStream.write(body.getBytes("UTF-8"))
+    }
+    val code = conn.getResponseCode
+    val is = if (code >= 400) conn.getErrorStream else conn.getInputStream
+    (code, new String(is.readAllBytes(), "UTF-8"))
+  }
 
   test("one warm session serves 12 mixed-bucket queries with one snapshot build per bucket") {
     val server = new SearchServer(spark, landing, staging, cacheTtlMillis = 600000L)
@@ -144,20 +168,8 @@ class SearchServerSpec extends AnyFunSuite {
     val server = new SearchServer(spark, landing, staging, cacheTtlMillis = 600000L)
     val http = new graft.search.HttpSearchServer(server, port = 0)
     try {
-      val base = s"http://127.0.0.1:${http.boundPort}"
       def fetch(method: String, pathAndQuery: String, body: String = "")
-          : (Int, String) = {
-        val conn = java.net.URI.create(base + pathAndQuery).toURL
-          .openConnection().asInstanceOf[java.net.HttpURLConnection]
-        conn.setRequestMethod(method)
-        if (body.nonEmpty) {
-          conn.setDoOutput(true)
-          conn.getOutputStream.write(body.getBytes("UTF-8"))
-        }
-        val code = conn.getResponseCode
-        val is = if (code >= 400) conn.getErrorStream else conn.getInputStream
-        (code, new String(is.readAllBytes(), "UTF-8"))
-      }
+          : (Int, String) = request(http.boundPort, method, pathAndQuery, body)
       // the reference client's exact shape (bin/search.py):
       // GET /<bucket>?search=<urlencoded where>[&limit] -> JSON array
       val where = java.net.URLEncoder.encode(
@@ -208,5 +220,129 @@ class SearchServerSpec extends AnyFunSuite {
         "warm queries add no new persisted snapshot")
       assert(server.snapshotRebuilds == 1)
     } finally server.close()
+  }
+
+  test("the JSON page is byte-identical to Dataset.toJSON: nulls, maps, arrays, timestamps, odd keys") {
+    val l = SparkTestSession.tempDir("srv-json-landing")
+    val s = SparkTestSession.tempDir("srv-json-staging")
+    def esc(k: String): String = k.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => "\\u%04x".format(c.toInt)
+      case c => c.toString
+    }
+    def env(op: Int, key: String, value: String) =
+      s"""{"opIndex":"${"%012d".format(op)}_0","type":"put","bucket":"jb","key":"${esc(key)}","value":$value}"""
+    val full = """{"owner-id":"o-1","owner-display-name":"Ann","content-length":42,""" +
+      """"last-modified":"2024-03-05T06:07:08.123Z","content-md5":"abc",""" +
+      """"x-amz-storage-class":"STANDARD","x-amz-meta-color":"blüe\u0007",""" +
+      """"location":[{"key":"loc1","size":42,"start":0,"dataStoreName":"file"}]}"""
+    val oddKeys = Seq("ключ-日本-é", "ctl\u0001x\u001fy\tz\"q\\b", "emoji-\ud83d\ude00")
+    val lines = env(1, "plain", full) +: env(2, "nulls", "{}") +:
+      oddKeys.zipWithIndex.map { case (k, i) => env(3 + i, k, full) }
+    IngestPipeline.batchIngest(spark, lines.toDF("value"), l, groupInterval = 100L)
+    val server = new SearchServer(spark, l, s, cacheTtlMillis = 600000L)
+    try {
+      val q = SearchQuery("jb")
+      val page = server.executeJson(q)
+      val viaToJson = "[" + server.execute(q).toJSON.collect().mkString(",") + "]"
+      assert(page == viaToJson)
+      assert(keysOf(page).toSet == (Seq("plain", "nulls") ++ oddKeys).toSet)
+      assert(page.contains("\\u0001") && page.contains("日本"),
+        "the fixture carries control and non-ASCII characters")
+      assert(page.contains("\"last-modified\":\"2024-03-05T06:07:08.123Z\""))
+      assert(JsonMethods.parse(page).children.exists(r => (r \ "owner-id") == org.json4s.JNothing),
+        "null fields are omitted, as toJSON omits them")
+      // every payload column, the userMd map and the location array included
+      val wide = server.searcher.bucketSnapshot("jb").orderBy("key")
+      val wideRows = MetadataSearch.jsonRows(wide)
+      assert(wideRows.toSeq == wide.toJSON.collect().toSeq)
+      assert(wideRows.exists(r => r.contains("\"userMd\":{\"x-amz-meta-color\"") &&
+        r.contains("\"location\":[{\"key\":\"loc1\"")))
+    } finally server.close()
+  }
+
+  test("a warm page is one stage: TakeOrderedAndProject over a parquet-backed cached scan") {
+    val server = new SearchServer(spark, landing, staging, cacheTtlMillis = 600000L)
+    try {
+      serve(server, Seq("""{"bucket":"sb1","limit":1}"""))
+      val q = SearchQuery("sb1", where = "`content-length` < 1024",
+        startKey = Some("obj_0000000003"), limit = 5)
+      val plan = MetadataSearch.jsonPage(server.execute(q)).queryExecution.executedPlan
+      assert(plan.isInstanceOf[TakeOrderedAndProjectExec], plan.treeString)
+      assert(plan.collect { case e: Exchange => e }.isEmpty, plan.treeString)
+      val cached = plan.collect { case m: InMemoryTableScanExec => m.relation.cachedPlan }
+      assert(cached.size == 1, plan.treeString)
+      val nodes = cached.head.collect { case p => p }
+      assert(nodes.exists {
+        case f: FileSourceScanExec => f.relation.fileFormat.isInstanceOf[ParquetFileFormat]
+        case _ => false
+      }, cached.head.treeString)
+      assert(!nodes.exists(p => p.isInstanceOf[WindowExecBase] ||
+        p.isInstanceOf[BaseAggregateExec] || p.isInstanceOf[BaseJoinExec] ||
+        p.isInstanceOf[Exchange]), cached.head.treeString)
+      assert(server.snapshotRebuilds == 1)
+    } finally server.close()
+  }
+
+  test("8 concurrent clients over 3 buckets across a compaction: one rebuild per (bucket, epoch)") {
+    val l = SparkTestSession.tempDir("srv-conc-landing")
+    val s = SparkTestSession.tempDir("srv-conc-staging")
+    val buckets = Seq("cb0", "cb1", "cb2")
+    buckets.foreach(b => Populator.populateLanding(spark, l, b, 60, groupInterval = 20L))
+    val pizza = """ userMd.`x-amz-meta-food` = 'pizza' """
+    val requests = for {
+      b <- buckets
+      r <- Seq(s"""{"bucket":"$b"}""", s"""{"bucket":"$b","limit":7}""",
+        s"""{"bucket":"$b","where":"$pizza"}""",
+        s"""{"bucket":"$b","startKey":"obj_0000000009","limit":11}""",
+        s"""{"bucket":"$b","where":"`content-length` < 1024","limit":13}""")
+    } yield r
+    val serial = {
+      val ref = new SearchServer(spark, l, s, cacheTtlMillis = 600000L)
+      try requests.map(r => ref.handle(r)._1) finally ref.close()
+    }
+    assert(serial.forall(_.startsWith("[")), serial)
+
+    val server = new SearchServer(spark, l, s, cacheTtlMillis = 600000L)
+    val http = new HttpSearchServer(server, port = 0)
+    val perBucket = new AtomicIntegerArray(buckets.size)
+    val compacted = new AtomicBoolean(false)
+    val afterCompaction = new AtomicInteger(0)
+    val errors = new ConcurrentLinkedQueue[String]()
+    try {
+      val threads = (0 until 8).map { t =>
+        val th = new Thread(() =>
+          try {
+            var i = t
+            while (afterCompaction.get < 3 * requests.size) {
+              val k = i % requests.size
+              val (code, body) = request(http.boundPort, "POST", "/search", requests(k))
+              if (code != 200 || body != serial(k)) errors.add(s"${requests(k)} -> $code $body")
+              perBucket.incrementAndGet(k / 5)
+              if (compacted.get) afterCompaction.incrementAndGet()
+              i += 1
+            }
+          } catch { case e: Throwable => errors.add(e.toString); afterCompaction.set(Int.MaxValue) })
+        th.start()
+        th
+      }
+      // every bucket answered from its first snapshot before the compactor runs
+      val deadline = System.currentTimeMillis() + 120000L
+      while ((0 until buckets.size).exists(perBucket.get(_) == 0) &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(server.snapshotRebuilds == 3)
+      new graft.compact.Compactor(spark, l, s).compactBucket("cb1", numPartitions = 2)
+      compacted.set(true)
+      threads.foreach(_.join(180000L))
+      assert(errors.isEmpty, errors.toArray.take(3).mkString("\n"))
+      assert(!threads.exists(_.isAlive), "clients did not finish")
+      // three first builds plus exactly one for cb1's new epoch
+      assert(server.snapshotRebuilds == 4, s"rebuilds: ${server.snapshotRebuilds}")
+    } finally {
+      afterCompaction.set(Int.MaxValue)
+      http.close()
+      server.close()
+    }
   }
 }
