@@ -52,7 +52,7 @@ object Bench {
   /** Total bytes of data files under `dir` (driver-side walk, no
     * session needed — the width must be known before the session
     * starts). Hidden/underscore marker files are skipped, matching
-    * [[graft.ops.SessionMemo.listEntries]]. */
+    * [[graft.ops.DerivedZone.listEntries]]. */
   def dirBytes(dir: String): Long = {
     val root = java.nio.file.Paths.get(dir)
     if (!java.nio.file.Files.isDirectory(root)) 0L
@@ -159,8 +159,8 @@ object Bench {
       // then competes with the NEXT timed query for storage/execution
       // memory (measured: mvcc_snapshot 2.3 s clean vs 8-30 s right
       // after checkpoint-heavy neighbors). Poll the persistent-RDD count
-      // until it stops shrinking; session-memoized stages legitimately
-      // remain (they are still referenced).
+      // until it stops shrinking; RDDs a live frame still references
+      // legitimately remain.
       spark.catalog.clearCache()
       System.gc()
       var last = Int.MaxValue
@@ -193,7 +193,7 @@ object Bench {
     val qs = results.map { case (k, v, _, _, _, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // every rep's wall time, in order — the min is the headline, but a
-    // memoized query's first run carries its one-time stage build; the
+    // zone-backed query's first run carries its one-time zone build; the
     // full list keeps that cost auditable instead of vanishing into min()
     val runsJ = results.map { case (k, _, rs, _, _, _) =>
       s"\"" + k + "\":" + rs.mkString("[", ",", "]") }

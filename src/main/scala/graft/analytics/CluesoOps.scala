@@ -82,16 +82,9 @@ object CluesoOps {
   private val maxIdMemo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, Long)]()
 
-  /** Eviction hatch for long-lived multi-session processes (mirrors
-    * [[graft.analytics.Dedup.clearMemos]]); stopped sessions' entries are
-    * additionally purged automatically on every memo access. */
-  def clearMemos(): Unit = {
-    maxIdMemo.clear(); snapKeysMemo.clear()
-  }
-
   private def maxOpId(spark: SparkSession, dir: String): Long = {
     maxIdMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    val fp = graft.ops.SessionMemo.fingerprint(spark, Seq(s"$dir/events.parquet"))
+    val fp = graft.ops.DerivedZone.fingerprint(spark, Seq(s"$dir/events.parquet"))
     maxIdMemo.compute((spark, dir), (_, cur) =>
       if (cur != null && cur._1 == fp) cur
       else {
@@ -374,18 +367,11 @@ object CluesoOps {
     * task), and the drill-down predicate is a prefix range the scan can
     * serve; neither pass sorts the full keyspace.
     */
-  private val snapKeysMemo = new graft.ops.SessionMemo(Seq("events.parquet"))
-
   def listObjects(spark: SparkSession, dir: String): DataFrame = {
-    // two consumers (rollup + drill-down) — materialize the merged key
-    // list once instead of running the MVCC merge twice; the checkpoint
-    // is one slim column of the snapshot's keys. SESSION-MEMOIZED (the
-    // importantParts pattern) so repeated listings in one session reuse
-    // the materialization and both query faces share ONE plan (the SQL
-    // face asserts full plan identity); revalidated against the events
-    // table's on-disk fingerprint, so a rewrite rebuilds automatically.
-    val snap = snapKeysMemo.get(spark, dir)(
-      mvccSnapshotCore(spark, dir).select("object_key").localCheckpoint())
+    // two consumers (rollup + drill-down) over the published
+    // bucket_snapshot zone: the MVCC merge already ran once per dataset,
+    // so each consumer is a slim one-column parquet scan
+    val snap = mvccSnapshotCore(spark, dir).select("object_key")
     val prefixes = snap
       .select(concat(substring_index(col("object_key"), ":", 1), lit(":")).as("name"))
       .groupBy("name").agg(count(lit(1)).as("n_keys"))

@@ -244,7 +244,7 @@ object Dedup {
       // containment ≥ jaccard always, so containment ≥ 0.5 is a superset
       // of jaccard ≥ 0.5 and containment ≥ 0.8. The filtered near-dup
       // table is the small artifact the zone publishes.
-      val docBytes = graft.ops.SessionMemo.dataBytes(spark,
+      val docBytes = graft.ops.DerivedZone.dataBytes(spark,
         Seq(s"$dir/documents.parquet"))
       val parts = math.max(spark.sessionState.conf.numShufflePartitions,
         math.min(2048, (docBytes / (4L << 20)).toInt + 1))
@@ -443,16 +443,17 @@ object Dedup {
   private[graft] val pairsMemo =
     new graft.ops.DerivedZone("dedup_minhash_pairs", Seq("documents.parquet"))
 
-  /** Drop every session memo (confirmed pairs, cluster labels, shingle
-    * intersection counts). Staleness is handled automatically — each
-    * access revalidates against the input table's on-disk fingerprint —
-    * so this is only the eviction hatch for long-lived multi-session
-    * processes (the maps hold strong references to their sessions'
-    * frames until cleared).
+  /** Drop every zone's in-memory entries (confirmed pairs, cluster
+    * labels, shingle intersection counts, LSH candidates); the next
+    * access serves the published files. Staleness is handled
+    * automatically — each access revalidates against the input table's
+    * on-disk fingerprint — so this is only the eviction hatch for
+    * long-lived multi-session processes (the maps hold strong references
+    * to their sessions' frames until cleared).
     */
   def clearMemos(): Unit = {
     pairsMemo.clear(); labelsMemo.clear(); sharedMemo.clear()
-    simhashMemo.clear(); semanticLabelsMemo.clear(); lshCandMemo.clear()
+    simhashMemo.clear(); semanticLabelsMemo.clear(); lshCandZone.clear()
   }
 
   /** SimHash near-dup pairs, persisted once per DATASET like the MinHash
@@ -493,7 +494,7 @@ object Dedup {
   private def minhashConfirm(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     // short-lived shingle checkpoint — see the sharedCounts note on why
-    // the corpus-sized stage is not held in the session memo
+    // the corpus-sized stage is not published
     val sh = shingled(spark, dir).localCheckpoint()
     val cand = lshCandidates(sh)
     val withSets = cand
@@ -542,6 +543,12 @@ object Dedup {
       |ORDER BY a_id, b_id""".stripMargin
 
   // ------------------------------------------- #134 LSH banding recall
+  /** The banding's raw candidate pair list, published once per dataset
+    * ([[graft.ops.DerivedZone]], pairs-sized): both query faces scan the
+    * same zone files, so they plan identically. */
+  private[graft] val lshCandZone =
+    new graft.ops.DerivedZone("dedup_lsh_candidates", Seq("documents.parquet"))
+
   /** #134 dedup_lsh_quality: the measured S-curve of the MinHash banding —
     * per 0.05-wide Jaccard band of the exact near-dup ground truth (the
     * [[dedupNgramJaccard]] pair frame, df-capped sets, j ≥ 0.5), how many
@@ -564,24 +571,15 @@ object Dedup {
     * sets exactly as the production [[dedupMinhashLsh]] path does — the
     * measurement covers the shipped pipeline, not an idealized one.
     */
-  /** The banding's raw candidate pair list, session-memoized (the
-    * [[graft.ops.SessionMemo]] checkpoint-sharing rule: a NAKED
-    * localCheckpoint per call would give the Scala and SQL faces
-    * reference-distinct plans — both faces must serve ONE
-    * materialization). Pairs-sized, so the checkpoint is small. */
-  private[graft] val lshCandMemo =
-    new graft.ops.SessionMemo(Seq("documents.parquet"))
-
   def dedupLshQuality(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val truth = sharedCounts(spark, dir)
       .filter(col("shared") * 2 >= col("na") + col("nb") - col("shared"))
       .select(col("a_id"), col("b_id"),
         expr("shared * 20 div (na + nb - shared)").as("bucket"))
-    val cand = lshCandMemo.get(spark, dir) {
-      val sh = shingled(spark, dir).localCheckpoint()
-      lshCandidates(sh).localCheckpoint()
-    }.withColumn("hit", lit(1L))
+    val cand = lshCandZone.get(spark, dir)(
+      lshCandidates(shingled(spark, dir).localCheckpoint()))
+      .withColumn("hit", lit(1L))
     truth.join(cand, Seq("a_id", "b_id"), "left")
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_true"),

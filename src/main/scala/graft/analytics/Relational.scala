@@ -701,6 +701,13 @@ object Relational {
       |   OR (p_brand = 'Brand#5'  AND p_size BETWEEN 1 AND 35 AND qty_c BETWEEN 2000 AND 3000)""".stripMargin
 
   // ------------------------------- #81 min-cost supplier (Q2 shape)
+  /** The LARGE-part lineitems quoting their part's minimum unit price,
+    * `(l_partkey, l_suppkey, unit_c, p_partkey, p_name)` — published once
+    * per dataset ([[graft.ops.DerivedZone]]). */
+  private[graft] val minCostLinesZone =
+    new graft.ops.DerivedZone("min_cost_supplier_lines",
+      Seq("lineitem.parquet", "part.parquet"))
+
   /** TPC-H Q2 shape (adapted: this schema has no `partsupp`, so the
     * part↔supplier price relation is derived from observed lineitems):
     * for each LARGE-type part, the supplier(s) quoting its minimum unit
@@ -708,58 +715,37 @@ object Relational {
     * decorrelation pattern as Q2's correlated min(ps_supplycost).
     *
     * Scale shape: unit price is exact (cents·100 / qty_c, both longs →
-    * one double division); the argmax follows
-    * [[graft.ops.LatestState.snapshot]], tuned so the whole query costs
-    * ONE fact scan + ONE shuffle at any SF: the explicit hash repartition
-    * on `l_partkey` is the exchange the semi join needs anyway, and
-    * ReuseExchange serves the per-part MIN aggregate's input from the
-    * SAME shuffle files (sf10 final plan previously materialized a
-    * (partkey, unit) shuffle of the full slice that AQE's late broadcast
-    * demotion never consumed, plus a second fact scan for the aggregate —
-    * 25 s → this shape). The semi join keys on the partition key ALONE
+    * one double division); the argmin follows
+    * [[graft.ops.LatestState.snapshot]] and runs inside the
+    * [[minCostLinesZone]] build at ONE fact scan + ONE shuffle: the slim
+    * filtered slice is hash-repartitioned on `l_partkey` and materialized
+    * once, so the per-part MIN aggregate and the semi probe both read it
+    * with zero further exchanges (without the build-scoped cut the
+    * optimizer reorders the part join above the semi, the consumers'
+    * subtrees diverge, and the plan scans + shuffles the FULL fact twice —
+    * measured at sf10). The semi join keys on the partition key ALONE
     * with `unit_c <= min` as the residual (equivalent to equality, since
-    * the min is a lower bound), so neither side re-shuffles on a wider
-    * key; supplier joins hint-free (AQE broadcasts it while it fits,
-    * shuffles it at 100×).
+    * the min is a lower bound). The query reads the published winners and
+    * joins supplier hint-free (AQE broadcasts it while it fits, shuffles
+    * it at 100×).
     */
-  private val mcsSliceMemo =
-    new graft.ops.SessionMemo(Seq("lineitem.parquet", "part.parquet"))
-
-  /** Eviction hatch for long-lived multi-session processes (mirrors
-    * [[graft.analytics.Dedup.clearMemos]]); stopped sessions' entries are
-    * additionally purged automatically on every memo access. */
-  def clearMemos(): Unit = {
-    mcsSliceMemo.clear(); chainMemo.clear()
-  }
-
   def minCostSupplier(spark: SparkSession, dir: String): DataFrame = {
-    // materialize the slim filtered slice ONCE (the importantParts
-    // pattern): without it the optimizer reorders the part join above
-    // the semi, the two consumers' subtrees diverge, ReuseExchange
-    // can't fire, and the plan scans + shuffles the FULL fact twice
-    // (measured at sf10). The checkpoint keeps the l_partkey
-    // partitioning, so both the MIN aggregate and the semi probe read
-    // it with zero further exchanges. The checkpoint is SESSION-MEMOIZED
-    // (not zone-published — the slice is fact-sized, not a small derived
-    // artifact), which also gives the two faces of one session the SAME
-    // materialization: the query's plan is deterministic per session and
-    // the SQL face asserts full plan identity.
-    val lp = mcsSliceMemo.get(spark, dir) {
+    minCostLinesZone.get(spark, dir) {
       val p = Tables.part(spark, dir)
         .filter(col("p_type") === "LARGE").select("p_partkey", "p_name")
-      Tables.lineitem(spark, dir)
+      val lp = Tables.lineitem(spark, dir)
         .select(col("l_partkey"), col("l_suppkey"),
           round(cents(col("l_extendedprice")) * 100 / cents(col("l_quantity")), 0)
             .cast("long").as("unit_c"))
         .join(p, col("l_partkey") === col("p_partkey"))
         .repartition(col("l_partkey"))
         .localCheckpoint()
-    }
-    val minUnit = lp.groupBy(col("l_partkey").as("mk"))
-      .agg(min(col("unit_c")).as("min_unit_c"))
-    lp.join(minUnit,
+      val minUnit = lp.groupBy(col("l_partkey").as("mk"))
+        .agg(min(col("unit_c")).as("min_unit_c"))
+      lp.join(minUnit,
         col("l_partkey") === col("mk") && col("unit_c") <= col("min_unit_c"),
         "left_semi")
+    }
       .join(Tables.supplier(spark, dir), col("l_suppkey") === col("s_suppkey"))
       .select(col("p_partkey"), col("p_name"), col("s_suppkey"), col("s_name"),
         (col("unit_c") / 100.0).as("unit_price"))
@@ -1047,6 +1033,11 @@ object Relational {
       |ORDER BY n_name, acctbal DESC, c_custkey""".stripMargin
 
   // ------------------------------------------ #99 recursive CTE (4.x)
+  /** The reached `(c, depth)` set — one row per customer within 12
+    * levels — published once per dataset ([[graft.ops.DerivedZone]]). */
+  private[graft] val chainZone =
+    new graft.ops.DerivedZone("recursive_chain_reached", Seq("customer.parquet"))
+
   /** WITH RECURSIVE on the SQL surface (new in Spark 4) — hierarchy
     * walking without procedural driver loops: customers arranged in an
     * implicit binary tree (`child DIV 2 = parent`) are traversed from the
@@ -1054,23 +1045,19 @@ object Relational {
     * distributed equi-join (`c_custkey DIV 2 = frontier.c`) — reachability
     * expressed the way a SQL user writes it, executed as iterated joins.
     */
-  private val chainMemo = new graft.ops.SessionMemo(Seq("customer.parquet"))
-
   def recursiveChain(spark: SparkSession, dir: String): DataFrame = {
     // Identical semantics to the oracle's WITH RECURSIVE (and to Spark's
     // native UnionLoop form), but iterated explicitly: the recursive-CTE
     // executor re-analyzes the plan AND re-scans the customer parquet on
     // every level, which at the 100× point made 12 levels cost 7.7 s.
-    // Here the slim key column is checkpointed ONCE; each level is then a
-    // broadcast join of the (≤ 2^depth, customer-bounded) frontier
-    // against the in-memory keys, with per-level localCheckpoint to keep
-    // the 12-join lineage from deepening the analyzed plan (the CC
-    // family's checkpoint-cadence trick). The reached (c, depth) set —
-    // one row per customer — is SESSION-MEMOIZED, so the iteration runs
-    // once per (session, dataset) and both query faces aggregate the
-    // SAME materialization (deterministic plan per session; the SQL face
-    // asserts full plan identity).
-    val reached = chainMemo.get(spark, dir) {
+    // Inside the zone build the slim key column is checkpointed ONCE;
+    // each level is then a broadcast join of the (≤ 2^depth,
+    // customer-bounded) frontier against the in-memory keys, with
+    // per-level localCheckpoint to keep the 12-join lineage from
+    // deepening the analyzed plan (the CC family's checkpoint-cadence
+    // trick). Those cuts are build-scoped: the query aggregates the
+    // published parquet, so both faces plan over the same zone files.
+    val reached = chainZone.get(spark, dir) {
       val keys = Tables.customer(spark, dir).select(col("c_custkey")).localCheckpoint()
       var frontier = spark.range(1, 2)
         .select(lit(1L).as("c"), lit(0).as("depth")).localCheckpoint()
@@ -1333,7 +1320,7 @@ object Relational {
     * understate in-memory size, so this only disables the hint when
     * broadcast is clearly in play. */
   private def ordersBroadcast(spark: SparkSession, dir: String): Boolean =
-    graft.ops.SessionMemo.dataBytes(spark, Seq(s"$dir/orders.parquet")) <=
+    graft.ops.DerivedZone.dataBytes(spark, Seq(s"$dir/orders.parquet")) <=
       spark.sessionState.conf.autoBroadcastJoinThreshold
 
   def profitByNation(spark: SparkSession, dir: String): DataFrame = {

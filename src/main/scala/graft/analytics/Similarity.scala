@@ -524,15 +524,17 @@ object Similarity {
     * and rescores only the surviving id pairs. Candidate semantics
     * (per-table bucket+cell equality, cross-table dedupe, self
     * exclusion, 6-dp rounding, vec_id tiebreak) match [[knnGraph]]
-    * line-for-line so the measured recall is the production graph's.
+    * line-for-line so the measured recall is the production graph's:
+    * each cap leg IS [[graphSampleEdges]], the replay `Round9OpsSpec`
+    * pins to [[knnGraph]]'s own edges. The whole query is one pure plan
+    * (no lineage cut), so its SQL and Scala faces plan identically.
     */
   def knnGraphRecall(spark: SparkSession, dir: String): DataFrame = {
     val (base, codes) = graphRecallFrames(spark, dir)
     val exact = exactTopSample(spark, dir).select(col("q_id"), col("n_id"))
     val nExact = exact.groupBy("q_id").agg(count(lit(1)).as("n_exact"))
-    val edgesByCap = graphSampleEdgesAllCaps(base, codes, GraphRecallCaps)
     val perCap = GraphRecallCaps.map { cap =>
-      val approx = edgesByCap(cap)
+      val approx = graphSampleEdges(base, codes, cap)
       val hits = exact.join(approx, Seq("q_id", "n_id"))
         .groupBy("q_id").agg(count(lit(1)).as("n_hits"))
       nExact.join(hits, Seq("q_id"), "left")
@@ -541,57 +543,6 @@ object Similarity {
           round(coalesce(col("n_hits"), lit(0L)) / col("n_exact"), 6).as("recall"))
     }
     perCap.reduce(_ unionAll _).orderBy("cap", "q_id")
-  }
-
-  /** [[graphSampleEdges]] for EVERY cap from one shared pass (round 16,
-    * guide §2.4/§1.2 — remove redundant passes): each cap's cell id is a
-    * power-of-two prefix coarsening of the SAME code (the divisor comes
-    * from one `(tbl, bucket)` count), so cell equality under any cap
-    * implies bucket equality and pairs(cap) ⊆ bucket-level pairs. The
-    * sample's bucket-level candidate rows are therefore generated ONCE
-    * (carrying both sides' codes) and their exact cosines scored ONCE;
-    * each cap leg is then just the in-row divisor predicate
-    * `q_code div dvs = n_code div dvs` + the pair dedupe + top-k over the
-    * shared scored frame. Previously every cap replayed the code probe,
-    * the pair dedupe AND the two vector-base scoring joins (4× each per
-    * run). The q-side scoring join reads only the pushed-down
-    * `vec_id < GraphRecallNQ` slice. The three shared frames are
-    * localCheckpoint-ed — all are sample-bounded (≤ |sample|·T·|bucket|
-    * id rows), and without the cut each cap leg would replay their
-    * lineage, resurrecting the per-cap passes this removes.
-    * Per-cap equivalence with [[graphSampleEdges]] (itself pinned to
-    * [[knnGraph]] by `Round9OpsSpec`) is pinned by `Round16OptSpec`. */
-  private[graft] def graphSampleEdgesAllCaps(base: DataFrame, codes: DataFrame,
-                                             caps: Seq[Int]): Map[Int, DataFrame] = {
-    val cnt = codes.groupBy("tbl", "bucket").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    val cands = codes.filter(col("vec_id") < GraphRecallNQ)
-      .select(col("vec_id").as("q_id"), col("tbl"), col("bucket"),
-        col("code").as("q_code"))
-      .join(codes.select(col("vec_id").as("n_id"), col("tbl"), col("bucket"),
-        col("code").as("n_code")), Seq("tbl", "bucket"))
-      .filter(col("q_id") =!= col("n_id"))
-      .localCheckpoint()
-    val qBase = base.filter(col("vec_id") < GraphRecallNQ)
-      .select(col("vec_id").as("q_id"), col("ed").as("q_ed"),
-        col("nrm").as("q_nrm"))
-    val scored = cands.select("q_id", "n_id").distinct()
-      .join(broadcast(qBase), "q_id")
-      .join(base.select(col("vec_id").as("n_id"), col("ed").as("n_ed"),
-        col("nrm").as("n_nrm")), "n_id")
-      .select(col("q_id"), col("n_id"),
-        round(graft.functions.GraftFunctions.dotp(col("q_ed"), col("n_ed")) /
-          (col("q_nrm") * col("n_nrm")), 6).as("cosine"))
-      .localCheckpoint()
-    caps.map { cap =>
-      val dvs = cnt.select(col("tbl"), col("bucket"),
-        cellDivisor(expr(s"(cnt + ${cap - 1}) div $cap")).as("dvs"))
-      val capPairs = cands.join(broadcast(dvs), Seq("tbl", "bucket"))
-        .filter(expr("q_code div dvs") === expr("n_code div dvs"))
-        .select("q_id", "n_id").distinct()
-      cap -> topK(scored.join(capPairs, Seq("q_id", "n_id")), K)
-        .select(col("q_id"), col("n_id"))
-    }.toMap
   }
 
   /** The production [[knnGraph]] candidate rule replayed for a bounded
@@ -1152,23 +1103,6 @@ object Similarity {
     (1 to PqIters).foldLeft(pqSeed(sub))((cb, _) => pqLloydStep(train, cb))
   }
 
-  /** Session-memoized trained codebook (128 rows — the canonical "small
-    * derived frame"): an index is trained once and serves many queries,
-    * so [[knnPq]] and [[knnPqRecall]] share one training run per
-    * (session, data dir), revalidated by the embeddings table's on-disk
-    * fingerprint. The build cost stays auditable in the bench
-    * `first_value`/`runs` artifact. */
-  private val pqCbMemo = new graft.ops.SessionMemo(Seq("embeddings.parquet"))
-
-  /** Eviction hatch for long-lived multi-session processes (mirrors
-    * [[graft.analytics.Dedup.clearMemos]]); stopped sessions' entries are
-    * additionally purged automatically on every memo access. */
-  def clearMemos(): Unit = pqCbMemo.clear()
-
-  private def pqTrainedMemo(spark: SparkSession, dir: String,
-                            sub: DataFrame): DataFrame =
-    pqCbMemo.get(spark, dir)(pqTrained(sub).localCheckpoint())
-
   /** Corpus codes under the SEED codebook `(vec_id, label, m, code)`,
     * zone-backed: [[knnIvfPq]]'s encode and [[knnPqRecall]]'s seeded leg
     * run the identical nearest-seed assignment over the whole corpus
@@ -1251,10 +1185,12 @@ object Similarity {
     * to run its own). The artifact is NQueries·K rows of exact integers. */
   private def pqTrainedTop(spark: SparkSession, dir: String): DataFrame =
     pqTopZone.get(spark, dir) {
-      // four consumers (training, encode, distance tables) — materialize
-      // the subvector frame once; blocks are ContextCleaner-reaped
+      // build-scoped cuts (the zone publishes the result): the subvector
+      // frame has four consumers (training, encode, distance tables) and
+      // the trained codebook two (encode, distance tables) — materialize
+      // each once; blocks are ContextCleaner-reaped
       val sub = pqSub(spark, dir).localCheckpoint()
-      pqAdcTopK(sub, pqTrainedMemo(spark, dir, sub))
+      pqAdcTopK(sub, pqTrained(sub).localCheckpoint())
     }
 
   def knnPq(spark: SparkSession, dir: String): DataFrame =

@@ -11,8 +11,19 @@ import org.apache.spark.sql.functions._
   *
   * Layout: `{zone}/bucket=&lt;b&gt;/opGroup=&lt;g&gt;/...parquet`. For each bucket, every
   * op-group except the newest (still being appended by the streaming
-  * writer) is read, collapsed to the latest event per key with tombstoned
-  * keys dropped, appended to staging, and then purged from landing.
+  * writer) is read, collapsed to the latest event per key, appended to
+  * staging, and then purged from landing. Tombstones are KEPT: a delete
+  * whose put was compacted earlier must still shadow that staged put, so
+  * only the snapshot merge (which sees landing ∪ staging) drops deleted
+  * keys — the reference's split too (its compaction only dedupes;
+  * MetadataQueryExecutor.scala:178-184 filters `type != 'delete'`).
+  *
+  * The streaming sink's commit log (`landing/_spark_metadata`) is left
+  * alone: the sink keeps numbering its batches across restarts and its
+  * log compaction needs the earlier batch files. Every reader (searches,
+  * the compactor itself) reads `bucket=` partition directories, which
+  * Spark lists directly without consulting the log, so purged op-groups
+  * never shadow anything.
   *
   * Scale posture: compaction is per-(bucket, op-group slice) — reads are
   * partition-pruned, the merge is the argmax-join [[LatestState]]
@@ -86,7 +97,7 @@ class Compactor(spark: SparkSession, landingDir: String, stagingDir: String,
 
         val merged = LatestState.snapshot(
           landing, keyCols = Seq("key"), versionCol = "opIndex",
-          isDelete = col("type") === "delete")
+          isDelete = lit(false))
 
         merged
           .repartition(numPartitions)
@@ -110,10 +121,6 @@ class Compactor(spark: SparkSession, landingDir: String, stagingDir: String,
         // through the zone itself — see ZoneEpoch)
         graft.ops.ZoneEpoch.stamp(spark, stagingDir, bucket)
       }
-      // the streaming writer's commit log must not shadow compacted files
-      // (reference: TableFilesCompactor.deleteSparkMetadataDir)
-      fs.delete(new Path(landingDir, "_spark_metadata"), true)
-      ()
     } finally {
       fs.delete(lock, false)
       ()

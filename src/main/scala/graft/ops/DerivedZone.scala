@@ -17,14 +17,16 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * applied to the expensive shared stages of the analytics families
   * (near-dup pair lists, cluster labels, the parsed op-log projection).
   *
-  * [[SessionMemo]] already makes those stages once-per-session; this
-  * makes them once-per-DATASET. The first session to need an artifact
-  * builds it and publishes it as parquet under
+  * It is the one way graft reuses derived work: every shared stage is
+  * built once per DATASET, not once per session. The first session to
+  * need an artifact builds it and publishes it as parquet under
   * `<root>/<artifact>/<md5(dir)>/<fingerprint>/`; every later session —
   * including a fresh JVM — revalidates the input fingerprint and serves
   * the published files with ZERO rebuild jobs. An in-place rewrite of the
   * inputs changes the fingerprint, so a new build publishes beside the
-  * stale one (which is then pruned), never over it.
+  * stale one (which is then pruned), never over it. A build closure may
+  * `localCheckpoint` its own intermediates: the published parquet is the
+  * durable cut, and no caller ever sees the checkpointed frame.
   *
   * ==Append-aware incremental refresh==
   * At 100 TB the dominant input mutation is APPEND (one more ingested
@@ -112,7 +114,7 @@ private[graft] final class DerivedZone(artifact: String, tables: Seq[String],
     // would otherwise accumulate forever. O(sessions×dirs) — tiny.
     entries.keySet.removeIf(_._1.sparkContext.isStopped)
     val inputEntries =
-      SessionMemo.listEntries(spark, tables.map(t => s"$dir/$t"))
+      DerivedZone.listEntries(spark, tables.map(t => s"$dir/$t"))
     val fp = DerivedZone.md5(s"r$rev:" + DerivedZone.md5(inputEntries.mkString("\n")))
     val key = (spark, dir)
     val cur = entries.get(key)
@@ -140,7 +142,7 @@ private[graft] final class DerivedZone(artifact: String, tables: Seq[String],
           DerivedZone.processBuilds.incrementAndGet()
           val newPaths = {
             val old = p.entries.toSet
-            inputEntries.filterNot(old).map(SessionMemo.entryPath)
+            inputEntries.filterNot(old).map(DerivedZone.entryPath)
           }
           val d = deltaBuild.get(newPaths)
           // delta generations must be plan-compatible with their
@@ -285,6 +287,66 @@ private[graft] object DerivedZone {
       rm(new java.io.File(dir))
     }))
     dir
+  }
+
+  /** Driver-side identity of on-disk table state: every data file's
+    * (path, length, mtime), sorted and hashed. A metadata-only listing —
+    * no data is read — so the check is microseconds on a local FS and one
+    * round-trip per table on an object store.
+    *
+    * ==Granularity caveat==
+    * mtime resolution is filesystem-dependent (1 s on several local
+    * stores, coarser on some object stores), so an in-place rewrite that
+    * preserves every file name AND length within one mtime tick is not
+    * detected. Spark's own writers make this practically unreachable
+    * (part files carry a fresh job/task UUID in the name, so any rewrite
+    * changes paths), but a byte-patching writer that edits files in place
+    * must `clear()` the affected zones after such a rewrite (e.g.
+    * [[graft.analytics.Dedup.clearMemos]]).
+    */
+  def fingerprint(spark: SparkSession, paths: Seq[String]): String =
+    md5(listEntries(spark, paths).mkString("\n"))
+
+  /** The sorted per-file identity entries behind [[fingerprint]] —
+    * exposed so the append-aware path can compare file SETS
+    * (old ⊂ new ⇒ pure append) rather than only their hash. */
+  def listEntries(spark: SparkSession, paths: Seq[String]): Seq[String] = {
+    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
+    paths.foreach { raw =>
+      val p = new Path(raw)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!fs.exists(p)) parts += s"$raw:absent"
+      else {
+        val it = fs.listFiles(p, true)
+        while (it.hasNext) {
+          val s = it.next()
+          val name = s.getPath.getName
+          // _SUCCESS / _spark_metadata and friends carry no data
+          if (!name.startsWith("_") && !name.startsWith(".")) {
+            parts += s"${s.getPath}:${s.getLen}:${s.getModificationTime}"
+          }
+        }
+      }
+    }
+    parts.sorted.toSeq
+  }
+
+  /** Total on-disk bytes of the data files under `paths` — the
+    * driver-side input-size measurement behind size-derived shuffle
+    * widths (metadata-only, no Spark jobs). */
+  def dataBytes(spark: SparkSession, paths: Seq[String]): Long =
+    listEntries(spark, paths).iterator.filterNot(_.endsWith(":absent")).map { e =>
+      val i2 = e.lastIndexOf(':')
+      val i1 = e.lastIndexOf(':', i2 - 1)
+      e.substring(i1 + 1, i2).toLong
+    }.sum
+
+  /** The file path of a [[listEntries]] entry (strip the trailing
+    * `:len:mtime` fields). */
+  def entryPath(e: String): String = {
+    val i2 = e.lastIndexOf(':')
+    val i1 = e.lastIndexOf(':', i2 - 1)
+    e.substring(0, i1)
   }
 
   private[ops] def md5(s: String): String =

@@ -132,7 +132,7 @@ object NgramBuildProbe {
       println(f"[probe] $label%-28s ${(System.nanoTime() - t0) / 1e9}%9.2f s")
       r
     }
-    val docBytes = graft.ops.SessionMemo.dataBytes(spark,
+    val docBytes = graft.ops.DerivedZone.dataBytes(spark,
       Seq(s"$dir/documents.parquet"))
     val parts = math.max(spark.sessionState.conf.numShufflePartitions,
       math.min(2048, (docBytes / (4L << 20)).toInt + 1))

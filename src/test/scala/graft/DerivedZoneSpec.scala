@@ -126,6 +126,16 @@ class DerivedZoneSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.derived.dir")
   }
 
+  test("fingerprint: stable on unchanged data, distinct for absent vs present") {
+    val dir = SparkTestSession.tempDir("memo-fp")
+    val fpAbsent = DerivedZone.fingerprint(spark, Seq(s"$dir/t.parquet"))
+    Seq(1, 2, 3).toDF("x").write.parquet(s"$dir/t.parquet")
+    val fp1 = DerivedZone.fingerprint(spark, Seq(s"$dir/t.parquet"))
+    val fp2 = DerivedZone.fingerprint(spark, Seq(s"$dir/t.parquet"))
+    assert(fp1 == fp2, "same on-disk state, same fingerprint")
+    assert(fp1 != fpAbsent, "absent and present must differ")
+  }
+
   test("malformed purgeGraceMs degrades to the default instead of failing the build") {
     val root = SparkTestSession.tempDir("zone-root-badgrace")
     spark.conf.set("spark.graft.derived.dir", root)
@@ -163,22 +173,33 @@ class DerivedZoneSpec extends AnyFunSuite {
       assert(read().count() == 2 && zone.builds.get == 1)
       assert(read().count() == 2 && zone.builds.get == 1, "unchanged data must memory-hit")
 
+      // a different dir is a different entry, not a collision
+      val dir2 = SparkTestSession.tempDir("zone-data2")
+      Seq((9L, "z")).toDF("id", "v")
+        .write.mode("overwrite").parquet(s"$dir2/t.parquet")
+      assert(zone.get(spark, dir2)(
+        spark.read.parquet(s"$dir2/t.parquet").select("id", "v")).count() == 1)
+      assert(zone.builds.get == 2)
+      assert(read().count() == 2 && zone.builds.get == 2, "dir1 entry undisturbed")
+
       // a fresh process has empty in-memory state but the same zone root:
       // clear() simulates it — the artifact must come off disk, zero builds
       zone.clear()
       assert(read().collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
-      assert(zone.builds.get == 1, "published artifact must serve without rebuilding")
+      assert(zone.builds.get == 2, "published artifact must serve without rebuilding")
       assert(zone.diskHits.get == 1)
 
       // in-place rewrite: new fingerprint → republish; stale zone pruned
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
         .write.mode("overwrite").parquet(s"$dir/t.parquet")
       assert(read().count() == 3, "rewrite must serve the NEW data")
-      assert(zone.builds.get == 2)
-      val artifactDir = new java.io.File(s"$root/spec_artifact").listFiles()
-        .filter(_.isDirectory).flatMap(_.listFiles()).filter(_.isDirectory)
-        .filterNot(_.getName.startsWith("."))
-      assert(artifactDir.length == 1, s"superseded fingerprint zones must be pruned: ${artifactDir.toSeq}")
+      assert(zone.builds.get == 3)
+      // one live fingerprint zone per input dir (dir1's stale one pruned)
+      val perDir = new java.io.File(s"$root/spec_artifact").listFiles()
+        .filter(_.isDirectory).toSeq.map(_.listFiles().filter(_.isDirectory)
+          .filterNot(_.getName.startsWith(".")).toSeq)
+      assert(perDir.map(_.length) == Seq(1, 1),
+        s"superseded fingerprint zones must be pruned: $perDir")
 
       // a bumped build-logic revision is a different artifact even on
       // identical data — the data fingerprint alone cannot see code changes
@@ -350,6 +371,43 @@ class DerivedZoneSpec extends AnyFunSuite {
     } finally {
       spark.conf.unset("spark.graft.derived.dir")
       Dedup.clearMemos()
+    }
+  }
+
+  test("fresh session serves q_min_cost_supplier/q_recursive_chain/dedup_lsh_quality with zero rebuild jobs") {
+    import graft.analytics.Relational
+    val root = SparkTestSession.tempDir("zone-root-cuts")
+    val dir = "/root/testdata/sf0.001"
+    val keys = Seq("q_min_cost_supplier", "q_recursive_chain", "dedup_lsh_quality")
+    val zones = Seq(Relational.minCostLinesZone, Relational.chainZone,
+      Dedup.lshCandZone, Dedup.sharedMemo)
+    def clearAll(): Unit = zones.foreach(_.clear())
+    spark.conf.set("spark.graft.derived.dir", root)
+    try {
+      clearAll()
+      val builds0 = zones.map(_.builds.get)
+
+      // session 1 pays one build per artifact and publishes it
+      val rows1 = keys.map(k => SparkEntry.queries(k)(spark, dir).collect().toSeq)
+      assert(zones.map(_.builds.get) == builds0.map(_ + 1))
+
+      // "session 2": fresh in-memory state, same zone root — every
+      // artifact comes off disk, no build of any zone runs
+      clearAll()
+      val s2 = spark.newSession()
+      s2.conf.set("spark.graft.derived.dir", root)
+      val all0 = DerivedZone.processBuilds.get
+      val rows2 = keys.map(k => SparkEntry.queries(k)(s2, dir).collect().toSeq)
+      assert(zones.map(_.builds.get) == builds0.map(_ + 1),
+        "fresh session must not rebuild any of the three queries' zones")
+      assert(DerivedZone.processBuilds.get == all0,
+        "fresh session must build no zone at all")
+      keys.zip(rows1.zip(rows2)).foreach { case (k, (r1, r2)) =>
+        assert(r2 == r1, s"$k: served rows must match built")
+      }
+    } finally {
+      spark.conf.unset("spark.graft.derived.dir")
+      clearAll()
     }
   }
 }

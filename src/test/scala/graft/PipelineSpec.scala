@@ -130,17 +130,82 @@ class CompactorSpec extends AnyFunSuite {
     c.compactBucket("cb", numPartitions = 2)
 
     val staged = spark.read.option("basePath", staging).parquet(s"$staging/bucket=cb")
-    val byKey = staged.select("key", "opIndex").as[(String, String)].collect().toMap
-    // k1 tombstoned in group 20 -> gone; latest opIndex wins per key
-    assert(!byKey.contains("k1"))
-    assert(byKey("k0") == "%012d_0".format(11))
-    assert(byKey("knew") == "%012d_0".format(13))
-    assert(byKey.keySet == Set("k0", "k2", "k3", "k4", "knew"))
+    val byKey = staged.select("key", "opIndex", "type").as[(String, String, String)]
+      .collect().map(r => r._1 -> (r._2, r._3)).toMap
+    // latest opIndex wins per key; k1's latest event is its group-20
+    // tombstone, which stays staged so it keeps shadowing older puts
+    assert(byKey("k1") == ("%012d_0".format(12), "delete"))
+    assert(byKey("k0")._1 == "%012d_0".format(11))
+    assert(byKey("knew")._1 == "%012d_0".format(13))
+    assert(byKey.keySet == Set("k0", "k1", "k2", "k3", "k4", "knew"))
     // compacted groups purged from landing; newest survives
     val left = new java.io.File(s"$landing/bucket=cb").list().toSeq.filter(_.startsWith("opGroup="))
     assert(left == Seq("opGroup=30"))
     // lock released
     assert(!new java.io.File(s"$staging/_merging").exists())
+  }
+
+  test("a delete compacted after its put stays deleted") {
+    val landing = SparkTestSession.tempDir("c5-landing")
+    val staging = SparkTestSession.tempDir("c5-staging")
+    def env(op: Int, typ: String, key: String) =
+      s"""{"opIndex":"${"%012d".format(op)}_0","type":"$typ","bucket":"cb","key":"$key","value":{"owner-id":"o-$op"}}"""
+    val c = new Compactor(spark, landing, staging)
+    val search = new MetadataSearch(spark, landing, staging)
+    def keys() = search.search(SearchQuery("cb")).select("key").as[String].collect().toSeq
+    IngestPipeline.batchIngest(spark,
+      Seq(env(1, "put", "k"), env(2, "put", "other")).toDF("value"), landing, groupInterval = 10L)
+    c.compactBucket("cb", 1, force = true) // the put of k moves to staging
+    IngestPipeline.batchIngest(spark,
+      Seq(env(11, "delete", "k")).toDF("value"), landing, groupInterval = 10L)
+    assert(keys() == Seq("other"))
+    c.compactBucket("cb", 1, force = true) // the delete of k moves to staging
+    assert(keys() == Seq("other"), "compaction resurrected a deleted key")
+  }
+
+  test("a resumed ingest stream survives compaction past the sink's log compaction") {
+    val journal = SparkTestSession.tempDir("c6-journal")
+    val landing = SparkTestSession.tempDir("c6-landing")
+    val staging = SparkTestSession.tempDir("c6-staging")
+    val ckpt = SparkTestSession.tempDir("c6-ckpt")
+    // 12 journal files of 5 ops each; every third op deletes a key put
+    // two files earlier — the model is the latest op per key
+    val ops = (1 to 60).map { i =>
+      if (i % 3 == 0 && i > 10) (i, "delete", s"k${i - 10}") else (i, "put", s"k$i")
+    }
+    ops.grouped(5).zipWithIndex.foreach { case (chunk, f) =>
+      val lines = chunk.map { case (op, typ, key) =>
+        s"""{"opIndex":"${"%012d".format(op)}_0","type":"$typ","bucket":"rb","key":"$key","value":{"owner-id":"o-$op"}}"""
+      }
+      java.nio.file.Files.write(java.nio.file.Paths.get(f"$journal/part-$f%03d.json"),
+        lines.mkString("\n").getBytes)
+    }
+    // files 4-12 are held back until the compaction has run
+    val holdDir = SparkTestSession.tempDir("c6-held")
+    val held = new java.io.File(journal).listFiles().sortBy(_.getName).drop(3).map { f =>
+      val to = new java.io.File(s"$holdDir/${f.getName}")
+      java.nio.file.Files.move(f.toPath, to.toPath); to
+    }
+    def ingest(): Int = {
+      val q = IngestPipeline.fileJournalStream(spark, journal, landing, ckpt,
+        groupInterval = 10L, sourceOptions = Map("maxFilesPerTrigger" -> "1"))
+      q.awaitTermination()
+      q.recentProgress.count(_.numInputRows > 0)
+    }
+    assert(ingest() == 3)
+    val c = new Compactor(spark, landing, staging)
+    assert(c.compactAll(1).isEmpty)
+    // the same checkpoint resumes at batch 3 and runs through the file
+    // sink's log compaction (every 10th batch), which needs batches 0-2
+    held.foreach(f => java.nio.file.Files.move(f.toPath,
+      java.nio.file.Paths.get(s"$journal/${f.getName}")))
+    assert(ingest() == 9)
+    assert(c.compactAll(1).isEmpty)
+    val model = ops.groupBy(_._3).values.map(_.maxBy(_._1))
+      .filter(_._2 == "put").map(_._3).toSeq.sorted
+    val got = new MetadataSearch(spark, landing, staging)
+      .search(SearchQuery("rb", limit = 1000)).select("key").as[String].collect().toSeq
+    assert(got == model)
   }
 
   test("a held lock aborts compaction") {

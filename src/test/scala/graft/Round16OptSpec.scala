@@ -8,11 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * The sf0.01/sf0.1 oracle gates prove the rewrites on the shipped
   * corpora; these tests additionally pin (a) the new map-side kernels
-  * against the declarative formulations they replace, (b) the shared
-  * all-caps recall replay against the per-cap replay it collapses, and
-  * (c) the near-dup build's packed-id fast path against its unpacked
-  * fallback on a corpus whose doc ids exceed the packed bound (which no
-  * shipped SF exercises).
+  * against the declarative formulations they replace, and (b) the
+  * near-dup build's packed-id fast path against its unpacked fallback on
+  * a corpus whose doc ids exceed the packed bound (which no shipped SF
+  * exercises).
   */
 class Round16OptSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -34,19 +33,6 @@ class Round16OptSpec extends AnyFunSuite {
     assert(kernel.exceptAll(declarative).isEmpty &&
       declarative.exceptAll(kernel).isEmpty,
       "kernel term counts diverge from the declarative aggregation")
-  }
-
-  test("graphSampleEdgesAllCaps ≡ per-cap graphSampleEdges for every cap") {
-    val (base, codes) = analytics.Similarity.graphRecallFrames(spark, sf)
-    val shared = analytics.Similarity
-      .graphSampleEdgesAllCaps(base, codes, analytics.Similarity.GraphRecallCaps)
-    analytics.Similarity.GraphRecallCaps.foreach { cap =>
-      val one = analytics.Similarity.graphSampleEdges(base, codes, cap)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val all = shared(cap)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(all == one, s"cap=$cap: shared-pass edges diverge")
-    }
   }
 
   test("near-dup pairs: packed-id path ≡ unpacked fallback (doc ids past the packed bound)") {

@@ -99,12 +99,10 @@ class SqlSurfaceSpec extends AnyFunSuite {
     // These are asserted by ROW equality instead. Every OTHER key must be
     // plan-identical (canonicalized sameResult): the loop runs the FULL
     // SparkEntry.queries keyset so the SQL face cannot drift operator by
-    // operator. (Round 11 removed the five in-memory-localCheckpoint
-    // entries: dedup_semantic / q_important_parts / events_rfm moved to
-    // DerivedZone-published artifacts — both builds scan the same zone
-    // files — and q_min_cost_supplier / q_recursive_chain / list_objects
-    // session-memoize their checkpoint, so both faces share ONE
-    // materialization.)
+    // operator. No query path carries an in-memory lineage cut: every
+    // reused stage is a DerivedZone-published artifact, so both builds
+    // scan the same zone files, and a localCheckpoint appears only inside
+    // a zone's build closure, which neither face ever sees.
     val unstableCanonicalization = Set(
       "mm_resize",
       "q_distinct_agg", "knn_pq", "knn_pq_recall")
