@@ -2,21 +2,24 @@ package graft
 
 import graft.compact.Compactor
 import graft.ingest.IngestPipeline
-import graft.search.{ListRequest, MetadataSearch, SearchQuery, SessionCache}
+import graft.search.{ListRequest, MetadataSearch, SearchQuery, SearchServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The assembled search engine: one object wiring ingestion, search,
   * snapshot caching and compaction over a [[GraftConfig]] — the
   * entrypoint a deployment (or a user migrating from the reference
-  * engine) drives.
+  * engine) drives. The warm path is one [[SearchServer]]; [[close]] drops
+  * its cached snapshots and their files.
   */
-class GraftEngine(spark: SparkSession, val config: GraftConfig) {
+class GraftEngine(spark: SparkSession, val config: GraftConfig)
+    extends AutoCloseable {
 
-  val searcher = new MetadataSearch(spark, config.landingDir, config.stagingDir)
+  private val server = new SearchServer(spark, config.landingDir,
+    config.stagingDir, config.cacheTtlMillis)
+  val searcher: MetadataSearch = server.searcher
   val compactor = new Compactor(spark, config.landingDir, config.stagingDir,
     config.purgeToleranceMs)
-  private val cache = new SessionCache(config.cacheTtlMillis)
 
   /** Start continuous ingestion: the Kafka journal when the config names
     * a broker (the reference's production source), else the file journal.
@@ -47,11 +50,9 @@ class GraftEngine(spark: SparkSession, val config: GraftConfig) {
   /** Search against the cached parquet-backed snapshot of the bucket —
     * the hot-bucket path (reference: SessionCacheManager): repeated
     * searches reuse one materialized merge until the TTL lapses or a
-    * compaction stamps a new epoch (the same path as
-    * [[graft.search.SearchServer]]).
+    * compaction stamps a new epoch ([[SearchServer.execute]]).
     */
-  def searchCached(q: SearchQuery): DataFrame =
-    searcher.searchSnapshot(searcher.cachedSnapshot(cache, q.bucket), q)
+  def searchCached(q: SearchQuery): DataFrame = server.execute(q)
 
   /** S3 ListObjectsV2 page over the live snapshot (delimiter rollup +
     * leaf objects; see [[MetadataSearch.listObjects]]). */
@@ -126,7 +127,7 @@ class GraftEngine(spark: SparkSession, val config: GraftConfig) {
   }
 
   /** Invalidate a bucket's cached snapshot (e.g. after compaction). */
-  def invalidateCache(bucket: String): Unit = cache.invalidate(bucket)
+  def invalidateCache(bucket: String): Unit = server.invalidate(bucket)
 
   /** Fold closed landing op-groups into staging for all buckets; returns
     * per-bucket failures (empty when everything compacted). */
@@ -134,6 +135,9 @@ class GraftEngine(spark: SparkSession, val config: GraftConfig) {
     // each compacted bucket stamps a new epoch, which retires its cached
     // snapshot on the next searchCached
     compactor.compactAll(numPartitions, force)
+
+  /** Drop every cached snapshot and delete its files now. */
+  override def close(): Unit = server.close()
 }
 
 object GraftEngine {

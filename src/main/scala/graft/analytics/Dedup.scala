@@ -210,7 +210,7 @@ object Dedup {
   private def sharedCounts(spark: SparkSession, dir: String): DataFrame =
     sharedMemo.get(spark, dir) {
       // Build shape, round 16 (guide §1.2/§2.3/§2.4; stage decomposition
-      // measured by tools/NgramBuildProbe at ×1000 — see
+      // measured at ×1000, committed as bench_r16_build_probes.txt — see
       // OPTIMIZATION_r16.md). The round-15 shape spent ~2/3 of the build
       // BEFORE pair generation: the df-cap stage shingled the corpus
       // TWICE (once under the df aggregate, once under the join's probe

@@ -397,7 +397,8 @@ object Relational {
   /** Multiple distinct aggregates — as THREE independent two-level
     * branches joined on the 3-row group key, not Catalyst's
     * multi-distinct Expand rewrite. Measured head-to-head at ×1000
-    * (`tools/DistinctProbe`, best-of-3 on 6B lineitem rows): Expand
+    * (best-of-3 on 6B lineitem rows, committed as
+    * `bench_distinct_probe_x1000_r15.json`): Expand
     * 140.3 s vs this shape 86.8 s. Expand is one scan but triples every
     * row before the partial aggregate and carries the widened
     * (flag, partkey, suppkey, gid) key through it; the branches scan

@@ -406,7 +406,7 @@ object TextOps {
 
   private def tfDfFrame(spark: SparkSession, dir: String): DataFrame =
     tfDfMemo.get(spark, dir) {
-      // Round 16 (§1.2 step 1, measured by tools/NgramBuildProbe): the
+      // Round 16 (§1.2 step 1, bench_r16_build_probes.txt): the
       // old build exchanged the RAW token stream to aggregate tf —
       // 270.7M (doc, term) rows and 110 s of the 186 s ×1000 build. The
       // per-doc term counts are computable in-row (graft_term_counts,

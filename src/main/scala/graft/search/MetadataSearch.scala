@@ -1,7 +1,7 @@
 package graft.search
 
 import graft.model.ObjectEvent
-import graft.ops.{LatestState, ZoneEpoch}
+import graft.ops.LatestState
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -87,17 +87,9 @@ class MetadataSearch(spark: SparkSession, landingDir: String, stagingDir: String
 
   def search(q: SearchQuery): DataFrame = searchSnapshot(bucketSnapshot(q.bucket), q)
 
-  /** The bucket's snapshot from `cache`: built once per compaction epoch
-    * (and TTL), revalidated against the zone's epoch marker on every call
-    * — the one warm path [[SearchServer]] and
-    * [[graft.GraftEngine.searchCached]] share.
-    */
-  def cachedSnapshot(cache: SessionCache, bucket: String): DataFrame =
-    cache.get(bucket, ZoneEpoch.read(spark, stagingDir, bucket))(bucketSnapshot(bucket))
-
   /** Apply the WHERE / cursor / projection / page stages to an
     * already-built snapshot (lets callers search a cached snapshot —
-    * see [[graft.GraftEngine.searchCached]]).
+    * see [[SearchServer.execute]]).
     */
   def searchSnapshot(snapshot: DataFrame, q: SearchQuery): DataFrame = {
     org.apache.spark.graft.metrics.SearchMetricsSource.getOrRegister().searchCount.inc()

@@ -2,8 +2,8 @@ package graft.search
 
 import java.io.{BufferedReader, InputStreamReader, PrintWriter}
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.atomic.AtomicBoolean
 
+import graft.ops.ZoneEpoch
 import org.apache.spark.graft.metrics.SearchMetricsSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s.{DefaultFormats, JValue}
@@ -50,8 +50,7 @@ import org.json4s.jackson.JsonMethods
   * `SessionCacheManager`.
   */
 class SearchServer(spark: SparkSession, landingDir: String, stagingDir: String,
-                   cacheTtlMillis: Long = 60000L,
-                   metricsFlushMillis: Long = 0L) extends AutoCloseable {
+                   cacheTtlMillis: Long = 60000L) extends AutoCloseable {
 
   val searcher = new MetadataSearch(spark, landingDir, stagingDir)
   private val cache = new SessionCache(cacheTtlMillis)
@@ -61,31 +60,15 @@ class SearchServer(spark: SparkSession, landingDir: String, stagingDir: String,
     */
   def snapshotRebuilds: Long = cache.rebuilds
 
-  // The reference keeps a background thread re-registering RDD gauges
-  // with the metrics system while the executor is resident
-  // (MetadataQueryExecutor.scala:25-39). Graft's counters register once,
-  // but the periodic touch keeps the source alive across metrics-system
-  // restarts and gives sinks a heartbeat to scrape against.
-  private val metricsCancel = new AtomicBoolean(false)
-  private val metricsThread: Option[Thread] =
-    if (metricsFlushMillis <= 0) None
-    else {
-      val t = new Thread(() => {
-        while (!metricsCancel.get()) {
-          Thread.sleep(metricsFlushMillis)
-          SearchMetricsSource.getOrRegister()
-        }
-      }, "graft-search-metrics")
-      t.setDaemon(true)
-      t.start()
-      Some(t)
-    }
-
   /** Plan one search against the warm snapshot (reference `execute`,
     * MetadataQueryExecutor.scala:62-95, with cache delegation :42-50).
+    * The bucket's snapshot is built once per compaction epoch (and TTL),
+    * revalidated against the zone's epoch marker on every call.
     */
   def execute(q: SearchQuery): DataFrame =
-    searcher.searchSnapshot(searcher.cachedSnapshot(cache, q.bucket), q)
+    searcher.searchSnapshot(
+      cache.get(q.bucket, ZoneEpoch.read(spark, stagingDir, q.bucket))(
+        searcher.bucketSnapshot(q.bucket)), q)
 
   /** Materialize one search as the reference's stdout contract: a single
     * JSON-array line (`executeAndPrint`, MetadataQueryExecutor.scala:57-60),
@@ -167,11 +150,7 @@ class SearchServer(spark: SparkSession, landingDir: String, stagingDir: String,
     served
   }
 
-  override def close(): Unit = {
-    metricsCancel.set(true)
-    metricsThread.foreach(_.interrupt())
-    cache.close()
-  }
+  override def close(): Unit = cache.close()
 }
 
 /** Minimal HTTP/REST face over a warm [[SearchServer]] — the wire shape a
@@ -300,8 +279,7 @@ object SearchServer {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val server = new SearchServer(spark, rest(0), rest(1), ttl,
-      metricsFlushMillis = 10000L)
+    val server = new SearchServer(spark, rest(0), rest(1), ttl)
     try httpPort match {
       case Some(p) =>
         val h = new HttpSearchServer(server, p)

@@ -8,10 +8,11 @@ import org.apache.spark.sql.streaming.Trigger
   * streaming pipeline (reference: MetadataIngestionPipeline.scala:170-180's
   * triggered micro-batch loop; graft: [[graft.ingest.IngestPipeline]]).
   *
-  * [[ServerBench]] measures the READ side's warm-snapshot amortization;
-  * this measures the WRITE side: sustained micro-batches of synthetic
-  * journal envelopes ([[Populator.journalLines]] — the same generator the
-  * populator tool ships) through the full parse → filter → observe →
+  * The benchmark's `search_warm` workload measures the READ side's
+  * warm-snapshot serving; this measures the WRITE side: sustained
+  * micro-batches of synthetic journal envelopes
+  * ([[Populator.journalLines]] — the same generator the populator tool
+  * ships) through the full parse → filter → observe →
   * partitioned-parquet-sink path, at two or more per-batch data rates.
   *
   * Method: per rate, pre-write `batches` journal files of `batchRows`

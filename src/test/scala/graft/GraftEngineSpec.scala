@@ -2,6 +2,7 @@ package graft
 
 import graft.search.SearchQuery
 import graft.tools.Populator
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraftConfigSpec extends AnyFunSuite {
@@ -131,5 +132,24 @@ class GraftEngineSpec extends AnyFunSuite {
     intercept[IllegalStateException](tight.search(q))
     val roomy = new GraftEngine(spark, cfg.copy(maxSearchScanBytes = Long.MaxValue))
     assert(roomy.search(q).select("key").as[String].collect().toSeq == direct)
+    Seq(engine, tight, roomy).foreach(_.close())
+  }
+
+  test("close() drops the cached snapshot and deletes its directory") {
+    val landing = SparkTestSession.tempDir("e-close-landing")
+    Populator.populateLanding(spark, landing, "cb", 20, groupInterval = 10L)
+    val engine = new GraftEngine(spark, GraftConfig(landing,
+      SparkTestSession.tempDir("e-close-staging"), SparkTestSession.tempDir("e-close-ckpt")))
+    val page = engine.searchCached(SearchQuery("cb"))
+    assert(page.count() == 20)
+    // the cached page scans the snapshot's parquet directory
+    val dirs = page.queryExecution.analyzed.collect {
+      case l: LogicalRelation => l.relation
+    }.collect { case r: HadoopFsRelation => r.location.rootPaths }.flatten
+    assert(dirs.size == 1 && dirs.head.toString.contains("search-snapshot"), dirs)
+    val fs = dirs.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(dirs.head))
+    engine.close()
+    assert(!fs.exists(dirs.head), s"${dirs.head} outlived close()")
   }
 }

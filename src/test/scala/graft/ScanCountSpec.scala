@@ -83,7 +83,7 @@ class ScanCountSpec extends AnyFunSuite {
     "q_top_supplier" -> Map("lineitem" -> 2),
     // q_distinct_agg: three 2-column branch scans REPLACE the Expand
     // multi-distinct plan — measured 86.8 vs 140.3 s at x1000
-    // (tools/DistinctProbe, round 15)
+    // (bench_distinct_probe_x1000_r15.json)
     "q_distinct_agg" -> Map("lineitem" -> 3),
     // corpus_dup_by_source: one direct pruned (doc_id, source) scan +
     // the labels zone's build pass when the zone is first-touch cold

@@ -84,6 +84,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
         |JOIN graft_list_objects('sb', '', '', '', 1000) o ON v.key = o.name
         |WHERE v.is_latest = 1 ORDER BY v.key""".stripMargin)
     assert(joined.count() == 25)
+    engine.close()
   }
 
   test("analytics suite drives from pure SQL with plan-identical results over EVERY key") {
