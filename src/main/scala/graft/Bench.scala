@@ -40,13 +40,38 @@ object Bench {
       only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet),
       reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt.max(1),
       commit = gitCommit())
-    // stdout for the driver AND a file artifact: the one-line JSON exceeds
-    // typical capture windows (BENCH_r03 lost 34 of 99 timings + the total
-    // to stdout truncation), so the file is the authoritative record.
-    println(json)
+    // The full record goes to a file: it outgrows a stdout reader's
+    // capture window (BENCH_r03 lost 34 of 99 timings + the total to
+    // stdout truncation). stdout ends with the compact headline, which fits.
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench-out.json")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
+    println(headline(json))
     spark.stop()
+  }
+
+  /** Readers of Bench's stdout parse its LAST line and keep at most
+    * 2,000 characters of it. */
+  val HeadlineMaxChars = 2000
+
+  /** The last stdout line, from [[run]]'s full record:
+    * `metric`, `value`, `first_value`, `errors`, `reps`, `n` (queries run)
+    * and `commit`, plus `queries` (each query's best seconds, rounded to
+    * 10 ms) when the line still fits in `maxChars`. */
+  def headline(full: String, maxChars: Int = HeadlineMaxChars): String = {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods.{compact, parse, render}
+    val j = parse(full)
+    val queries = j \ "queries" match {
+      case JObject(qs) => qs.map {
+        case (k, JDouble(sec)) => k -> JDouble(math.round(sec * 100) / 100.0)
+        case kv => kv
+      }
+      case _ => Nil
+    }
+    val head = Seq("metric", "value", "first_value", "errors", "reps").map(k => k -> j \ k) ++
+      Seq("n" -> JInt(queries.size), "commit" -> j \ "commit")
+    val withQueries = compact(render(JObject((head :+ ("queries" -> JObject(queries))).toList)))
+    if (withQueries.length <= maxChars) withQueries else compact(render(JObject(head.toList)))
   }
 
   /** Total bytes of data files under `dir` (driver-side walk, no

@@ -3,8 +3,11 @@ package graft.search
 import graft.model.ObjectEvent
 import graft.ops.LatestState
 import org.apache.hadoop.fs.Path
+import org.apache.spark.graft.metrics.SearchMetricsSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.LocalPlans
 
 /** A metadata search request (reference:
   * src/main/scala/com/scality/clueso/query/MetadataQuery.scala).
@@ -90,19 +93,36 @@ class MetadataSearch(spark: SparkSession, landingDir: String, stagingDir: String
   /** Apply the WHERE / cursor / projection / page stages to an
     * already-built snapshot (lets callers search a cached snapshot —
     * see [[SearchServer.execute]]).
+    *
+    * `keySorted`: the snapshot is [[SessionCache]]'s driver-held form — a
+    * `LocalRelation` whose rows are stored in Spark's `key` order, one row
+    * per key. Filtering then limiting those rows already yields
+    * `ORDER BY key LIMIT n`, so the sort is left out and Spark's
+    * `ConvertToLocalRelation` folds WHERE, cursor, NUL filter, projection
+    * and LIMIT on the driver: the page returned is a bare `LocalRelation`
+    * and runs no job. A page that does not fold (a WHERE Spark cannot
+    * evaluate on the driver, such as a scalar subquery) is re-planned with
+    * the sort over the same rows and counted in `orderedFallbacks`.
     */
-  def searchSnapshot(snapshot: DataFrame, q: SearchQuery): DataFrame = {
-    org.apache.spark.graft.metrics.SearchMetricsSource.getOrRegister().searchCount.inc()
+  def searchSnapshot(snapshot: DataFrame, q: SearchQuery,
+                     keySorted: Boolean = false): DataFrame = {
+    val metrics = SearchMetricsSource.getOrRegister()
+    metrics.searchCount.inc()
     var df = snapshot
     if (q.where.nonEmpty) df = df.where(q.where)
     q.startKey.foreach(k => df = df.filter(col("key") > lit(k)))
-    df
+    val rows = df
       // versioned internal keys carry a NUL separator; master listings hide them
       // (reference: MetadataQueryExecutor.scala:84)
       .filter(!col("key").contains("\u0000"))
       .select(ObjectEvent.resultColumns.map(c => col(s"`$c`")): _*)
-      .orderBy(col("key"))
-      .limit(q.limit)
+    if (keySorted) {
+      rows.limit(q.limit).queryExecution.optimizedPlan match {
+        case page: LocalRelation => return LocalPlans.ofPlan(spark, page)
+        case _ => metrics.orderedFallbacks.inc()
+      }
+    }
+    rows.orderBy(col("key")).limit(q.limit)
   }
 
   /** S3 ListObjectsV2 over the live snapshot: delimiter-bounded rollup +

@@ -3,7 +3,7 @@ package graft.search
 import java.io.{BufferedReader, InputStreamReader, PrintWriter}
 import java.nio.charset.StandardCharsets
 
-import graft.ops.ZoneEpoch
+import graft.ops.{DerivedZone, ZoneEpoch}
 import org.apache.spark.graft.metrics.SearchMetricsSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s.{DefaultFormats, JValue}
@@ -17,14 +17,21 @@ import org.json4s.jackson.JsonMethods
   * gateway as a single JSON-array line over stdout (the reference's
   * `executeAndPrint` contract, :57-60). The point of the mode is
   * amortization: the first query on a bucket pays the landing∪staging
-  * snapshot merge, its one parquet write and the cached read-back
-  * ([[SessionCache]]); every later query on that bucket (until TTL, a new
-  * compaction epoch or an explicit invalidation) is one Spark stage over
-  * the cached scan — no re-scan, no re-merge, and the JSON page rendered
-  * inside the plan ([[MetadataSearch.jsonRows]]). A superseded snapshot
-  * is dropped only after the zone purge grace
-  * (`spark.graft.derived.purgeGraceMs`), so requests still running on it
-  * finish.
+  * snapshot merge ([[SessionCache]]); every later query on that bucket
+  * (until TTL, a new compaction epoch or an explicit invalidation) reuses
+  * the snapshot — no re-scan, no re-merge, and the JSON page rendered
+  * inside the plan ([[MetadataSearch.jsonRows]]). The snapshot's form
+  * follows the bucket's input bytes:
+  *  - below [[SessionCache.LocalMaxBytes]] (4 MiB of parquet, about
+  *    26 MiB of driver heap at most) it is held on the driver as key-sorted
+  *    rows, and a warm page folds on the driver with NO Spark job — the
+  *    per-query job, closure-cleaning and task-serialisation costs are
+  *    gone;
+  *  - at or above it the merge is written once to parquet and a scan of
+  *    it cached, and a warm page is one Spark stage over the cached scan.
+  *    A superseded parquet-backed snapshot is dropped only after the zone
+  *    purge grace (`spark.graft.derived.purgeGraceMs`), so requests still
+  *    running on it finish.
   *
   * Concurrency: [[handle]] is safe to call from many threads —
   * [[HttpSearchServer]] runs a pool of them; the stdin line protocol
@@ -37,6 +44,7 @@ import org.json4s.jackson.JsonMethods
   *  - `{"cmd":"invalidate","bucket":"b"}` → `{"ok":true}` — drop the
   *    bucket's cached snapshot (a compactor just rewrote its zones)
   *  - `{"cmd":"metrics"}` → one JSON object of the `graft.search` counters
+  *    plus this server's `snapshotRebuilds`
   *  - `{"cmd":"shutdown"}` → `{"ok":true}` and the serve loop returns
   *  - a malformed or failing request → `{"error":"..."}`; the loop
   *    CONTINUES (one bad query must not kill the warm executor)
@@ -44,16 +52,25 @@ import org.json4s.jackson.JsonMethods
   * Scale posture: identical to [[MetadataSearch]] (pruned per-bucket
   * scans, argmax-join merge, TakeOrderedAndProject pages) — the
   * server adds residency, not new plan shapes. The cached snapshot is one
-  * bucket's live keys (bounded by the bucket, not the corpus); a
-  * 1000-executor deployment holds hot buckets in cluster memory and the
-  * TTL bounds staleness exactly like the reference's
+  * bucket's live keys (bounded by the bucket, not the corpus); only
+  * buckets under the byte bound are held on the driver, so a
+  * 1000-executor deployment holds large hot buckets in cluster memory, and
+  * the TTL bounds staleness exactly like the reference's
   * `SessionCacheManager`.
+  *
+  * `localMaxBytes` is the driver-held bound; specs pass 0 to pin the
+  * parquet-backed form.
   */
-class SearchServer(spark: SparkSession, landingDir: String, stagingDir: String,
-                   cacheTtlMillis: Long = 60000L) extends AutoCloseable {
+class SearchServer private[graft] (spark: SparkSession, landingDir: String,
+                                   stagingDir: String, cacheTtlMillis: Long,
+                                   localMaxBytes: Long) extends AutoCloseable {
+
+  def this(spark: SparkSession, landingDir: String, stagingDir: String,
+           cacheTtlMillis: Long = 60000L) =
+    this(spark, landingDir, stagingDir, cacheTtlMillis, SessionCache.LocalMaxBytes)
 
   val searcher = new MetadataSearch(spark, landingDir, stagingDir)
-  private val cache = new SessionCache(cacheTtlMillis)
+  private val cache = new SessionCache(cacheTtlMillis, localMaxBytes)
 
   /** Cache-miss snapshot builds since start. A warm second query on a
     * bucket must NOT move this — the spec's no-re-scan assertion.
@@ -63,17 +80,25 @@ class SearchServer(spark: SparkSession, landingDir: String, stagingDir: String,
   /** Plan one search against the warm snapshot (reference `execute`,
     * MetadataQueryExecutor.scala:62-95, with cache delegation :42-50).
     * The bucket's snapshot is built once per compaction epoch (and TTL),
-    * revalidated against the zone's epoch marker on every call.
+    * revalidated against the zone's epoch marker on every call; a build
+    * first lists the bucket's landing and staging files to pick the
+    * snapshot's form. Over a driver-held snapshot the returned page is
+    * already computed (a local relation); otherwise it is an
+    * `ORDER BY key LIMIT n` plan over the cached scan.
     */
-  def execute(q: SearchQuery): DataFrame =
-    searcher.searchSnapshot(
-      cache.get(q.bucket, ZoneEpoch.read(spark, stagingDir, q.bucket))(
-        searcher.bucketSnapshot(q.bucket)), q)
+  def execute(q: SearchQuery): DataFrame = {
+    val snapshot = cache.get(q.bucket, ZoneEpoch.read(spark, stagingDir, q.bucket),
+      DerivedZone.dataBytes(spark,
+        Seq(landingDir, stagingDir).map(d => s"$d/bucket=${q.bucket}")))(
+      searcher.bucketSnapshot(q.bucket))
+    searcher.searchSnapshot(snapshot, q, SessionCache.isDriverHeld(snapshot))
+  }
 
   /** Materialize one search as the reference's stdout contract: a single
     * JSON-array line (`executeAndPrint`, MetadataQueryExecutor.scala:57-60),
-    * rendered inside the page plan ([[MetadataSearch.jsonRows]]: one stage,
-    * no shuffle). Latency/rows/failures land in the `graft.search` metrics
+    * rendered inside the page plan ([[MetadataSearch.jsonRows]]: on the
+    * driver with no job over a driver-held snapshot, else one stage and no
+    * shuffle). Latency/rows/failures land in the `graft.search` metrics
     * source.
     */
   def executeJson(q: SearchQuery): String =
@@ -110,7 +135,9 @@ class SearchServer(spark: SparkSession, landingDir: String, stagingDir: String,
           (s"""{"searchCount":${m.searchCount.getCount},""" +
             s""""searchFailures":${m.searchFailures.getCount},""" +
             s""""rowsReturned":${m.rowsReturned.getCount},""" +
-            s""""snapshotRebuilds":${snapshotRebuilds}}""", false)
+            s""""snapshotRebuilds":${snapshotRebuilds},""" +
+            s""""snapshotBuilds":${m.snapshotBuilds.getCount},""" +
+            s""""orderedFallbacks":${m.orderedFallbacks.getCount}}""", false)
         case Some(other) =>
           // client-supplied string: escape it or a quote/control char
           // in `cmd` breaks the one-JSON-object-per-line protocol
@@ -165,15 +192,19 @@ class SearchServer(spark: SparkSession, landingDir: String, stagingDir: String,
   *  - `GET /<bucket>?search=<where>[&limit=N][&start_key=K]` — the
   *    reference client's query shape, translated to the line protocol
   *  - `POST /search` with a line-protocol JSON object body
-  *  - `GET /metrics` — the `graft.search` counters
+  *  - `GET /metrics` — the `graft.search` counters (the line protocol's
+  *    `{"cmd":"metrics"}`)
   *  - `POST /invalidate?bucket=<b>` — drop a bucket's snapshot
   *
   * Requests run on a fixed pool of `availableProcessors` handler threads
-  * over the one warm session: each search is a one-stage scan of the
-  * bucket's parquet-backed cached snapshot, so concurrent requests
-  * overlap their planning and scheduling instead of queueing behind one
-  * another. A snapshot rebuild blocks only requests on that bucket, and
-  * the snapshot it replaces is dropped after the purge grace.
+  * over the one warm session. A search over a small bucket's driver-held
+  * snapshot is driver work only (a local fold, no job), so the pool
+  * spreads it over the driver's cores; over a large bucket's
+  * parquet-backed snapshot it is a one-stage scan, and concurrent
+  * requests overlap their planning and scheduling instead of queueing
+  * behind one another. A snapshot rebuild blocks only requests on that
+  * bucket; a parquet-backed snapshot it replaces is dropped after the
+  * purge grace.
   */
 class HttpSearchServer(server: SearchServer, port: Int = 0)
     extends AutoCloseable {

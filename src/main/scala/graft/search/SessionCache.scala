@@ -8,7 +8,11 @@ import scala.util.control.NonFatal
 
 import graft.ops.DerivedZone
 import org.apache.hadoop.fs.Path
+import org.apache.spark.graft.metrics.SearchMetricsSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.LocalPlans
 
 /** Per-bucket snapshot cache with TTL, epoch revalidation, atomic swap and
   * delayed unpersist (reference:
@@ -19,19 +23,36 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * older than `ttlMillis` or when the bucket's epoch (the compaction stamp,
   * [[graft.ops.ZoneEpoch]]) differs from the one it was built at.
   *
-  * Parquet-backed snapshots: a build writes the merged frame ONCE to
-  * parquet under the zone root
-  * (`DerivedZone.root(spark)/search-snapshot/<uuid>`) and caches a plain
-  * scan of those files. The cached relation therefore carries no merge
-  * lineage: a search plans over one file scan, and Spark can still
-  * recompute evicted blocks by re-reading the files (a zone read, not a
-  * lineage cut) — never the landing files a compactor may purge.
+  * Two snapshot forms, chosen per build by comparing the bytes the build
+  * will read (`inputBytes`, a file listing: no job) with `localMaxBytes`
+  * ([[SessionCache.LocalMaxBytes]]; specs may pin another bound), so a
+  * large bucket never pays a second merge:
   *
-  * Swap and drop: a superseded snapshot (TTL, new epoch, invalidate) is
-  * unpersisted and its directory deleted only after
+  *  - Driver-held, below the bound: the merged frame is sorted by `key`
+  *    BY SPARK (its UTF-8 byte order — Java's UTF-16 `String` order
+  *    differs once surrogate pairs meet characters above U+E000), collected
+  *    once and kept as a `LocalRelation` of its binary rows. Nothing is
+  *    written or persisted, and a page over it folds on the driver with no
+  *    Spark job ([[MetadataSearch.searchSnapshot]] with `keySorted`).
+  *    Memory: a snapshot holds at most one row per input row, and a
+  *    driver-held row measured 5.4–6.5× the parquet bytes per input row
+  *    (470–840 B per row, on the `search_warm` buckets and a 40,000-key
+  *    `Populator` bucket), so one bucket costs at most about
+  *    6.5 × 4 MiB ≈ 26 MiB of driver heap.
+  *  - Parquet-backed, at or above the bound: a build writes the merged
+  *    frame ONCE to parquet under the zone root
+  *    (`DerivedZone.root(spark)/search-snapshot/<uuid>`) and caches a plain
+  *    scan of those files. The cached relation therefore carries no merge
+  *    lineage: a search plans over one file scan, and Spark can still
+  *    recompute evicted blocks by re-reading the files (a zone read, not a
+  *    lineage cut) — never the landing files a compactor may purge.
+  *
+  * Swap and drop: a superseded parquet-backed snapshot (TTL, new epoch,
+  * invalidate) is unpersisted and its directory deleted only after
   * `spark.graft.derived.purgeGraceMs` (the zone purge grace), so a request
-  * still running on it never loses the files under its scan. [[clear]] and
-  * [[close]] drop everything at once.
+  * still running on it never loses the files under its scan. A superseded
+  * driver-held snapshot is only unreferenced: a request still running on it
+  * keeps its rows alive. [[clear]] and [[close]] drop everything at once.
   *
   * Locking: rebuilds and epoch revalidation serialize on a PER-BUCKET lock
   * object (the semantics of the reference's per-bucket lock set,
@@ -43,14 +64,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * published one does not rebuild at all. Other buckets proceed on their
   * own locks.
   */
-class SessionCache(ttlMillis: Long) extends AutoCloseable {
+class SessionCache private[graft] (ttlMillis: Long, localMaxBytes: Long)
+    extends AutoCloseable {
 
-  private final class Entry(val df: DataFrame, val dir: Path, val builtAt: Long,
+  def this(ttlMillis: Long) = this(ttlMillis, SessionCache.LocalMaxBytes)
+
+  /** `dir` is the parquet directory; None for a driver-held snapshot. */
+  private final class Entry(val df: DataFrame, val dir: Option[Path], val builtAt: Long,
                             val epoch: String)
 
   private val entries = new ConcurrentHashMap[String, Entry]()
   private val locks = new ConcurrentHashMap[String, Object]()
-  // superseded entries waiting out the grace delay
+  // superseded parquet-backed entries waiting out the grace delay
   private val retiring = ConcurrentHashMap.newKeySet[Entry]()
   private val builds = new AtomicLong(0L)
 
@@ -64,8 +89,12 @@ class SessionCache(ttlMillis: Long) extends AutoCloseable {
     * absent, older than the TTL, or built at another epoch. `epoch` is
     * evaluated once per call and, on a miss, again under the bucket lock —
     * the epoch read under the lock is the one the new snapshot records.
+    * `inputBytes` (the bytes `build` reads) is evaluated only on a miss and
+    * picks the snapshot's form; a driver-held snapshot needs a `key`
+    * column ([[SessionCache.isDriverHeld]] tells the forms apart).
     */
-  def get(bucket: String, epoch: => String = "")(build: => DataFrame): DataFrame = {
+  def get(bucket: String, epoch: => String = "", inputBytes: => Long = 0L)(
+      build: => DataFrame): DataFrame = {
     val e = entries.get(bucket)
     if (fresh(e, epoch)) return e.df
     locks.computeIfAbsent(bucket, _ => new Object).synchronized {
@@ -74,13 +103,19 @@ class SessionCache(ttlMillis: Long) extends AutoCloseable {
       if (fresh(cur, ep)) cur.df
       else {
         builds.incrementAndGet()
-        val next = materialize(build, ep)
+        SearchMetricsSource.getOrRegister().snapshotBuilds.inc()
+        val next = if (inputBytes < localMaxBytes) hold(build, ep) else materialize(build, ep)
         val old = entries.put(bucket, next)
         if (old != null) retireLater(old)
         next.df
       }
     }
   }
+
+  /** Collect `df` sorted by `key` and keep its rows on the driver. */
+  private def hold(df: DataFrame, epoch: String): Entry =
+    new Entry(LocalPlans.collectLocal(df.orderBy(col("key"))), None,
+      System.currentTimeMillis(), epoch)
 
   /** Write `df` to parquet once and cache a scan of the written files. */
   private def materialize(df: DataFrame, epoch: String): Entry = {
@@ -91,7 +126,7 @@ class SessionCache(ttlMillis: Long) extends AutoCloseable {
       df.write.parquet(dir.toString)
       snap = spark.read.schema(df.schema).parquet(dir.toString).persist()
       snap.count() // materialize before publishing
-      new Entry(snap, dir, System.currentTimeMillis(), epoch)
+      new Entry(snap, Some(dir), System.currentTimeMillis(), epoch)
     } catch {
       case NonFatal(err) =>
         if (snap != null) snap.unpersist(false)
@@ -106,12 +141,12 @@ class SessionCache(ttlMillis: Long) extends AutoCloseable {
       ()
     } catch { case NonFatal(_) => () } // best effort, like the zone purge
 
-  private def drop(e: Entry): Unit = {
+  private def drop(e: Entry): Unit = e.dir.foreach { dir =>
     try e.df.unpersist(false) catch { case NonFatal(_) => () }
-    deleteDir(e.df.sparkSession, e.dir)
+    deleteDir(e.df.sparkSession, dir)
   }
 
-  private def retireLater(e: Entry): Unit = {
+  private def retireLater(e: Entry): Unit = if (e.dir.nonEmpty) {
     retiring.add(e)
     SessionCache.timer.schedule(
       (() => if (retiring.remove(e)) drop(e)): Runnable,
@@ -139,7 +174,17 @@ class SessionCache(ttlMillis: Long) extends AutoCloseable {
   override def close(): Unit = clear()
 }
 
-private object SessionCache {
+private[graft] object SessionCache {
+
+  /** Input bytes (parquet, landing plus staging) below which a bucket's
+    * snapshot is held on the driver — see the class doc for the memory it
+    * buys. */
+  val LocalMaxBytes: Long = 4L << 20
+
+  /** Whether `snapshot` is the driver-held, key-sorted form. */
+  def isDriverHeld(snapshot: DataFrame): Boolean =
+    snapshot.queryExecution.logical.isInstanceOf[LocalRelation]
+
   /** Runs the delayed drops of every cache in the process (daemon: a
     * pending drop never holds the JVM open). */
   lazy val timer: ScheduledExecutorService =

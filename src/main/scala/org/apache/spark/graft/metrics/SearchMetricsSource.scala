@@ -26,6 +26,13 @@ class SearchMetricsSource extends Source {
   val searchFailures: Counter = metricRegistry.counter("searchFailures")
   /** Result rows returned by materialized searches. */
   val rowsReturned: Counter = metricRegistry.counter("rowsReturned")
+  /** Search snapshots built (cache misses of every
+    * [[graft.search.SessionCache]] in the process). */
+  val snapshotBuilds: Counter = metricRegistry.counter("snapshotBuilds")
+  /** Pages over a driver-held snapshot that did not fold to a local
+    * relation and were re-planned with `ORDER BY key` (e.g. a WHERE with a
+    * scalar subquery); each one runs Spark jobs. */
+  val orderedFallbacks: Counter = metricRegistry.counter("orderedFallbacks")
   /** End-to-end latency of materialized searches, milliseconds. */
   val latencyMs: Histogram =
     metricRegistry.histogram("latencyMs", () => new Histogram(new SlidingWindowReservoir(1024)))

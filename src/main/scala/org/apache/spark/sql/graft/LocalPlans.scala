@@ -1,0 +1,29 @@
+package org.apache.spark.sql.graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.SQLExecution
+
+/** Driver-held relations for [[graft.search.SessionCache]]'s small-bucket
+  * snapshots. Lives in an `org.apache.spark.sql` subpackage because
+  * `Dataset.ofRows` (a DataFrame over a given logical plan) is
+  * `private[sql]` — same pattern as [[CacheIntrospect]]; no Spark
+  * behavior is modified.
+  */
+object LocalPlans {
+
+  /** A DataFrame over `plan` as given: an already-optimized
+    * `LocalRelation` is served without optimizing its source again. */
+  def ofPlan(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Collect `df` once, as `collect()` does (one tracked execution), and
+    * keep its binary rows in a `LocalRelation`, in the order `df` yields
+    * them. */
+  def collectLocal(df: DataFrame): DataFrame = {
+    val qe = df.queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe)(qe.executedPlan.executeCollect())
+    ofPlan(df.sparkSession, LocalRelation(qe.analyzed.output, rows.toSeq))
+  }
+}

@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The driver consumes Bench's one-line JSON; this pins the contract —
-  * parseable output, per-query timing/status/runs, honest error capture.
+/** Bench's output is read by tools; this pins the contract —
+  * parseable output, per-query timing/status/runs, honest error capture,
+  * and a last-line headline that fits a 2,000-character capture window.
   */
 class BenchContractSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -31,6 +32,15 @@ class BenchContractSpec extends AnyFunSuite {
     val runsRe = """"q1_agg":\[([0-9.eE,-]+)\]""".r
     val reps = runsRe.findFirstMatchIn(json).map(_.group(1).split(",").length)
     assert(reps.contains(2), s"expected 2 recorded runs: $json")
+    // stdout's last line is the compact headline: readers keep 2,000
+    // characters of it, so per-query seconds ride along only when they fit
+    val head = Bench.headline(json)
+    assert(head.length <= Bench.HeadlineMaxChars && !head.contains("\n"), head)
+    for (field <- Seq("\"metric\":\"total\"", "\"value\":", "\"first_value\":",
+        "\"errors\":0", "\"reps\":2", "\"n\":2", "\"commit\":", "\"queries\":{\"q1_agg\":"))
+      assert(head.contains(field), s"missing $field in $head")
+    val bare = Bench.headline(json, maxChars = 0)
+    assert(!bare.contains("\"queries\"") && bare.contains("\"n\":2"), bare)
   }
 
   test("a throwing query is recorded as an error, not silently zero-benched") {

@@ -15,7 +15,7 @@ class FormatsSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    SparkTestSession.tempDir(prefix)
 
   private def rowHash(df: org.apache.spark.sql.DataFrame): Long = {
     val cols = df.columns.sorted.map(col).toIndexedSeq

@@ -2,7 +2,8 @@ package graft
 
 import graft.search.SearchQuery
 import graft.tools.Populator
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.graft.metrics.SearchMetricsSource
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraftConfigSpec extends AnyFunSuite {
@@ -135,21 +136,24 @@ class GraftEngineSpec extends AnyFunSuite {
     Seq(engine, tight, roomy).foreach(_.close())
   }
 
-  test("close() drops the cached snapshot and deletes its directory") {
+  test("close() releases a small bucket's driver-held snapshot") {
     val landing = SparkTestSession.tempDir("e-close-landing")
     Populator.populateLanding(spark, landing, "cb", 20, groupInterval = 10L)
     val engine = new GraftEngine(spark, GraftConfig(landing,
       SparkTestSession.tempDir("e-close-staging"), SparkTestSession.tempDir("e-close-ckpt")))
-    val page = engine.searchCached(SearchQuery("cb"))
-    assert(page.count() == 20)
-    // the cached page scans the snapshot's parquet directory
-    val dirs = page.queryExecution.analyzed.collect {
-      case l: LogicalRelation => l.relation
-    }.collect { case r: HadoopFsRelation => r.location.rootPaths }.flatten
-    assert(dirs.size == 1 && dirs.head.toString.contains("search-snapshot"), dirs)
-    val fs = dirs.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(dirs.head))
-    engine.close()
-    assert(!fs.exists(dirs.head), s"${dirs.head} outlived close()")
+    val builds = SearchMetricsSource.getOrRegister().snapshotBuilds
+    try {
+      val b0 = builds.getCount
+      val page = engine.searchCached(SearchQuery("cb"))
+      assert(page.count() == 20)
+      // a 20-key bucket is held on the driver: the page is local rows
+      assert(page.queryExecution.logical.isInstanceOf[LocalRelation])
+      assert(engine.searchCached(SearchQuery("cb")).count() == 20 && builds.getCount == b0 + 1)
+      engine.close()
+      // the snapshot is gone: the next search builds it again
+      val again = engine.searchCached(SearchQuery("cb"))
+      assert(builds.getCount == b0 + 2)
+      assert(again.collect().toSeq == page.collect().toSeq)
+    } finally engine.close()
   }
 }

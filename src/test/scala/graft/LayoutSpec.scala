@@ -17,7 +17,7 @@ class LayoutSpec extends AnyFunSuite {
       .map(_.getAbsolutePath).toSeq
 
   test("range layout produces disjoint per-file key ranges") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_range").toString
+    val dir = SparkTestSession.tempDir("graft_range")
     val orders = Tables.orders(spark, sf)
     Layout.writeRangeLayout(orders, "o_orderkey", 8, dir)
     val files = partFiles(dir)
@@ -42,7 +42,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("morton layout clusters both dimensions into disjoint z ranges") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_z").toString
+    val dir = SparkTestSession.tempDir("graft_z")
     // balanced 64×64 grid: both dims have equal range, the case z-order
     // exists for (one-key sorting would leave the other dim unclustered)
     val grid = spark.range(4096)

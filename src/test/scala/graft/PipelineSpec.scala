@@ -347,7 +347,7 @@ class SessionCacheSpec extends AnyFunSuite {
   test("caches within TTL, rebuilds after expiry, invalidate forces rebuild") {
     var builds = 0
     def build = { builds += 1; Seq((1, "x")).toDF("id", "v") }
-    val cache = new SessionCache(ttlMillis = 60000)
+    val cache = new SessionCache(ttlMillis = 60000, localMaxBytes = 0L)
     val d1 = cache.get("b1")(build)
     val d2 = cache.get("b1")(build)
     assert(builds == 1 && (d1 eq d2))
@@ -357,7 +357,7 @@ class SessionCacheSpec extends AnyFunSuite {
     cache.get("b1")(build)
     assert(builds == 2)
 
-    val fast = new SessionCache(ttlMillis = 1)
+    val fast = new SessionCache(ttlMillis = 1, localMaxBytes = 0L)
     fast.get("b2")(build)
     Thread.sleep(10)
     fast.get("b2")(build)
@@ -368,14 +368,14 @@ class SessionCacheSpec extends AnyFunSuite {
   test("distinct buckets cache independently") {
     var builds = 0
     def build = { builds += 1; Seq((1, "x")).toDF("id", "v") }
-    val cache = new SessionCache(ttlMillis = 60000)
+    val cache = new SessionCache(ttlMillis = 60000, localMaxBytes = 0L)
     cache.get("a")(build); cache.get("b")(build); cache.get("a")(build)
     assert(builds == 2)
     cache.clear()
   }
 
   test("a rebuild of one bucket never serializes gets on another bucket") {
-    val cache = new SessionCache(ttlMillis = 60000)
+    val cache = new SessionCache(ttlMillis = 60000, localMaxBytes = 0L)
     val aStarted = new java.util.concurrent.CountDownLatch(1)
     val aRelease = new java.util.concurrent.CountDownLatch(1)
     @volatile var aErr: Option[Throwable] = None
@@ -424,7 +424,7 @@ class SessionCacheSpec extends AnyFunSuite {
 
   test("a superseded snapshot is dropped after the purge grace; clear drops everything now") {
     spark.conf.set("spark.graft.derived.purgeGraceMs", "1000")
-    val cache = new SessionCache(ttlMillis = 600000)
+    val cache = new SessionCache(ttlMillis = 600000, localMaxBytes = 0L)
     try {
       val (d1, dir1) = built(cache.get("g", "e1")(Seq((1, "x")).toDF("id", "v")))
       // a new epoch swaps in a new snapshot; the old one outlives the swap
@@ -452,7 +452,7 @@ class SessionCacheSpec extends AnyFunSuite {
   }
 
   test("8 threads across an epoch change build exactly once per (bucket, epoch)") {
-    val cache = new SessionCache(ttlMillis = 600000)
+    val cache = new SessionCache(ttlMillis = 600000, localMaxBytes = 0L)
     val epochs = Map("a" -> new java.util.concurrent.atomic.AtomicReference("a0"),
       "b" -> new java.util.concurrent.atomic.AtomicReference("b0"),
       "c" -> new java.util.concurrent.atomic.AtomicReference("c0"))

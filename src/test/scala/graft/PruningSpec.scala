@@ -19,7 +19,7 @@ class PruningSpec extends AnyFunSuite {
     }.getOrElse(fail("no FileSourceScanExec in plan"))
 
   test("partition filter prunes a partitioned layout to the matching directories") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = SparkTestSession.tempDir("graft_part")
     Tables.events(spark, sf)
       .write.partitionBy("event_type").mode("overwrite").parquet(dir)
     val q = spark.read.parquet(dir).filter(col("event_type") === "click")

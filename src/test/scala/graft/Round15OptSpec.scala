@@ -19,7 +19,7 @@ class Round15OptSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   private def fixtureDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-r15opt").toString
+    SparkTestSession.tempDir("graft-r15opt")
 
   test("dominantSuppliers argmax form ≡ join-back form where majorities exist") {
     import spark.implicits._

@@ -18,7 +18,7 @@ class Round16OptSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def fixtureDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-r16opt").toString
+    SparkTestSession.tempDir("graft-r16opt")
 
   test("graft_term_counts ≡ explode → count per (doc, term) on the real corpus") {
     graft.functions.GraftFunctions.register(spark)

@@ -7,9 +7,13 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicIntegerA
 import graft.ingest.IngestPipeline
 import graft.search.{HttpSearchServer, MetadataSearch, SearchQuery, SearchServer}
 import graft.tools.Populator
-import org.apache.spark.sql.execution.{FileSourceScanExec, TakeOrderedAndProjectExec}
+import org.apache.spark.graft.metrics.SearchMetricsSource
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, SortExec,
+  TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -58,6 +62,14 @@ class SearchServerSpec extends AnyFunSuite {
     val code = conn.getResponseCode
     val is = if (code >= 400) conn.getErrorStream else conn.getInputStream
     (code, new String(is.readAllBytes(), "UTF-8"))
+  }
+
+  /** `k` as the body of a JSON string literal. */
+  private def esc(k: String): String = k.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => "\\u%04x".format(c.toInt)
+    case c => c.toString
   }
 
   test("one warm session serves 12 mixed-bucket queries with one snapshot build per bucket") {
@@ -208,7 +220,8 @@ class SearchServerSpec extends AnyFunSuite {
   }
 
   test("warm queries launch no scan of the zone files (persisted snapshot reused)") {
-    val server = new SearchServer(spark, landing, staging, cacheTtlMillis = 600000L)
+    val server = new SearchServer(spark, landing, staging, cacheTtlMillis = 600000L,
+      localMaxBytes = 0L)
     try {
       serve(server, Seq("""{"bucket":"sb1","limit":1}"""))
       val persistedAfterFirst = spark.sparkContext.getPersistentRDDs.keySet
@@ -225,12 +238,6 @@ class SearchServerSpec extends AnyFunSuite {
   test("the JSON page is byte-identical to Dataset.toJSON: nulls, maps, arrays, timestamps, odd keys") {
     val l = SparkTestSession.tempDir("srv-json-landing")
     val s = SparkTestSession.tempDir("srv-json-staging")
-    def esc(k: String): String = k.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => "\\u%04x".format(c.toInt)
-      case c => c.toString
-    }
     def env(op: Int, key: String, value: String) =
       s"""{"opIndex":"${"%012d".format(op)}_0","type":"put","bucket":"jb","key":"${esc(key)}","value":$value}"""
     val full = """{"owner-id":"o-1","owner-display-name":"Ann","content-length":42,""" +
@@ -263,7 +270,8 @@ class SearchServerSpec extends AnyFunSuite {
   }
 
   test("a warm page is one stage: TakeOrderedAndProject over a parquet-backed cached scan") {
-    val server = new SearchServer(spark, landing, staging, cacheTtlMillis = 600000L)
+    val server = new SearchServer(spark, landing, staging, cacheTtlMillis = 600000L,
+      localMaxBytes = 0L)
     try {
       serve(server, Seq("""{"bucket":"sb1","limit":1}"""))
       val q = SearchQuery("sb1", where = "`content-length` < 1024",
@@ -343,6 +351,161 @@ class SearchServerSpec extends AnyFunSuite {
       afterCompaction.set(Int.MaxValue)
       http.close()
       server.close()
+    }
+  }
+
+  test("close() deletes a parquet-backed snapshot's directory") {
+    val server = new SearchServer(spark, landing, staging, cacheTtlMillis = 600000L,
+      localMaxBytes = 0L)
+    val page = server.execute(SearchQuery("sb2"))
+    assert(page.count() == 40)
+    // the cached page scans the snapshot's parquet directory
+    val dirs = page.queryExecution.analyzed.collect {
+      case l: LogicalRelation => l.relation
+    }.collect { case r: HadoopFsRelation => r.location.rootPaths }.flatten
+    assert(dirs.size == 1 && dirs.head.toString.contains("search-snapshot"), dirs)
+    val fs = dirs.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(dirs.head))
+    server.close()
+    assert(!fs.exists(dirs.head), s"${dirs.head} outlived close()")
+  }
+
+  test("a small-bucket page is a bare LocalTableScan and runs no job") {
+    val server = new SearchServer(spark, landing, staging, cacheTtlMillis = 600000L)
+    val sc = spark.sparkContext
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    // the listener bus delivers in order: once a marker job is seen, every
+    // job started before it has been seen too
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!jobs.contains(name) && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(jobs.contains(name), s"marker $name never seen")
+    }
+    sc.addSparkListener(listener)
+    try {
+      serve(server, Seq("""{"bucket":"sb1","limit":1}"""))
+      val q = SearchQuery("sb1", where = "`content-length` < 1024",
+        startKey = Some("obj_0000000003"), limit = 5)
+      val plan = MetadataSearch.jsonPage(server.execute(q)).queryExecution.executedPlan
+      assert(plan.isInstanceOf[LocalTableScanExec], plan.treeString)
+      assert(!plan.exists(p => p.isInstanceOf[SortExec] || p.isInstanceOf[Exchange] ||
+        p.isInstanceOf[TakeOrderedAndProjectExec]), plan.treeString)
+
+      marker("before-pages")
+      val pages = (0 until 20).map(i => server.executeJson(SearchQuery("sb1",
+        where = if (i % 2 == 0) "" else s"`content-length` < ${512 + 50 * i}",
+        startKey = if (i % 3 == 0) None else Some(f"obj_$i%010d"), limit = 1 + i)))
+      marker("after-pages")
+      assert(pages.forall(_.startsWith("[")) && pages.exists(keysOf(_).nonEmpty))
+      val seen = jobs.toArray.toSeq
+      assert(seen.dropWhile(_ != "before-pages") == Seq("before-pages", "after-pages"),
+        s"jobs seen: $seen")
+      assert(server.snapshotRebuilds == 1)
+    } finally {
+      sc.removeSparkListener(listener)
+      server.close()
+    }
+  }
+
+  /** Keys that sort differently in UTF-8 bytes (Spark) and UTF-16 units
+    * (Java): U+FFFD precedes U+1F600 in Spark, follows it in Java. */
+  private lazy val oddZones = {
+    val l = SparkTestSession.tempDir("srv-odd-landing")
+    val s = SparkTestSession.tempDir("srv-odd-staging")
+    var op = 0
+    def put(b: String, key: String, i: Int): String = {
+      op += 1
+      val md = s"""{"owner-id":"o-${i % 3}","content-length":${i * 37 % 1000},""" +
+        s""""x-amz-meta-color":"${Seq("red", "blue")(i % 2)}"}"""
+      s"""{"opIndex":"${"%012d".format(op)}_0","type":"put","bucket":"$b","key":"${esc(key)}","value":$md}"""
+    }
+    def del(b: String, key: String): String = {
+      op += 1
+      s"""{"opIndex":"${"%012d".format(op)}_0","type":"delete","bucket":"$b","key":"${esc(key)}"}"""
+    }
+    val odd = Seq("ctl\u0001x", "tab\tkey", "ключ", "日本", "é", "\ufffd-repl",
+      "\ud83d\ude00-emoji", "\ud83d\ude00\ufffd", "\ufffd\ud83d\ude00", "Z", "~tilde",
+      "ver\u0000sioned")
+    val keys = (0 until 30).map(i => f"k$i%03d") ++ odd
+    val first = keys.zipWithIndex.map { case (k, i) => put("ob", k, i) } ++
+      Seq("gone", "back").map(put("ob", _, 3)) ++
+      Seq("x1", "x2", "x3").map(put("od", _, 1))
+    IngestPipeline.batchIngest(spark, first.toDF("value"), l, groupInterval = 10L)
+    new graft.compact.Compactor(spark, l, s).compactBucket("ob", numPartitions = 2, force = true)
+    // a landing wave over the compacted bucket: deletes, an overwrite, a
+    // delete of a key only staging holds, and a re-put after a delete
+    val second = Seq(del("ob", "gone"), del("ob", "k005"), put("ob", "k006", 7),
+      del("ob", "back"), put("ob", "back", 11), put("ob", "new-in-landing", 13)) ++
+      Seq("x1", "x2", "x3").map(del("od", _))
+    IngestPipeline.batchIngest(spark, second.toDF("value"), l, groupInterval = 10L)
+    (l, s)
+  }
+
+  test("small-bucket pages equal parquet-path pages byte for byte") {
+    val (l, s) = oddZones
+    val local = new SearchServer(spark, l, s, cacheTtlMillis = 600000L)
+    val parquet = new SearchServer(spark, l, s, cacheTtlMillis = 600000L, localMaxBytes = 0L)
+    try {
+      val all = keysOf(parquet.executeJson(SearchQuery("ob")))
+      assert(all.size == 30 - 1 + 11 + 2, all) // k005, gone and the NUL key are hidden
+      assert(!all.contains("gone") && !all.contains("k005") && all.contains("back"))
+      assert(all.indexOf("\ufffd-repl") < all.indexOf("\ud83d\ude00-emoji"),
+        "Spark's order puts U+FFFD before a surrogate pair")
+      val preds = Seq("", "userMd['x-amz-meta-color'] = 'red'", "`content-length` > 300",
+        "`content-length` BETWEEN 100 AND 700 AND userMd['x-amz-meta-color'] = 'blue'",
+        "`owner-id` = 'o-1'")
+      val cursors = Seq(None, Some(""), Some("k010"), Some("k010a"), Some("\ufffd-repl"),
+        Some("\ufffd\ud83d"), Some(all.last), Some(all.last + "~"))
+      var compared = 0
+      for (b <- Seq("ob", "od", "none"); w <- preds; c <- cursors; n <- Seq(1, 7, 1000)) {
+        val q = SearchQuery(b, w, c, n)
+        val want = parquet.executeJson(q)
+        assert(local.executeJson(q) == want, q)
+        if (b == "ob" && want != "[]") compared += 1
+      }
+      assert(compared > 60, s"$compared of 120 pages over ob are non-empty")
+      assert(local.executeJson(SearchQuery("od")) == "[]" &&
+        local.executeJson(SearchQuery("none")) == "[]")
+      assert(local.snapshotRebuilds == 3 && parquet.snapshotRebuilds == 3)
+    } finally {
+      local.close()
+      parquet.close()
+    }
+  }
+
+  test("snapshotBuilds and orderedFallbacks count builds and fallbacks") {
+    val (l, s) = oddZones
+    val m = SearchMetricsSource.getOrRegister()
+    val local = new SearchServer(spark, l, s, cacheTtlMillis = 600000L)
+    val parquet = new SearchServer(spark, l, s, cacheTtlMillis = 600000L, localMaxBytes = 0L)
+    try {
+      val (b0, f0) = (m.snapshotBuilds.getCount, m.orderedFallbacks.getCount)
+      local.executeJson(SearchQuery("ob", limit = 3))
+      assert(m.snapshotBuilds.getCount == b0 + 1 && m.orderedFallbacks.getCount == f0)
+      local.executeJson(SearchQuery("ob", "`content-length` > 100", Some("k002"), 4))
+      assert(m.snapshotBuilds.getCount == b0 + 1 && m.orderedFallbacks.getCount == f0,
+        "a warm hit moves neither counter")
+      // a scalar subquery cannot be evaluated on the driver: the page is
+      // re-planned with ORDER BY over the same rows, and counted
+      val q = SearchQuery("ob", "`content-length` > (SELECT max(id) * 50 FROM range(5))",
+        Some("k003"), 6)
+      val page = local.executeJson(q)
+      assert(m.orderedFallbacks.getCount == f0 + 1)
+      assert(page == parquet.executeJson(q) && keysOf(page).size == 6, page)
+      val metrics = JsonMethods.parse(local.handle("""{"cmd":"metrics"}""")._1)
+      assert((metrics \ "snapshotBuilds").extract[Long] == m.snapshotBuilds.getCount)
+      assert((metrics \ "orderedFallbacks").extract[Long] == f0 + 1)
+      assert((metrics \ "snapshotRebuilds").extract[Long] == 1)
+    } finally {
+      local.close()
+      parquet.close()
     }
   }
 }

@@ -1,5 +1,8 @@
 package graft
 
+import java.io.File
+import java.util.concurrent.ConcurrentLinkedQueue
+
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (sbt forks one test JVM). */
@@ -14,9 +17,22 @@ object SparkTestSession {
     .config("spark.sql.warehouse.dir", tempDir("graft-warehouse"))
     .getOrCreate()
 
+  private val created = new ConcurrentLinkedQueue[File]()
+
+  // One hook deletes every directory tempDir made, contents included
+  // (File.deleteOnExit skips a directory that is not empty).
+  Runtime.getRuntime.addShutdownHook(new Thread(() => created.forEach(deleteTree)))
+
+  private def deleteTree(f: File): Unit = {
+    if (!java.nio.file.Files.isSymbolicLink(f.toPath))
+      Option(f.listFiles).foreach(_.foreach(deleteTree))
+    f.delete()
+    ()
+  }
+
   def tempDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    d.toFile.deleteOnExit()
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    created.add(d)
     d.toString
   }
 }
