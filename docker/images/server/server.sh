@@ -14,11 +14,12 @@
 #
 # Either way all connections multiplex onto the same warm process, so the
 # per-bucket snapshot cache amortizes across every client: each bucket's
-# snapshot is written once to parquet and cached as a plain scan, a warm
-# search is one Spark stage over it, and a superseded snapshot is dropped
-# only after spark.graft.derived.purgeGraceMs so running requests finish
-# on it. The reference achieves the same with Livy fronting its resident
-# MetadataQueryExecutor (clueso-docker-livy/entrypoint.sh).
+# merge is published once per state of its files to the snapshot zone
+# (under spark.graft.derived.dir) and cached, a warm search needs no merge,
+# and superseded zone files stay for spark.graft.derived.purgeGraceMs after
+# they are superseded, so running requests finish on them. The reference
+# achieves the same with Livy fronting its resident MetadataQueryExecutor
+# (clueso-docker-livy/entrypoint.sh).
 #
 # Port 8998 is Livy's default — kept so a reference deployment's gateway
 # config ports over unchanged.

@@ -49,11 +49,11 @@ class GraftEngine(spark: SparkSession, val config: GraftConfig)
 
   /** Search against the cached snapshot of the bucket — the hot-bucket
     * path (reference: SessionCacheManager): repeated searches reuse one
-    * materialized merge until the TTL lapses or a compaction stamps a new
-    * epoch ([[SearchServer.execute]]). A bucket under 4 MiB of input is
-    * held on the driver as key-sorted rows, and the page comes back
-    * already computed; a larger one is written once to parquet, and the
-    * page is a one-stage plan over a cached scan of it.
+    * merge, published once per state of the bucket's files to the server's
+    * snapshot zone ([[SearchServer.execute]]). A bucket under 4 MiB of
+    * input is held on the driver as key-sorted rows, and the page comes
+    * back already computed; for a larger one the page is a one-stage plan
+    * over a cached scan of the zone's parquet.
     */
   def searchCached(q: SearchQuery): DataFrame = server.execute(q)
 

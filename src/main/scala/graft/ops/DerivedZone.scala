@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * It is the one way graft reuses derived work: every shared stage is
   * built once per DATASET, not once per session. The first session to
   * need an artifact builds it and publishes it as parquet under
-  * `<root>/<artifact>/<md5(dir)>/<fingerprint>/`; every later session —
+  * `<root>/<artifact>/<md5(key)>/<fingerprint>/`; every later session —
   * including a fresh JVM — revalidates the input fingerprint and serves
   * the published files with ZERO rebuild jobs. An in-place rewrite of the
   * inputs changes the fingerprint, so a new build publishes beside the
@@ -65,9 +65,15 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * column types) → rename into place. A lost race deletes its tmp and
   * serves the winner's files.
   *
+  * Inputs: table files under the queried dir, which is the key (`tables`),
+  * or paths and a key the caller gives (a search bucket's landing and
+  * staging partitions). A build runs under a PER-KEY lock, not inside
+  * `ConcurrentHashMap.compute`, where it would block every key in its bin.
+  *
   * @param artifact      stable name of the derived stage (directory key)
   * @param tables        input table file names under the queried dir whose
-  *                      on-disk state the artifact derives from
+  *                      on-disk state the artifact derives from (`Nil` for a
+  *                      zone read only through the key-and-inputs [[get]])
   * @param partitionCols columns to partition the published parquet by
   * @param rev           revision of the BUILD LOGIC, folded into the zone
   *                      fingerprint — the data fingerprint alone cannot
@@ -83,6 +89,7 @@ private[graft] final class DerivedZone(artifact: String, tables: Seq[String],
 
   private final case class Entry(fp: String, df: DataFrame)
   private val entries = new ConcurrentHashMap[(SparkSession, String), Entry]()
+  private val locks = new ConcurrentHashMap[(SparkSession, String), Object]()
 
   /** FULL artifacts built (not served from disk or memory) by this
     * process — the spec hook for "a fresh session rebuilds nothing". */
@@ -91,11 +98,16 @@ private[graft] final class DerivedZone(artifact: String, tables: Seq[String],
   /** Incremental (delta-only) generations built by this process. */
   val deltaBuilds = new AtomicLong(0)
 
-  /** Artifacts served from a published zone this process didn't write. */
+  /** Artifacts served from a published zone this instance didn't write. */
   val diskHits = new AtomicLong(0)
 
   def get(spark: SparkSession, dir: String)(build: => DataFrame): DataFrame =
-    fetch(spark, dir, None)(build)
+    get(spark, dir, tables.map(t => s"$dir/$t"))(build)
+
+  /** The artifact of the files under `inputs`, published under `key`. */
+  def get(spark: SparkSession, key: String, inputs: Seq[String])(
+      build: => DataFrame): DataFrame =
+    fetch(spark, key, inputs, None)(build)
 
   /** [[get]] plus the append-aware incremental path: `deltaBuild` must
     * produce, from ONLY the given new input files, rows identical to what
@@ -104,31 +116,34 @@ private[graft] final class DerivedZone(artifact: String, tables: Seq[String],
     * op-log case); aggregation-shaped builds must use plain [[get]]. */
   def getAppendAware(spark: SparkSession, dir: String)(build: => DataFrame)(
       deltaBuild: Seq[String] => DataFrame): DataFrame =
-    fetch(spark, dir, Some(deltaBuild))(build)
+    fetch(spark, dir, tables.map(t => s"$dir/$t"), Some(deltaBuild))(build)
 
-  private def fetch(spark: SparkSession, dir: String,
+  private def fetch(spark: SparkSession, key: String, inputs: Seq[String],
                     deltaBuild: Option[Seq[String] => DataFrame])
                    (build: => DataFrame): DataFrame = {
     // Hygiene for long-lived drivers (the SearchServer shape): entries key
     // by session, and a stopped session's frames are dead weight that
-    // would otherwise accumulate forever. O(sessions×dirs) — tiny.
+    // would otherwise accumulate forever. O(sessions×keys) — tiny.
     entries.keySet.removeIf(_._1.sparkContext.isStopped)
-    val inputEntries =
-      DerivedZone.listEntries(spark, tables.map(t => s"$dir/$t"))
+    locks.keySet.removeIf(_._1.sparkContext.isStopped)
+    val inputEntries = DerivedZone.listEntries(spark, inputs)
     val fp = DerivedZone.md5(s"r$rev:" + DerivedZone.md5(inputEntries.mkString("\n")))
-    val key = (spark, dir)
-    val cur = entries.get(key)
-    if (cur != null && cur.fp == fp) cur.df
-    else entries.compute(key, (_, c) =>
-      if (c != null && c.fp == fp) c
-      else Entry(fp, load(spark, dir, fp, inputEntries, deltaBuild)(build))).df
+    val k = (spark, key)
+    def current: Option[DataFrame] = Option(entries.get(k)).filter(_.fp == fp).map(_.df)
+    current.getOrElse(locks.computeIfAbsent(k, _ => new Object).synchronized {
+      current.getOrElse {
+        val df = load(spark, key, fp, inputEntries, deltaBuild)(build)
+        entries.put(k, Entry(fp, df))
+        df
+      }
+    })
   }
 
-  private def load(spark: SparkSession, dir: String, fp: String,
+  private def load(spark: SparkSession, key: String, fp: String,
                    inputEntries: Seq[String],
                    deltaBuild: Option[Seq[String] => DataFrame])
                   (build: => DataFrame): DataFrame = {
-    val zone = new Path(DerivedZone.root(spark), s"$artifact/${DerivedZone.md5(dir)}")
+    val zone = new Path(DerivedZone.root(spark), s"$artifact/${DerivedZone.md5(key)}")
     val fs = zone.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val target = new Path(zone, fp)
     val sidecar = new Path(target, DerivedZone.SchemaFile)
@@ -212,6 +227,7 @@ private[graft] object DerivedZone {
   private[ops] val SchemaFile = "_graft_schema.json"
   private[ops] val InputsFile = "_graft_inputs"
   private[ops] val ParentsFile = "_graft_parents"
+  private[ops] val SupersededFile = "_graft_superseded"
 
   /** Chain-length bound for append-aware zones: past this, refresh falls
     * back to a full rebuild (zone self-compaction) so reads never union
@@ -371,23 +387,27 @@ private[graft] object DerivedZone {
     }.getOrElse(15L * 60 * 1000)
 
   /** Best-effort removal of zones for fingerprints outside the live
-    * generation chain of the same (artifact, dir) — a rewritten dataset's
+    * generation chain of the same (artifact, key) — a rewritten dataset's
     * old artifacts are garbage, but every ancestor of the live generation
-    * is still part of its data. Only zones older than the grace window
-    * are removed (concurrent-reader tolerance, see [[purgeGraceMs]]);
-    * in-flight `.tmp-*` writers are left alone. Skipped zones are
-    * garbage-collected by a LATER publish once they age out — superseding
-    * always re-runs the prune.
+    * is still part of its data. The grace window (concurrent-reader
+    * tolerance, see [[purgeGraceMs]]) runs from SUPERSESSION, not publish:
+    * the first prune that finds a zone outside the chain stamps it
+    * (`_graft_superseded`), and a LATER publish's prune deletes it once the
+    * stamp is older than the grace. In-flight `.tmp-*` writers are left alone.
     */
   private def pruneSuperseded(fs: FileSystem, zone: Path, keep: Set[String],
                               graceMs: Long): Unit =
     try {
-      val now = System.currentTimeMillis()
       fs.listStatus(zone).foreach { st =>
         val n = st.getPath.getName
-        if (!keep.contains(n) && !n.startsWith(".") &&
-            now - st.getModificationTime > graceMs)
-          fs.delete(st.getPath, true)
+        if (st.isDirectory && !keep.contains(n) && !n.startsWith(".")) {
+          val stamp = new Path(st.getPath, SupersededFile)
+          if (!fs.exists(stamp)) writeString(fs, stamp, "")
+          // a negative grace prunes at once, whatever the clocks say
+          if (graceMs < 0 ||
+              System.currentTimeMillis() - fs.getFileStatus(stamp).getModificationTime > graceMs)
+            fs.delete(st.getPath, true)
+        }
       }
     } catch { case _: java.io.IOException => () }
 

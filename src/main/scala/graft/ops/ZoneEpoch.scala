@@ -13,9 +13,9 @@ import org.apache.spark.sql.SparkSession
   * the zone itself: [[graft.compact.Compactor]] stamps a fresh epoch under
   * `bucket=<b>/` after every successful compaction, and
   * [[graft.search.SessionCache]] revalidates the cached snapshot's epoch
-  * on every [[graft.search.SearchServer]] request — a changed epoch swaps
-  * in a rebuilt snapshot exactly once, with no explicit invalidate
-  * round-trip needed.
+  * on every [[graft.search.SearchServer]] request, the cheap check before
+  * the bucket's snapshot zone re-lists its files: a changed epoch swaps in
+  * the rewritten files' merge exactly once, with no invalidate round-trip.
   *
   * The marker is one `_`-prefixed file (hidden to Spark's file index, so it
   * never pollutes zone scans); reading it is a metadata-sized operation —

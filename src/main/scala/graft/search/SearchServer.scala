@@ -16,22 +16,22 @@ import org.json4s.jackson.JsonMethods
   * requests arrive repeatedly, and each result streams back to the calling
   * gateway as a single JSON-array line over stdout (the reference's
   * `executeAndPrint` contract, :57-60). The point of the mode is
-  * amortization: the first query on a bucket pays the landing∪staging
-  * snapshot merge ([[SessionCache]]); every later query on that bucket
-  * (until TTL, a new compaction epoch or an explicit invalidation) reuses
-  * the snapshot — no re-scan, no re-merge, and the JSON page rendered
-  * inside the plan ([[MetadataSearch.jsonRows]]). The snapshot's form
-  * follows the bucket's input bytes:
+  * amortization: a bucket's landing∪staging merge is published once per
+  * state of its files through this server's `search_snapshot`
+  * [[DerivedZone]] (a TTL or epoch miss over unchanged files, or a restart
+  * on a durable `spark.graft.derived.dir`, merges nothing), and every later
+  * query reuses the [[SessionCache]] entry made from it — no re-scan, no
+  * re-merge, and the JSON page rendered inside the plan
+  * ([[MetadataSearch.jsonRows]]). The entry's form follows the bucket's
+  * input bytes:
   *  - below [[SessionCache.LocalMaxBytes]] (4 MiB of parquet, about
-  *    26 MiB of driver heap at most) it is held on the driver as key-sorted
-  *    rows, and a warm page folds on the driver with NO Spark job — the
-  *    per-query job, closure-cleaning and task-serialisation costs are
-  *    gone;
-  *  - at or above it the merge is written once to parquet and a scan of
-  *    it cached, and a warm page is one Spark stage over the cached scan.
-  *    A superseded parquet-backed snapshot is dropped only after the zone
-  *    purge grace (`spark.graft.derived.purgeGraceMs`), so requests still
-  *    running on it finish.
+  *    26 MiB of driver heap at most) it is collected from the zone read
+  *    and held on the driver as key-sorted rows, and a warm page folds on
+  *    the driver with NO Spark job — the per-query job, closure-cleaning
+  *    and task-serialisation costs are gone;
+  *  - at or above it the zone read is persisted, and a warm page is one
+  *    Spark stage over the cached scan. A superseded one is unpersisted at
+  *    swap; requests still running on it re-read the zone files.
   *
   * Concurrency: [[handle]] is safe to call from many threads —
   * [[HttpSearchServer]] runs a pool of them; the stdin line protocol
@@ -44,7 +44,8 @@ import org.json4s.jackson.JsonMethods
   *  - `{"cmd":"invalidate","bucket":"b"}` → `{"ok":true}` — drop the
   *    bucket's cached snapshot (a compactor just rewrote its zones)
   *  - `{"cmd":"metrics"}` → one JSON object of the `graft.search` counters
-  *    plus this server's `snapshotRebuilds`
+  *    plus this server's `snapshotRebuilds` and its snapshot zone's
+  *    `snapshotMerges` (full builds) and `snapshotDiskHits`
   *  - `{"cmd":"shutdown"}` → `{"ok":true}` and the serve loop returns
   *  - a malformed or failing request → `{"error":"..."}`; the loop
   *    CONTINUES (one bad query must not kill the warm executor)
@@ -59,7 +60,7 @@ import org.json4s.jackson.JsonMethods
   * `SessionCacheManager`.
   *
   * `localMaxBytes` is the driver-held bound; specs pass 0 to pin the
-  * parquet-backed form.
+  * persisted form.
   */
 class SearchServer private[graft] (spark: SparkSession, landingDir: String,
                                    stagingDir: String, cacheTtlMillis: Long,
@@ -71,26 +72,27 @@ class SearchServer private[graft] (spark: SparkSession, landingDir: String,
 
   val searcher = new MetadataSearch(spark, landingDir, stagingDir)
   private val cache = new SessionCache(cacheTtlMillis, localMaxBytes)
+  private[graft] val zone = new DerivedZone("search_snapshot", Nil)
 
-  /** Cache-miss snapshot builds since start. A warm second query on a
-    * bucket must NOT move this — the spec's no-re-scan assertion.
+  /** Snapshot entries made since start. A warm second query on a bucket
+    * must NOT move this — the spec's no-re-scan assertion.
     */
   def snapshotRebuilds: Long = cache.rebuilds
 
   /** Plan one search against the warm snapshot (reference `execute`,
-    * MetadataQueryExecutor.scala:62-95, with cache delegation :42-50).
-    * The bucket's snapshot is built once per compaction epoch (and TTL),
-    * revalidated against the zone's epoch marker on every call; a build
-    * first lists the bucket's landing and staging files to pick the
-    * snapshot's form. Over a driver-held snapshot the returned page is
-    * already computed (a local relation); otherwise it is an
-    * `ORDER BY key LIMIT n` plan over the cached scan.
+    * MetadataQueryExecutor.scala:62-95, with cache delegation :42-50),
+    * revalidated against the zone's epoch marker on every call and against
+    * the fingerprint of the bucket's files at a TTL or epoch miss. Over a
+    * driver-held snapshot the returned page is already computed (a local
+    * relation); otherwise it is an `ORDER BY key LIMIT n` plan over the
+    * cached scan.
     */
   def execute(q: SearchQuery): DataFrame = {
+    val inputs = Seq(landingDir, stagingDir).map(d => s"$d/bucket=${q.bucket}")
     val snapshot = cache.get(q.bucket, ZoneEpoch.read(spark, stagingDir, q.bucket),
-      DerivedZone.dataBytes(spark,
-        Seq(landingDir, stagingDir).map(d => s"$d/bucket=${q.bucket}")))(
-      searcher.bucketSnapshot(q.bucket))
+      DerivedZone.dataBytes(spark, inputs)) {
+      zone.get(spark, inputs.mkString("\n"), inputs)(searcher.bucketSnapshot(q.bucket))
+    }
     searcher.searchSnapshot(snapshot, q, SessionCache.isDriverHeld(snapshot))
   }
 
@@ -137,6 +139,8 @@ class SearchServer private[graft] (spark: SparkSession, landingDir: String,
             s""""rowsReturned":${m.rowsReturned.getCount},""" +
             s""""snapshotRebuilds":${snapshotRebuilds},""" +
             s""""snapshotBuilds":${m.snapshotBuilds.getCount},""" +
+            s""""snapshotMerges":${zone.builds.get},""" +
+            s""""snapshotDiskHits":${zone.diskHits.get},""" +
             s""""orderedFallbacks":${m.orderedFallbacks.getCount}}""", false)
         case Some(other) =>
           // client-supplied string: escape it or a quote/control char
@@ -199,12 +203,12 @@ class SearchServer private[graft] (spark: SparkSession, landingDir: String,
   * Requests run on a fixed pool of `availableProcessors` handler threads
   * over the one warm session. A search over a small bucket's driver-held
   * snapshot is driver work only (a local fold, no job), so the pool
-  * spreads it over the driver's cores; over a large bucket's
-  * parquet-backed snapshot it is a one-stage scan, and concurrent
-  * requests overlap their planning and scheduling instead of queueing
-  * behind one another. A snapshot rebuild blocks only requests on that
-  * bucket; a parquet-backed snapshot it replaces is dropped after the
-  * purge grace.
+  * spreads it over the driver's cores; over a large bucket's persisted
+  * snapshot it is a one-stage scan, and concurrent requests overlap their
+  * planning and scheduling instead of queueing behind one another. A
+  * snapshot revalidation or merge blocks only requests on that bucket; a
+  * persisted snapshot it replaces is unpersisted at swap, and a request
+  * still running on it re-reads the zone files.
   */
 class HttpSearchServer(server: SearchServer, port: Int = 0)
     extends AutoCloseable {

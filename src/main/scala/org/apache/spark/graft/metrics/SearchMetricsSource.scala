@@ -26,7 +26,7 @@ class SearchMetricsSource extends Source {
   val searchFailures: Counter = metricRegistry.counter("searchFailures")
   /** Result rows returned by materialized searches. */
   val rowsReturned: Counter = metricRegistry.counter("rowsReturned")
-  /** Search snapshots built (cache misses of every
+  /** Search snapshots built (new entries of every
     * [[graft.search.SessionCache]] in the process). */
   val snapshotBuilds: Counter = metricRegistry.counter("snapshotBuilds")
   /** Pages over a driver-held snapshot that did not fold to a local

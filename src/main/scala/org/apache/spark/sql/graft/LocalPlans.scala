@@ -6,7 +6,7 @@ import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.SQLExecution
 
 /** Driver-held relations for [[graft.search.SessionCache]]'s small-bucket
-  * snapshots. Lives in an `org.apache.spark.sql` subpackage because
+  * snapshots, collected from the bucket's snapshot-zone read. Lives in an `org.apache.spark.sql` subpackage because
   * `Dataset.ofRows` (a DataFrame over a given logical plan) is
   * `private[sql]` — same pattern as [[CacheIntrospect]]; no Spark
   * behavior is modified.

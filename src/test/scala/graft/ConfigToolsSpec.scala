@@ -14,7 +14,7 @@ class ConfigToolsSpec extends AnyFunSuite {
 
   private def writeConf(landing: String, staging: String,
                         extra: String = ""): String = {
-    val f = java.nio.file.Files.createTempFile("graft", ".conf")
+    val f = SparkTestSession.tempFile("graft", ".conf")
     java.nio.file.Files.writeString(f,
       s"""# graft deployment config
         |graft {
@@ -61,7 +61,7 @@ class ConfigToolsSpec extends AnyFunSuite {
   }
 
   test("fromFile without a kafka block selects the file journal source") {
-    val f = java.nio.file.Files.createTempFile("graft", ".conf")
+    val f = SparkTestSession.tempFile("graft", ".conf")
     java.nio.file.Files.writeString(f,
       """graft.landing.dir = /l
         |graft.staging.dir = /s
@@ -72,16 +72,16 @@ class ConfigToolsSpec extends AnyFunSuite {
   }
 
   test("fromFile rejects unbalanced blocks and junk lines") {
-    val bad = java.nio.file.Files.createTempFile("graft", ".conf")
+    val bad = SparkTestSession.tempFile("graft", ".conf")
     java.nio.file.Files.writeString(bad, "graft {\n landing.dir = /l\n")
     intercept[IllegalArgumentException](GraftConfig.fromFile(bad.toString))
-    val junk = java.nio.file.Files.createTempFile("graft", ".conf")
+    val junk = SparkTestSession.tempFile("graft", ".conf")
     java.nio.file.Files.writeString(junk, "no separator here\n")
     intercept[IllegalArgumentException](GraftConfig.fromFile(junk.toString))
   }
 
   test("unquoted URI values fail loudly instead of comment-truncating") {
-    val f = java.nio.file.Files.createTempFile("graft", ".conf")
+    val f = SparkTestSession.tempFile("graft", ".conf")
     java.nio.file.Files.writeString(f,
       "graft.landing.dir = s3a://zones/landing\ngraft.staging.dir = /s\n")
     val e = intercept[IllegalArgumentException](GraftConfig.fromFile(f.toString))
@@ -211,7 +211,7 @@ class ConfigToolsSpec extends AnyFunSuite {
     // a file-journal config (no kafka.bootstrap) REQUIRES a journal dir —
     // the stream body itself (Kafka/file selection, parse, sink) is
     // GraftEngine.startIngest, covered end-to-end by GraftEngineSpec
-    val f = java.nio.file.Files.createTempFile("graft-nokafka", ".conf")
+    val f = SparkTestSession.tempFile("graft-nokafka", ".conf")
     java.nio.file.Files.writeString(f,
       """graft {
         |  landing.dir = "/zones/landing"

@@ -126,6 +126,47 @@ class DerivedZoneSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.derived.dir")
   }
 
+  test("a slow build on one key does not delay get on another key of the same zone") {
+    val root = SparkTestSession.tempDir("zone-root-keys")
+    spark.conf.set("spark.graft.derived.dir", root)
+    try {
+      val dir = SparkTestSession.tempDir("zone-data-keys")
+      Seq((1L, "a")).toDF("id", "v").write.parquet(s"$dir/t.parquet")
+      val inputs = Seq(s"$dir/t.parquet")
+      def read() = spark.read.parquet(inputs: _*)
+      val zone = new DerivedZone("spec_keys", Nil)
+      // two keys in one bin of the zone's 16-bin entry map, where a build
+      // inside ConcurrentHashMap.compute would block the other key
+      def bin(k: String) = { val h = (spark, k).hashCode; (h ^ (h >>> 16)) & 15 }
+      val fastKey = Iterator.from(0).map(i => s"fast$i").find(bin(_) == bin("slow")).get
+      val started = new java.util.concurrent.CountDownLatch(1)
+      val release = new java.util.concurrent.CountDownLatch(1)
+      @volatile var slowErr: Option[Throwable] = None
+      val slow = new Thread(() =>
+        try {
+          zone.get(spark, "slow", inputs) { started.countDown(); release.await(); read() }
+          ()
+        } catch { case e: Throwable => slowErr = Some(e) })
+      slow.start()
+      assert(started.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "slow build never started")
+      // on its own thread: a get blocked behind the slow build must fail
+      // the test, not hang it (the slow build waits for this one)
+      @volatile var fastRows = -1L
+      val fast = new Thread(() => fastRows = zone.get(spark, fastKey, inputs)(read()).count())
+      fast.start()
+      fast.join(15000)
+      val blocked = fast.isAlive
+      release.countDown()
+      slow.join(30000)
+      fast.join(30000)
+      assert(!blocked, s"$fastKey waited for the slow build")
+      assert(fastRows == 1 && slowErr.isEmpty, s"slow build failed: $slowErr")
+      assert(zone.get(spark, "slow", inputs)(fail("must be cached")).count() == 1)
+      assert(zone.builds.get == 2)
+    } finally spark.conf.unset("spark.graft.derived.dir")
+  }
+
   test("fingerprint: stable on unchanged data, distinct for absent vs present") {
     val dir = SparkTestSession.tempDir("memo-fp")
     val fpAbsent = DerivedZone.fingerprint(spark, Seq(s"$dir/t.parquet"))
@@ -232,6 +273,9 @@ class DerivedZoneSpec extends AnyFunSuite {
       // ANOTHER JVM whose lazy scan hasn't run yet when v2 publishes
       val held = read()
       assert(held.count() == 2)
+      // v1 was published long before it is superseded: the grace runs from
+      // the supersession, so its age at publish must not matter
+      fpDirs().foreach(_.setLastModified(System.currentTimeMillis() - 3600 * 1000L))
 
       // in-place rewrite → new fingerprint → republish under default grace
       // (15 min): the v1 zone must survive the prune pass

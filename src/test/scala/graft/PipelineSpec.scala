@@ -408,47 +408,50 @@ class SessionCacheSpec extends AnyFunSuite {
     cache.clear()
   }
 
-  private def snapshotDirs(): Set[java.io.File] =
-    Option(new java.io.File(graft.ops.DerivedZone.root(spark), "search-snapshot").listFiles)
-      .map(_.toSet).getOrElse(Set.empty)
-
-  /** Run a cache call that builds, returning the frame and its new directory. */
-  private def built(get: => org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, java.io.File) = {
-    val before = snapshotDirs()
-    val df = get
-    val added = snapshotDirs() -- before
-    assert(added.size == 1, s"one snapshot directory per build: $added")
-    (df, added.head)
-  }
-
-  test("a superseded snapshot is dropped after the purge grace; clear drops everything now") {
-    spark.conf.set("spark.graft.derived.purgeGraceMs", "1000")
+  test("a superseded persisted snapshot is unpersisted at swap; a page planned before still collects; clear unpersists everything") {
+    val dir = SparkTestSession.tempDir("sc-swap")
+    Seq("v1" -> (1, "x"), "v2" -> (2, "y"), "v3" -> (3, "z")).foreach { case (v, row) =>
+      Seq(row).toDF("id", "v").write.parquet(s"$dir/$v")
+    }
+    def read(v: String) = spark.read.parquet(s"$dir/$v")
     val cache = new SessionCache(ttlMillis = 600000, localMaxBytes = 0L)
     try {
-      val (d1, dir1) = built(cache.get("g", "e1")(Seq((1, "x")).toDF("id", "v")))
-      // a new epoch swaps in a new snapshot; the old one outlives the swap
-      val (d2, dir2) = built(cache.get("g", "e2")(Seq((2, "y")).toDF("id", "v")))
+      val d1 = cache.get("g", "e1")(read("v1"))
+      assert(d1.storageLevel.useMemory)
+      // a page planned over the snapshot before the swap, as a request
+      // still running on it would be
+      val page = d1.filter(col("id") > 0)
+      assert(page.queryExecution.executedPlan.exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryTableScanExec]))
+      // a new epoch over new files swaps in a new snapshot and unpersists
+      // the old one at once
+      val v2 = read("v2")
+      val d2 = cache.get("g", "e2")(v2)
       assert(cache.rebuilds == 2 && (cache.get("g", "e2")(fail("cached")) eq d2))
-      assert(d1.storageLevel.useMemory && dir1.isDirectory,
-        "a request still running on the old snapshot keeps its files")
-      assert(d1.as[(Int, String)].collect().toSeq == Seq((1, "x")))
-      val deadline = System.currentTimeMillis() + 30000L
-      while (dir1.exists && System.currentTimeMillis() < deadline) Thread.sleep(50)
-      assert(!dir1.exists, "superseded snapshot files outlived the grace")
       assert(!d1.storageLevel.useMemory, "superseded snapshot still persisted")
+      assert(page.as[(Int, String)].collect().toSeq == Seq((1, "x")),
+        "a page planned before the swap re-reads its files")
+      // a new epoch whose build returns the entry's own frame keeps the entry
+      assert((cache.get("g", "e3")(v2) eq d2) && cache.rebuilds == 2)
+      assert(d2.storageLevel.useMemory)
 
-      // invalidate retires with the same grace; clear() drops it at once
+      // invalidate unpersists now; clear() unpersists everything
       cache.invalidate("g")
-      assert(d2.storageLevel.useMemory && dir2.isDirectory)
-      val (d3, dir3) = built(cache.get("g", "e2")(Seq((3, "z")).toDF("id", "v")))
-      cache.clear()
-      assert(!dir2.exists && !dir3.exists)
-      assert(!d2.storageLevel.useMemory && !d3.storageLevel.useMemory)
-    } finally {
-      cache.close()
-      spark.conf.unset("spark.graft.derived.purgeGraceMs")
-    }
+      assert(!d2.storageLevel.useMemory)
+      val d3 = cache.get("g", "e3")(read("v3"))
+      val d4 = cache.get("h", "e1")(read("v1"))
+      assert(d3.storageLevel.useMemory && d4.storageLevel.useMemory)
+      // another cache over the same files holds a cached relation of its
+      // own: Spark keys its cache by plan, and this one's unpersist must
+      // not evict the other's
+      val other = new SessionCache(ttlMillis = 600000, localMaxBytes = 0L)
+      try {
+        val o4 = other.get("h", "e1")(read("v1"))
+        cache.clear()
+        assert(!d3.storageLevel.useMemory && !d4.storageLevel.useMemory)
+        assert(o4.storageLevel.useMemory, "one cache's clear() evicted another's snapshot")
+      } finally other.close()
+    } finally cache.close()
   }
 
   test("8 threads across an epoch change build exactly once per (bucket, epoch)") {

@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicIntegerArray}
 
 import graft.ingest.IngestPipeline
-import graft.search.{HttpSearchServer, MetadataSearch, SearchQuery, SearchServer}
+import graft.search.{HttpSearchServer, MetadataSearch, SearchQuery, SearchServer, SessionCache}
 import graft.tools.Populator
 import org.apache.spark.graft.metrics.SearchMetricsSource
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -13,7 +13,6 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, S
   TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -317,17 +316,24 @@ class SearchServerSpec extends AnyFunSuite {
     val perBucket = new AtomicIntegerArray(buckets.size)
     val compacted = new AtomicBoolean(false)
     val afterCompaction = new AtomicInteger(0)
+    // requests per bucket sent after the compaction: the clients run until
+    // every bucket has one, or a run could end before any touches cb1
+    val sentAfter = new AtomicIntegerArray(buckets.size)
     val errors = new ConcurrentLinkedQueue[String]()
     try {
       val threads = (0 until 8).map { t =>
         val th = new Thread(() =>
           try {
             var i = t
-            while (afterCompaction.get < 3 * requests.size) {
+            while (afterCompaction.get < 3 * requests.size ||
+                (afterCompaction.get < Int.MaxValue &&
+                  (0 until buckets.size).exists(sentAfter.get(_) == 0))) {
               val k = i % requests.size
+              val after = compacted.get
               val (code, body) = request(http.boundPort, "POST", "/search", requests(k))
               if (code != 200 || body != serial(k)) errors.add(s"${requests(k)} -> $code $body")
               perBucket.incrementAndGet(k / 5)
+              if (after) sentAfter.incrementAndGet(k / 5)
               if (compacted.get) afterCompaction.incrementAndGet()
               i += 1
             }
@@ -352,22 +358,6 @@ class SearchServerSpec extends AnyFunSuite {
       http.close()
       server.close()
     }
-  }
-
-  test("close() deletes a parquet-backed snapshot's directory") {
-    val server = new SearchServer(spark, landing, staging, cacheTtlMillis = 600000L,
-      localMaxBytes = 0L)
-    val page = server.execute(SearchQuery("sb2"))
-    assert(page.count() == 40)
-    // the cached page scans the snapshot's parquet directory
-    val dirs = page.queryExecution.analyzed.collect {
-      case l: LogicalRelation => l.relation
-    }.collect { case r: HadoopFsRelation => r.location.rootPaths }.flatten
-    assert(dirs.size == 1 && dirs.head.toString.contains("search-snapshot"), dirs)
-    val fs = dirs.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(dirs.head))
-    server.close()
-    assert(!fs.exists(dirs.head), s"${dirs.head} outlived close()")
   }
 
   test("a small-bucket page is a bare LocalTableScan and runs no job") {
@@ -483,12 +473,20 @@ class SearchServerSpec extends AnyFunSuite {
   test("snapshotBuilds and orderedFallbacks count builds and fallbacks") {
     val (l, s) = oddZones
     val m = SearchMetricsSource.getOrRegister()
+    // a durable zone root of its own: the first snapshot here is a cold merge
+    spark.conf.set("spark.graft.derived.dir", SparkTestSession.tempDir("srv-metrics-root"))
     val local = new SearchServer(spark, l, s, cacheTtlMillis = 600000L)
     val parquet = new SearchServer(spark, l, s, cacheTtlMillis = 600000L, localMaxBytes = 0L)
+    /** The snapshot zone's merges and disk hits, as `{"cmd":"metrics"}` serves them. */
+    def zoneCounts(server: SearchServer): (Long, Long) = {
+      val j = JsonMethods.parse(server.handle("""{"cmd":"metrics"}""")._1)
+      ((j \ "snapshotMerges").extract[Long], (j \ "snapshotDiskHits").extract[Long])
+    }
     try {
       val (b0, f0) = (m.snapshotBuilds.getCount, m.orderedFallbacks.getCount)
       local.executeJson(SearchQuery("ob", limit = 3))
       assert(m.snapshotBuilds.getCount == b0 + 1 && m.orderedFallbacks.getCount == f0)
+      assert(zoneCounts(local) == ((1L, 0L)), "a cold build merges once")
       local.executeJson(SearchQuery("ob", "`content-length` > 100", Some("k002"), 4))
       assert(m.snapshotBuilds.getCount == b0 + 1 && m.orderedFallbacks.getCount == f0,
         "a warm hit moves neither counter")
@@ -503,9 +501,190 @@ class SearchServerSpec extends AnyFunSuite {
       assert((metrics \ "snapshotBuilds").extract[Long] == m.snapshotBuilds.getCount)
       assert((metrics \ "orderedFallbacks").extract[Long] == f0 + 1)
       assert((metrics \ "snapshotRebuilds").extract[Long] == 1)
+      assert(zoneCounts(local) == ((1L, 0L)) && zoneCounts(parquet) == ((0L, 1L)),
+        "a second server on the same files merges nothing")
+
+      // a restart on the durable root serves the published merge from disk
+      local.close()
+      val restarted = new SearchServer(spark, l, s, cacheTtlMillis = 1L)
+      try {
+        val first = restarted.executeJson(SearchQuery("ob", limit = 3))
+        assert(zoneCounts(restarted) == ((0L, 1L)), "a restart reads the zone, no merge")
+        // a TTL expiry over unchanged files moves neither counter
+        Thread.sleep(5)
+        assert(restarted.executeJson(SearchQuery("ob", limit = 3)) == first)
+        assert(zoneCounts(restarted) == ((0L, 1L)))
+      } finally restarted.close()
     } finally {
       local.close()
       parquet.close()
+      spark.conf.unset("spark.graft.derived.dir")
+    }
+  }
+
+  /** Run `body` with a durable zone root of its own, and the purge grace
+    * if given. */
+  private def withZoneRoot[T](graceMs: Option[Long] = None)(body: String => T): T = {
+    val root = SparkTestSession.tempDir("srv-zone-root")
+    spark.conf.set("spark.graft.derived.dir", root)
+    graceMs.foreach(g => spark.conf.set("spark.graft.derived.purgeGraceMs", g.toString))
+    try body(root)
+    finally {
+      spark.conf.unset("spark.graft.derived.dir")
+      spark.conf.unset("spark.graft.derived.purgeGraceMs")
+    }
+  }
+
+  /** Both snapshot forms: persisted (bound 0) and driver-held (the default
+    * bound). */
+  private val bounds = Seq(0L, SessionCache.LocalMaxBytes)
+
+  private def op(i: Int): String = "%012d_000000".format(i)
+  private def obj(i: Int): String = "obj_%010d".format(i)
+
+  /** Land a wave on bucket `zb` from op `first` on: a delete of a key
+    * staging holds, an overwrite and a new key. */
+  private def landWave(l: String, first: Int): Unit = {
+    val md = """{"owner-id":"o-w","content-length":7}"""
+    IngestPipeline.batchIngest(spark, Seq(
+      s"""{"opIndex":"${op(first)}","type":"delete","bucket":"zb","key":"${obj(first % 40)}"}""",
+      s"""{"opIndex":"${op(first + 1)}","type":"put","bucket":"zb","key":"${obj(first % 40 + 1)}","value":$md}""",
+      s"""{"opIndex":"${op(first + 2)}","type":"put","bucket":"zb","key":"${obj(first)}","value":$md}"""
+    ).toDF("value"), l, groupInterval = 10L)
+  }
+
+  /** Fresh zones for bucket `zb`: 40 keys compacted to staging, then one
+    * landing wave. */
+  private def zbZones(name: String): (String, String) = {
+    val l = SparkTestSession.tempDir(s"$name-landing")
+    val s = SparkTestSession.tempDir(s"$name-staging")
+    Populator.populateLanding(spark, l, "zb", 40, groupInterval = 10L)
+    new graft.compact.Compactor(spark, l, s).compactBucket("zb", numPartitions = 2, force = true)
+    landWave(l, 100)
+    (l, s)
+  }
+
+  private val zbQueries = Seq(SearchQuery("zb"),
+    SearchQuery("zb", "`content-length` < 1024", limit = 7),
+    SearchQuery("zb", startKey = Some(obj(9)), limit = 11))
+
+  private def pages(server: SearchServer): Seq[String] = zbQueries.map(server.executeJson)
+
+  /** The fingerprint directories the snapshot zones under `root` published. */
+  private def fpDirs(root: String): Seq[java.io.File] =
+    new java.io.File(s"$root/search_snapshot").listFiles().toSeq
+      .flatMap(_.listFiles()).filter(d => d.isDirectory && !d.getName.startsWith("."))
+
+  /** The same pages from the uncached search path. */
+  private def direct(server: SearchServer): Seq[String] = zbQueries.map(q =>
+    "[" + MetadataSearch.jsonRows(server.searcher.search(q)).mkString(",") + "]")
+
+  test("a TTL expiry over unchanged files keeps the snapshot: no merge, no persist, no collect") {
+    bounds.foreach { bound =>
+      val (l, s) = zbZones(s"srv-ttl-$bound")
+      val server = new SearchServer(spark, l, s, cacheTtlMillis = 1L, localMaxBytes = bound)
+      try {
+        val first = pages(server)
+        val persisted = spark.sparkContext.getPersistentRDDs.keySet
+        Thread.sleep(5)
+        assert(pages(server) == first && first == direct(server))
+        assert(server.zone.builds.get == 1, s"bound $bound: the TTL expiry merged again")
+        assert(server.snapshotRebuilds == 1,
+          s"bound $bound: the TTL expiry made a new entry (a collect or a persist)")
+        assert((spark.sparkContext.getPersistentRDDs.keySet -- persisted).isEmpty)
+      } finally server.close()
+    }
+  }
+
+  test("a server restarted on a durable zone root serves identical pages with no zone build") {
+    bounds.foreach { bound =>
+      withZoneRoot() { _ =>
+        val (l, s) = zbZones(s"srv-restart-$bound")
+        val first = new SearchServer(spark, l, s, cacheTtlMillis = 600000L, localMaxBytes = bound)
+        val before = try pages(first) finally first.close()
+        assert(first.zone.builds.get == 1)
+        val restarted = new SearchServer(spark, l, s, cacheTtlMillis = 600000L,
+          localMaxBytes = bound)
+        try {
+          assert(pages(restarted) == before, s"bound $bound")
+          assert(restarted.zone.builds.get == 0 && restarted.zone.diskHits.get == 1)
+          assert(before == direct(restarted))
+        } finally restarted.close()
+      }
+    }
+  }
+
+  test("a landing append rebuilds after the TTL, matches a direct search and prunes the superseded zone") {
+    bounds.foreach { bound =>
+      withZoneRoot(graceMs = Some(-1L)) { root =>
+        val (l, s) = zbZones(s"srv-append-$bound")
+        // a superseded fingerprint directory stands for one a dead process
+        // left behind
+        def fpNames(): Set[String] = fpDirs(root).map(_.getName).toSet
+        val server = new SearchServer(spark, l, s, cacheTtlMillis = 1L, localMaxBytes = bound)
+        try {
+          val before = pages(server)
+          assert(before == direct(server))
+          val v1 = fpNames()
+          assert(v1.size == 1, v1)
+          landWave(l, 200)
+          Thread.sleep(5)
+          val after = pages(server)
+          assert(after != before && after == direct(server), s"bound $bound")
+          assert(server.snapshotRebuilds == 2 && server.zone.builds.get == 2)
+          val v2 = fpNames()
+          assert(v2.size == 1 && v2 != v1, s"superseded fingerprint directory not pruned: $v2")
+        } finally server.close()
+      }
+    }
+  }
+
+  test("a page planned before a swap still collects when the superseded zone was published long ago") {
+    withZoneRoot(graceMs = Some(10 * 60 * 1000L)) { root =>
+      val (l, s) = zbZones("srv-grace")
+      val server = new SearchServer(spark, l, s, cacheTtlMillis = 1L, localMaxBytes = 0L)
+      try {
+        val before = pages(server)
+        val Seq(v1) = fpDirs(root)
+        // published an hour ago, far longer ago than the grace
+        val hourAgo = System.currentTimeMillis() - 3600 * 1000L
+        v1.setLastModified(hourAgo)
+        // a request planned over the cached snapshot, not yet run
+        val planned = server.execute(zbQueries.head)
+        assert(planned.queryExecution.executedPlan.exists(_.isInstanceOf[InMemoryTableScanExec]))
+        // the next publish supersedes v1, and the swap unpersists its cache
+        landWave(l, 200)
+        Thread.sleep(5)
+        assert(pages(server) == direct(server))
+        assert(fpDirs(root).exists(_.getName == v1.getName),
+          "a zone superseded just now was pruned")
+        assert("[" + MetadataSearch.jsonRows(planned).mkString(",") + "]" == before.head,
+          "a page planned before the swap failed or changed")
+        // once its supersession is older than the grace, a publish prunes it
+        new java.io.File(v1, "_graft_superseded").setLastModified(hourAgo)
+        landWave(l, 300)
+        Thread.sleep(5)
+        assert(pages(server) == direct(server))
+        val left = fpDirs(root).map(_.getName)
+        assert(left.size == 2 && !left.contains(v1.getName), left)
+      } finally server.close()
+    }
+  }
+
+  test("a compaction with a delete of a compacted key rebuilds once and matches a direct search") {
+    bounds.foreach { bound =>
+      val (l, s) = zbZones(s"srv-compact-$bound")
+      val server = new SearchServer(spark, l, s, cacheTtlMillis = 600000L, localMaxBytes = bound)
+      try {
+        val before = pages(server)
+        assert(before == direct(server) && !before.head.contains(obj(100 % 40) + "\""))
+        // the landing wave's delete of a staged key is compacted here
+        new graft.compact.Compactor(spark, l, s).compactBucket("zb", numPartitions = 2,
+          force = true)
+        val after = pages(server)
+        assert(server.snapshotRebuilds == 2 && server.zone.builds.get == 2, s"bound $bound")
+        assert(after == direct(server) && after == before)
+      } finally server.close()
     }
   }
 }

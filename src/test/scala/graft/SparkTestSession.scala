@@ -19,7 +19,7 @@ object SparkTestSession {
 
   private val created = new ConcurrentLinkedQueue[File]()
 
-  // One hook deletes every directory tempDir made, contents included
+  // One hook deletes every file and directory made here, contents included
   // (File.deleteOnExit skips a directory that is not empty).
   Runtime.getRuntime.addShutdownHook(new Thread(() => created.forEach(deleteTree)))
 
@@ -34,5 +34,12 @@ object SparkTestSession {
     val d = java.nio.file.Files.createTempDirectory(prefix).toFile
     created.add(d)
     d.toString
+  }
+
+  /** A new empty file, deleted by the same hook. */
+  def tempFile(prefix: String, suffix: String): java.nio.file.Path = {
+    val f = java.nio.file.Files.createTempFile(prefix, suffix)
+    created.add(f.toFile)
+    f
   }
 }
