@@ -50,7 +50,8 @@ class GraftEngine(spark: SparkSession, val config: GraftConfig)
   /** Search against the cached snapshot of the bucket — the hot-bucket
     * path (reference: SessionCacheManager): repeated searches reuse one
     * merge, published once per state of the bucket's files to the server's
-    * snapshot zone ([[SearchServer.execute]]). A bucket under 4 MiB of
+    * snapshot zone ([[SearchServer.execute]]) and re-checked against the
+    * bucket's files once per TTL (`cacheTtlMillis`). A bucket under 4 MiB of
     * input is held on the driver as key-sorted rows, and the page comes
     * back already computed; for a larger one the page is a one-stage plan
     * over a cached scan of the zone's parquet.
@@ -129,14 +130,16 @@ class GraftEngine(spark: SparkSession, val config: GraftConfig)
     }, "built-in")
   }
 
-  /** Invalidate a bucket's cached snapshot (e.g. after compaction). */
+  /** Invalidate a bucket's cached snapshot: the next [[searchCached]]
+    * re-reads its files without waiting for the TTL. */
   def invalidateCache(bucket: String): Unit = server.invalidate(bucket)
 
   /** Fold closed landing op-groups into staging for all buckets; returns
-    * per-bucket failures (empty when everything compacted). */
+    * per-bucket failures (empty when everything compacted). Cached
+    * snapshots stay as they are: a compaction keeps every key's latest
+    * event, and [[searchCached]] re-reads the rewritten files at its next
+    * TTL revalidation. */
   def compact(numPartitions: Int, force: Boolean = false): Map[String, Throwable] =
-    // each compacted bucket stamps a new epoch, which retires its cached
-    // snapshot on the next searchCached
     compactor.compactAll(numPartitions, force)
 
   /** Drop every cached snapshot and delete its files now. */

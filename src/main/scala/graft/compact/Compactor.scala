@@ -32,6 +32,12 @@ import org.apache.spark.sql.functions._
   * A staging-side lock file serializes concurrent compactor runs
   * (reference: TableFilesCompactor.scala:196-200).
   *
+  * The compactor shares no file protocol with a resident
+  * [[graft.search.SearchServer]]: a compaction keeps every key's latest
+  * event, so a snapshot cached before it stays correct, and the server sees
+  * the rewritten files at its next TTL revalidation (their fingerprint
+  * changed).
+  *
   * @param purgeToleranceMs grace period between the staging append and
   *   the landing purge: a search that listed the landing files *before*
   *   compaction finished may still be reading them, so deleting
@@ -114,12 +120,6 @@ class Compactor(spark: SparkSession, landingDir: String, stagingDir: String,
         groups.foreach { g =>
           fs.delete(new Path(s"$landingDir/bucket=$bucket/opGroup=$g"), true)
         }
-        // completion drives the warm executor's cache invalidation: stamp
-        // the bucket's epoch so a resident SearchServer drops its cached
-        // snapshot and rebuilds on the next query (the reference couples
-        // compactor → executor through its gateway; graft couples them
-        // through the zone itself — see ZoneEpoch)
-        graft.ops.ZoneEpoch.stamp(spark, stagingDir, bucket)
       }
     } finally {
       fs.delete(lock, false)

@@ -5,6 +5,7 @@ import graft.ops.LatestState
 import org.apache.hadoop.fs.Path
 import org.apache.spark.graft.metrics.SearchMetricsSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.LocalPlans
@@ -53,7 +54,7 @@ case class ListRequest(bucket: String, prefix: String = "",
 class MetadataSearch(spark: SparkSession, landingDir: String, stagingDir: String) {
 
   private def zone(dir: String, bucket: String): DataFrame = {
-    val part = new Path(s"$dir/bucket=$bucket")
+    val part = new Path(MetadataSearch.bucketDir(dir, bucket))
     val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(part)) {
       // Read the bucket partition directly (pruned scan); basePath keeps
@@ -209,6 +210,13 @@ class MetadataSearch(spark: SparkSession, landingDir: String, stagingDir: String
 }
 
 object MetadataSearch {
+
+  /** The partition directory of `bucket` under a zone: the name escaped as
+    * the file sink escaped it when it wrote the partition, so a `/` or `..`
+    * in a client's bucket string stays inside one directory name, and a
+    * bucket holding `:` or `%` finds its own directory. */
+  private[graft] def bucketDir(zoneDir: String, bucket: String): String =
+    s"$zoneDir/${ExternalCatalogUtils.getPartitionPathString("bucket", bucket)}"
 
   /** Collect a page as one JSON object per row, rendered inside the page's
     * own plan: `to_json(struct(<every column>))` over `ORDER BY … LIMIT n`

@@ -3,7 +3,7 @@ package graft.search
 import java.io.{BufferedReader, InputStreamReader, PrintWriter}
 import java.nio.charset.StandardCharsets
 
-import graft.ops.{DerivedZone, ZoneEpoch}
+import graft.ops.DerivedZone
 import org.apache.spark.graft.metrics.SearchMetricsSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s.{DefaultFormats, JValue}
@@ -18,10 +18,10 @@ import org.json4s.jackson.JsonMethods
   * `executeAndPrint` contract, :57-60). The point of the mode is
   * amortization: a bucket's landing∪staging merge is published once per
   * state of its files through this server's `search_snapshot`
-  * [[DerivedZone]] (a TTL or epoch miss over unchanged files, or a restart
-  * on a durable `spark.graft.derived.dir`, merges nothing), and every later
+  * [[DerivedZone]] (a TTL miss over unchanged files, or a restart on a
+  * durable `spark.graft.derived.dir`, merges nothing), and every later
   * query reuses the [[SessionCache]] entry made from it — no re-scan, no
-  * re-merge, and the JSON page rendered inside the plan
+  * re-merge, no file I/O, and the JSON page rendered inside the plan
   * ([[MetadataSearch.jsonRows]]). The entry's form follows the bucket's
   * input bytes:
   *  - below [[SessionCache.LocalMaxBytes]] (4 MiB of parquet, about
@@ -42,13 +42,19 @@ import org.json4s.jackson.JsonMethods
   *    one JSON-array line of result rows (bare array, the reference's
   *    gateway contract; `where`/`startKey`/`limit` optional)
   *  - `{"cmd":"invalidate","bucket":"b"}` → `{"ok":true}` — drop the
-  *    bucket's cached snapshot (a compactor just rewrote its zones)
+  *    bucket's cached snapshot; the next request re-reads its files
   *  - `{"cmd":"metrics"}` → one JSON object of the `graft.search` counters
   *    plus this server's `snapshotRebuilds` and its snapshot zone's
   *    `snapshotMerges` (full builds) and `snapshotDiskHits`
   *  - `{"cmd":"shutdown"}` → `{"ok":true}` and the serve loop returns
   *  - a malformed or failing request → `{"error":"..."}`; the loop
   *    CONTINUES (one bad query must not kill the warm executor)
+  *
+  * Freshness: the TTL decides when a bucket's files are looked at again,
+  * the zone's fingerprint decides whether they changed, and `invalidate`
+  * forces a look at the next request. A compaction is seen at the next
+  * revalidation after it; it keeps every key's latest event, so pages do
+  * not change in between.
   *
   * Scale posture: identical to [[MetadataSearch]] (pruned per-bucket
   * scans, argmax-join merge, TakeOrderedAndProject pages) — the
@@ -65,6 +71,7 @@ import org.json4s.jackson.JsonMethods
 class SearchServer private[graft] (spark: SparkSession, landingDir: String,
                                    stagingDir: String, cacheTtlMillis: Long,
                                    localMaxBytes: Long) extends AutoCloseable {
+  import SearchServer.jsonString
 
   def this(spark: SparkSession, landingDir: String, stagingDir: String,
            cacheTtlMillis: Long = 60000L) =
@@ -80,17 +87,15 @@ class SearchServer private[graft] (spark: SparkSession, landingDir: String,
   def snapshotRebuilds: Long = cache.rebuilds
 
   /** Plan one search against the warm snapshot (reference `execute`,
-    * MetadataQueryExecutor.scala:62-95, with cache delegation :42-50),
-    * revalidated against the zone's epoch marker on every call and against
-    * the fingerprint of the bucket's files at a TTL or epoch miss. Over a
-    * driver-held snapshot the returned page is already computed (a local
-    * relation); otherwise it is an `ORDER BY key LIMIT n` plan over the
-    * cached scan.
+    * MetadataQueryExecutor.scala:62-95, with cache delegation :42-50). A
+    * hit within the TTL touches no file; a miss revalidates against the
+    * fingerprint of the bucket's files. Over a driver-held snapshot the
+    * returned page is already computed (a local relation); otherwise it is
+    * an `ORDER BY key LIMIT n` plan over the cached scan.
     */
   def execute(q: SearchQuery): DataFrame = {
-    val inputs = Seq(landingDir, stagingDir).map(d => s"$d/bucket=${q.bucket}")
-    val snapshot = cache.get(q.bucket, ZoneEpoch.read(spark, stagingDir, q.bucket),
-      DerivedZone.dataBytes(spark, inputs)) {
+    val inputs = Seq(landingDir, stagingDir).map(MetadataSearch.bucketDir(_, q.bucket))
+    val snapshot = cache.get(q.bucket, DerivedZone.dataBytes(spark, inputs)) {
       zone.get(spark, inputs.mkString("\n"), inputs)(searcher.bucketSnapshot(q.bucket))
     }
     searcher.searchSnapshot(snapshot, q, SessionCache.isDriverHeld(snapshot))
@@ -107,12 +112,9 @@ class SearchServer private[graft] (spark: SparkSession, landingDir: String,
     "[" + SearchMetricsSource.recordSearch(MetadataSearch.jsonRows(execute(q)))
       .mkString(",") + "]"
 
-  /** Drop a bucket's cached snapshot (compaction rewrote its zones). */
+  /** Drop a bucket's cached snapshot: the next request revalidates it
+    * against the bucket's files, without waiting for the TTL. */
   def invalidate(bucket: String): Unit = cache.invalidate(bucket)
-
-  private def escJson(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replaceAll("[\\x00-\\x1f]", " ")
 
   /** Answer ONE request (the line-protocol JSON object) — the single
     * handler both faces share: [[serve]] feeds it stdin lines, and
@@ -145,7 +147,7 @@ class SearchServer private[graft] (spark: SparkSession, landingDir: String,
         case Some(other) =>
           // client-supplied string: escape it or a quote/control char
           // in `cmd` breaks the one-JSON-object-per-line protocol
-          (s"""{"error":"unknown cmd: ${escJson(other)}"}""", false)
+          (s"""{"error":${jsonString(s"unknown cmd: $other")}}""", false)
         case None =>
           (executeJson(SearchQuery(
             bucket = (j \ "bucket").extract[String],
@@ -156,7 +158,7 @@ class SearchServer private[graft] (spark: SparkSession, landingDir: String,
     } catch {
       case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-        (s"""{"error":"${escJson(msg)}"}""", false)
+        (s"""{"error":${jsonString(msg)}}""", false)
     }
   }
 
@@ -206,12 +208,14 @@ class SearchServer private[graft] (spark: SparkSession, landingDir: String,
   * spreads it over the driver's cores; over a large bucket's persisted
   * snapshot it is a one-stage scan, and concurrent requests overlap their
   * planning and scheduling instead of queueing behind one another. A
-  * snapshot revalidation or merge blocks only requests on that bucket; a
-  * persisted snapshot it replaces is unpersisted at swap, and a request
-  * still running on it re-reads the zone files.
+  * snapshot revalidation or merge blocks only requests on that bucket, and
+  * requests queued behind it are served its result without building
+  * again; a persisted snapshot it replaces is unpersisted at swap, and a
+  * request still running on it re-reads the zone files.
   */
 class HttpSearchServer(server: SearchServer, port: Int = 0)
     extends AutoCloseable {
+  import SearchServer.jsonString
   import com.sun.net.httpserver.{HttpExchange, HttpServer => JdkHttp}
 
   private val http = JdkHttp.create(new java.net.InetSocketAddress(port), 0)
@@ -235,9 +239,6 @@ class HttpSearchServer(server: SearchServer, port: Int = 0)
     ex.close()
   }
 
-  private def jstr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
   http.createContext("/", (ex: HttpExchange) => {
     try {
       val path = ex.getRequestURI.getPath.stripPrefix("/")
@@ -247,14 +248,14 @@ class HttpSearchServer(server: SearchServer, port: Int = 0)
         case ("GET", "metrics") => """{"cmd":"metrics"}"""
         case ("POST", "invalidate") =>
           val b = queryParams(ex).getOrElse("bucket", "")
-          s"""{"cmd":"invalidate","bucket":${jstr(b)}}"""
+          s"""{"cmd":"invalidate","bucket":${jsonString(b)}}"""
         case ("GET", bucket) if bucket.nonEmpty && !bucket.contains("/") =>
           // the reference client's shape: GET /<bucket>?search=<where>
           val p = queryParams(ex)
           val limit = p.get("limit").flatMap(_.toIntOption).getOrElse(1000)
-          val sk = p.get("start_key").map(k => s""","startKey":${jstr(k)}""")
+          val sk = p.get("start_key").map(k => s""","startKey":${jsonString(k)}""")
             .getOrElse("")
-          s"""{"bucket":${jstr(bucket)},"where":${jstr(
+          s"""{"bucket":${jsonString(bucket)},"where":${jsonString(
             p.getOrElse("search", ""))},"limit":$limit$sk}"""
         case _ => ""
       }
@@ -267,7 +268,7 @@ class HttpSearchServer(server: SearchServer, port: Int = 0)
       }
     } catch {
       case e: Throwable =>
-        try respond(ex, 500, s"""{"error":${jstr(
+        try respond(ex, 500, s"""{"error":${jsonString(
           Option(e.getMessage).getOrElse(e.getClass.getName))}}""")
         catch { case _: Throwable => () }
     }
@@ -296,6 +297,16 @@ class HttpSearchServer(server: SearchServer, port: Int = 0)
   * + cache warmth amortizes across all requests either way.
   */
 object SearchServer {
+
+  /** `s` as a JSON string literal; a raw control character inside one is
+    * not JSON, so it is written as a JSON unicode escape. */
+  private[search] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => "\\u%04x".format(c.toInt)
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val httpPort = args.sliding(2).collectFirst {
       case Array("--http", p) => p.toInt }

@@ -11,20 +11,20 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graft.LocalPlans
 
-/** Per-bucket snapshot cache with TTL, epoch revalidation and atomic swap
-  * (reference:
+/** Per-bucket snapshot cache with TTL and atomic swap (reference:
   * src/main/scala/com/scality/clueso/query/cache/SessionCacheManager.scala).
   *
   * Searches against a hot bucket reuse one snapshot instead of re-merging
-  * landing∪staging per request. An entry is revalidated when it is older
-  * than `ttlMillis` or when the bucket's epoch (the compaction stamp,
-  * [[graft.ops.ZoneEpoch]]) differs from the one it was made at.
-  * Revalidation calls `build`, which for [[SearchServer]] is a
-  * [[graft.ops.DerivedZone]] read: the zone returns the SAME frame while
-  * the fingerprint of the bucket's files holds, and then the entry is kept
-  * as it is — its time and epoch refreshed, nothing collected, persisted or
-  * counted. Only a different frame (the files changed, or no entry) makes
-  * a new entry.
+  * landing∪staging per request. Freshness is one rule: a hit younger than
+  * `ttlMillis` is served as it is, with no check and no file I/O; an older
+  * entry, or none, is revalidated by calling `build`, which for
+  * [[SearchServer]] is a [[graft.ops.DerivedZone]] read keyed by the
+  * fingerprint of the bucket's files. The zone returns the SAME frame while
+  * that fingerprint holds, and then the entry is kept as it is — its time
+  * refreshed, nothing collected, persisted or counted. Only a different
+  * frame (the files changed, or no entry) makes a new entry. A compaction
+  * is seen at the next revalidation like any other change of files;
+  * [[invalidate]] drops an entry so the next request revalidates now.
   *
   * Two snapshot forms, chosen per entry by comparing the bytes behind the
   * frame (`inputBytes`, a file listing: no job) with `localMaxBytes`
@@ -60,10 +60,9 @@ import org.apache.spark.sql.graft.LocalPlans
   * SessionCacheManager.scala:77-84) — deliberately NOT inside
   * `ConcurrentHashMap.compute`, whose contract wants short, simple
   * functions. Readers of a fresh entry never take the lock; a miss
-  * re-reads the epoch under the lock, so two requests that both saw a
-  * stale epoch revalidate once, and a request holding an older epoch than
-  * the published one does not revalidate at all. Other buckets proceed on
-  * their own locks.
+  * re-checks freshness under the lock, so requests that queued behind a
+  * revalidation are served its entry and do not build again. Other
+  * buckets proceed on their own locks.
   */
 class SessionCache private[graft] (ttlMillis: Long, localMaxBytes: Long)
     extends AutoCloseable {
@@ -80,30 +79,26 @@ class SessionCache private[graft] (ttlMillis: Long, localMaxBytes: Long)
   /** Snapshot entries made since construction. */
   def rebuilds: Long = builds.get()
 
-  private def fresh(e: Entry, epoch: String): Boolean =
-    e != null && e.epoch == epoch && System.currentTimeMillis() - e.builtAt < ttlMillis
+  private def fresh(e: Entry): Boolean =
+    e != null && System.currentTimeMillis() - e.builtAt < ttlMillis
 
   /** The cached snapshot for `bucket`, revalidated against `build` when
-    * absent, older than the TTL, or made at another epoch. `epoch` is
-    * evaluated once per call and, on a miss, again under the bucket lock —
-    * the epoch read under the lock is the one the entry records.
-    * `inputBytes` (the bytes behind `build`'s frame) is evaluated only when
-    * a new entry is made and picks its form; a driver-held snapshot needs a
-    * `key` column ([[SessionCache.isDriverHeld]] tells the forms apart).
+    * absent or older than the TTL. `inputBytes` (the bytes behind
+    * `build`'s frame) is evaluated only when a new entry is made and picks
+    * its form; a driver-held snapshot needs a `key` column
+    * ([[SessionCache.isDriverHeld]] tells the forms apart).
     */
-  def get(bucket: String, epoch: => String = "", inputBytes: => Long = 0L)(
-      build: => DataFrame): DataFrame = {
+  def get(bucket: String, inputBytes: => Long = 0L)(build: => DataFrame): DataFrame = {
     val e = entries.get(bucket)
-    if (fresh(e, epoch)) return e.df
+    if (fresh(e)) return e.df
     locks.computeIfAbsent(bucket, _ => new Object).synchronized {
-      val ep = epoch
       val cur = entries.get(bucket)
-      if (fresh(cur, ep)) cur.df
+      if (fresh(cur)) cur.df
       else {
         val source = build
         val now = System.currentTimeMillis()
         val next =
-          if (cur != null && (cur.source eq source)) cur.copy(builtAt = now, epoch = ep)
+          if (cur != null && (cur.source eq source)) cur.copy(builtAt = now)
           else {
             builds.incrementAndGet()
             SearchMetricsSource.getOrRegister().snapshotBuilds.inc()
@@ -113,7 +108,7 @@ class SessionCache private[graft] (ttlMillis: Long, localMaxBytes: Long)
             Entry(source,
               if (inputBytes < localMaxBytes) LocalPlans.collectLocal(source.orderBy(col("key")))
               else persist(source.where(ownPlan)),
-              now, ep)
+              now)
           }
         entries.put(bucket, next)
         next.df
@@ -155,8 +150,7 @@ private[graft] object SessionCache {
   private val ids = new AtomicLong(0L)
 
   /** `source` is the frame `build` returned; `df` the form served. */
-  private final case class Entry(source: DataFrame, df: DataFrame, builtAt: Long,
-                                 epoch: String)
+  private final case class Entry(source: DataFrame, df: DataFrame, builtAt: Long)
 
   /** Whether `snapshot` is the driver-held, key-sorted form. */
   def isDriverHeld(snapshot: DataFrame): Boolean =

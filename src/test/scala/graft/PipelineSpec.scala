@@ -1,9 +1,13 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
+
 import graft.compact.Compactor
 import graft.ingest.IngestPipeline
 import graft.search.{MetadataSearch, SearchQuery, SessionCache}
 import graft.tools.Populator
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -414,39 +418,43 @@ class SessionCacheSpec extends AnyFunSuite {
       Seq(row).toDF("id", "v").write.parquet(s"$dir/$v")
     }
     def read(v: String) = spark.read.parquet(s"$dir/$v")
-    val cache = new SessionCache(ttlMillis = 600000, localMaxBytes = 0L)
+    val ttlMs = 3000L
+    def expire(): Unit = Thread.sleep(ttlMs + 100)
+    val cache = new SessionCache(ttlMillis = ttlMs, localMaxBytes = 0L)
     try {
-      val d1 = cache.get("g", "e1")(read("v1"))
+      val d1 = cache.get("g")(read("v1"))
       assert(d1.storageLevel.useMemory)
       // a page planned over the snapshot before the swap, as a request
       // still running on it would be
       val page = d1.filter(col("id") > 0)
       assert(page.queryExecution.executedPlan.exists(
         _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryTableScanExec]))
-      // a new epoch over new files swaps in a new snapshot and unpersists
+      // a TTL expiry over new files swaps in a new snapshot and unpersists
       // the old one at once
+      expire()
       val v2 = read("v2")
-      val d2 = cache.get("g", "e2")(v2)
-      assert(cache.rebuilds == 2 && (cache.get("g", "e2")(fail("cached")) eq d2))
+      val d2 = cache.get("g")(v2)
+      assert(cache.rebuilds == 2 && (cache.get("g")(fail("cached")) eq d2))
       assert(!d1.storageLevel.useMemory, "superseded snapshot still persisted")
       assert(page.as[(Int, String)].collect().toSeq == Seq((1, "x")),
         "a page planned before the swap re-reads its files")
-      // a new epoch whose build returns the entry's own frame keeps the entry
-      assert((cache.get("g", "e3")(v2) eq d2) && cache.rebuilds == 2)
+      // a TTL expiry whose build returns the entry's own frame keeps the entry
+      expire()
+      assert((cache.get("g")(v2) eq d2) && cache.rebuilds == 2)
       assert(d2.storageLevel.useMemory)
 
       // invalidate unpersists now; clear() unpersists everything
       cache.invalidate("g")
       assert(!d2.storageLevel.useMemory)
-      val d3 = cache.get("g", "e3")(read("v3"))
-      val d4 = cache.get("h", "e1")(read("v1"))
+      val d3 = cache.get("g")(read("v3"))
+      val d4 = cache.get("h")(read("v1"))
       assert(d3.storageLevel.useMemory && d4.storageLevel.useMemory)
       // another cache over the same files holds a cached relation of its
       // own: Spark keys its cache by plan, and this one's unpersist must
       // not evict the other's
       val other = new SessionCache(ttlMillis = 600000, localMaxBytes = 0L)
       try {
-        val o4 = other.get("h", "e1")(read("v1"))
+        val o4 = other.get("h")(read("v1"))
         cache.clear()
         assert(!d3.storageLevel.useMemory && !d4.storageLevel.useMemory)
         assert(o4.storageLevel.useMemory, "one cache's clear() evicted another's snapshot")
@@ -454,40 +462,62 @@ class SessionCacheSpec extends AnyFunSuite {
     } finally cache.close()
   }
 
-  test("8 threads across an epoch change build exactly once per (bucket, epoch)") {
+  test("8 threads across an invalidate build exactly once per (bucket, invalidation)") {
     val cache = new SessionCache(ttlMillis = 600000, localMaxBytes = 0L)
-    val epochs = Map("a" -> new java.util.concurrent.atomic.AtomicReference("a0"),
-      "b" -> new java.util.concurrent.atomic.AtomicReference("b0"),
-      "c" -> new java.util.concurrent.atomic.AtomicReference("c0"))
-    val builds = new java.util.concurrent.ConcurrentHashMap[(String, String), Int]()
-    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    // a bucket's generation moves on each invalidate; a build records the
+    // generation it ran in
+    val gens = Map("a" -> new AtomicInteger(0), "b" -> new AtomicInteger(0),
+      "c" -> new AtomicInteger(0))
+    def invalidate(b: String): Unit = { gens(b).incrementAndGet(); cache.invalidate(b) }
+    val builds = new java.util.concurrent.ConcurrentHashMap[(String, Int), Int]()
+    def build(b: String) = {
+      builds.merge((b, gens(b).get), 1, _ + _)
+      Thread.sleep(30) // widen the window a queued reader could race into
+      Seq((b, gens(b).get)).toDF("bucket", "gen")
+    }
+    val calls = new AtomicInteger(0)
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     try {
       val threads = (0 until 8).map { t =>
         val th = new Thread(() =>
           try (0 until 60).foreach { i =>
             val b = Seq("a", "b", "c")((t + i) % 3)
-            val df = cache.get(b, epochs(b).get) {
-              builds.merge((b, epochs(b).get), 1, _ + _)
-              Thread.sleep(30) // widen the window a second stale reader could race into
-              Seq((b, epochs(b).get)).toDF("bucket", "epoch")
-            }
-            assert(df.as[(String, String)].head()._1 == b)
-            if (calls.incrementAndGet() == 120) epochs("b").set("b1")
+            val df = cache.get(b)(build(b))
+            assert(df.as[(String, Int)].head()._1 == b)
+            if (calls.incrementAndGet() == 120) invalidate("b")
           } catch { case e: Throwable => errors.add(e) })
         th.start()
         th
       }
       threads.foreach(_.join(120000L))
       assert(errors.isEmpty, errors)
-      assert(builds.get(("b", "b1")) == 1)
+      assert(builds.get(("b", 1)) == 1)
       assert(builds.values.stream.allMatch(_ == 1) && builds.size == 4, builds)
       assert(cache.rebuilds == 4)
-      // a request that read the epoch before the change does not rebuild:
-      // the miss re-reads the epoch under the bucket lock
-      val reads = Iterator("b0", "b1")
-      cache.get("b", reads.next())(fail("a stale reader rebuilt the snapshot"))
-      assert(cache.rebuilds == 4)
+
+      // a request that queued on the bucket lock behind a rebuild is served
+      // that rebuild's snapshot: the miss re-checks freshness under the lock
+      invalidate("b")
+      val started = new CountDownLatch(1)
+      val release = new CountDownLatch(1)
+      val first = new AtomicReference[DataFrame]()
+      val queued = new AtomicReference[DataFrame]()
+      val slow = new Thread(() => first.set(cache.get("b") {
+        started.countDown(); release.await(); build("b")
+      }))
+      slow.start()
+      assert(started.await(30, TimeUnit.SECONDS))
+      val waiter = new Thread(() =>
+        queued.set(cache.get("b")(fail("a queued request rebuilt the snapshot"))))
+      waiter.start()
+      val deadline = System.currentTimeMillis() + 30000L
+      while (waiter.getState != Thread.State.BLOCKED && System.currentTimeMillis() < deadline)
+        Thread.sleep(5)
+      assert(waiter.getState == Thread.State.BLOCKED, "the second request never queued")
+      release.countDown()
+      Seq(slow, waiter).foreach(_.join(60000L))
+      assert(first.get != null && (queued.get eq first.get))
+      assert(builds.get(("b", 2)) == 1 && cache.rebuilds == 5)
     } finally cache.close()
   }
 }

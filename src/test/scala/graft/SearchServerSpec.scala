@@ -146,32 +146,35 @@ class SearchServerSpec extends AnyFunSuite {
     } finally server.close()
   }
 
-  test("compactor completion invalidates the warm snapshot via the zone epoch") {
+  test("a compaction makes no rebuild within the TTL and every page is unchanged") {
     // fresh zones — compaction purges landing, so the shared fixture
     // must not be touched
-    val l = SparkTestSession.tempDir("srv-epoch-landing")
-    val s = SparkTestSession.tempDir("srv-epoch-staging")
+    val l = SparkTestSession.tempDir("srv-compact-ttl-landing")
+    val s = SparkTestSession.tempDir("srv-compact-ttl-staging")
     Populator.populateLanding(spark, l, "eb1", 60, groupInterval = 20L)
     val server = new SearchServer(spark, l, s, cacheTtlMillis = 600000L)
+    val queries = Seq(SearchQuery("eb1", limit = 50),
+      SearchQuery("eb1", "`content-length` < 1024", limit = 9),
+      SearchQuery("eb1", startKey = Some("obj_0000000009"), limit = 11))
+    def direct(q: SearchQuery): Seq[String] =
+      server.searcher.search(q).select("key").as[String].collect().toSeq
     try {
-      val warm = serve(server, Seq(
-        """{"bucket":"eb1","limit":50}""",
-        """{"bucket":"eb1","limit":50}"""))
-      val before = keysOf(warm(0))
-      assert(before.nonEmpty && keysOf(warm(1)) == before)
-      assert(server.snapshotRebuilds == 1, "second query must be warm")
+      val before = queries.map(server.executeJson)
+      assert(keysOf(before.head).nonEmpty && queries.map(server.executeJson) == before)
+      assert(server.snapshotRebuilds == 1, "second round must be warm")
 
       // a compactor in what is operationally ANOTHER process rewrites the
-      // zones; no invalidate command is ever sent to the server
+      // zones and purges the landing op-groups it folded; no invalidate
+      // command is ever sent to the server
       new graft.compact.Compactor(spark, l, s).compactBucket("eb1", numPartitions = 2)
+      assert(new java.io.File(s"$s/bucket=eb1").exists())
 
-      val after = serve(server, Seq(
-        """{"bucket":"eb1","limit":50}""",
-        """{"bucket":"eb1","limit":50}"""))
-      assert(server.snapshotRebuilds == 2,
-        s"compaction must force exactly one rebuild, got ${server.snapshotRebuilds}")
-      // compaction preserves latest-state semantics: same page before/after
-      assert(keysOf(after(0)) == before && keysOf(after(1)) == before)
+      // compaction keeps every key's latest event: the cached snapshot
+      // still answers every page, and is not rebuilt before its TTL
+      assert(queries.map(server.executeJson) == before)
+      assert(server.snapshotRebuilds == 1 && server.zone.builds.get == 1,
+        s"a compaction rebuilt within the TTL: ${server.snapshotRebuilds}")
+      assert(before.map(keysOf) == queries.map(direct), "the compacted zones answer the same")
     } finally server.close()
   }
 
@@ -292,7 +295,7 @@ class SearchServerSpec extends AnyFunSuite {
     } finally server.close()
   }
 
-  test("8 concurrent clients over 3 buckets across a compaction: one rebuild per (bucket, epoch)") {
+  test("8 concurrent clients over 3 buckets across a compaction: 3 rebuilds, answers byte-equal to a serial server") {
     val l = SparkTestSession.tempDir("srv-conc-landing")
     val s = SparkTestSession.tempDir("srv-conc-staging")
     val buckets = Seq("cb0", "cb1", "cb2")
@@ -346,13 +349,14 @@ class SearchServerSpec extends AnyFunSuite {
       while ((0 until buckets.size).exists(perBucket.get(_) == 0) &&
           System.currentTimeMillis() < deadline) Thread.sleep(20)
       assert(server.snapshotRebuilds == 3)
+      // the compactor purges cb1's landing op-groups while clients are served
       new graft.compact.Compactor(spark, l, s).compactBucket("cb1", numPartitions = 2)
       compacted.set(true)
       threads.foreach(_.join(180000L))
       assert(errors.isEmpty, errors.toArray.take(3).mkString("\n"))
       assert(!threads.exists(_.isAlive), "clients did not finish")
-      // three first builds plus exactly one for cb1's new epoch
-      assert(server.snapshotRebuilds == 4, s"rebuilds: ${server.snapshotRebuilds}")
+      // one build per bucket: within the TTL the compaction is not re-merged
+      assert(server.snapshotRebuilds == 3, s"rebuilds: ${server.snapshotRebuilds}")
     } finally {
       afterCompaction.set(Int.MaxValue)
       http.close()
@@ -672,19 +676,104 @@ class SearchServerSpec extends AnyFunSuite {
   }
 
   test("a compaction with a delete of a compacted key rebuilds once and matches a direct search") {
-    bounds.foreach { bound =>
+    // the TTL outlasts the compactions below, and one wait then expires
+    // every server's entry
+    val ttlMs = 20000L
+    val runs = bounds.map { bound =>
       val (l, s) = zbZones(s"srv-compact-$bound")
-      val server = new SearchServer(spark, l, s, cacheTtlMillis = 600000L, localMaxBytes = bound)
-      try {
-        val before = pages(server)
-        assert(before == direct(server) && !before.head.contains(obj(100 % 40) + "\""))
+      (bound, l, s, new SearchServer(spark, l, s, cacheTtlMillis = ttlMs, localMaxBytes = bound))
+    }
+    try {
+      val t0 = System.currentTimeMillis()
+      val before = runs.map { case (bound, _, _, server) =>
+        val p = pages(server)
+        assert(p == direct(server) && !p.head.contains(obj(100 % 40) + "\""), s"bound $bound")
+        p
+      }
+      val built = System.currentTimeMillis()
+      runs.zip(before).foreach { case ((bound, l, s, server), b) =>
         // the landing wave's delete of a staged key is compacted here
         new graft.compact.Compactor(spark, l, s).compactBucket("zb", numPartitions = 2,
           force = true)
+        assert(System.currentTimeMillis() - t0 < ttlMs, "the compactions outlasted the TTL")
+        assert(pages(server) == b, s"bound $bound")
+        assert(server.snapshotRebuilds == 1 && server.zone.builds.get == 1,
+          s"bound $bound: a compaction rebuilt within the TTL")
+      }
+      Thread.sleep(math.max(0L, built + ttlMs + 100 - System.currentTimeMillis()))
+      runs.zip(before).foreach { case ((bound, _, _, server), b) =>
         val after = pages(server)
         assert(server.snapshotRebuilds == 2 && server.zone.builds.get == 2, s"bound $bound")
-        assert(after == direct(server) && after == before)
+        assert(after == direct(server) && after == b, s"bound $bound")
+      }
+    } finally runs.foreach(_._4.close())
+  }
+
+  test("a warm hit reads no zone file") {
+    bounds.foreach { bound =>
+      val (l, s) = zbZones(s"srv-nofile-$bound")
+      val server = new SearchServer(spark, l, s, cacheTtlMillis = 600000L, localMaxBytes = bound)
+      try {
+        val warm = pages(server)
+        assert(warm.head != "[]" && warm == direct(server))
+        // the bucket's files are gone from both zones
+        val away = SparkTestSession.tempDir(s"srv-nofile-away-$bound")
+        Seq("landing" -> l, "staging" -> s).foreach { case (name, zone) =>
+          java.nio.file.Files.move(java.nio.file.Paths.get(s"$zone/bucket=zb"),
+            java.nio.file.Paths.get(s"$away/$name"))
+        }
+        (0 until 20).foreach(i => assert(server.executeJson(zbQueries(i % 3)) == warm(i % 3),
+          s"bound $bound, page $i"))
+        assert(server.snapshotRebuilds == 1 && server.zone.builds.get == 1, s"bound $bound")
       } finally server.close()
     }
+  }
+
+  test("HTTP GET passes control characters in start_key and search through as JSON escapes") {
+    val (l, s) = oddZones
+    val server = new SearchServer(spark, l, s, cacheTtlMillis = 600000L)
+    val http = new HttpSearchServer(server, port = 0)
+    try {
+      def enc(v: String): String = java.net.URLEncoder.encode(v, "UTF-8")
+      def line(where: String, startKey: String): String = server.handle(
+        s"""{"bucket":"ob","where":"${esc(where)}","startKey":"${esc(startKey)}","limit":1000}""")._1
+      val where = "`content-length` > 100\nAND\tuserMd['x-amz-meta-color'] = 'red'"
+      for ((w, k) <- Seq("" -> "tab\tkey", "" -> "ctl\u0001x", where -> "k010")) {
+        val (code, body) = request(http.boundPort, "GET", s"/ob?search=${enc(w)}&start_key=${enc(k)}")
+        assert(code == 200, body)
+        assert(body == line(w, k) && keysOf(body).nonEmpty, (w, k))
+      }
+    } finally {
+      http.close()
+      server.close()
+    }
+  }
+
+  test("a bucket name stays inside its zones: ../ reads nothing beside them; / : % find their own") {
+    val root = SparkTestSession.tempDir("srv-names")
+    // Spark accepts a read path under `basePath` by string prefix, so a
+    // directory whose name extends both zone names passes for either
+    val (l, s) = (s"$root/zone", s"$root/zone-staging")
+    val planted = s"$root/zone-staging-planted"
+    def put(b: String, key: String) =
+      s"""{"opIndex":"000000000001_0","type":"put","bucket":"${esc(b)}","key":"$key","value":{"owner-id":"o"}}"""
+    IngestPipeline.batchIngest(spark, Seq(put("evil", "planted-key")).toDF("value"), planted)
+    IngestPipeline.batchIngest(spark, Seq(put("ok", "k1"), put("a/b:c%d", "k2")).toDF("value"), l)
+    new java.io.File(s).mkdirs()
+    val server = new SearchServer(spark, l, s, cacheTtlMillis = 600000L)
+    try {
+      // beside the zones, and another bucket of the same zone
+      val escape = "x/../../zone-staging-planted/bucket=evil"
+      for (b <- Seq(escape, "x/../bucket=ok")) {
+        assert(server.executeJson(SearchQuery(b)) == "[]", b)
+        assert(server.searcher.search(SearchQuery(b)).count() == 0, b)
+      }
+      val line = server.handle(s"""{"bucket":"$escape"}""")._1
+      assert(line == "[]", line)
+      // the sink wrote `a/b:c%d` as one escaped directory, and the search finds it
+      assert(new java.io.File(s"$l/bucket=a%2Fb%3Ac%25d").isDirectory)
+      assert(keysOf(server.executeJson(SearchQuery("a/b:c%d"))) == Seq("k2"))
+      assert(keysOf(server.executeJson(SearchQuery("ok"))) == Seq("k1"))
+    } finally server.close()
   }
 }
