@@ -51,10 +51,10 @@ class GraftEngine(spark: SparkSession, val config: GraftConfig)
     * path (reference: SessionCacheManager): repeated searches reuse one
     * merge, published once per state of the bucket's files to the server's
     * snapshot zone ([[SearchServer.execute]]) and re-checked against the
-    * bucket's files once per TTL (`cacheTtlMillis`). A bucket under 4 MiB of
-    * input is held on the driver as key-sorted rows, and the page comes
-    * back already computed; for a larger one the page is a one-stage plan
-    * over a cached scan of the zone's parquet.
+    * bucket's files once per TTL (`cacheTtlMillis`). A bucket whose
+    * snapshot is under 4 MiB of parquet is held on the driver as key-sorted
+    * rows, and the page comes back already computed; for a larger one the
+    * page is a one-stage plan over a cached scan of the zone's parquet.
     */
   def searchCached(q: SearchQuery): DataFrame = server.execute(q)
 

@@ -1,49 +1,14 @@
 package graft.ops
 
-/** Cluster-sizing math for the 100 TB deployment, as code instead of a
-  * runbook (spec-checked in `TuningSpec`).
-  *
-  * The knobs below are the ones that decide whether a plan that is
-  * correct at sf0.1 still RUNS at 1000 executors:
-  *
-  *  - **shuffle partitions**: sized so one shuffle partition of the
-  *    largest expected shuffle fits comfortably in one task's memory
-  *    (`targetPartitionBytes`, default 128 MiB), floored at 2× total
-  *    cores so every core has work even for small stages — AQE coalesces
-  *    down from there, it never splits up, so err high.
-  *  - **scan partition size** (`maxPartitionBytes`): keep the default
-  *    128 MiB — larger starves parallelism on pruned scans, smaller
-  *    drowns the driver in tasks.
-  *  - **broadcast threshold**: bounded by executor memory, not wishful
-  *    thinking: a broadcast table materializes ONCE PER EXECUTOR on the
-  *    heap; 1/32 of executor memory caps the worst case with 32
-  *    concurrent broadcasts far away.
-  *  - **AQE on** (with skew-join splitting): runtime re-planning is the
-  *    only defense against estimate drift at this scale.
+/** Sizing arithmetic the engine applies itself (spec-checked in
+  * `TuningSpec`): the pass count of the near-dup shared-counts build
+  * ([[pairShardPasses]], called by [[graft.analytics.Dedup]]) and the
+  * local bench's shuffle width ([[benchWidth]], called by [[graft.Bench]]).
   */
 object Tuning {
 
-  final case class Profile(confs: Map[String, String]) {
-    def apply(spark: org.apache.spark.sql.SparkSession): Unit =
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-  }
-
   val MiB: Long = 1L << 20
   val GiB: Long = 1L << 30
-
-  /** Shuffle-partition count for `shuffleBytes` of shuffled data:
-    * ceil(bytes / target), floored at 2 tasks per core. */
-  def shufflePartitions(shuffleBytes: Long, totalCores: Int,
-                        targetPartitionBytes: Long = 128 * MiB): Int = {
-    require(shuffleBytes >= 0 && totalCores > 0 && targetPartitionBytes > 0)
-    val bySize = (shuffleBytes + targetPartitionBytes - 1) / targetPartitionBytes
-    math.max(bySize, 2L * totalCores).min(Int.MaxValue).toInt
-  }
-
-  /** Broadcast cutoff: 1/32 of executor heap, capped at 1 GiB (the point
-    * where broadcast build+ship time loses to a shuffle join anyway). */
-  def broadcastThresholdBytes(executorMemBytes: Long): Long =
-    math.min(executorMemBytes / 32, 1 * GiB)
 
   /** Measured scratch-disk high-water per candidate pair in the
     * near-dup shared-counts build (shuffle files + the per-pass
@@ -97,9 +62,8 @@ object Tuning {
     * the suite's shuffle-heaviest relational queries; the pair build
     * sizes its own width off posting count and is excluded), rounded UP
     * to a whole number of `cores`-wide scheduler waves so every wave
-    * runs full — floored at ONE full wave, not [[shufflePartitions]]'s
-    * 2-tasks-per-core: that floor smooths task skew on cluster-scale
-    * scans, but a local point whose data needs fewer than `cores`
+    * runs full — floored at ONE full wave, not 2 tasks per core: that
+    * floor smooths task skew on cluster-scale scans, but a local point whose data needs fewer than `cores`
     * partitions is latency-bound and extra waves are pure scheduling
     * overhead (measured: the 120-query suite at sf0.1 runs 54 s at one
     * wave vs 64 s at two). ×1000 (~17 GB of source parquet, 32 cores)
@@ -109,21 +73,5 @@ object Tuning {
     val bySize = (inputBytes + 128 * MiB - 1) / (128 * MiB)
     val waves = math.max(1L, (bySize + cores - 1) / cores)
     (waves * cores).min(Int.MaxValue).toInt
-  }
-
-  /** The conf profile for a cluster of `executors`×`coresPerExecutor`
-    * cores and an expected worst-case shuffle of `maxShuffleBytes`. */
-  def profile(executors: Int, coresPerExecutor: Int,
-              executorMemBytes: Long, maxShuffleBytes: Long): Profile = {
-    val cores = executors * coresPerExecutor
-    Profile(Map(
-      "spark.sql.shuffle.partitions" ->
-        shufflePartitions(maxShuffleBytes, cores).toString,
-      "spark.sql.files.maxPartitionBytes" -> (128 * MiB).toString,
-      "spark.sql.autoBroadcastJoinThreshold" ->
-        broadcastThresholdBytes(executorMemBytes).toString,
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.adaptive.skewJoin.enabled" -> "true",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "true"))
   }
 }

@@ -77,13 +77,8 @@ object PlanGuard {
     * ADAPTIVE-FINAL executed plan of `df` — the query is executed first
     * (`toRdd.count()`, no rows to the driver) so AQE stage decisions,
     * exchange reuse included, are what gets counted. Subquery plans are
-    * traversed; reused exchanges / reused subqueries / cached-relation
-    * rescans are NOT double-counted (a reuse reads shuffle files or
-    * cache, not the table). A cache that is still COLD going into this
-    * execution is the exception: materializing it runs the cached plan's
-    * base scan once, and that one build scan IS counted (once per cache,
-    * however many consumers) — a query whose first execution scans a
-    * fact to cache it reports that scan instead of 0.
+    * traversed; reused exchanges and reused subqueries are NOT
+    * double-counted (a reuse reads shuffle files, not the table).
     *
     * This is the regression net for the "silently re-derived fact
     * subtree" defect class (events_rfm round 10: per-branch column
@@ -94,58 +89,26 @@ object PlanGuard {
     * Driver-resolved literal jobs and DerivedZone builds run OUTSIDE the
     * query's own plan and are not counted — they are once-per-dataset
     * (zone) or tiny-aggregate jobs, not per-execution fact scans.
+    *
+    * A cached relation in the plan throws: query paths reuse derived work
+    * through [[graft.ops.DerivedZone]], and a cache's reads cannot be told
+    * from its build scan here, so a count over one would be a guess.
     */
   def factScanCounts(df: DataFrame, tables: Seq[String]): Map[String, Int] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
     import org.apache.spark.sql.execution.{ExecSubqueryExpression, ReusedSubqueryExec}
-    import org.apache.spark.sql.graft.CacheIntrospect
-    // A cached-relation scan reads column buffers, not the table — EXCEPT
-    // the execution that MATERIALIZES the cache, which runs the cached
-    // plan's scan once. Snapshot, before executing, which cache builders
-    // are still cold: those (and only those) charge their cached plan's
-    // base scans to this execution, once per builder no matter how many
-    // cache consumers the plan has.
-    def coldBuilders(p: SparkPlan): Seq[AnyRef] = {
-      val here: Seq[AnyRef] = p match {
-        case a: AdaptiveSparkPlanExec => coldBuilders(a.executedPlan)
-        case q: QueryStageExec => coldBuilders(q.plan)
-        case im: InMemoryTableScanExec =>
-          if (CacheIntrospect.isLoaded(im)) Nil
-          else CacheIntrospect.cacheKey(im) +:
-            coldBuilders(CacheIntrospect.cachedPlan(im))
-        case other => other.children.flatMap(coldBuilders)
-      }
-      here ++ p.expressions.flatMap(_.collect {
-        case sub: ExecSubqueryExpression => coldBuilders(sub.plan)
-      }.flatten)
-    }
-    // identity sets: one builder INSTANCE per cache (CacheManager shares
-    // it across every consumer), and plan-node structural equality is
-    // neither needed nor cheap here
-    val cold = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
-    coldBuilders(df.queryExecution.executedPlan).foreach(cold.add)
     df.queryExecution.toRdd.count()
-    val counted = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
     def scans(p: SparkPlan): Seq[FileSourceScanExec] = {
       val here: Seq[FileSourceScanExec] = p match {
         case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
         case q: QueryStageExec => scans(q.plan)
         case _: ReusedExchangeExec => Nil
         case im: InMemoryTableScanExec =>
-          val b = CacheIntrospect.cacheKey(im)
-          // charge only builders that TRANSITIONED cold -> loaded during
-          // this execution: a cold cache on a branch the execution never
-          // materialized (pruned by AQE, short-circuited join side) ran
-          // no build scan, so the post-execution isLoaded re-check keeps
-          // it out of the count instead of charging its base scans
-          // unconditionally off the pre-execution snapshot
-          if (cold.contains(b) && CacheIntrospect.isLoaded(im) && counted.add(b))
-            scans(CacheIntrospect.cachedPlan(im))
-          else Nil
+          throw new IllegalStateException(
+            s"PlanGuard.factScanCounts: cached relation in the plan (${im.simpleString(8)}); " +
+              "reuse derived work through a DerivedZone")
         case f: FileSourceScanExec => Seq(f)
         case other => other.children.flatMap(scans)
       }

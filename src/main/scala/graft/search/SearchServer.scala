@@ -22,10 +22,10 @@ import org.json4s.jackson.JsonMethods
   * durable `spark.graft.derived.dir`, merges nothing), and every later
   * query reuses the [[SessionCache]] entry made from it — no re-scan, no
   * re-merge, no file I/O, and the JSON page rendered inside the plan
-  * ([[MetadataSearch.jsonRows]]). The entry's form follows the bucket's
-  * input bytes:
-  *  - below [[SessionCache.LocalMaxBytes]] (4 MiB of parquet, about
-  *    26 MiB of driver heap at most) it is collected from the zone read
+  * ([[MetadataSearch.jsonRows]]). The entry's form follows the bytes of
+  * the published snapshot, which the zone read has already listed:
+  *  - below [[SessionCache.LocalMaxBytes]] (4 MiB of snapshot parquet,
+  *    about 27 MiB of driver heap at most) it is collected from the zone read
   *    and held on the driver as key-sorted rows, and a warm page folds on
   *    the driver with NO Spark job — the per-query job, closure-cleaning
   *    and task-serialisation costs are gone;
@@ -95,7 +95,7 @@ class SearchServer private[graft] (spark: SparkSession, landingDir: String,
     */
   def execute(q: SearchQuery): DataFrame = {
     val inputs = Seq(landingDir, stagingDir).map(MetadataSearch.bucketDir(_, q.bucket))
-    val snapshot = cache.get(q.bucket, DerivedZone.dataBytes(spark, inputs)) {
+    val snapshot = cache.get(q.bucket) {
       zone.get(spark, inputs.mkString("\n"), inputs)(searcher.bucketSnapshot(q.bucket))
     }
     searcher.searchSnapshot(snapshot, q, SessionCache.isDriverHeld(snapshot))
@@ -201,6 +201,10 @@ class SearchServer private[graft] (spark: SparkSession, landingDir: String,
   *  - `GET /metrics` — the `graft.search` counters (the line protocol's
   *    `{"cmd":"metrics"}`)
   *  - `POST /invalidate?bucket=<b>` — drop a bucket's snapshot
+  *
+  * A request whose URI does not parse (a malformed percent-escape such as
+  * `%zz` or a trailing `%`) is answered 400 by the JDK server before any
+  * route runs, so `URLDecoder` only ever sees well-formed escapes.
   *
   * Requests run on a fixed pool of `availableProcessors` handler threads
   * over the one warm session. A search over a small bucket's driver-held

@@ -8,6 +8,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.graft.metrics.SearchMetricsSource
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graft.LocalPlans
 
@@ -26,20 +27,22 @@ import org.apache.spark.sql.graft.LocalPlans
   * is seen at the next revalidation like any other change of files;
   * [[invalidate]] drops an entry so the next request revalidates now.
   *
-  * Two snapshot forms, chosen per entry by comparing the bytes behind the
-  * frame (`inputBytes`, a file listing: no job) with `localMaxBytes`
-  * ([[SessionCache.LocalMaxBytes]]; specs may pin another bound):
+  * Two snapshot forms, chosen per entry by comparing the bytes of the
+  * files the frame reads (for [[SearchServer]], the published snapshot's
+  * parquet, which Spark's file index listed when the zone read was made:
+  * no further listing, no job) with `localMaxBytes`
+  * ([[SessionCache.LocalMaxBytes]]; specs may pin another bound). A frame
+  * over no files counts 0 bytes:
   *
   *  - Driver-held, below the bound: the frame is sorted by `key` BY SPARK
   *    (its UTF-8 byte order — Java's UTF-16 `String` order differs once
   *    surrogate pairs meet characters above U+E000), collected once and
   *    kept as a `LocalRelation` of its binary rows. A page over it folds on
   *    the driver with no Spark job ([[MetadataSearch.searchSnapshot]] with
-  *    `keySorted`). Memory: a snapshot holds at most one row per input row,
-  *    and a driver-held row measured 5.4–6.5× the parquet bytes per input
-  *    row (470–840 B per row, on the `search_warm` buckets and a
-  *    40,000-key `Populator` bucket), so one bucket costs at most about
-  *    6.5 × 4 MiB ≈ 26 MiB of driver heap.
+  *    `keySorted`). Memory: a driver-held row measured 6.3–6.7× the
+  *    snapshot's parquet bytes per row (836 B per row by Spark's
+  *    `SizeEstimator`, on `Populator` buckets of 2,000–120,000 keys), so
+  *    one bucket costs at most about 6.7 × 4 MiB ≈ 27 MiB of driver heap.
   *  - Persisted, at or above the bound: the frame (for the server, a
   *    plain scan of the zone's published parquet) is persisted and counted
   *    once, under a plan of this cache's own (an always-true filter on a
@@ -83,12 +86,11 @@ class SessionCache private[graft] (ttlMillis: Long, localMaxBytes: Long)
     e != null && System.currentTimeMillis() - e.builtAt < ttlMillis
 
   /** The cached snapshot for `bucket`, revalidated against `build` when
-    * absent or older than the TTL. `inputBytes` (the bytes behind
-    * `build`'s frame) is evaluated only when a new entry is made and picks
-    * its form; a driver-held snapshot needs a `key` column
-    * ([[SessionCache.isDriverHeld]] tells the forms apart).
+    * absent or older than the TTL. The bytes of the files behind `build`'s
+    * frame pick a new entry's form; a driver-held snapshot needs a `key`
+    * column ([[SessionCache.isDriverHeld]] tells the forms apart).
     */
-  def get(bucket: String, inputBytes: => Long = 0L)(build: => DataFrame): DataFrame = {
+  def get(bucket: String)(build: => DataFrame): DataFrame = {
     val e = entries.get(bucket)
     if (fresh(e)) return e.df
     locks.computeIfAbsent(bucket, _ => new Object).synchronized {
@@ -106,7 +108,8 @@ class SessionCache private[graft] (ttlMillis: Long, localMaxBytes: Long)
             // the old one's cache entry, and unpersisting after would drop it
             if (cur != null) drop(cur)
             Entry(source,
-              if (inputBytes < localMaxBytes) LocalPlans.collectLocal(source.orderBy(col("key")))
+              if (SessionCache.fileBytes(source) < localMaxBytes)
+                LocalPlans.collectLocal(source.orderBy(col("key")))
               else persist(source.where(ownPlan)),
               now)
           }
@@ -142,15 +145,25 @@ class SessionCache private[graft] (ttlMillis: Long, localMaxBytes: Long)
 
 private[graft] object SessionCache {
 
-  /** Input bytes (parquet, landing plus staging) below which a bucket's
-    * snapshot is held on the driver — see the class doc for the memory it
-    * buys. */
+  /** Snapshot bytes (the published snapshot's parquet) below which a
+    * bucket's snapshot is held on the driver — see the class doc for the
+    * memory it buys. */
   val LocalMaxBytes: Long = 4L << 20
 
   private val ids = new AtomicLong(0L)
 
   /** `source` is the frame `build` returned; `df` the form served. */
   private final case class Entry(source: DataFrame, df: DataFrame, builtAt: Long)
+
+  /** Bytes of the files `df` reads, summed from the file indexes Spark
+    * built when the frame was made: no listing, no job. */
+  private def fileBytes(df: DataFrame): Long =
+    df.queryExecution.analyzed.collect {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation => h.location.sizeInBytes
+        case _ => 0L
+      }
+    }.sum
 
   /** Whether `snapshot` is the driver-held, key-sorted form. */
   def isDriverHeld(snapshot: DataFrame): Boolean =

@@ -8,8 +8,9 @@ import org.apache.spark.sql.execution.SQLExecution
 /** Driver-held relations for [[graft.search.SessionCache]]'s small-bucket
   * snapshots, collected from the bucket's snapshot-zone read. Lives in an `org.apache.spark.sql` subpackage because
   * `Dataset.ofRows` (a DataFrame over a given logical plan) is
-  * `private[sql]` — same pattern as [[CacheIntrospect]]; no Spark
-  * behavior is modified.
+  * `private[sql]` — same pattern as
+  * [[org.apache.spark.graft.metrics.SearchMetricsSource]]; no Spark behavior
+  * is modified.
   */
 object LocalPlans {
 

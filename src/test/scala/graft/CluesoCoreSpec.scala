@@ -173,6 +173,25 @@ class LatestStateSpec extends AnyFunSuite {
     assert(plan.indexOf("Window [", win + 1) == -1,
       s"exactly one window (the copy collapse) allowed:\n$plan")
   }
+
+  test("utcTs renders epoch seconds in UTC by integer math, any session tz") {
+    import spark.implicits._
+    val secs = Seq(0L, 59L, 3600L, 86399L, 86400L, 951868800L,
+      1234567890L, 2000000000L, 4102444799L)
+    val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
+    val want = secs.map(s => java.time.LocalDateTime
+      .ofEpochSecond(s, 0, java.time.ZoneOffset.UTC).format(fmt))
+    val prevTz = spark.conf.get("spark.sql.session.timeZone")
+    try {
+      for (tz <- Seq("UTC", "America/New_York", "Asia/Kolkata")) {
+        spark.conf.set("spark.sql.session.timeZone", tz)
+        val got = secs.toDF("sec")
+          .select(analytics.CluesoOps.utcTs.as("ts"))
+          .collect().map(_.getString(0)).toSeq
+        assert(got == want, s"tz=$tz: $got")
+      }
+    } finally spark.conf.set("spark.sql.session.timeZone", prevTz)
+  }
 }
 
 class PopulatorSpec extends AnyFunSuite {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.analytics.EventOps
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Invariants and plan shapes of the event-log operators
@@ -75,5 +76,36 @@ class EventOpsSpec extends AnyFunSuite {
       s"expected ONE user-keyed hash exchange, got $hashExchanges:\n$plan")
     assert(!plan.contains("SortMergeJoin") && !plan.contains("BroadcastHashJoin"),
       s"funnel must not plan stage joins at all:\n$plan")
+  }
+
+  test("events_bot_detect: top-20 shape and per-user recount") {
+    import graft.analytics.EventOps
+    val out = EventOps.botDetect(spark, sf).collect()
+    val nUsers = Tables.events(spark, sf)
+      .select("user_id").distinct().count()
+    assert(out.length == math.min(20L, nUsers))
+    assert(out.map(_.getAs[Long]("rank")).toSeq == (1L to out.length))
+    // ordering: rate desc, events desc, user asc (collect avoids the
+    // one-user corpus edge where sliding(2) yields a length-1 window)
+    out.toSeq.sliding(2).collect { case Seq(a, b) =>
+      val ka = (a.getAs[Long]("rate_per_ksec"), a.getAs[Long]("n_events"))
+      val kb = (b.getAs[Long]("rate_per_ksec"), b.getAs[Long]("n_events"))
+      assert(ka._1 > kb._1 || (ka._1 == kb._1 &&
+        (ka._2 > kb._2 || (ka._2 == kb._2 &&
+          a.getAs[Long]("user_id") < b.getAs[Long]("user_id")))))
+    }.toList
+    // recount the #1 user's columns from the raw log
+    val top = out.head
+    val uid = top.getAs[Long]("user_id")
+    val secs = Tables.events(spark, sf)
+      .filter(col("user_id") === uid)
+      .select(expr("ts div 1000000000L")).collect().map(_.getLong(0))
+    val span = secs.max - secs.min
+    assert(top.getAs[Long]("n_events") == secs.length)
+    assert(top.getAs[Long]("active_sec") == span)
+    assert(top.getAs[Long]("n_active_hours") == secs.map(_ / 3600).distinct.length)
+    assert(top.getAs[Long]("rate_per_ksec") == secs.length * 1000L / math.max(span, 1))
+    assert(top.getAs[Long]("events_per_hour") ==
+      secs.length / secs.map(_ / 3600).distinct.length)
   }
 }

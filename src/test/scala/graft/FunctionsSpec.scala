@@ -9,6 +9,7 @@ import org.scalacheck.Gen
 class SigExpressionsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
+  private val sf = "/root/testdata/sf0.001"
 
   private val asciiWord = Gen.nonEmptyListOf(Gen.alphaLowerChar).map(_.mkString)
 
@@ -431,6 +432,21 @@ class SigExpressionsSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(plan.contains("partial_graft_topk") || plan.contains("ObjectHashAggregate"),
       s"expected partial aggregation in plan:\n$plan")
+  }
+
+  test("graft_term_counts ≡ explode → count per (doc, term) on the real corpus") {
+    graft.functions.GraftFunctions.register(spark)
+    val docs = Tables.documents(spark, sf)
+    val kernel = docs
+      .select(col("doc_id"), explode(graft.functions.GraftFunctions
+        .termCounts(split(col("text"), " "))).as("tc"))
+      .select(col("doc_id"), col("tc.term").as("term"), col("tc.tf").as("tf"))
+    val declarative = docs
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+    assert(kernel.exceptAll(declarative).isEmpty &&
+      declarative.exceptAll(kernel).isEmpty,
+      "kernel term counts diverge from the declarative aggregation")
   }
 }
 

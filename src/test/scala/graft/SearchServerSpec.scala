@@ -749,6 +749,33 @@ class SearchServerSpec extends AnyFunSuite {
     }
   }
 
+  test("HTTP: a malformed percent-escape answers 400 and the server keeps serving") {
+    val server = new SearchServer(spark, landing, staging, cacheTtlMillis = 600000L)
+    val http = new HttpSearchServer(server, port = 0)
+    // raw request lines: java.net.URI (and so HttpURLConnection) refuses
+    // to build these URIs on the client side
+    def raw(method: String, pathAndQuery: String): String = {
+      val sock = new java.net.Socket("127.0.0.1", http.boundPort)
+      try {
+        sock.getOutputStream.write(
+          s"$method $pathAndQuery HTTP/1.1\r\nHost: x\r\nContent-Length: 0\r\nConnection: close\r\n\r\n"
+            .getBytes("UTF-8"))
+        new BufferedReader(new java.io.InputStreamReader(sock.getInputStream, "UTF-8")).readLine()
+      } finally sock.close()
+    }
+    try {
+      for ((m, pq) <- Seq("GET" -> "/sb1?search=%zz", "POST" -> "/invalidate?bucket=%")) {
+        val status = raw(m, pq)
+        assert(status.startsWith("HTTP/1.1 400 "), s"$m $pq -> $status")
+      }
+      val (code, body) = request(http.boundPort, "GET", "/sb1?search=&limit=1")
+      assert(code == 200 && keysOf(body).size == 1, body)
+    } finally {
+      http.close()
+      server.close()
+    }
+  }
+
   test("a bucket name stays inside its zones: ../ reads nothing beside them; / : % find their own") {
     val root = SparkTestSession.tempDir("srv-names")
     // Spark accepts a read path under `basePath` by string prefix, so a

@@ -1,13 +1,15 @@
 package graft
 
 import graft.analytics.TextOps
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Invariants and plan shapes of the text and corpus-curation
   * operators ([[graft.analytics.TextOps]]). Value-level correctness is
   * gated by the DuckDB crosscheck; these reconcile each operator against
   * an independent recount of the same corpus (injected PII, benchmark
-  * overlaps, language budgets, gapless packing, DSIR coverage) and pin
+  * overlaps, language budgets, gapless packing, DSIR coverage, lexical
+  * diversity, priority sampling) and pin
   * where the DSIR build broadcasts.
   */
 class TextOpsSpec extends AnyFunSuite {
@@ -105,5 +107,88 @@ class TextOpsSpec extends AnyFunSuite {
     assert(served.contains("dsir_doc_score"),
       s"query must serve the published dsir_doc_score zone:\n$served")
     assert(!served.contains("CartesianProduct"), s"no cartesian:\n$served")
+  }
+
+  test("text_diversity: kernel stats equal a from-scratch token recount") {
+    import graft.analytics.TextOps
+    val out = TextOps.textDiversity(spark, sf).collect()
+    val docs = Tables.documents(spark, sf)
+      .select(col("doc_id"), col("text")).collect()
+    assert(out.length == docs.length)
+    val byId = docs.map(r => r.getLong(0) -> r.getString(1)).toMap
+    out.foreach { r =>
+      // split(-1) keeps trailing empties — the string_split contract the
+      // kernel implements
+      val toks = byId(r.getAs[Long]("doc_id")).split(" ", -1)
+      val counts = toks.groupBy(identity).map(_._2.length)
+      val n = toks.length.toLong
+      val types = counts.size.toLong
+      val sumCC = counts.map(c => c.toLong * (c - 1)).sum
+      val hapax = counts.count(_ == 1).toLong
+      assert(r.getAs[Long]("n_tokens") == n)
+      assert(r.getAs[Long]("n_types") == types)
+      assert(math.abs(r.getAs[Double]("ttr") - types.toDouble / n) < 1e-6)
+      if (n > 1) {
+        val simpson = sumCC.toDouble / (n * (n - 1))
+        assert(math.abs(r.getAs[Double]("simpson") - simpson) < 1e-6)
+      } else assert(r.getAs[Double]("simpson") == 0.0)
+      assert(math.abs(r.getAs[Double]("hapax_share") - hapax.toDouble / types) < 1e-6)
+    }
+  }
+
+  test("text_diversity kernel: adversarial token edges") {
+    graft.functions.GraftFunctions.register(spark)
+    import spark.implicits._
+    // (text, n_tokens, n_types, sum_cc, n_hapax); empties from doubled /
+    // leading / trailing spaces are tokens, exactly as string_split keeps
+    // them
+    val cases = Seq(
+      ("a b a", 3, 2, 2L, 1),
+      ("a a a a", 4, 1, 12L, 0),
+      ("x", 1, 1, 0L, 1),
+      ("a  b", 3, 3, 0L, 3), // "a", "", "b"
+      (" a", 2, 2, 0L, 2), // "", "a"
+      ("a ", 2, 2, 0L, 2), // "a", ""
+      ("", 1, 1, 0L, 1)) // one empty token
+    cases.foreach { case (text, n, types, cc, hapax) =>
+      val r = Seq(text).toDF("t")
+        .select(graft.functions.GraftFunctions.diversityStats(col("t")).as("d"))
+        .select("d.n_tokens", "d.n_types", "d.sum_cc", "d.n_hapax")
+        .head()
+      assert((r.getInt(0), r.getInt(1), r.getLong(2), r.getInt(3)) ==
+        ((n, types, cc, hapax)), s"text=<$text>")
+    }
+  }
+
+  test("sample_priority: exact integer priorities, complete top-k") {
+    import graft.analytics.TextOps
+    graft.functions.GraftFunctions.register(spark)
+    val out = TextOps.samplePriority(spark, sf).collect()
+    val all = Tables.documents(spark, sf)
+      .select(col("doc_id"), col("n_chars"),
+        graft.functions.GraftFunctions.polyhash(col("text")).as("h"))
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(out.length == math.min(100, all.length))
+    val expect = all
+      .map { case (id, w, h) =>
+        (id, w, h, w * graft.functions.Portable.P / math.max(h, 1L)) }
+      .sortBy { case (id, _, h, p) => (-p, -h, id) }
+      .take(out.length)
+    out.zip(expect).zipWithIndex.foreach { case ((r, (id, w, h, p)), i) =>
+      assert(r.getAs[Long]("rank") == i + 1)
+      assert(r.getAs[Long]("doc_id") == id)
+      assert(r.getAs[Long]("n_chars") == w)
+      assert(r.getAs[Long]("h") == h)
+      assert(r.getAs[Long]("priority") == p)
+    }
+    // weighting sanity: the sampled docs skew STRICTLY long (mean weight
+    // above corpus mean) — the point of weighted over uniform sampling;
+    // a regression to uniform selection would leave meanSel ≈ meanAll
+    // and fail here
+    val meanAll = all.map(_._2).sum.toDouble / all.length
+    val meanSel = out.map(_.getAs[Long]("n_chars")).sum.toDouble / out.length
+    assert(meanSel > meanAll,
+      s"selected mean $meanSel must exceed corpus mean $meanAll")
   }
 }

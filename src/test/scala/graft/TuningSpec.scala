@@ -5,29 +5,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class TuningSpec extends AnyFunSuite {
 
-  test("shuffle partitions scale with data but floor at 2x cores") {
-    // 10 TiB shuffle on 1000 executors x 4 cores: sized by data
-    val big = Tuning.shufflePartitions(10L * 1024 * Tuning.GiB, 4000)
-    assert(big == (10L * 1024 * Tuning.GiB / (128 * Tuning.MiB)).toInt)
-    assert(big >= 80000, "a 10TiB shuffle needs ~80k partitions at 128MiB each")
-    // tiny shuffle still floors at 2 tasks/core so no core idles
-    assert(Tuning.shufflePartitions(1 * Tuning.MiB, 4000) == 8000)
-  }
-
-  test("per-partition bytes stay near the target regardless of scale") {
-    for (bytes <- Seq(100L * Tuning.GiB, 10L * 1024 * Tuning.GiB)) {
-      val parts = Tuning.shufflePartitions(bytes, 4000)
-      val perPart = bytes / parts
-      assert(perPart <= 128 * Tuning.MiB, s"$perPart exceeds the 128MiB target")
-    }
-  }
-
-  test("broadcast threshold is bounded by executor memory and hard-capped") {
-    assert(Tuning.broadcastThresholdBytes(8 * Tuning.GiB) == 256 * Tuning.MiB)
-    // huge executors still cap at 1 GiB — past that a shuffle join wins
-    assert(Tuning.broadcastThresholdBytes(512 * Tuning.GiB) == 1 * Tuning.GiB)
-  }
-
   test("pair-shard passes: no scratch budget means cluster scratch, one pass") {
     // the cluster default: scratch is an aggregate resource, never shard
     assert(Tuning.pairShardPasses(0L, 0L) == 1)
@@ -62,18 +39,5 @@ class TuningSpec extends AnyFunSuite {
     // always a whole number of scheduler waves
     for (b <- Seq(1L * Tuning.GiB, 40L * Tuning.GiB, 300L * Tuning.GiB))
       assert(Tuning.benchWidth(b, 32) % 32 == 0)
-  }
-
-  test("profile applies cleanly to a session and turns AQE defenses on") {
-    val spark = SparkTestSession.spark
-    val saved = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.adaptive.skewJoin.enabled").map(k => k -> spark.conf.get(k))
-    try {
-      Tuning.profile(executors = 1000, coresPerExecutor = 4,
-        executorMemBytes = 16 * Tuning.GiB,
-        maxShuffleBytes = 1024 * Tuning.GiB).apply(spark)
-      assert(spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true")
-      assert(spark.conf.get("spark.sql.shuffle.partitions").toInt == 8192)
-    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 }
