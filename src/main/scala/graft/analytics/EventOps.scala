@@ -12,8 +12,7 @@ import org.apache.spark.sql.functions._
   * reader only surfaces as raw longs (`nanosAsLong`, see
   * [[graft.Tables.events]]) — convenient here, because all event-time
   * arithmetic is then exact integer math that the DuckDB oracle reproduces
-  * bit-for-bit. Streaming variants of the same transforms live in
-  * `graft.ingest.IngestPipeline`.
+  * bit-for-bit.
   */
 object EventOps {
 

@@ -259,8 +259,8 @@ object Similarity {
     * [[GraphSplitBits]] split bits. 2^16 cells per bucket bounds the
     * split at ~2^24 total cells — at cap 64 that is headroom for a
     * trillion-vector corpus before the divisor chain saturates. */
-  private[graft] val GraphPlanes = 24
-  private[graft] val GraphSplitBits: Int = GraphPlanes - 8
+  private val GraphPlanes = 24
+  private val GraphSplitBits: Int = GraphPlanes - 8
 
   /** Independent LSH code tables the graph build unions candidates
     * across (table t uses planes `[t·24, t·24+24)` — disjoint plane
@@ -281,7 +281,7 @@ object Similarity {
     * per-plane model and the measurement lands inside it); the planted
     * near-duplicate spec pins the cos≈1 case into the same cell of
     * EVERY table. */
-  private[graft] val GraphTables = 4
+  private val GraphTables = 4
 
   /** Divisor `2^(GraphSplitBits - d)` for a bucket wanting `s` cells,
     * `d = ceil(log2(s))` clamped to [[GraphSplitBits]] — exact integer
@@ -342,7 +342,7 @@ object Similarity {
     * 8 bits (table 0's equals
     * [[graft.functions.GraftFunctions.hyperplaneBucket8]] by
     * construction). */
-  private[graft] def codedTables(base: DataFrame, tables: Int): DataFrame =
+  private def codedTables(base: DataFrame, tables: Int): DataFrame =
     base.select(col("vec_id"), posexplode(array((0 until tables).map(t =>
         graft.functions.GraftFunctions
           .hyperplaneCode(col("ed"), t * GraphPlanes, GraphPlanes)): _*))
@@ -375,13 +375,7 @@ object Similarity {
         round(graft.functions.GraftFunctions.dotp(col("q_ed"), col("n_ed")) /
           (col("q_nrm") * col("n_nrm")), 6).as("cosine"))
 
-  /** [[knnGraph]] over an explicit `(vec_id, embedding)` frame. The
-    * incremental face ([[graft.streaming.StreamOps.knnGraphStream]])
-    * maintains the SAME `GraphTables`-table build (state keyed by
-    * `(tbl, bucket)`, one keyed state per table per arrival) and its
-    * [[graft.streaming.StreamOps.mergedGraph]] merge is spec-checked
-    * bit-equal against this build at T=4 on the union of its
-    * micro-batches.
+  /** [[knnGraph]] over an explicit `(vec_id, embedding)` frame.
     *
     * Scoring is FUSED into the cell self-join: the vector payload
     * attaches once per (vector, table) row, so the only FAT exchange is
@@ -398,11 +392,10 @@ object Similarity {
     * best-of-3: 15.05 s → 225.8 s for 3× data from ×100; this form
     * measures 2.98 s → 12.65 s on identical data — 5×/18× faster and
     * back near the linear-work line). */
-  private[graft] def knnGraphFrame(spark: SparkSession, vectors: DataFrame,
-                                   tables: Int = GraphTables): DataFrame = {
+  private[graft] def knnGraphFrame(spark: SparkSession, vectors: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val base = vecBase(vectors)
-    val codes = codedTables(base, tables)
+    val codes = codedTables(base, GraphTables)
     // the payload rides the fat N·T cell exchange in its STORAGE type
     // (array<float>, half the bytes of the pre-widened doubles) and is
     // scored by graft_dotf, which accumulates float→double casts — a

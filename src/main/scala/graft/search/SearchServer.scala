@@ -4,8 +4,9 @@ import java.io.{BufferedReader, InputStreamReader, PrintWriter}
 import java.nio.charset.StandardCharsets
 
 import graft.ops.DerivedZone
+import org.apache.hadoop.fs.Path
 import org.apache.spark.graft.metrics.SearchMetricsSource
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.json4s.{DefaultFormats, JValue}
 import org.json4s.jackson.JsonMethods
 
@@ -92,13 +93,29 @@ class SearchServer private[graft] (spark: SparkSession, landingDir: String,
     * fingerprint of the bucket's files. Over a driver-held snapshot the
     * returned page is already computed (a local relation); otherwise it is
     * an `ORDER BY key LIMIT n` plan over the cached scan.
+    *
+    * A miss on a bucket with no directory in either zone searches an
+    * empty driver-held snapshot: nothing is published, merged or cached
+    * for it (and an entry it had is dropped), so client-supplied names
+    * leave no state behind.
     */
   def execute(q: SearchQuery): DataFrame = {
     val inputs = Seq(landingDir, stagingDir).map(MetadataSearch.bucketDir(_, q.bucket))
-    val snapshot = cache.get(q.bucket) {
-      zone.get(spark, inputs.mkString("\n"), inputs)(searcher.bucketSnapshot(q.bucket))
+    val snapshot = cache.hit(q.bucket).getOrElse {
+      if (inputs.exists(exists)) cache.get(q.bucket) {
+        zone.get(spark, inputs.mkString("\n"), inputs)(searcher.bucketSnapshot(q.bucket))
+      } else {
+        cache.invalidate(q.bucket)
+        spark.createDataFrame(java.util.Collections.emptyList[Row](),
+          searcher.bucketSnapshot(q.bucket).schema)
+      }
     }
     searcher.searchSnapshot(snapshot, q, SessionCache.isDriverHeld(snapshot))
+  }
+
+  private def exists(dir: String): Boolean = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** Materialize one search as the reference's stdout contract: a single

@@ -85,15 +85,18 @@ class SessionCache private[graft] (ttlMillis: Long, localMaxBytes: Long)
   private def fresh(e: Entry): Boolean =
     e != null && System.currentTimeMillis() - e.builtAt < ttlMillis
 
+  /** The snapshot for `bucket` if its entry is younger than the TTL: no
+    * lock, no build. */
+  def hit(bucket: String): Option[DataFrame] =
+    Option(entries.get(bucket)).filter(fresh).map(_.df)
+
   /** The cached snapshot for `bucket`, revalidated against `build` when
     * absent or older than the TTL. The bytes of the files behind `build`'s
     * frame pick a new entry's form; a driver-held snapshot needs a `key`
     * column ([[SessionCache.isDriverHeld]] tells the forms apart).
     */
-  def get(bucket: String)(build: => DataFrame): DataFrame = {
-    val e = entries.get(bucket)
-    if (fresh(e)) return e.df
-    locks.computeIfAbsent(bucket, _ => new Object).synchronized {
+  def get(bucket: String)(build: => DataFrame): DataFrame =
+    hit(bucket).getOrElse(locks.computeIfAbsent(bucket, _ => new Object).synchronized {
       val cur = entries.get(bucket)
       if (fresh(cur)) cur.df
       else {
@@ -116,8 +119,7 @@ class SessionCache private[graft] (ttlMillis: Long, localMaxBytes: Long)
         entries.put(bucket, next)
         next.df
       }
-    }
-  }
+    })
 
   private def persist(df: DataFrame): DataFrame = {
     df.persist()
@@ -130,11 +132,12 @@ class SessionCache private[graft] (ttlMillis: Long, localMaxBytes: Long)
     if (!SessionCache.isDriverHeld(e.df))
       try { e.df.unpersist(false); () } catch { case NonFatal(_) => () }
 
-  /** Drop a bucket's snapshot; the next request makes a new entry. */
+  /** Drop a bucket's snapshot; the next request makes a new entry. A
+    * bucket never built has no lock, and none is made for it. */
   def invalidate(bucket: String): Unit =
-    locks.computeIfAbsent(bucket, _ => new Object).synchronized {
+    Option(locks.get(bucket)).foreach(_.synchronized {
       Option(entries.remove(bucket)).foreach(drop)
-    }
+    })
 
   /** Drop every snapshot now. */
   def clear(): Unit =

@@ -1,6 +1,7 @@
 package graft
 
 import graft.analytics.Dedup
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Invariants of the deduplication operators ([[graft.analytics.Dedup]]).
@@ -84,5 +85,47 @@ class DedupSpec extends AnyFunSuite {
       assert(gotSmall == Seq((1L, 2L,
         BigDecimal(expect).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)))
     else assert(gotSmall.isEmpty)
+  }
+
+  test("corpus_dup_by_source: per-source tallies reconcile with the cluster labels") {
+    import graft.analytics.Dedup
+    val out = Dedup.corpusDupBySource(spark, sf).collect()
+    assert(out.nonEmpty)
+    // per-source invariants: removable ⊆ cluster members ⊆ docs
+    out.foreach { r =>
+      val (n, dup, rem) = (r.getAs[Long]("n_docs"),
+        r.getAs[Long]("n_dup_docs"), r.getAs[Long]("n_removable"))
+      assert(rem <= dup && dup <= n)
+      assert(r.getAs[Long]("dup_ppm") == rem * 1000000L / n)
+    }
+    // global reconciliation against the label frame itself
+    val labels = Dedup.dedupClusters(spark, sf)
+    assert(out.map(_.getAs[Long]("n_dup_docs")).sum == labels.count())
+    assert(out.map(_.getAs[Long]("n_removable")).sum ==
+      labels.filter(col("is_keeper") === 0).count())
+    assert(out.map(_.getAs[Long]("n_docs")).sum ==
+      Tables.documents(spark, sf).count())
+  }
+
+  test("dedup_threshold_sweep: cumulative counts reconcile with the pair frame") {
+    import graft.analytics.Dedup
+    val sweep = Dedup.dedupThresholdSweep(spark, sf)
+      .collect() // ordered threshold DESC
+    assert(sweep.nonEmpty)
+    val pairs = Dedup.dedupEmbedding(spark, sf).collect()
+    // bottom row's cumulative count = every enumerated pair
+    assert(sweep.last.getAs[Long]("cum_pairs") == pairs.length.toLong)
+    // cum is the running sum of n_pairs from the top
+    val running = sweep.scanLeft(0L)(_ + _.getAs[Long]("n_pairs")).tail
+    assert(sweep.map(_.getAs[Long]("cum_pairs")).toSeq == running.toSeq)
+    // each bucket's count matches a direct recount at its edges
+    sweep.foreach { r =>
+      val lo = r.getAs[Double]("threshold")
+      val n = pairs.count { p =>
+        val c6 = math.round(p.getAs[Double]("cosine") * 1e6)
+        c6 / 50000 == math.round(lo * 20)
+      }
+      assert(n.toLong == r.getAs[Long]("n_pairs"))
+    }
   }
 }

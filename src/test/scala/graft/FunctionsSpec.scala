@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.{GraftFunctions, Portable, Sig}
 import graft.ops.MediaPipeline
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
@@ -586,5 +587,32 @@ class MediaPipelineSpec extends AnyFunSuite {
       assert(ft.height >= 1 && ft.height <= 240)
       assert(ft.n_frames >= 1 && ft.n_frames <= 24)
     }
+  }
+
+  test("media decode stage runs unchanged on a stream, bit-equal to batch") {
+    import spark.implicits._
+    import graft.ops.{MediaPipeline, PpmCodec}
+    implicit val sc = spark.sqlContext
+    // the extraction stage is a stateless typed mapPartitions — the SAME
+    // operator must serve both batch backfill and streaming ingest with
+    // no watermark or state store
+    val recs = Seq(
+      MediaPipeline.MediaRecord(1L, "a", PpmCodec.encode(30, 20, 5, 7)),
+      MediaPipeline.MediaRecord(2L, "b", PpmCodec.encode(200, 100, 24, 255)),
+      MediaPipeline.MediaRecord(3L, "a", PpmCodec.encode(1, 1, 1, 0)))
+    val in = MemoryStream[(Long, String, Array[Byte])]
+    val stream = in.toDS().map { case (id, s, p) => MediaPipeline.MediaRecord(id, s, p) }
+    val q = MediaPipeline.extractFeatures(stream)
+      .writeStream.format("memory").queryName("mediafeats")
+      .outputMode("append").start()
+    try {
+      in.addData(recs.map(r => (r.doc_id, r.source, r.payload)))
+      q.processAllAvailable()
+      val streamed = spark.table("mediafeats")
+        .as[MediaPipeline.MediaFeatures].collect().sortBy(_.doc_id).toSeq
+      val batch = MediaPipeline.extractFeatures(recs.toDS())
+        .collect().sortBy(_.doc_id).toSeq
+      assert(streamed == batch, "streamed features must be bit-equal to batch")
+    } finally q.stop()
   }
 }

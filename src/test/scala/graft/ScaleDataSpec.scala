@@ -11,24 +11,24 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ScaleDataSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-  private val src = "/root/testdata/sf0.001"
+  private val sf = "/root/testdata/sf0.001"
   private lazy val dst = {
     val d = SparkTestSession.tempDir("scaled")
-    ScaleData.scale(spark, src, d, 3)
+    ScaleData.scale(spark, sf, d, 3)
     d
   }
 
   test("facts scale by the factor, dims stay fixed") {
     def n(dir: String, t: String): Long = spark.read.parquet(s"$dir/$t.parquet").count()
     Seq("customer", "orders", "lineitem", "events", "documents", "embeddings")
-      .foreach(t => assert(n(dst, t) == 3 * n(src, t), s"$t must scale 3x"))
-    Seq("region", "nation").foreach(t => assert(n(dst, t) == n(src, t)))
+      .foreach(t => assert(n(dst, t) == 3 * n(sf, t), s"$t must scale 3x"))
+    Seq("region", "nation").foreach(t => assert(n(dst, t) == n(sf, t)))
   }
 
   test("longDocs preserves total token volume at the target per-doc length") {
     val d = SparkTestSession.tempDir("longdocs")
-    ScaleData.longDocs(spark, src, d, 1000)
-    val srcDocs = spark.read.parquet(s"$src/documents.parquet")
+    ScaleData.longDocs(spark, sf, d, 1000)
+    val srcDocs = spark.read.parquet(s"$sf/documents.parquet")
     val out = spark.read.parquet(s"$d/documents.parquet")
     def totalTokens(df: org.apache.spark.sql.DataFrame): Long =
       df.agg(sum(size(split(col("text"), " ")))).first().getLong(0)
@@ -75,5 +75,30 @@ class ScaleDataSpec extends AnyFunSuite {
     val c1 = e.filter(col("cp") === 1).select(col("base_id"), col("embedding").as("v1"))
     val same = c0.join(c1, "base_id").filter(col("v0") === col("v1")).count()
     assert(same == 0, "copy 1 embeddings must differ from copy 0")
+  }
+
+  test("constVocab corpus: rows x factor, key space constant, ids disjoint") {
+    val dst = SparkTestSession.tempDir("graft-constvocab")
+    graft.tools.ScaleData.constVocab(spark, sf, dst, factor = 3)
+    val src = spark.read.parquet(s"$sf/documents.parquet")
+    val out = spark.read.parquet(s"$dst/documents.parquet")
+    assert(out.count() == 3 * src.count())
+    // doc ids stay unique across copies (shifted by the copy offset)
+    assert(out.select("doc_id").distinct().count() == out.count())
+    // the whole point: the distinct token/n-gram key space does NOT grow —
+    // every text in the scaled corpus is a verbatim source text
+    val srcTexts = src.select("text").distinct()
+    val novel = out.select("text").distinct()
+      .join(srcTexts, Seq("text"), "left_anti").count()
+    assert(novel == 0L, "constVocab must introduce no new text")
+    assert(out.select("text").distinct().count() == srcTexts.count())
+    // distinct 3-gram keys: scaled corpus == source corpus (the suffixed
+    // ScaleData.scale corpus grows this ~x factor; this one must not)
+    def ngrams(df: org.apache.spark.sql.DataFrame) =
+      df.select(explode(expr(
+        "transform(sequence(1, size(split(text, ' ')) - 2), " +
+          "i -> concat_ws(' ', slice(split(text, ' '), i, 3)))")).as("g"))
+        .distinct().count()
+    assert(ngrams(out) == ngrams(src))
   }
 }

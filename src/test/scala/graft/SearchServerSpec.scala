@@ -4,6 +4,8 @@ import java.io.{BufferedReader, PrintWriter, StringReader, StringWriter}
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicIntegerArray}
 
+import scala.jdk.CollectionConverters._
+
 import graft.ingest.IngestPipeline
 import graft.search.{HttpSearchServer, MetadataSearch, SearchQuery, SearchServer, SessionCache}
 import graft.tools.Populator
@@ -467,7 +469,8 @@ class SearchServerSpec extends AnyFunSuite {
       assert(compared > 60, s"$compared of 120 pages over ob are non-empty")
       assert(local.executeJson(SearchQuery("od")) == "[]" &&
         local.executeJson(SearchQuery("none")) == "[]")
-      assert(local.snapshotRebuilds == 3 && parquet.snapshotRebuilds == 3)
+      // `none` has no files in either zone, so it makes no entry
+      assert(local.snapshotRebuilds == 2 && parquet.snapshotRebuilds == 2)
     } finally {
       local.close()
       parquet.close()
@@ -726,6 +729,44 @@ class SearchServerSpec extends AnyFunSuite {
           s"bound $bound, page $i"))
         assert(server.snapshotRebuilds == 1 && server.zone.builds.get == 1, s"bound $bound")
       } finally server.close()
+    }
+  }
+
+  test("a missing bucket answers [] over both faces and leaves no zone, merge or cache entry") {
+    withZoneRoot() { root =>
+      val server = new SearchServer(spark, landing, staging, cacheTtlMillis = 600000L)
+      val http = new HttpSearchServer(server, port = 0)
+      def zoneFiles(): List[String] = {
+        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+        try walk.iterator().asScala.map(_.toString).toList.sorted finally walk.close()
+      }
+      def merges(): Long =
+        (JsonMethods.parse(server.handle("""{"cmd":"metrics"}""")._1) \ "snapshotMerges").extract[Long]
+      try {
+        assert(keysOf(server.executeJson(SearchQuery("sb1", limit = 3))).size == 3)
+        val files = zoneFiles()
+        assert(merges() == 1 && server.snapshotRebuilds == 1)
+        (0 until 50).foreach { i =>
+          val line = server.handle(s"""{"bucket":"missing-line-$i","limit":5}""")._1
+          assert(line == "[]", s"line $i: $line")
+          val (code, body) = request(http.boundPort, "GET", s"/missing-http-$i?search=")
+          assert(code == 200 && body == "[]", s"GET $i: $code $body")
+        }
+        val added = zoneFiles().diff(files)
+        assert(added.isEmpty, s"${added.size} new zone paths, e.g. ${added.take(3)}")
+        assert(merges() == 1 && server.snapshotRebuilds == 1)
+        // the WHERE is still parsed and analysed against the snapshot's columns
+        val (ce, be) = request(http.boundPort, "POST", "/search",
+          """{"bucket":"missing-x","where":"NOT SQL ("}""")
+        assert(ce == 400 && be.contains("\"error\""), be)
+        val bad = server.handle("""{"bucket":"missing-x","where":"no_such_column = 1"}""")._1
+        assert(bad.startsWith("{\"error\""), bad)
+        val ok = server.handle("""{"bucket":"missing-x","where":"`content-length` > 0"}""")._1
+        assert(ok == "[]", ok)
+      } finally {
+        http.close()
+        server.close()
+      }
     }
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import graft.analytics.Similarity
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Invariants of the vector-similarity operators
@@ -56,5 +57,34 @@ class SimilaritySpec extends AnyFunSuite {
       assert(rs.forall(_.getLong(2) != q), s"query $q returned itself")
       assert(rs.length <= 5)
     }
+  }
+
+  test("refine rounds knob: rounds=2 is exactly refineRound applied twice") {
+    import graft.analytics.Similarity
+    graft.functions.GraftFunctions.register(spark)
+    val vectors = Tables.embeddings(spark, sf)
+    val base = Similarity.vecBase(vectors)
+    val e1 = Similarity.knnGraphFrame(spark, vectors)
+      .select(col("q_id"), col("n_id"), col("cosine"))
+    val r1 = Similarity.refineRound(base, e1)
+    val expected = Similarity.refineRound(base,
+        r1.select(col("q_id"), col("n_id"), col("cosine")))
+      .collect().map(_.toString).sorted
+    assert(expected.nonEmpty)
+    spark.conf.set("spark.graft.refine.rounds", "2")
+    try {
+      val got = Similarity.knnGraphRefine(spark, sf)
+        .collect().map(_.toString).sorted
+      assert(got.toSeq == expected.toSeq)
+    } finally spark.conf.unset("spark.graft.refine.rounds")
+    // default (knob unset) stays the oracle-gated single round
+    val single = Similarity.knnGraphRefine(spark, sf)
+      .collect().map(_.toString).sorted
+    assert(single.toSeq == r1.collect().map(_.toString).sorted.toSeq)
+    // a nonsensical round count fails loudly
+    spark.conf.set("spark.graft.refine.rounds", "0")
+    try intercept[IllegalArgumentException](
+      Similarity.knnGraphRefine(spark, sf))
+    finally spark.conf.unset("spark.graft.refine.rounds")
   }
 }
