@@ -25,7 +25,6 @@ object Dedup {
     * [[graft.functions.NGrams]] — same output as [[shingles3]], one
     * compiled pass instead of interpreted lambda folds). */
   private def shingled(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir).select(
       col("doc_id"),
       graft.functions.GraftFunctions
@@ -74,7 +73,6 @@ object Dedup {
     * its reformatted twin.
     */
   def dedupNormalized(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val corpus = docs.unionByName(
       docs.select((col("doc_id") + 1000000L).as("doc_id"),
@@ -492,7 +490,6 @@ object Dedup {
   }
 
   private def minhashConfirm(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // short-lived shingle checkpoint — see the sharedCounts note on why
     // the corpus-sized stage is not published
     val sh = shingled(spark, dir).localCheckpoint()
@@ -572,7 +569,6 @@ object Dedup {
     * measurement covers the shipped pipeline, not an idealized one.
     */
   def dedupLshQuality(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val truth = sharedCounts(spark, dir)
       .filter(col("shared") * 2 >= col("na") + col("nb") - col("shared"))
       .select(col("a_id"), col("b_id"),
@@ -626,7 +622,6 @@ object Dedup {
       .orderBy("a_id", "b_id")
 
   private def simhashPairs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // materialize the signatures BEFORE the self-join: both join sides
     // reference this frame, and without the checkpoint each side re-runs
     // the whole text scan + simhash fold — the signature pass is the
@@ -989,7 +984,6 @@ object Dedup {
     * cosine ≥ 0.4.
     */
   def dedupEmbedding(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val base = Tables.embeddings(spark, dir).select(col("vec_id"),
       toDouble(col("embedding")).as("ed"))
     val bv = base.select(col("vec_id"), col("ed"),

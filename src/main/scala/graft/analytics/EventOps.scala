@@ -279,7 +279,6 @@ object EventOps {
     */
   def approxDistinctKmv(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.Portable
-    graft.functions.GraftFunctions.register(spark)
     val ev = Tables.events(spark, dir).select(col("event_type"), col("user_id"))
     // polyHash of a short string occupies only the low end of [0, P) —
     // useless for order statistics; the cubic mixer equidistributes it

@@ -88,7 +88,6 @@ object Similarity {
 
   /** Embeddings with double-cast vectors and precomputed L2 norms. */
   private def normed(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.embeddings(spark, dir).select(col("vec_id"), col("label"),
       toDouble(col("embedding")).as("ed"))
       .withColumn("nrm",
@@ -178,7 +177,6 @@ object Similarity {
     * equality join instead of a full scan per query).
     */
   def knnLsh(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val base = normed(spark, dir)
     val bv = base.withColumn("bucket",
       graft.functions.GraftFunctions.hyperplaneBucket8(col("ed")))
@@ -314,7 +312,6 @@ object Similarity {
       .withColumn("cell", expr("code div dvs")).drop("dvs")
 
   def knnGraph(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     graphEdges(spark, dir).orderBy("q_id", "rank")
   }
 
@@ -322,7 +319,6 @@ object Similarity {
     * self-joins on, for an explicit vector frame and cap — lets the split
     * behavior be asserted on corpora big enough to actually split. */
   private[graft] def knnGraphCellsForSpec(vectors: DataFrame, cap: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
     val codes = codedTables(vecBase(vectors), GraphTables)
     withCells(codes, bucketDivisors(codes, cap))
   }
@@ -393,7 +389,6 @@ object Similarity {
     * measures 2.98 s → 12.65 s on identical data — 5×/18× faster and
     * back near the linear-work line). */
   private[graft] def knnGraphFrame(spark: SparkSession, vectors: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val base = vecBase(vectors)
     val codes = codedTables(base, GraphTables)
     // the payload rides the fat N·T cell exchange in its STORAGE type
@@ -518,7 +513,7 @@ object Similarity {
     * (per-table bucket+cell equality, cross-table dedupe, self
     * exclusion, 6-dp rounding, vec_id tiebreak) match [[knnGraph]]
     * line-for-line so the measured recall is the production graph's:
-    * each cap leg IS [[graphSampleEdges]], the replay `Round9OpsSpec`
+    * each cap leg IS [[graphSampleEdges]], the replay `SimilaritySpec`
     * pins to [[knnGraph]]'s own edges. The whole query is one pure plan
     * (no lineage cut), so its SQL and Scala faces plan identically.
     */
@@ -542,7 +537,7 @@ object Similarity {
     * node sample under an explicit cap: per-table cell splits from the
     * FULL slim code frame, q side restricted to the sample before the
     * pair dedupe, exact rescore, bounded-heap top-k → `(q_id, n_id)`
-    * edges. `Round9OpsSpec` pins that at cap=[[GraphCell]] these edges
+    * edges. `SimilaritySpec` pins that at cap=[[GraphCell]] these edges
     * equal [[knnGraph]]'s own edges for the same nodes — so
     * [[knnGraphRecall]] measures the graph that ships, not a
     * reimplementation that could drift. */
@@ -562,7 +557,6 @@ object Similarity {
     * the same frames [[knnGraphFrame]] builds. */
   private[graft] def graphRecallFrames(spark: SparkSession,
                                        dir: String): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(spark)
     val base = vecBase(Tables.embeddings(spark, dir))
     // zone-backed codes: the recall harness re-reads this frame TWICE PER
     // CAP (divisor aggregate + cell join — 8 lineage replays of the
@@ -680,7 +674,6 @@ object Similarity {
   }
 
   def knnGraphRefine(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     refinedEdges(spark, dir).orderBy("q_id", "rank")
   }
 
@@ -768,7 +761,6 @@ object Similarity {
     * (linear) full-graph round, since a node's two-hop candidates need
     * its neighbors' full lists. */
   def knnGraphRefineRecall(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val refined = refinedEdges(spark, dir)
       .filter(col("q_id") < GraphRecallNQ).select(col("q_id"), col("n_id"))
     val exact = exactTopSample(spark, dir).select(col("q_id"), col("n_id"))
@@ -1038,7 +1030,6 @@ object Similarity {
     * every vector — the shared input of codebook training, corpus
     * encoding and the per-query distance tables. */
   private def pqSub(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val base = Tables.embeddings(spark, dir).select(col("vec_id"),
       transform(col("embedding"), e => round(e.cast("double") * 1000).cast("long")).as("qv"))
     val ms = spark.range(PqM).select(col("id").cast("int").as("m"))
@@ -1116,7 +1107,6 @@ object Similarity {
 
   /** [[pqSub]] plus the `label` column (the IVF router's list key). */
   private def pqSubLabeled(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), col("label"),
       transform(col("embedding"), e => round(e.cast("double") * 1000).cast("long")).as("qv"))
     val ms = spark.range(PqM).select(col("id").cast("int").as("m"))
@@ -1332,7 +1322,6 @@ object Similarity {
     * codes, and both stages are broadcast joins + map-side partial sums.
     */
   def knnIvfPq(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // --- IVF routing in float space (the shared zone centroidIvf reads) ---
     val nb = normed(spark, dir)
     val cents = ivfCentroids(spark, dir)
@@ -1448,7 +1437,6 @@ object Similarity {
     * sums.
     */
   def kmeansIter(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val base = Tables.embeddings(spark, dir).select(col("vec_id"),
       transform(col("embedding"), e => round(e.cast("double") * 1000).cast("long")).as("qv"))
     val cents = base.filter(col("vec_id") < KmeansK)

@@ -21,7 +21,6 @@ object TextOps {
   /** Per-document token counts: whitespace tokens, regex word tokens, and
     * distinct-token vocabulary size. */
   def textTokens(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // Fused native kernel ([[graft.functions.Sig.tokenStats]]): one byte
     // pass per doc instead of two split arrays + a regex match array —
     // spec-checked equal to the declarative form below and to the oracle.
@@ -113,18 +112,13 @@ object TextOps {
 
   def textLangid(spark: SparkSession, dir: String): DataFrame = {
     // hot path: ONE compiled pass over the text scores all profiles at
-    // once (graft_profile_scores kernel) — the declarative per-profile
+    // once (the ProfileScores kernel) — the declarative per-profile
     // `filter(toks, OR-chain)` ran interpreted per token per profile and
     // was a top-3 CPU scaler at sf10. [[textLangidDeclarative]] keeps the
     // HOF form; FunctionsSpec pins both-ways equivalence on real docs.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_langid_scores",
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.ProfileScores(args.head, Profiles.map(_._2)),
-      "built-in")
     val scored = Tables.documents(spark, dir).select(
       col("doc_id"), col("lang"),
-      call_function("graft_langid_scores", col("text")).as("sc"))
+      graft.functions.GraftFunctions.profileScores(col("text"), Profiles.map(_._2)).as("sc"))
     val withScores = Profiles.zipWithIndex.foldLeft(scored) {
       case (df, ((l, _), i)) => df.withColumn(s"s_$l", col("sc").getItem(i))
     }
@@ -191,7 +185,6 @@ object TextOps {
     Seq("en" -> 2, "de" -> 5, "es" -> 5, "fr" -> 5, "zh" -> 5) // of 10
 
   def sampleStratified(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val rate = SampleRates.foldRight(lit(0)) { case ((l, r), els) =>
       when(col("lang") === l, lit(r)).otherwise(els)
     }
@@ -223,7 +216,6 @@ object TextOps {
     * projection + one small agg; ratios round to 6 dp in both engines.
     */
   def textRepetition(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val toks = split(col("text"), " ")
     // Round 15 (guide §2.4): per-doc n_tokens/max_tf come from the
     // graft_gopher_stats compiled kernel — ONE linear pass per document
@@ -319,7 +311,6 @@ object TextOps {
   private val FixedK = 20
 
   def sampleFixedK(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // topk keeps the LARGEST scores; negate the hash so "k smallest
     // hashes" wins (hash < 2^31, exact in double)
     val scored = Tables.documents(spark, dir).select(col("lang"), col("doc_id"),
@@ -353,7 +344,6 @@ object TextOps {
     * containment near-dups.
     */
   def textFingerprint(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // whole pipeline (gram hash → sliding window min → distinct) in one
     // native compiled kernel: the declarative transform/slice form was
     // interpreted per element and cost ~49 s at sf0.1 under full
@@ -421,7 +411,6 @@ object TextOps {
       // column pruning and replay the scan, the round-11
       // q_waiting_suppliers defect class) and the tf⋈df attach run
       // inside that partitioning with zero further exchanges.
-      graft.functions.GraftFunctions.register(spark)
       val tf = Tables.documents(spark, dir)
         .select(col("doc_id"), explode(graft.functions.GraftFunctions
           .termCounts(split(col("text"), " "))).as("tc"))
@@ -484,7 +473,6 @@ object TextOps {
     * BENCH_SCALING.md.
     */
   def textNgramStats(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     def grams(distinct: Boolean) = docs.select(explode(graft.functions
       .GraftFunctions.ngrams(split(col("text"), " "), 2, distinct)).as("gram"))
@@ -520,7 +508,6 @@ object TextOps {
     * nothing, and the aggregation back to doc level is map-side partial.
     */
   def textDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     def grams(df: DataFrame): DataFrame = df.select(col("doc_id"),
       explode(graft.functions.GraftFunctions
@@ -795,7 +782,6 @@ object TextOps {
     * full output hash — three independent engines agreeing.
     */
   def piiScrub(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val injected = concat(col("text"),
       lit(" contact user"), col("doc_id").cast("string"),
       lit("@mail.example.com or +1-555-"),
@@ -864,7 +850,6 @@ object TextOps {
     * joined back onto the doc spine so zero-bigram docs keep a row. */
   private def lmScoreCounts(spark: SparkSession, dir: String,
                             vocabSize: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val toks = split(col("text"), " ")
     val grams = Tables.documents(spark, dir)
       .select(col("doc_id"),
@@ -1048,7 +1033,6 @@ object TextOps {
     * sketch's cost.
     */
   def textCms(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.{GraftFunctions, Portable}
     val js = sequence(lit(0L), lit(CmsDepth - 1L))
     val toks = Tables.documents(spark, dir)
@@ -1256,7 +1240,6 @@ object TextOps {
   private val GopherStops = graft.functions.Sig.GopherStops
 
   def textGopherRules(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val stats = Tables.documents(spark, dir)
       .select(col("doc_id"),
         graft.functions.GraftFunctions.gopherStats(col("text")).as("st"))
@@ -1419,7 +1402,6 @@ object TextOps {
   private val BoilerDf = 4
 
   def textBoilerplate(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // native NGrams, not Portable.shingles3: the interpreted HOF re-splits
     // the text inside every element_at lambda (O(tokens²) character work
     // per document — measured 63 s isolated at ×100 where the compiled
@@ -1493,16 +1475,11 @@ object TextOps {
     * the declarative formulation).
     */
   def textBm25(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bm25_tfs",
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.ProfileScores(args.head, Bm25Terms.map(Seq(_))),
-      "built-in")
     val proj = Tables.documents(spark, dir)
       .select(col("doc_id"),
         graft.functions.GraftFunctions.tokenStats(col("text")).as("ts"),
-        call_function("graft_bm25_tfs", col("text")).as("tfs"))
+        graft.functions.GraftFunctions.profileScores(
+          col("text"), Bm25Terms.map(Seq(_))).as("tfs"))
       .select(
         (col("doc_id") +: col("ts.n_ws_tokens").cast("long").as("dl") +:
           Bm25Terms.zipWithIndex.map { case (t, i) =>
@@ -1575,7 +1552,6 @@ object TextOps {
     * longs.
     */
   def textCharsetProfile(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(col("source"),
         graft.functions.GraftFunctions.charClassStats(col("text")).as("cc"))
@@ -1633,7 +1609,6 @@ object TextOps {
     * the summed longs. One scan, one kilobyte-scale shuffle.
     */
   def textFertility(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(col("lang"), col("source"),
         graft.functions.GraftFunctions.tokenStats(col("text")).as("ts"))
@@ -1679,7 +1654,6 @@ object TextOps {
     * per bucket) is provably identical and stays its gate.
     */
   def textHashFeatures(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val cols = (0 until HashFeatDims).map(j =>
       element_at(col("hf"), j + 1).as(s"f$j"))
     Tables.documents(spark, dir)
@@ -1718,7 +1692,6 @@ object TextOps {
     * the same double and the gate is hash-exact.
     */
   def textDiversity(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         graft.functions.GraftFunctions.diversityStats(col("text")).as("ds"))
@@ -1776,7 +1749,6 @@ object TextOps {
     * no global sort, no full shuffle.
     */
   def samplePriority(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // n_chars pinned to long: the physical column is int64 in the source
     // testdata but int32 in ScaleData-derived corpora, and the weight·P
     // product overflows 32 bits (caught by the x10 oracle, round 14)

@@ -1,57 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** `SparkSessionExtensions` hook installing the `graft_*` native
-  * expressions at session build time — the deployment path for clusters
-  * (`spark.sql.extensions=graft.functions.GraftExtensions`), equivalent to
-  * the programmatic [[GraftFunctions.register]].
+/** `SparkSessionExtensions` hook injecting [[GraftFunctions.sqlFunctions]] at
+  * session build time — the deployment path for clusters
+  * (`spark.sql.extensions=graft.functions.GraftExtensions`), the same
+  * table [[GraftFunctions.register]] installs in a running session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in")
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("graft_minhash32"),
-      info("graft_minhash32", "_FUNC_(array<string>) - 32-permutation MinHash signature"),
-      (args: Seq[Expression]) => MinHashSig(args.head)))
-    ext.injectFunction((FunctionIdentifier("graft_simhash63"),
-      info("graft_simhash63", "_FUNC_(array<string>) - 63-bit SimHash"),
-      (args: Seq[Expression]) => SimHash63(args.head)))
-    ext.injectFunction((FunctionIdentifier("graft_hyperplane_bucket8"),
-      info("graft_hyperplane_bucket8", "_FUNC_(array<double>) - 8-plane LSH bucket id"),
-      (args: Seq[Expression]) => HyperplaneBucket8(args.head)))
-    ext.injectFunction((FunctionIdentifier("graft_hyperplane_code"),
-      info("graft_hyperplane_code", "_FUNC_(array<double>, start, planes) - n-plane LSH code over planes [start, start+planes) (start=0 is prefix-compatible with the 8-plane bucket)"),
-      (args: Seq[Expression]) => HyperplaneCode(args(0),
-        args(1).eval().asInstanceOf[Int],
-        args(2).eval().asInstanceOf[Int])))
-    ext.injectFunction((FunctionIdentifier("graft_dot"),
-      info("graft_dot", "_FUNC_(array<double>, array<double>) - sequential dot product"),
-      (args: Seq[Expression]) => DotProduct(args(0), args(1))))
-    ext.injectFunction((FunctionIdentifier("graft_l2sq"),
-      info("graft_l2sq", "_FUNC_(array<bigint>, array<bigint>) - squared L2 distance"),
-      (args: Seq[Expression]) => L2Sq(args(0), args(1))))
-    ext.injectFunction((FunctionIdentifier("graft_ngrams"),
-      info("graft_ngrams", "_FUNC_(array<string>, n, distinct) - word n-gram shingles"),
-      (args: Seq[Expression]) => NGrams(args(0),
-        args(1).eval().asInstanceOf[Int],
-        args(2).eval().asInstanceOf[Boolean])))
-    ext.injectFunction((FunctionIdentifier("graft_topk"),
-      info("graft_topk",
-        "_FUNC_(struct<score,id>, k[, dedupe_ids]) - bounded-heap top-k aggregate"),
-      (args: Seq[Expression]) => TopKByScore(args(0),
-        args(1).eval().asInstanceOf[Int],
-        args.length > 2 && args(2).eval().asInstanceOf[Boolean])))
-    ext.injectFunction((FunctionIdentifier("graft_polyhash"),
-      info("graft_polyhash", "_FUNC_(string) - portable polynomial string hash"),
-      (args: Seq[Expression]) => PolyHashExpr(args.head)))
-    ext.injectFunction((FunctionIdentifier("graft_winnow"),
-      info("graft_winnow", "_FUNC_(array<string>, w) - winnowing fingerprint mins"),
-      (args: Seq[Expression]) => WinnowFingerprint(args(0),
-        args(1).eval().asInstanceOf[Int])))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.sqlFunctions.foreach(ext.injectFunction)
 }

@@ -1,10 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.KernelColumns.kernel
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for the hot signature computations.
@@ -24,7 +26,8 @@ import org.apache.spark.sql.types._
   * forces the whole projection to interpreted mode); the interpreted
   * `nullSafeEval` path delegates to the same kernels.
   *
-  * Registered under `graft_*` names via [[GraftFunctions.register]].
+  * Reached through [[GraftFunctions]]: typed `Column` helpers for query
+  * code, and the `graft_*` SQL names.
   */
 object Sig {
   final val P = Portable.P // 1000000007
@@ -964,11 +967,12 @@ case class ScrubPii(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression): ScrubPii = copy(child = c)
 }
 
-/** `graft_profile_scores(string) -> array<int>` (one count per profile) —
+/** `profileScores(string) -> array<int>` (one count per profile) —
   * see [[Sig.profileScores]]. The profile word sets are fixed at
-  * expression construction (registered per caller, e.g. the language-ID
-  * profiles); the membership index is built once and shipped to
-  * generated code as a reference object. */
+  * expression construction (by each caller of
+  * [[GraftFunctions.profileScores]], e.g. the language-ID profiles); the
+  * membership index is built once and shipped to generated code as a
+  * reference object. No SQL name. */
 case class ProfileScores(child: Expression, profiles: Seq[Seq[String]])
     extends UnaryExpression {
   @transient private lazy val index = Sig.buildProfileIndex(profiles)
@@ -996,9 +1000,12 @@ case class WinnowFingerprint(child: Expression, w: Int) extends UnaryExpression 
   override protected def withNewChildInternal(c: Expression): WinnowFingerprint = copy(child = c)
 }
 
-/** Session registration + typed `Column` wrappers for the `graft_*`
-  * expressions. `register` is idempotent and cheap — query builders call
-  * it unconditionally.
+/** The `graft_*` expressions' two faces. Query code uses the typed
+  * `Column` helpers, which build each expression directly, so a query
+  * runs on any session and registers nothing. SQL text resolves the same
+  * expressions by name through [[sqlFunctions]], the one table of the 19
+  * `graft_*` names: [[register]] installs it in a session, and
+  * [[GraftExtensions]] injects it at session build.
   */
 object GraftFunctions {
 
@@ -1030,88 +1037,91 @@ object GraftFunctions {
         s"$fn: $arg must be a boolean literal")
     }
 
+  private def fn(name: String, usage: String)(build: FunctionBuilder)
+      : (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
+    (FunctionIdentifier(name),
+      new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in"),
+      build)
+
+  /** The SQL surface: name, usage and builder of every `graft_*` function. */
+  val sqlFunctions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    fn("graft_minhash32", "_FUNC_(array<string>) - 32-permutation MinHash signature")(
+      a => MinHashSig(a(0))),
+    fn("graft_simhash63", "_FUNC_(array<string>) - 63-bit SimHash")(
+      a => SimHash63(a(0))),
+    fn("graft_hyperplane_bucket8", "_FUNC_(array<double>) - 8-plane LSH bucket id")(
+      a => HyperplaneBucket8(a(0))),
+    fn("graft_hyperplane_code", "_FUNC_(array<double>, start, planes) - n-plane LSH code over planes [start, start+planes) (start=0 is prefix-compatible with the 8-plane bucket)")(
+      a => HyperplaneCode(a(0), intLiteral("graft_hyperplane_code", "start", a(1)),
+        intLiteral("graft_hyperplane_code", "planes", a(2)))),
+    fn("graft_dot", "_FUNC_(array<double>, array<double>) - sequential dot product")(
+      a => DotProduct(a(0), a(1))),
+    fn("graft_dotf", "_FUNC_(array<float>, array<float>) - sequential dot product accumulated in double")(
+      a => DotProductF(a(0), a(1))),
+    fn("graft_l2sq", "_FUNC_(array<bigint>, array<bigint>) - squared L2 distance")(
+      a => L2Sq(a(0), a(1))),
+    fn("graft_term_counts", "_FUNC_(array<string>) - per-term counts as array<struct<term,tf>>")(
+      a => TermCounts(a(0))),
+    fn("graft_ngrams", "_FUNC_(array<string>, n, distinct) - word n-gram shingles")(
+      a => NGrams(a(0), intLiteral("graft_ngrams", "n", a(1)),
+        boolLiteral("graft_ngrams", "distinct", a(2)))),
+    fn("graft_topk", "_FUNC_(struct<score,id>, k[, dedupe_ids]) - bounded-heap top-k aggregate")(
+      a => TopKByScore(a(0), intLiteral("graft_topk", "k", a(1)),
+        a.length > 2 && boolLiteral("graft_topk", "dedupe_ids", a(2)))),
+    fn("graft_polyhash", "_FUNC_(string) - portable polynomial string hash")(
+      a => PolyHashExpr(a(0))),
+    fn("graft_normalize", "_FUNC_(string) - lowercase, punctuation-stripped, space-collapsed text")(
+      a => NormalizeText(a(0))),
+    fn("graft_token_stats", "_FUNC_(string) - whitespace/word/distinct token counts")(
+      a => TokenStats(a(0))),
+    fn("graft_hash_features", "_FUNC_(string, nBuckets) - hashed bag-of-words counts")(
+      a => HashFeatures(a(0), intLiteral("graft_hash_features", "nBuckets", a(1)))),
+    fn("graft_gopher_stats", "_FUNC_(string) - Gopher quality-rule token statistics")(
+      a => GopherStats(a(0), Sig.GopherStops)),
+    fn("graft_diversity_stats", "_FUNC_(string) - lexical diversity statistics")(
+      a => DiversityStats(a(0))),
+    fn("graft_charclass_stats", "_FUNC_(string) - letter/digit/space character counts")(
+      a => CharClassStats(a(0))),
+    fn("graft_scrub", "_FUNC_(string) - email/phone counts and the PII-scrubbed text")(
+      a => ScrubPii(a(0))),
+    fn("graft_winnow", "_FUNC_(array<string>, w) - winnowing fingerprint mins")(
+      a => WinnowFingerprint(a(0), intLiteral("graft_winnow", "window", a(1)))))
+
+  /** Install [[sqlFunctions]] in `spark` for SQL text; names the session
+    * already has are left as they are, so repeated calls are no-ops. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_minhash32",
-      (args: Seq[Expression]) => MinHashSig(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash63",
-      (args: Seq[Expression]) => SimHash63(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_hyperplane_bucket8",
-      (args: Seq[Expression]) => HyperplaneBucket8(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_hyperplane_code",
-      (args: Seq[Expression]) => HyperplaneCode(args(0),
-        intLiteral("graft_hyperplane_code", "start", args(1)),
-        intLiteral("graft_hyperplane_code", "planes", args(2))), "built-in")
-    reg.createOrReplaceTempFunction("graft_dot",
-      (args: Seq[Expression]) => DotProduct(args(0), args(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_dotf",
-      (args: Seq[Expression]) => DotProductF(args(0), args(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_l2sq",
-      (args: Seq[Expression]) => L2Sq(args(0), args(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_term_counts",
-      (args: Seq[Expression]) => TermCounts(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_ngrams",
-      (args: Seq[Expression]) => NGrams(args(0),
-        intLiteral("graft_ngrams", "n", args(1)),
-        boolLiteral("graft_ngrams", "distinct", args(2))), "built-in")
-    reg.createOrReplaceTempFunction("graft_topk",
-      (args: Seq[Expression]) => TopKByScore(args(0),
-        intLiteral("graft_topk", "k", args(1)),
-        args.length > 2 && boolLiteral("graft_topk", "ascending", args(2))), "built-in")
-    reg.createOrReplaceTempFunction("graft_polyhash",
-      (args: Seq[Expression]) => PolyHashExpr(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_normalize",
-      (args: Seq[Expression]) => NormalizeText(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_token_stats",
-      (args: Seq[Expression]) => TokenStats(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_hash_features",
-      (args: Seq[Expression]) => HashFeatures(args(0),
-        intLiteral("graft_hash_features", "nBuckets", args(1))), "built-in")
-    reg.createOrReplaceTempFunction("graft_gopher_stats",
-      (args: Seq[Expression]) => GopherStats(args.head, Sig.GopherStops), "built-in")
-    reg.createOrReplaceTempFunction("graft_diversity_stats",
-      (args: Seq[Expression]) => DiversityStats(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_charclass_stats",
-      (args: Seq[Expression]) => CharClassStats(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_scrub",
-      (args: Seq[Expression]) => ScrubPii(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_winnow",
-      (args: Seq[Expression]) => WinnowFingerprint(args(0),
-        intLiteral("graft_winnow", "window", args(1))), "built-in")
+    sqlFunctions.foreach { case (id, info, build) =>
+      if (!reg.functionExists(id)) reg.registerFunction(id, info, build)
+    }
   }
 
-  def minhash32(c: Column): Column = call_function("graft_minhash32", c)
-  def simhash63(c: Column): Column = call_function("graft_simhash63", c)
-  def hyperplaneBucket8(c: Column): Column = call_function("graft_hyperplane_bucket8", c)
+  def minhash32(c: Column): Column = kernel(c)(e => MinHashSig(e(0)))
+  def simhash63(c: Column): Column = kernel(c)(e => SimHash63(e(0)))
+  def hyperplaneBucket8(c: Column): Column = kernel(c)(e => HyperplaneBucket8(e(0)))
   def hyperplaneCode(c: Column, start: Int, planes: Int): Column =
-    call_function("graft_hyperplane_code", c,
-      org.apache.spark.sql.functions.lit(start),
-      org.apache.spark.sql.functions.lit(planes))
-  def dotp(a: Column, b: Column): Column = call_function("graft_dot", a, b)
-  def dotpf(a: Column, b: Column): Column = call_function("graft_dotf", a, b)
-  def l2sq(a: Column, b: Column): Column = call_function("graft_l2sq", a, b)
-  def termCounts(toks: Column): Column = call_function("graft_term_counts", toks)
+    kernel(c)(e => HyperplaneCode(e(0), start, planes))
+  def dotp(a: Column, b: Column): Column = kernel(a, b)(e => DotProduct(e(0), e(1)))
+  def dotpf(a: Column, b: Column): Column = kernel(a, b)(e => DotProductF(e(0), e(1)))
+  def l2sq(a: Column, b: Column): Column = kernel(a, b)(e => L2Sq(e(0), e(1)))
+  def termCounts(toks: Column): Column = kernel(toks)(e => TermCounts(e(0)))
   def ngrams(toks: Column, n: Int, distinct: Boolean): Column =
-    call_function("graft_ngrams", toks,
-      org.apache.spark.sql.functions.lit(n), org.apache.spark.sql.functions.lit(distinct))
+    kernel(toks)(e => NGrams(e(0), n, distinct))
   /** Bounded-heap top-k aggregate — see [[TopKByScore]]. */
   def topk(scoreAndId: Column, k: Int, dedupeIds: Boolean = false): Column =
-    if (dedupeIds)
-      call_function("graft_topk", scoreAndId,
-        org.apache.spark.sql.functions.lit(k),
-        org.apache.spark.sql.functions.lit(true))
-    else
-      call_function("graft_topk", scoreAndId, org.apache.spark.sql.functions.lit(k))
-  def polyhash(c: Column): Column = call_function("graft_polyhash", c)
-  def normalize(c: Column): Column = call_function("graft_normalize", c)
-  def tokenStats(c: Column): Column = call_function("graft_token_stats", c)
+    kernel(scoreAndId)(e => TopKByScore(e(0), k, dedupeIds).toAggregateExpression())
+  def polyhash(c: Column): Column = kernel(c)(e => PolyHashExpr(e(0)))
+  def normalize(c: Column): Column = kernel(c)(e => NormalizeText(e(0)))
+  def tokenStats(c: Column): Column = kernel(c)(e => TokenStats(e(0)))
   def hashFeatures(c: Column, nBuckets: Int): Column =
-    call_function("graft_hash_features", c,
-      org.apache.spark.sql.functions.lit(nBuckets))
-  def gopherStats(c: Column): Column = call_function("graft_gopher_stats", c)
-  def diversityStats(c: Column): Column = call_function("graft_diversity_stats", c)
-  def charClassStats(c: Column): Column = call_function("graft_charclass_stats", c)
-  def scrub(c: Column): Column = call_function("graft_scrub", c)
-  def winnow(grams: Column, w: Int): Column =
-    call_function("graft_winnow", grams, org.apache.spark.sql.functions.lit(w))
+    kernel(c)(e => HashFeatures(e(0), nBuckets))
+  def gopherStats(c: Column): Column = kernel(c)(e => GopherStats(e(0), Sig.GopherStops))
+  def diversityStats(c: Column): Column = kernel(c)(e => DiversityStats(e(0)))
+  def charClassStats(c: Column): Column = kernel(c)(e => CharClassStats(e(0)))
+  def scrub(c: Column): Column = kernel(c)(e => ScrubPii(e(0)))
+  def winnow(grams: Column, w: Int): Column = kernel(grams)(e => WinnowFingerprint(e(0), w))
+  /** Per-profile hit counts — see [[ProfileScores]]; no SQL name, the
+    * profiles are fixed by the caller. */
+  def profileScores(text: Column, profiles: Seq[Seq[String]]): Column =
+    kernel(text)(e => ProfileScores(e(0), profiles))
 }

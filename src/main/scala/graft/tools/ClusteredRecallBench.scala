@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *  - mean recall@5 of the shipped capped graph per candidate cap
   *    (16 / 64 / 256 / uncapped), via
   *    [[graft.analytics.Similarity.knnGraphRecall]] — the production
-  *    candidate rule replayed verbatim, Round9OpsSpec-pinned;
+  *    candidate rule replayed verbatim, SimilaritySpec-pinned;
   *  - mean recall@5 after one NN-descent round
   *    ([[graft.analytics.Similarity.knnGraphRefineRecall]]) and the LIFT
   *    over the shipped cap-64 build — NN-descent can only recover

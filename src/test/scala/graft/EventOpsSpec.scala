@@ -108,4 +108,53 @@ class EventOpsSpec extends AnyFunSuite {
     assert(top.getAs[Long]("events_per_hour") ==
       secs.length / secs.map(_ / 3600).distinct.length)
   }
+
+  test("events_markov rows are a probability distribution per current type") {
+    val rows = EventOps.markov(spark, sf).collect()
+    assert(rows.nonEmpty)
+    val byType = rows.groupBy(_.getString(0))
+    for ((t, rs) <- byType) {
+      val mass = rs.map(_.getDouble(3)).sum
+      assert(math.abs(mass - 1.0) < 1e-9, s"P(next|$t) sums to $mass, not 1")
+    }
+    // transition count conservation: every event with a successor is
+    // counted exactly once — totals must equal events minus each user's
+    // final event
+    val nTransitions = rows.map(_.getLong(2)).sum
+    val ev = Tables.events(spark, sf)
+    val expected = ev.count() - ev.select("user_id").distinct().count()
+    assert(nTransitions == expected,
+      s"transition mass $nTransitions != events - users = $expected")
+  }
+
+  test("events_value_histogram tiles the event count and the value total") {
+    val rows = EventOps.valueHistogram(spark, sf).collect()
+    val ev = Tables.events(spark, sf)
+    assert(rows.map(_.getLong(3)).sum == ev.count(),
+      "histogram bucket counts must tile the event count exactly")
+    // exact-cents identity: Σ bucket totals == Σ cents / 100 (both exact
+    // longs until the single final division)
+    val totalCents = ev.select(sum(Tables.cents(col("value")))).head().getLong(0)
+    val bucketCents = rows.map(r => math.round(r.getDouble(4) * 100)).sum
+    assert(bucketCents == totalCents,
+      s"bucket value mass $bucketCents != corpus total $totalCents")
+    // buckets are $10 wide: bucket_lo must be 10 × bucket
+    assert(rows.forall(r => r.getDouble(2) == r.getLong(1) * 10.0))
+  }
+
+  test("events_inactivity: dormancy is anchored to the stream head and gaps to real events") {
+    val rows = EventOps.inactivity(spark, sf).collect()
+    val ev = Tables.events(spark, sf)
+    assert(rows.length.toLong == ev.select("user_id").distinct().count())
+    assert(rows.map(_.getLong(1)).sum == ev.count(), "per-user counts must tile")
+    // at least one user is active at the head (dormant 0); none negative
+    assert(rows.exists(_.getLong(3) == 0L), "head user must be 0-dormant")
+    assert(rows.forall(r => r.getLong(2) >= 0 && r.getLong(3) >= 0))
+    // a single-event user (if any) must report gap 0; max_gap bounded by span
+    val span = {
+      val mm = ev.agg(min(expr("ts div 1000000000")), max(expr("ts div 1000000000"))).head()
+      mm.getLong(1) - mm.getLong(0)
+    }
+    assert(rows.forall(_.getLong(2) <= span))
+  }
 }

@@ -15,7 +15,6 @@ class SigExpressionsSpec extends AnyFunSuite {
   private val asciiWord = Gen.nonEmptyListOf(Gen.alphaLowerChar).map(_.mkString)
 
   test("native minhash32 equals the declarative higher-order-function fold") {
-    GraftFunctions.register(spark)
     val docs = Gen.listOfN(30, Gen.nonEmptyListOf(asciiWord).map(_.mkString(" ")))
       .sample.get.toDF("text")
     val sh = docs.select(Portable.shingles3(split(col("text"), " ")).as("sh"))
@@ -30,7 +29,6 @@ class SigExpressionsSpec extends AnyFunSuite {
   }
 
   test("native simhash63 equals the declarative fold and is order-insensitive") {
-    GraftFunctions.register(spark)
     val toks = Seq(Seq("alpha", "beta", "gamma"), Seq("gamma", "beta", "alpha"),
       Seq("one"), Seq("lorem", "ipsum", "dolor", "sit", "amet"))
       .toDF("toks")
@@ -47,7 +45,6 @@ class SigExpressionsSpec extends AnyFunSuite {
   }
 
   test("native dot/bucket equal the declarative folds on random vectors") {
-    GraftFunctions.register(spark)
     val vecs = Seq.tabulate(20)(i => Seq.tabulate(64)(d =>
       math.sin(i * 64 + d).abs * (if ((i + d) % 3 == 0) -1 else 1))).toDF("ed")
     val nat = vecs.select(
@@ -65,7 +62,6 @@ class SigExpressionsSpec extends AnyFunSuite {
   }
 
   test("native l2sq equals the declarative zip_with fold on long vectors") {
-    GraftFunctions.register(spark)
     val vecs = Seq.tabulate(20)(i => (
       Seq.tabulate(8)(d => ((i * 37 + d * 13) % 2001 - 1000).toLong),
       Seq.tabulate(8)(d => ((i * 53 + d * 29) % 2001 - 1000).toLong)))
@@ -81,7 +77,6 @@ class SigExpressionsSpec extends AnyFunSuite {
   }
 
   test("native ngrams equals the declarative shingle builder (distinct and not)") {
-    GraftFunctions.register(spark)
     val docs = (Gen.listOfN(40, Gen.nonEmptyListOf(asciiWord).map(_.mkString(" ")))
       .sample.get ++ Seq("one", "two words", "a b a b a b")).toDF("text")
     val toks = split(col("text"), " ")
@@ -108,7 +103,6 @@ class SigExpressionsSpec extends AnyFunSuite {
   }
 
   test("native polyhash equals the declarative per-char fold") {
-    GraftFunctions.register(spark)
     val samples = (Gen.listOfN(50, Gen.nonEmptyListOf(asciiWord).map(_.mkString(" ")))
       .sample.get ++ Seq("a", "hello world")).toDF("s")
     val got = samples.select(
@@ -119,7 +113,6 @@ class SigExpressionsSpec extends AnyFunSuite {
   }
 
   test("native winnow equals the declarative window-min pipeline") {
-    GraftFunctions.register(spark)
     val docs = (Gen.listOfN(40, Gen.nonEmptyListOf(asciiWord).map(_.mkString(" ")))
       .sample.get ++ Seq("one", "a b c", "a b c d e f", "x y z x y z x y z")).toDF("text")
     val sh = GraftFunctions.ngrams(split(col("text"), " "), 3, distinct = false)
@@ -138,7 +131,6 @@ class SigExpressionsSpec extends AnyFunSuite {
   }
 
   test("native normalize equals the two-regex-pass canonicalization") {
-    GraftFunctions.register(spark)
     val edge = Seq("", "   ", "!!##@@", "  Hello,   WORLD!42  ", "a", "A.B.C",
       "tabs\tand\nnewlines stay punct", "MiXeD 09 CaSe--joined_words",
       "trailing space ", " leading", "many     internal      gaps",
@@ -155,7 +147,6 @@ class SigExpressionsSpec extends AnyFunSuite {
   }
 
   test("native token_stats equals the declarative split/regex/distinct forms") {
-    GraftFunctions.register(spark)
     val wordRe = "[a-z]+|[0-9]+|[^a-z0-9 ]"
     val edge = Seq("", " ", "  ", "a", "a b a b", "Hello, WORLD!42x",
       "trailing ", " leading", "double  space", "a!!b??c", "42 42 43",
@@ -178,7 +169,6 @@ class SigExpressionsSpec extends AnyFunSuite {
   }
 
   test("native hash_features equals the declarative explode/polyhash counts") {
-    GraftFunctions.register(spark)
     // real corpus + ASCII edges (no consecutive/trailing spaces: split and
     // string_split disagree with the kernel only on EMPTY tokens, which
     // the corpus contract excludes — same caveat as the polyhash mirrors)
@@ -224,10 +214,16 @@ class SigExpressionsSpec extends AnyFunSuite {
     }
     assert(rootChain(nullLit).exists(c =>
       Option(c.getMessage).exists(_.contains("integer literal"))))
+    // a boolean argument's error names it as the expression does
+    val badDedupe = intercept[Exception] {
+      spark.sql("SELECT graft_topk(named_struct('score', 1.0d, 'id', 1L), 2, 1)").head()
+    }
+    assert(rootChain(badDedupe).exists(c => Option(c.getMessage)
+      .exists(_.contains("graft_topk: dedupe_ids must be a boolean literal"))),
+      s"expected the dedupe_ids literal-contract error, got: $badDedupe")
   }
 
   test("native gopher_stats equals the interpreted HOF forms (corpus + edges)") {
-    GraftFunctions.register(spark)
     // the real corpus plus the edges where split/array_distinct semantics
     // bite: empty string, consecutive/trailing spaces (empty tokens kept),
     // repeated tokens, case-sensitive stopwords, non-ASCII codepoints,
@@ -260,7 +256,6 @@ class SigExpressionsSpec extends AnyFunSuite {
   }
 
   test("native charclass_stats equals the regexp_replace-length forms (corpus + edges)") {
-    GraftFunctions.register(spark)
     // edges: empty, uppercase (NOT in [a-z]), digits, multi-byte
     // codepoints (every byte ≥ 0x80 — none may count as letter/digit/
     // space, but each codepoint counts once in n_chars), punctuation
@@ -284,7 +279,6 @@ class SigExpressionsSpec extends AnyFunSuite {
   }
 
   test("native scrub equals the four-pass regex chain on the real corpus (both ways)") {
-    GraftFunctions.register(spark)
     val dir = "/root/testdata/sf0.001"
     val kernel = graft.analytics.TextOps.piiScrub(spark, dir).collect().toSeq
     val regex = graft.analytics.TextOps.piiScrubDeclarative(spark, dir).collect().toSeq
@@ -293,7 +287,6 @@ class SigExpressionsSpec extends AnyFunSuite {
   }
 
   test("native scrub reproduces java.util.regex find() on adversarial pattern edges") {
-    GraftFunctions.register(spark)
     val emailP = java.util.regex.Pattern.compile(graft.analytics.TextOps.EmailRe)
     val phoneP = java.util.regex.Pattern.compile(graft.analytics.TextOps.PhoneRe)
     def refCount(p: java.util.regex.Pattern, s: String): Int = {
@@ -334,7 +327,6 @@ class SigExpressionsSpec extends AnyFunSuite {
   }
 
   test("graft_topk equals row_number window top-k including ties") {
-    GraftFunctions.register(spark)
     // deliberately include score ties so tie-break-by-id is exercised
     val rows = for (q <- 0 until 4; i <- 0 until 57)
       yield (q.toLong, i.toLong, math.round(math.sin(q * 57 + i) * 100) / 100.0)
@@ -426,7 +418,6 @@ class SigExpressionsSpec extends AnyFunSuite {
   }
 
   test("graft_topk partial aggregation keeps at most k per map task") {
-    GraftFunctions.register(spark)
     val scored = (0 until 1000).map(i => (1L, i.toLong, i.toDouble)).toDF("q_id", "n_id", "cosine")
     val plan = scored.groupBy("q_id")
       .agg(GraftFunctions.topk(struct(col("cosine"), col("n_id")), 3).as("tk"))
@@ -436,7 +427,6 @@ class SigExpressionsSpec extends AnyFunSuite {
   }
 
   test("graft_term_counts ≡ explode → count per (doc, term) on the real corpus") {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, sf)
     val kernel = docs
       .select(col("doc_id"), explode(graft.functions.GraftFunctions
@@ -482,10 +472,70 @@ class GraftExtensionsSpec extends AnyFunSuite {
       SparkSession.setActiveSession(base)
     }
   }
+
+  private def graftNames(s: org.apache.spark.sql.SparkSession): Set[String] =
+    s.sessionState.functionRegistry.listFunction().map(_.funcName)
+      .filter(_.startsWith("graft_")).toSet
+
+  test("the extension installs every name register installs, with checked literals") {
+    import org.apache.spark.sql.SparkSession
+    val base = SparkTestSession.spark
+    val registered = base.newSession()
+    GraftFunctions.register(registered)
+    assert(graftNames(registered).size == 19)
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val s2 = SparkSession.builder().master("local[4]")
+        .config("spark.ui.enabled", "false")
+        .withExtensions(new graft.functions.GraftExtensions)
+        .getOrCreate()
+      assert(graftNames(s2) == graftNames(registered))
+      val r = s2.sql(
+        "SELECT graft_dotf(array(1.0f, 2.0f), array(3.0f, 4.0f)) AS df, " +
+          "size(graft_term_counts(array('a','b','a'))) AS tc, " +
+          "graft_normalize('Hello') AS nz, " +
+          "graft_token_stats('a b').n_ws_tokens AS ts, " +
+          "size(graft_hash_features('a b a', 8)) AS hf, " +
+          "graft_gopher_stats('the cat').n_tokens AS gs, " +
+          "graft_diversity_stats('a b a').n_types AS ds, " +
+          "graft_charclass_stats('ab 12').n_digit AS cc, " +
+          "graft_scrub('mail a@b.com').n_emails AS sc, " +
+          "graft_ngrams(array('a','b','c'), 2L, true) AS ng").collect().head
+      assert(r.getDouble(0) == 11.0)
+      assert(r.getInt(1) == 2)
+      assert(r.getString(2) == "hello")
+      assert(r.getInt(3) == 2)
+      assert(r.getInt(4) == 8)
+      assert(r.getInt(5) == 2)
+      assert(r.getInt(6) == 2)
+      assert(r.getInt(7) == 2)
+      assert(r.getInt(8) == 1)
+      assert(r.getSeq[String](9) == Seq("a b", "b c"))
+    } finally {
+      SparkSession.setDefaultSession(base)
+      SparkSession.setActiveSession(base)
+    }
+  }
+
+  test("query paths run on a session where no graft_* function is registered") {
+    val base = SparkTestSession.spark
+    val fresh = base.newSession()
+    base.conf.getOption("spark.graft.derived.dir")
+      .foreach(fresh.conf.set("spark.graft.derived.dir", _))
+    assert(graftNames(fresh).isEmpty)
+    val sf = "/root/testdata/sf0.001"
+    for (q <- Seq("text_bm25", "text_langid", "knn_brute", "dedup_minhash_lsh")) {
+      val run = SparkEntry.queries(q)
+      assert(run(fresh, sf).collect().toSeq == run(base, sf).collect().toSeq, q)
+    }
+    assert(graftNames(fresh).isEmpty, "a query path registered a graft_* function")
+  }
 }
 
 class MediaPipelineSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
+  private val sf = "/root/testdata/sf0.001"
   import spark.implicits._
 
   test("PPM codec round-trips: encode → decode recovers spec + pixel sum") {
@@ -614,5 +664,22 @@ class MediaPipelineSpec extends AnyFunSuite {
         .collect().sortBy(_.doc_id).toSeq
       assert(streamed == batch, "streamed features must be bit-equal to batch")
     } finally q.stop()
+  }
+
+  test("mm_fingerprint collapses duplicate decoded content to one keeper") {
+    val rows = graft.analytics.Multimodal.mmFingerprint(spark, sf).collect()
+    val docs = Tables.documents(spark, sf).count()
+    assert(rows.map(_.getLong(2)).sum == docs, "group sizes must tile the corpus")
+    // fingerprint is a pure function of the grouped features: no two rows
+    // may share all five features, and fingerprints must be within [0, P)
+    val keys = rows.map(r => (r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7)))
+    assert(keys.distinct.length == keys.length)
+    assert(rows.forall(r => r.getLong(0) >= 0 && r.getLong(0) < graft.functions.Portable.P))
+    // keepers are distinct real documents (min of disjoint groups)
+    val keepers = rows.map(_.getLong(1))
+    assert(keepers.distinct.length == keepers.length)
+    val ids = Tables.documents(spark, sf).select("doc_id").collect()
+      .map(_.getLong(0)).toSet
+    assert(keepers.forall(ids.contains))
   }
 }

@@ -107,7 +107,6 @@ class Round15OptSpec extends AnyFunSuite {
   }
 
   test("zone-served knn_brute ≡ the inline 10-query exact formulation") {
-    graft.functions.GraftFunctions.register(spark)
     val served = analytics.Similarity.knnBrute(spark, sf).collect().toSeq
     val base = Tables.embeddings(spark, sf).select(col("vec_id"),
         transform(col("embedding"), e => e.cast("double")).as("ed"))
@@ -161,7 +160,6 @@ class Round15OptSpec extends AnyFunSuite {
   }
 
   test("kmeans_iter long-encoded argmin ≡ the min(struct) formulation") {
-    graft.functions.GraftFunctions.register(spark)
     val got = analytics.Similarity.kmeansIter(spark, sf).collect().toSeq
     val base = Tables.embeddings(spark, sf).select(col("vec_id"),
       transform(col("embedding"), e => round(e.cast("double") * 1000).cast("long")).as("qv"))

@@ -61,7 +61,6 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("refine rounds knob: rounds=2 is exactly refineRound applied twice") {
     import graft.analytics.Similarity
-    graft.functions.GraftFunctions.register(spark)
     val vectors = Tables.embeddings(spark, sf)
     val base = Similarity.vecBase(vectors)
     val e1 = Similarity.knnGraphFrame(spark, vectors)
@@ -86,5 +85,126 @@ class SimilaritySpec extends AnyFunSuite {
     try intercept[IllegalArgumentException](
       Similarity.knnGraphRefine(spark, sf))
     finally spark.conf.unset("spark.graft.refine.rounds")
+  }
+
+  test("knn_graph_recall covers every cap × every sampled node") {
+    val rows = Similarity.knnGraphRecall(spark, sf).collect()
+    val caps = rows.map(_.getInt(0)).distinct.sorted
+    assert(caps.toSeq == Similarity.GraphRecallCaps.sorted,
+      s"cap column must enumerate GraphRecallCaps, got ${caps.toSeq}")
+    val perCap = rows.groupBy(_.getInt(0)).view.mapValues(_.length).toMap
+    assert(perCap.values.forall(_ == Similarity.GraphRecallNQ),
+      s"each cap must report all ${Similarity.GraphRecallNQ} sampled nodes: $perCap")
+    assert(rows.forall { r =>
+      val (hits, recall) = (r.getLong(2), r.getDouble(3))
+      hits >= 0 && hits <= 5 && recall >= 0.0 && recall <= 1.0
+    }, "n_hits must be in [0,5] and recall in [0,1]")
+  }
+
+  test("uncapped setting is the recall ceiling over every finite cap") {
+    // s=1 everywhere makes each node's candidate set the full bucket — a
+    // superset of any cell — and a candidate superset can only add exact
+    // top-k members to the approximate top-k (anything that displaces an
+    // exact-top-k candidate has a higher cosine, hence is itself exact
+    // top-k). Aggregate hits must therefore be maximal at the uncapped
+    // setting; a violation means the cell split changed semantics, not
+    // just recall.
+    val totals = Similarity.knnGraphRecall(spark, sf)
+      .groupBy("cap").agg(sum("n_hits").as("h"))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val ceiling = totals(Similarity.GraphRecallCaps.max)
+    for ((cap, h) <- totals)
+      assert(h <= ceiling, s"cap=$cap hits $h exceed uncapped ceiling $ceiling")
+  }
+
+  test("recall eval at cap=GraphCell replays the shipped knn_graph edges exactly") {
+    // The whole point of the gate: it must measure the graph knnGraph
+    // ships, not a reimplementation that could drift. Edge sets for the
+    // sampled nodes must be identical.
+    val (base, codes) = Similarity.graphRecallFrames(spark, sf)
+    val evalEdges = Similarity.graphSampleEdges(base, codes, Similarity.GraphCell)
+    val shipped = Similarity.knnGraph(spark, sf)
+      .filter(col("q_id") < Similarity.GraphRecallNQ)
+      .select("q_id", "n_id")
+    assert(evalEdges.exceptAll(shipped).isEmpty && shipped.exceptAll(evalEdges).isEmpty,
+      "cap=GraphCell eval edges must equal knn_graph's own edges for the sample")
+  }
+
+  test("NN-descent round can only add exact-top-k hits at the shipped cap") {
+    // knn_graph_refine's final top-k ranks a SUPERSET of the capped
+    // graph's candidate pairs (pairs = two-hop candidates ∪ the graph's
+    // own edges), so per-node hits against exact ground truth are
+    // monotone — the refine round may lift recall, never lower it.
+    val graphHits = Similarity.knnGraphRecall(spark, sf)
+      .filter(col("cap") === Similarity.GraphCell)
+      .agg(sum("n_hits")).collect()(0).getLong(0)
+    val refinedHits = Similarity.knnGraphRefineRecall(spark, sf)
+      .agg(sum("n_hits")).collect()(0).getLong(0)
+    assert(refinedHits >= graphHits,
+      s"refined hits $refinedHits fell below capped-graph hits $graphHits")
+  }
+
+  test("oversized buckets split along extra hyperplane bits, keeping near-duplicates together") {
+    // sf0.001's 256-bucket occupancy (~2 rows/bucket) never splits, so
+    // exercise the split on a synthetic corpus big enough that buckets
+    // overflow GraphCell. The split must (a) actually subdivide and
+    // (b) be similarity-AWARE: a planted near-duplicate pair (cosine ≈ 1,
+    // so all 24 plane projections agree) must share a cell — the property
+    // the first-cut `vec_id % s` split lacked, which collapsed recall
+    // at the ×100 scale point.
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val base = Array.fill(64)(rnd.nextGaussian())
+    val twin = base.map(_ + 1e-9)
+    val vecs = (0 until 20000).map { i =>
+      (i.toLong, Array.fill(64)((rnd.nextGaussian() * 100).floor / 100))
+    } :+ (20000L, base) :+ (20001L, twin)
+    val df = vecs.toDF("vec_id", "embedding")
+    val bvc = Similarity.knnGraphCellsForSpec(df, Similarity.GraphCell)
+      .select("vec_id", "tbl", "bucket", "cell").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
+    val byBucket = bvc.groupBy(r => (r._2, r._3))
+    val split = byBucket.filter { case (_, rows) =>
+      rows.map(_._4).distinct.length > 1 }
+    assert(split.nonEmpty, "no bucket split on a 20k corpus — cap inactive")
+    // candidate budget holds in aggregate on near-uniform data: the
+    // largest cell stays within a small factor of the cap (hyperplane
+    // bits halve a random bucket per extra bit; only degenerate
+    // identical-vector corpora defeat the split)
+    val maxCell = byBucket.values.flatMap(
+      _.groupBy(_._4).values.map(_.size)).max
+    assert(maxCell <= 4 * Similarity.GraphCell,
+      s"largest cell $maxCell blows the ${Similarity.GraphCell} budget")
+    // the planted pair must share (bucket, cell) in EVERY table
+    val planted = bvc.filter(_._1 >= 20000L).groupBy(_._2)
+    planted.foreach { case (tbl, rows) =>
+      assert(rows.map(r => (r._3, r._4)).distinct.length == 1,
+        s"near-duplicate pair separated in table $tbl: ${rows.toSeq}")
+    }
+  }
+
+  test("knn_graph_recall ground truth is one broadcast pass, no wide shuffle of the corpus") {
+    // The exact side must stay a broadcast of the 30-node sample against
+    // the corpus scan: a proportional sample or a lost broadcast would
+    // show up as an Exchange hashpartitioning of the embeddings scan
+    // before any aggregate.
+    val plan = Similarity.knnGraphRecall(spark, sf)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastExchange"),
+      s"sample side must broadcast:\n${plan.take(2000)}")
+  }
+
+  test("knn_range returns exactly the pairs at or above the threshold") {
+    val rows = Similarity.knnRange(spark, sf).collect()
+    assert(rows.forall(_.getDouble(2) >= 0.35), "below-threshold row leaked")
+    assert(rows.forall(r => r.getLong(0) != r.getLong(1)), "self-match leaked")
+    // cross-check against the exact brute top-k: any knn_brute neighbor
+    // scoring >= tau must be in the range result (same round-6 cosine)
+    val fromBrute = Similarity.knnBrute(spark, sf).collect()
+      .filter(_.getDouble(3) >= 0.35)
+      .map(r => (r.getLong(0), r.getLong(2))).toSet
+    val got = rows.map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(fromBrute.subsetOf(got),
+      s"brute-force matches missing from range result: ${fromBrute.diff(got)}")
   }
 }

@@ -137,7 +137,6 @@ class TextOpsSpec extends AnyFunSuite {
   }
 
   test("text_diversity kernel: adversarial token edges") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     // (text, n_tokens, n_types, sum_cc, n_hapax); empties from doubled /
     // leading / trailing spaces are tokens, exactly as string_split keeps
@@ -162,7 +161,6 @@ class TextOpsSpec extends AnyFunSuite {
 
   test("sample_priority: exact integer priorities, complete top-k") {
     import graft.analytics.TextOps
-    graft.functions.GraftFunctions.register(spark)
     val out = TextOps.samplePriority(spark, sf).collect()
     val all = Tables.documents(spark, sf)
       .select(col("doc_id"), col("n_chars"),
@@ -190,5 +188,66 @@ class TextOpsSpec extends AnyFunSuite {
     val meanSel = out.map(_.getAs[Long]("n_chars")).sum.toDouble / out.length
     assert(meanSel > meanAll,
       s"selected mean $meanSel must exceed corpus mean $meanAll")
+  }
+
+  test("text_perplexity_bucket: value-pure tertiles, ordered and tiling per language") {
+    import org.apache.spark.sql.functions._
+    val b = graft.analytics.TextOps.textPerplexityBucket(spark, sf)
+    val perLang = b.groupBy("lang", "bucket")
+      .agg(count(lit(1)).as("n"), min("lm_ppm").as("lo"), max("lm_ppm").as("hi"))
+      .collect().map(r => ((r.getString(0), r.getInt(1)),
+        (r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
+    val langs = perLang.keySet.map(_._1)
+    langs.foreach { l =>
+      // buckets are value-ordered: every head score ≥ every middle score
+      // ≥ every tail score (ties land in the better bucket, so ranges may
+      // touch but never interleave), and the three buckets tile the lang
+      for (i <- 0 until 2 if perLang.contains((l, i)) && perLang.contains((l, i + 1)))
+        assert(perLang((l, i))._2 >= perLang((l, i + 1))._3,
+          s"$l: bucket $i overlaps bucket ${i + 1} below its floor")
+      val n = (0 to 2).map(i => perLang.get((l, i)).map(_._1).getOrElse(0L)).sum
+      val total = b.filter(col("lang") === l).count()
+      assert(n == total, s"$l: buckets do not tile ($n != $total)")
+      // head holds at least the nearest-rank third (ties only ADD to it)
+      assert(perLang((l, 0))._1 >= (total + 2) / 3 ||
+        perLang((l, 0))._2 == perLang((l, 0))._3,
+        s"$l: head bucket smaller than the tertile with distinct scores")
+    }
+    assert(langs.nonEmpty)
+  }
+
+  test("text_zipf decade masses tile the top-999 token mass exactly") {
+    val rows = TextOps.textZipf(spark, sf).collect()
+    assert(rows.nonEmpty && rows.forall(r => Seq(1, 2, 3).contains(r.getInt(0))))
+    // n_terms per decade can never exceed the decade's rank capacity
+    val cap = Map(1 -> 9L, 2 -> 90L, 3 -> 900L)
+    assert(rows.forall(r => r.getLong(1) <= cap(r.getInt(0))))
+    // decade mass must equal an independent naive computation: total
+    // occurrences of the top-999 terms by frequency
+    val vocab = Tables.documents(spark, sf)
+      .select(explode(split(col("text"), " ")).as("term"))
+      .groupBy("term").agg(count(lit(1)).as("f"))
+      .orderBy(col("f").desc, col("term")).limit(999).collect()
+    assert(rows.map(_.getLong(2)).sum == vocab.map(_.getLong(1)).sum,
+      "decade total_occurrences must tile the naive top-999 token mass")
+    assert(rows.map(_.getLong(1)).sum == vocab.length.toLong)
+    // within-decade frequency bounds nest monotonically across decades
+    val sorted = rows.sortBy(_.getInt(0))
+    for (Seq(a, b) <- sorted.toSeq.sliding(2) if sorted.length > 1)
+      assert(a.getLong(4) >= b.getLong(3),
+        "min_freq of an earlier decade must dominate max_freq of a later one")
+  }
+
+  test("text_boilerplate ppm is exact integer division and df-threshold-consistent") {
+    val rows = TextOps.textBoilerplate(spark, sf).collect()
+    assert(rows.nonEmpty)
+    assert(rows.forall { r =>
+      val (n, c, ppm) = (r.getLong(1), r.getLong(2), r.getLong(3))
+      c <= n && ppm == c * 1000000L / n && ppm >= 0 && ppm <= 1000000
+    })
+    // every document with >= 3 tokens appears exactly once
+    val expected = Tables.documents(spark, sf)
+      .filter(size(split(col("text"), " ")) >= 3).count()
+    assert(rows.length.toLong == expected)
   }
 }
