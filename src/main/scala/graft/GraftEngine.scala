@@ -1,6 +1,7 @@
 package graft
 
 import graft.compact.Compactor
+import graft.functions.GraftFunctions
 import graft.ingest.IngestPipeline
 import graft.search.{ListRequest, MetadataSearch, SearchQuery, SearchServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -52,9 +53,15 @@ class GraftEngine(spark: SparkSession, val config: GraftConfig)
     * merge, published once per state of the bucket's files to the server's
     * snapshot zone ([[SearchServer.execute]]) and re-checked against the
     * bucket's files once per TTL (`cacheTtlMillis`). A bucket whose
-    * snapshot is under 4 MiB of parquet is held on the driver as key-sorted
-    * rows, and the page comes back already computed; for a larger one the
-    * page is a one-stage plan over a cached scan of the zone's parquet.
+    * snapshot is under 4 MiB of parquet is held on the driver as
+    * key-sorted rows with each row's JSON rendered at build, and the page
+    * comes back already computed: a slice of the positions its WHERE
+    * keeps, folded at the WHERE text's first request and cached on the
+    * entry (a bounded LRU that goes with the entry at rebuild or
+    * [[invalidateCache]]; never for a nondeterministic or clock-reading
+    * WHERE). A session-option change reaches such a page at the entry's
+    * next rebuild or [[invalidateCache]]. For a larger bucket the page is
+    * a one-stage plan over a cached scan of the zone's parquet.
     */
   def searchCached(q: SearchQuery): DataFrame = server.execute(q)
 
@@ -92,21 +99,14 @@ class GraftEngine(spark: SparkSession, val config: GraftConfig)
       require(e.foldable, s"$fn: arguments must be literals")
       Option(e.eval()).map(_.toString).getOrElse("")
     }
-    def int(e: Expression, fn: String): Int = {
-      require(e.foldable, s"$fn: arguments must be literals")
-      e.eval() match {
-        case i: Int => i
-        case l: Long => l.toInt
-        case other => other.toString.toInt
-      }
-    }
     def cursor(s: String): Option[String] = if (s.isEmpty) None else Some(s)
 
     reg.createOrReplaceTempFunction("graft_search", args => {
       require(args.length == 4,
         "usage: graft_search(bucket, where_expr, start_key, limit)")
       search(SearchQuery(str(args(0), "graft_search"), str(args(1), "graft_search"),
-        cursor(str(args(2), "graft_search")), int(args(3), "graft_search")))
+        cursor(str(args(2), "graft_search")),
+        GraftFunctions.intLiteral("graft_search", "limit", args(3))))
         .queryExecution.logical
     }, "built-in")
 
@@ -115,7 +115,8 @@ class GraftEngine(spark: SparkSession, val config: GraftConfig)
         "usage: graft_list_objects(bucket, prefix, delimiter, start_after, max_keys)")
       listObjects(ListRequest(str(args(0), "graft_list_objects"),
         str(args(1), "graft_list_objects"), str(args(2), "graft_list_objects"),
-        cursor(str(args(3), "graft_list_objects")), int(args(4), "graft_list_objects")))
+        cursor(str(args(3), "graft_list_objects")),
+        GraftFunctions.intLiteral("graft_list_objects", "max_keys", args(4))))
         .queryExecution.logical
     }, "built-in")
 
@@ -125,7 +126,7 @@ class GraftEngine(spark: SparkSession, val config: GraftConfig)
       listVersions(ListRequest(str(args(0), "graft_list_versions"),
         str(args(1), "graft_list_versions"),
         startAfter = cursor(str(args(2), "graft_list_versions")),
-        maxKeys = int(args(3), "graft_list_versions")))
+        maxKeys = GraftFunctions.intLiteral("graft_list_versions", "max_keys", args(3))))
         .queryExecution.logical
     }, "built-in")
   }

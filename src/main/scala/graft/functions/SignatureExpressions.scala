@@ -1016,7 +1016,7 @@ object GraftFunctions {
     * AnalysisException instead of a ClassCastException/NPE out of the
     * resolver.
     */
-  private def intLiteral(fn: String, arg: String, e: Expression): Int = {
+  private[graft] def intLiteral(fn: String, arg: String, e: Expression): Int = {
     def fail(why: String): Nothing = throw new IllegalArgumentException(
       s"$fn: $arg must be an integer literal ($why)")
     if (!e.foldable) fail(s"got non-foldable expression ${e.sql}")

@@ -4,11 +4,9 @@ import graft.model.ObjectEvent
 import graft.ops.LatestState
 import org.apache.hadoop.fs.Path
 import org.apache.spark.graft.metrics.SearchMetricsSource
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.LocalPlans
 
 /** A metadata search request (reference:
   * src/main/scala/com/scality/clueso/query/MetadataQuery.scala).
@@ -93,37 +91,17 @@ class MetadataSearch(spark: SparkSession, landingDir: String, stagingDir: String
 
   /** Apply the WHERE / cursor / projection / page stages to an
     * already-built snapshot (lets callers search a cached snapshot —
-    * see [[SearchServer.execute]]).
-    *
-    * `keySorted`: the snapshot is [[SessionCache]]'s driver-held form — a
-    * `LocalRelation` whose rows are stored in Spark's `key` order, one row
-    * per key. Filtering then limiting those rows already yields
-    * `ORDER BY key LIMIT n`, so the sort is left out and Spark's
-    * `ConvertToLocalRelation` folds WHERE, cursor, NUL filter, projection
-    * and LIMIT on the driver: the page returned is a bare `LocalRelation`
-    * and runs no job. A page that does not fold (a WHERE Spark cannot
-    * evaluate on the driver, such as a scalar subquery) is re-planned with
-    * the sort over the same rows and counted in `orderedFallbacks`.
+    * see [[SearchServer.execute]], which serves a driver-held snapshot's
+    * pages as slices instead).
     */
-  def searchSnapshot(snapshot: DataFrame, q: SearchQuery,
-                     keySorted: Boolean = false): DataFrame = {
-    val metrics = SearchMetricsSource.getOrRegister()
-    metrics.searchCount.inc()
+  def searchSnapshot(snapshot: DataFrame, q: SearchQuery): DataFrame = {
+    SearchMetricsSource.getOrRegister().searchCount.inc()
     var df = snapshot
     if (q.where.nonEmpty) df = df.where(q.where)
     q.startKey.foreach(k => df = df.filter(col("key") > lit(k)))
-    val rows = df
-      // versioned internal keys carry a NUL separator; master listings hide them
-      // (reference: MetadataQueryExecutor.scala:84)
-      .filter(!col("key").contains("\u0000"))
+    df.filter(MetadataSearch.isMasterKey)
       .select(ObjectEvent.resultColumns.map(c => col(s"`$c`")): _*)
-    if (keySorted) {
-      rows.limit(q.limit).queryExecution.optimizedPlan match {
-        case page: LocalRelation => return LocalPlans.ofPlan(spark, page)
-        case _ => metrics.orderedFallbacks.inc()
-      }
-    }
-    rows.orderBy(col("key")).limit(q.limit)
+      .orderBy(col("key")).limit(q.limit)
   }
 
   /** S3 ListObjectsV2 over the live snapshot: delimiter-bounded rollup +
@@ -139,7 +117,7 @@ class MetadataSearch(spark: SparkSession, landingDir: String, stagingDir: String
     */
   def listObjects(req: ListRequest): DataFrame = {
     var keys = bucketSnapshot(req.bucket)
-      .filter(!col("key").contains("\u0000"))
+      .filter(MetadataSearch.isMasterKey)
       .select(col("key"))
     if (req.prefix.nonEmpty) keys = keys.filter(col("key").startsWith(req.prefix))
     val page =
@@ -186,7 +164,7 @@ class MetadataSearch(spark: SparkSession, landingDir: String, stagingDir: String
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("key").orderBy(col("opIndex").desc)
     var log = zone(landingDir, req.bucket).unionByName(zone(stagingDir, req.bucket))
-      .filter(!col("key").contains("\u0000"))
+      .filter(MetadataSearch.isMasterKey)
     if (req.prefix.nonEmpty) log = log.filter(col("key").startsWith(req.prefix))
     req.startAfter.foreach(k => log = log.filter(col("key") > lit(k)))
     log
@@ -231,6 +209,14 @@ object MetadataSearch {
 
   /** The plan [[jsonRows]] collects: one string column per row. */
   private[graft] def jsonPage(page: DataFrame): DataFrame =
-    page.select(to_json(struct(page.columns.toIndexedSeq.map(c =>
-      col("`" + c.replace("`", "``") + "`")): _*)))
+    page.select(toJson(page.columns.toIndexedSeq))
+
+  /** `to_json(struct(<cols>))`: one JSON object per row. */
+  private[graft] def toJson(cols: Seq[String]): Column =
+    to_json(struct(cols.map(c => col("`" + c.replace("`", "``") + "`")): _*))
+
+  /** Whether a row's key is one a master listing shows: versioned internal
+    * keys carry a NUL separator, and listings hide them (reference:
+    * MetadataQueryExecutor.scala:84). */
+  private[graft] def isMasterKey: Column = !col("key").contains("\u0000")
 }

@@ -7,7 +7,7 @@ import graft.ops.DerivedZone
 import org.apache.hadoop.fs.Path
 import org.apache.spark.graft.metrics.SearchMetricsSource
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.json4s.{DefaultFormats, JValue}
+import org.json4s.{DefaultFormats, JInt, JNothing, JNull, JValue}
 import org.json4s.jackson.JsonMethods
 
 /** Long-lived warm query executor — the reference engine's actual
@@ -22,17 +22,29 @@ import org.json4s.jackson.JsonMethods
   * [[DerivedZone]] (a TTL miss over unchanged files, or a restart on a
   * durable `spark.graft.derived.dir`, merges nothing), and every later
   * query reuses the [[SessionCache]] entry made from it — no re-scan, no
-  * re-merge, no file I/O, and the JSON page rendered inside the plan
-  * ([[MetadataSearch.jsonRows]]). The entry's form follows the bytes of
-  * the published snapshot, which the zone read has already listed:
+  * re-merge, no file I/O. The entry's form follows the bytes of the
+  * published snapshot, which the zone read has already listed:
   *  - below [[SessionCache.LocalMaxBytes]] (4 MiB of snapshot parquet,
-  *    about 27 MiB of driver heap at most) it is collected from the zone read
-  *    and held on the driver as key-sorted rows, and a warm page folds on
-  *    the driver with NO Spark job — the per-query job, closure-cleaning
-  *    and task-serialisation costs are gone;
+  *    about 39 MiB of driver heap at most, see [[SessionCache]]) it is
+  *    collected from the zone read in one job that also renders each row's
+  *    JSON, and held on the driver as key-sorted rows. A warm page is a
+  *    slice of them with NO Spark job: the first request of a WHERE text
+  *    folds it on the driver into the positions of the matching rows, and
+  *    the entry caches them (the last [[SessionCache.Folds]] WHERE texts;
+  *    the empty WHERE needs no fold). A cursor page, or the WHERE asked
+  *    again, is a binary search for the cursor and a slice of cached
+  *    positions, whose JSON is joined without planning anything. A WHERE
+  *    that is nondeterministic or reads the clock is folded at every
+  *    request and never cached; one the driver cannot fold (a scalar
+  *    subquery) is planned with `ORDER BY key` over the same rows and
+  *    counted in `orderedFallbacks`;
   *  - at or above it the zone read is persisted, and a warm page is one
-  *    Spark stage over the cached scan. A superseded one is unpersisted at
+  *    Spark stage over the cached scan, its JSON rendered inside the plan
+  *    ([[MetadataSearch.jsonRows]]). A superseded one is unpersisted at
   *    swap; requests still running on it re-read the zone files.
+  * The JSON, and a WHERE's positions, follow the session's options of
+  * the moment they were made: a change to them reaches a driver-held
+  * page at the entry's next rebuild or [[invalidate]].
   *
   * Concurrency: [[handle]] is safe to call from many threads —
   * [[HttpSearchServer]] runs a pool of them; the stdin line protocol
@@ -41,12 +53,15 @@ import org.json4s.jackson.JsonMethods
   * Request protocol (one JSON object per line on stdin):
   *  - `{"bucket":"b","where":"<sql>","startKey":"k","limit":100}` →
   *    one JSON-array line of result rows (bare array, the reference's
-  *    gateway contract; `where`/`startKey`/`limit` optional)
+  *    gateway contract; `where`/`startKey`/`limit` optional, `limit`
+  *    1000 by default; a `limit` that is not an int, or is negative, is
+  *    an error, and 0 answers `[]`)
   *  - `{"cmd":"invalidate","bucket":"b"}` → `{"ok":true}` — drop the
   *    bucket's cached snapshot; the next request re-reads its files
   *  - `{"cmd":"metrics"}` → one JSON object of the `graft.search` counters
-  *    plus this server's `snapshotRebuilds` and its snapshot zone's
-  *    `snapshotMerges` (full builds) and `snapshotDiskHits`
+  *    (`pageSlices` counts driver-held pages served from cached
+  *    positions) plus this server's `snapshotRebuilds` and its snapshot
+  *    zone's `snapshotMerges` (full builds) and `snapshotDiskHits`
   *  - `{"cmd":"shutdown"}` → `{"ok":true}` and the serve loop returns
   *  - a malformed or failing request → `{"error":"..."}`; the loop
   *    CONTINUES (one bad query must not kill the warm executor)
@@ -87,30 +102,61 @@ class SearchServer private[graft] (spark: SparkSession, landingDir: String,
     */
   def snapshotRebuilds: Long = cache.rebuilds
 
+  /** Set while [[executeJson]] runs on a thread (null elsewhere): the
+    * slice of a driver-held snapshot that [[execute]] served there, if
+    * any, for executeJson to write without planning. */
+  private val handoff = new ThreadLocal[Option[SessionCache.Held#Slice]]
+
   /** Plan one search against the warm snapshot (reference `execute`,
     * MetadataQueryExecutor.scala:62-95, with cache delegation :42-50). A
     * hit within the TTL touches no file; a miss revalidates against the
     * fingerprint of the bucket's files. Over a driver-held snapshot the
-    * returned page is already computed (a local relation); otherwise it is
-    * an `ORDER BY key LIMIT n` plan over the cached scan.
+    * returned page is already computed (a local relation) — a slice of
+    * the snapshot's rows, see [[SessionCache.Held]]; otherwise it is an
+    * `ORDER BY key LIMIT n` plan over the cached scan. A negative limit is
+    * an error on both forms.
     *
     * A miss on a bucket with no directory in either zone searches an
-    * empty driver-held snapshot: nothing is published, merged or cached
-    * for it (and an entry it had is dropped), so client-supplied names
-    * leave no state behind.
+    * empty snapshot: nothing is published, merged or cached for it (and
+    * an entry it had is dropped), so client-supplied names leave no state
+    * behind.
     */
   def execute(q: SearchQuery): DataFrame = {
     val inputs = Seq(landingDir, stagingDir).map(MetadataSearch.bucketDir(_, q.bucket))
-    val snapshot = cache.hit(q.bucket).getOrElse {
-      if (inputs.exists(exists)) cache.get(q.bucket) {
+    cache.hit(q.bucket).orElse {
+      if (inputs.exists(exists)) Some(cache.entry(q.bucket) {
         zone.get(spark, inputs.mkString("\n"), inputs)(searcher.bucketSnapshot(q.bucket))
-      } else {
+      }) else {
         cache.invalidate(q.bucket)
-        spark.createDataFrame(java.util.Collections.emptyList[Row](),
-          searcher.bucketSnapshot(q.bucket).schema)
+        None
       }
+    } match {
+      case Some(SessionCache.Entry(_, _, Some(held), _)) => slice(held, q)
+      case Some(entry) => searcher.searchSnapshot(entry.df, q)
+      case None => searcher.searchSnapshot(spark.createDataFrame(
+        java.util.Collections.emptyList[Row](), searcher.bucketSnapshot(q.bucket).schema), q)
     }
-    searcher.searchSnapshot(snapshot, q, SessionCache.isDriverHeld(snapshot))
+  }
+
+  /** A page over a driver-held snapshot: the WHERE's positions (cached,
+    * or folded now), cut at the cursor and the limit. A WHERE that does
+    * not fold is planned with `ORDER BY key` over the same rows instead,
+    * and counted in `orderedFallbacks`. */
+  private def slice(held: SessionCache.Held, q: SearchQuery): DataFrame = {
+    require(q.limit >= 0, s"limit must be at least 0, got ${q.limit}")
+    val m = SearchMetricsSource.getOrRegister()
+    val cached = held.cached(q.where)
+    cached.orElse(held.fold(q.where)) match {
+      case Some(pos) =>
+        m.searchCount.inc()
+        if (cached.isDefined) m.pageSlices.inc()
+        val s = held.slice(pos, q.startKey, q.limit)
+        if (handoff.get != null) handoff.set(Some(s))
+        s.page
+      case None =>
+        m.orderedFallbacks.inc()
+        searcher.searchSnapshot(held.df, q)
+    }
   }
 
   private def exists(dir: String): Boolean = {
@@ -119,15 +165,21 @@ class SearchServer private[graft] (spark: SparkSession, landingDir: String,
   }
 
   /** Materialize one search as the reference's stdout contract: a single
-    * JSON-array line (`executeAndPrint`, MetadataQueryExecutor.scala:57-60),
-    * rendered inside the page plan ([[MetadataSearch.jsonRows]]: on the
-    * driver with no job over a driver-held snapshot, else one stage and no
+    * JSON-array line (`executeAndPrint`, MetadataQueryExecutor.scala:57-60).
+    * A slice of a driver-held snapshot joins the JSON its rows were
+    * rendered with at build, with no plan; any other page renders inside
+    * the page plan ([[MetadataSearch.jsonRows]]: one stage and no
     * shuffle). Latency/rows/failures land in the `graft.search` metrics
     * source.
     */
-  def executeJson(q: SearchQuery): String =
-    "[" + SearchMetricsSource.recordSearch(MetadataSearch.jsonRows(execute(q)))
-      .mkString(",") + "]"
+  def executeJson(q: SearchQuery): String = {
+    handoff.set(None)
+    try SearchMetricsSource.recordSearch {
+      val page = execute(q)
+      handoff.get.filter(_.page eq page).fold(MetadataSearch.jsonRows(page))(_.json)
+    }.mkString("[", ",", "]")
+    finally handoff.remove()
+  }
 
   /** Drop a bucket's cached snapshot: the next request revalidates it
     * against the bucket's files, without waiting for the TTL. */
@@ -160,7 +212,8 @@ class SearchServer private[graft] (spark: SparkSession, landingDir: String,
             s""""snapshotBuilds":${m.snapshotBuilds.getCount},""" +
             s""""snapshotMerges":${zone.builds.get},""" +
             s""""snapshotDiskHits":${zone.diskHits.get},""" +
-            s""""orderedFallbacks":${m.orderedFallbacks.getCount}}""", false)
+            s""""orderedFallbacks":${m.orderedFallbacks.getCount},""" +
+            s""""pageSlices":${m.pageSlices.getCount}}""", false)
         case Some(other) =>
           // client-supplied string: escape it or a quote/control char
           // in `cmd` breaks the one-JSON-object-per-line protocol
@@ -170,7 +223,12 @@ class SearchServer private[graft] (spark: SparkSession, landingDir: String,
             bucket = (j \ "bucket").extract[String],
             where = (j \ "where").extractOpt[String].getOrElse(""),
             startKey = (j \ "startKey").extractOpt[String],
-            limit = (j \ "limit").extractOpt[Int].getOrElse(1000))), false)
+            limit = j \ "limit" match {
+              case JNothing | JNull => 1000
+              case JInt(n) if n.isValidInt => n.toInt
+              case other => throw new IllegalArgumentException(
+                s"limit must be an int, got ${JsonMethods.compact(other)}")
+            })), false)
       }
     } catch {
       case e: Throwable =>
@@ -213,7 +271,8 @@ class SearchServer private[graft] (spark: SparkSession, landingDir: String,
   * Routes (every search answer is the same bare JSON array the line
   * protocol emits — both faces share [[SearchServer.handle]]):
   *  - `GET /<bucket>?search=<where>[&limit=N][&start_key=K]` — the
-  *    reference client's query shape, translated to the line protocol
+  *    reference client's query shape, translated to the line protocol (a
+  *    `limit` that is not an int answers 400, like any in-band error)
   *  - `POST /search` with a line-protocol JSON object body
   *  - `GET /metrics` — the `graft.search` counters (the line protocol's
   *    `{"cmd":"metrics"}`)
@@ -273,7 +332,10 @@ class HttpSearchServer(server: SearchServer, port: Int = 0)
         case ("GET", bucket) if bucket.nonEmpty && !bucket.contains("/") =>
           // the reference client's shape: GET /<bucket>?search=<where>
           val p = queryParams(ex)
-          val limit = p.get("limit").flatMap(_.toIntOption).getOrElse(1000)
+          // an integer passes as a JSON number, anything else as a string,
+          // and [[SearchServer.handle]] answers what is not an int with an error
+          val limit = p.get("limit").map(v => scala.util.Try(BigInt(v).toString)
+            .getOrElse(jsonString(v))).getOrElse("1000")
           val sk = p.get("start_key").map(k => s""","startKey":${jsonString(k)}""")
             .getOrElse("")
           s"""{"bucket":${jsonString(bucket)},"where":${jsonString(

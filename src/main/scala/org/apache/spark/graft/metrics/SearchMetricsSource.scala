@@ -33,6 +33,10 @@ class SearchMetricsSource extends Source {
     * relation and were re-planned with `ORDER BY key` (e.g. a WHERE with a
     * scalar subquery); each one runs Spark jobs. */
   val orderedFallbacks: Counter = metricRegistry.counter("orderedFallbacks")
+  /** Pages over a driver-held snapshot served from positions already
+    * known — the empty WHERE's, or a WHERE folded by an earlier request —
+    * so with no plan at all. */
+  val pageSlices: Counter = metricRegistry.counter("pageSlices")
   /** End-to-end latency of materialized searches, milliseconds. */
   val latencyMs: Histogram =
     metricRegistry.histogram("latencyMs", () => new Histogram(new SlidingWindowReservoir(1024)))

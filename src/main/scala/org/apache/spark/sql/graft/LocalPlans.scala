@@ -1,9 +1,8 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
-import org.apache.spark.sql.execution.SQLExecution
 
 /** Driver-held relations for [[graft.search.SessionCache]]'s small-bucket
   * snapshots, collected from the bucket's snapshot-zone read. Lives in an `org.apache.spark.sql` subpackage because
@@ -18,13 +17,4 @@ object LocalPlans {
     * `LocalRelation` is served without optimizing its source again. */
   def ofPlan(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** Collect `df` once, as `collect()` does (one tracked execution), and
-    * keep its binary rows in a `LocalRelation`, in the order `df` yields
-    * them. */
-  def collectLocal(df: DataFrame): DataFrame = {
-    val qe = df.queryExecution
-    val rows = SQLExecution.withNewExecutionId(qe)(qe.executedPlan.executeCollect())
-    ofPlan(df.sparkSession, LocalRelation(qe.analyzed.output, rows.toSeq))
-  }
 }

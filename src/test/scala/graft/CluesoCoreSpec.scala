@@ -83,6 +83,7 @@ class EventParserSpec extends AnyFunSuite {
 class LatestStateSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
+  private val sf = "/root/testdata/sf0.001"
 
   private def opLog = Seq(
     ("k1", 1L, "put", "v1"), ("k1", 3L, "put", "v3"), ("k1", 2L, "put", "v2"),
@@ -191,6 +192,24 @@ class LatestStateSpec extends AnyFunSuite {
         assert(got == want, s"tz=$tz: $got")
       }
     } finally spark.conf.set("spark.sql.session.timeZone", prevTz)
+  }
+  test("zone-served mvcc_snapshot ≡ the inline window formulation") {
+    val served = analytics.CluesoOps.mvccSnapshot(spark, sf).collect().toSeq
+    val ev = Tables.events(spark, sf).select(
+      concat(col("user_id").cast("string"), lit(":"),
+        get_json_object(col("props"), "$.k")).as("object_key"),
+      col("event_id"), col("event_type"),
+      Tables.cents(col("value")).as("v_c"),
+      expr("ts div 1000000000").as("sec"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("object_key").orderBy(col("event_id").desc)
+    val direct = ev.withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1 && col("event_type") =!= "error")
+      .select(col("object_key"), col("event_id").as("last_event_id"),
+        col("event_type").as("last_type"), (col("v_c") / 100.0).as("value"),
+        date_format(timestamp_seconds(col("sec")), "yyyy-MM-dd HH:mm:ss").as("ts"))
+      .orderBy("object_key").collect().toSeq
+    assert(served == direct)
   }
 }
 

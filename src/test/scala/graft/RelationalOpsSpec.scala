@@ -1,6 +1,7 @@
 package graft
 
 import graft.analytics.Relational
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Invariants and plan shapes of the relational operators
@@ -12,6 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
 class RelationalOpsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
+
+  private def fixtureDir(): String =
+    SparkTestSession.tempDir("graft-relational")
 
   test("q_custdist histogram accounts for every customer") {
     val df = Relational.custDist(spark, sf)
@@ -76,5 +80,48 @@ class RelationalOpsSpec extends AnyFunSuite {
     val nSupp = Tables.supplier(spark, sf).count()
     assert(maxCnt <= nSupp - blockedCount,
       "a group counted more suppliers than exist outside the blocklist")
+  }
+  test("dominantSuppliers argmax form ≡ join-back form where majorities exist") {
+    import spark.implicits._
+    val dir = fixtureDir()
+    // p1 (red): s10 has a strict majority (60 of 90). p2 (red): exact
+    // 50/50 tie — NO majority, must not appear. p3 (blue): excluded by
+    // the name filter. p4 (red): sole supplier — trivially dominant.
+    Seq(
+      (1L, 10L, 20.0), (1L, 10L, 40.0), (1L, 11L, 30.0),
+      (2L, 10L, 50.0), (2L, 11L, 50.0),
+      (3L, 12L, 100.0),
+      (4L, 11L, 5.0))
+      .toDF("l_partkey", "l_suppkey", "l_quantity")
+      .write.parquet(s"$dir/lineitem.parquet")
+    Seq((1L, "red part one"), (2L, "red part two"), (3L, "blue part"),
+      (4L, "red part four"))
+      .toDF("p_partkey", "p_name").write.parquet(s"$dir/part.parquet")
+    Seq((10L, "S10"), (11L, "S11"), (12L, "S12"))
+      .toDF("s_suppkey", "s_name").write.parquet(s"$dir/supplier.parquet")
+
+    val got = analytics.Relational.dominantSuppliers(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
+    assert(got == Seq((10L, "S10", 1L), (11L, "S11", 1L)))
+
+    // the round-14 join-back formulation, inline, on the same frames
+    val lf = Tables.lineitem(spark, dir)
+      .select(col("l_partkey"), col("l_suppkey"),
+        Tables.cents(col("l_quantity")).as("qty_c"))
+      .join(Tables.part(spark, dir).filter(col("p_name").startsWith("red"))
+          .select("p_partkey"),
+        col("l_partkey") === col("p_partkey"), "left_semi")
+    val perPair = lf.groupBy("l_partkey", "l_suppkey")
+      .agg(sum(col("qty_c")).as("pair_qty_c"))
+    val perPart = perPair.groupBy(col("l_partkey").as("pk"))
+      .agg(sum(col("pair_qty_c")).as("part_qty_c"))
+    val reference = perPair.join(perPart, col("l_partkey") === col("pk"))
+      .filter(col("pair_qty_c") * 2L > col("part_qty_c"))
+      .groupBy(col("l_suppkey")).agg(count(lit(1)).as("n_parts_dominated"))
+      .join(Tables.supplier(spark, dir), col("s_suppkey") === col("l_suppkey"))
+      .select("s_suppkey", "s_name", "n_parts_dominated")
+      .orderBy("s_suppkey")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
+    assert(got == reference)
   }
 }

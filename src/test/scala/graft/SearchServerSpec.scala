@@ -844,4 +844,170 @@ class SearchServerSpec extends AnyFunSuite {
       assert(keysOf(server.executeJson(SearchQuery("ok"))) == Seq("k1"))
     } finally server.close()
   }
+
+  /** `search_warm`'s five predicate kinds, over `oddZones`' columns. */
+  private val warmPreds = Seq("userMd['x-amz-meta-color'] = 'red'", "`content-length` > 300",
+    "`content-length` BETWEEN 100 AND 700 AND userMd['x-amz-meta-color'] = 'blue'",
+    "`owner-id` = 'o-1'", "")
+
+  test("a driver-held page is a slice: byte-identical to a direct search and the persisted form, folded or cached, from 8 threads") {
+    val (l, s) = oddZones
+    val m = SearchMetricsSource.getOrRegister()
+    val parquet = new SearchServer(spark, l, s, cacheTtlMillis = 600000L, localMaxBytes = 0L)
+    val all = keysOf(parquet.executeJson(SearchQuery("ob")))
+    val cursors = Seq(None, Some("k010"), Some("\ufffd-repl"), Some("\ufffd\ud83d"),
+      Some(all(all.size / 2)), Some(all.last))
+    // every (WHERE, cursor, limit) under a WHERE text of its own, so its
+    // first request folds and its second is served from cached positions
+    val queries = for {
+      (w, i) <- warmPreds.zipWithIndex
+      (c, j) <- cursors.zipWithIndex
+      (n, k) <- Seq(1, 7, 1000).zipWithIndex
+    } yield SearchQuery("ob", if (w.isEmpty) w else w + " " * (1 + i * 100 + j * 10 + k), c, n)
+    def direct(q: SearchQuery): String =
+      "[" + MetadataSearch.jsonRows(parquet.searcher.search(q)).mkString(",") + "]"
+    val want = queries.map(direct)
+    assert(want.count(_ != "[]") > 60, want.count(_ != "[]"))
+    assert(queries.map(parquet.executeJson) == want)
+    val local = new SearchServer(spark, l, s, cacheTtlMillis = 600000L)
+    try {
+      queries.zip(want).foreach { case (q, w) =>
+        val (s0, f0) = (m.pageSlices.getCount, m.orderedFallbacks.getCount)
+        assert(local.executeJson(q) == w, q)
+        assert(m.pageSlices.getCount == s0 + (if (q.where.isEmpty) 1 else 0), s"folded: $q")
+        assert(local.executeJson(q) == w, q)
+        assert(m.pageSlices.getCount == s0 + (if (q.where.isEmpty) 2 else 1), s"cached: $q")
+        assert(m.orderedFallbacks.getCount == f0)
+      }
+      assert(local.snapshotRebuilds == 1)
+    } finally local.close()
+
+    // the same requests, twice each, from 8 threads at once on a new server
+    val concurrent = new SearchServer(spark, l, s, cacheTtlMillis = 600000L)
+    val errors = new ConcurrentLinkedQueue[String]()
+    try {
+      val next = new AtomicInteger(0)
+      val threads = (0 until 8).map { _ =>
+        val th = new Thread(() =>
+          try {
+            var i = next.getAndIncrement()
+            while (i < 2 * queries.size) {
+              val k = i % queries.size
+              val got = concurrent.executeJson(queries(k))
+              if (got != want(k)) errors.add(s"${queries(k)} -> $got")
+              i = next.getAndIncrement()
+            }
+          } catch { case e: Throwable => errors.add(e.toString) })
+        th.start()
+        th
+      }
+      threads.foreach(_.join(120000L))
+      assert(!threads.exists(_.isAlive), "clients did not finish")
+      assert(errors.isEmpty, errors.toArray.take(3).mkString("\n"))
+      assert(concurrent.snapshotRebuilds == 1)
+    } finally {
+      concurrent.close()
+      parquet.close()
+    }
+  }
+
+  test("a landing append seen after the TTL makes a fresh entry: its WHERE folds again and pages the new key") {
+    val (l, s) = zbZones("srv-slice-append")
+    val m = SearchMetricsSource.getOrRegister()
+    val server = new SearchServer(spark, l, s, cacheTtlMillis = 1L)
+    val q = SearchQuery("zb", "`content-length` < 1024")
+    def direct: String = "[" + MetadataSearch.jsonRows(server.searcher.search(q)).mkString(",") + "]"
+    try {
+      val before = server.executeJson(q)
+      val s0 = m.pageSlices.getCount
+      Thread.sleep(5)
+      // a TTL expiry over unchanged files keeps the entry and its positions
+      assert(server.executeJson(q) == before && m.pageSlices.getCount == s0 + 1)
+      assert(before == direct && !keysOf(before).contains(obj(200)))
+      landWave(l, 200)
+      Thread.sleep(5)
+      val s1 = m.pageSlices.getCount
+      val after = server.executeJson(q)
+      assert(server.snapshotRebuilds == 2)
+      assert(m.pageSlices.getCount == s1, "the new entry served positions it never folded")
+      assert(after == direct && keysOf(after).contains(obj(200)), after)
+      assert(server.executeJson(q) == after && m.pageSlices.getCount == s1 + 1)
+    } finally server.close()
+  }
+
+  test("pageSlices counts pages served from known positions, never a clock, random or subquery WHERE") {
+    val (l, s) = oddZones
+    val m = SearchMetricsSource.getOrRegister()
+    val local = new SearchServer(spark, l, s, cacheTtlMillis = 600000L)
+    val parquet = new SearchServer(spark, l, s, cacheTtlMillis = 600000L, localMaxBytes = 0L)
+    def slices: Long =
+      (JsonMethods.parse(local.handle("""{"cmd":"metrics"}""")._1) \ "pageSlices").extract[Long]
+    try {
+      local.executeJson(SearchQuery("ob", limit = 1))
+      val s0 = slices
+      assert(s0 == m.pageSlices.getCount)
+      val red = "userMd['x-amz-meta-color'] = 'red'"
+      local.executeJson(SearchQuery("ob", red, limit = 3))
+      assert(slices == s0, "a first WHERE folds")
+      val page = local.executeJson(SearchQuery("ob", red, limit = 3))
+      assert(slices == s0 + 1, "a repeated WHERE is a slice")
+      val cursor = local.executeJson(SearchQuery("ob", red, Some(keysOf(page).last), 3))
+      assert(slices == s0 + 2, "a cursor page is a slice")
+      assert(cursor == parquet.executeJson(SearchQuery("ob", red, Some(keysOf(page).last), 3)))
+      for (w <- Seq("rand() < 2", "now() > TIMESTAMP'2000-01-01 00:00:00'",
+          "current_timestamp() IS NOT NULL AND `content-length` > 100",
+          "current_date() > DATE'2000-01-01'", "`content-length` > 100 * rand()")) {
+        val n0 = slices
+        val qs = Seq(SearchQuery("ob", w, limit = 5), SearchQuery("ob", w, limit = 5),
+          SearchQuery("ob", w, Some("k010"), 5))
+        val pages = qs.map(local.executeJson)
+        assert(slices == n0, s"a page over `$w` was served from cached positions")
+        if (!w.contains("* rand()")) assert(pages == qs.map(parquet.executeJson), w)
+        assert(keysOf(pages.head).nonEmpty, w)
+      }
+      val f0 = m.orderedFallbacks.getCount
+      val sub = "`content-length` > (SELECT max(id) * 50 FROM range(5))"
+      Seq(SearchQuery("ob", sub, limit = 4), SearchQuery("ob", sub, Some("k003"), 4))
+        .foreach(q => assert(local.executeJson(q) == parquet.executeJson(q), q))
+      assert(slices == s0 + 2 && m.orderedFallbacks.getCount == f0 + 2)
+      val metrics = JsonMethods.parse(local.handle("""{"cmd":"metrics"}""")._1)
+      assert((metrics \ "orderedFallbacks").extract[Long] == f0 + 2)
+    } finally {
+      local.close()
+      parquet.close()
+    }
+  }
+
+  test("page sizes: a negative limit is an error, 0 answers [], a non-int HTTP limit answers 400") {
+    bounds.foreach { bound =>
+      val server = new SearchServer(spark, landing, staging, cacheTtlMillis = 600000L,
+        localMaxBytes = bound)
+      val http = new HttpSearchServer(server, port = 0)
+      try {
+        for (where <- Seq("", "`content-length` >= 0")) {
+          val w = esc(where)
+          val neg = server.handle(s"""{"bucket":"sb1","where":"$w","limit":-1}""")._1
+          assert(neg.startsWith("{\"error\""), s"bound $bound: $neg")
+          assert(server.handle(s"""{"bucket":"sb1","where":"$w","limit":0}""")._1 == "[]")
+          assert(server.handle(
+            s"""{"bucket":"sb1","where":"$w","startKey":"obj_0000000003","limit":0}""")._1 == "[]")
+          assert(keysOf(server.handle(s"""{"bucket":"sb1","where":"$w","limit":2}""")._1).size == 2)
+          for (bad <- Seq("4294967297", "\"abc\"", "2.5"))
+            assert(server.handle(s"""{"bucket":"sb1","where":"$w","limit":$bad}""")._1
+              .startsWith("{\"error\""), s"bound $bound: limit $bad")
+          val search = java.net.URLEncoder.encode(where, "UTF-8")
+          for (bad <- Seq("-1", "abc", "4294967297", "")) {
+            val (code, body) = request(http.boundPort, "GET", s"/sb1?search=$search&limit=$bad")
+            assert(code == 400 && body.startsWith("{\"error\""), s"bound $bound: limit=$bad -> $code $body")
+          }
+          assert(request(http.boundPort, "GET", s"/sb1?search=$search&limit=0") == ((200, "[]")))
+          val (code, body) = request(http.boundPort, "GET", s"/sb1?search=$search&limit=3")
+          assert(code == 200 && keysOf(body).size == 3, body)
+        }
+      } finally {
+        http.close()
+        server.close()
+      }
+    }
+  }
 }

@@ -207,4 +207,65 @@ class SimilaritySpec extends AnyFunSuite {
     assert(fromBrute.subsetOf(got),
       s"brute-force matches missing from range result: ${fromBrute.diff(got)}")
   }
+  test("zone-served knn_graph ≡ a direct knnGraphFrame build") {
+    val served = analytics.Similarity.knnGraph(spark, sf).collect().toSeq
+    val direct = analytics.Similarity
+      .knnGraphFrame(spark, Tables.embeddings(spark, sf)).collect().toSeq
+    assert(served == direct)
+  }
+
+  test("zone-served knn_brute ≡ the inline 10-query exact formulation") {
+    val served = analytics.Similarity.knnBrute(spark, sf).collect().toSeq
+    val base = Tables.embeddings(spark, sf).select(col("vec_id"),
+        transform(col("embedding"), e => e.cast("double")).as("ed"))
+      .withColumn("nrm",
+        sqrt(graft.functions.GraftFunctions.dotp(col("ed"), col("ed"))))
+    val queries = base.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("q_id"), col("ed").as("q_ed"), col("nrm").as("q_nrm"))
+    val scored = base.as("c")
+      .join(broadcast(queries), col("q_id") =!= col("vec_id"))
+      .select(col("q_id"), col("vec_id").as("n_id"),
+        round(graft.functions.GraftFunctions.dotp(col("q_ed"), col("ed")) /
+          (col("q_nrm") * col("nrm")), 6).as("cosine"))
+    val direct = scored.groupBy("q_id")
+      .agg(graft.functions.GraftFunctions
+        .topk(struct(col("cosine"), col("n_id")), 5).as("tk"))
+      .select(col("q_id"), posexplode(col("tk")).as(Seq("pos", "t")))
+      .select(col("q_id"), (col("pos") + 1).as("rank"),
+        col("t.id").as("n_id"), col("t.score").as("cosine"))
+      .orderBy("q_id", "rank").collect().toSeq
+    assert(served == direct)
+  }
+
+  test("zone-served knn_graph_refine ≡ an unzoned build + refine round") {
+    val served = analytics.Similarity.knnGraphRefine(spark, sf).collect().toSeq
+    val vectors = Tables.embeddings(spark, sf)
+    val direct = analytics.Similarity.refineRound(
+        analytics.Similarity.vecBase(vectors),
+        analytics.Similarity.knnGraphFrame(spark, vectors)
+          .select(col("q_id"), col("n_id"), col("cosine")))
+      .collect().toSeq
+    assert(served == direct)
+  }
+
+  test("kmeans_iter long-encoded argmin ≡ the min(struct) formulation") {
+    val got = analytics.Similarity.kmeansIter(spark, sf).collect().toSeq
+    val base = Tables.embeddings(spark, sf).select(col("vec_id"),
+      transform(col("embedding"), e => round(e.cast("double") * 1000).cast("long")).as("qv"))
+    val cents = base.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("cid"), col("qv").as("cq"))
+    val d2 = graft.functions.GraftFunctions.l2sq(col("qv"), col("cq"))
+    val assigned = base.crossJoin(broadcast(cents))
+      .select(col("vec_id"), d2.as("d2"), col("cid"))
+      .groupBy("vec_id")
+      .agg(min(struct(col("d2"), col("cid"))).as("m"))
+      .select(col("vec_id"), col("m.cid").as("cluster_id"))
+    val dims = (0 until 4).map(d =>
+      (sum(element_at(col("qv"), d + 1)) / count(lit(1))).as(s"c$d"))
+    val reference = assigned.join(base, "vec_id")
+      .groupBy("cluster_id")
+      .agg(count(lit(1)).as("n_members"), dims: _*)
+      .orderBy("cluster_id").collect().toSeq
+    assert(got == reference)
+  }
 }

@@ -87,6 +87,22 @@ class SqlSurfaceSpec extends AnyFunSuite {
     engine.close()
   }
 
+  test("graft_search's limit must fit an int: a larger BIGINT fails naming the function and argument") {
+    val landing = SparkTestSession.tempDir("sqlsurf-limit-landing")
+    val staging = SparkTestSession.tempDir("sqlsurf-limit-staging")
+    graft.tools.Populator.populateLanding(spark, landing, "sb", 5, groupInterval = 10L)
+    val engine = new GraftEngine(spark,
+      GraftConfig(landing, staging, SparkTestSession.tempDir("sqlsurf-limit-ckpt")))
+    try {
+      engine.registerSqlSurface()
+      val err = intercept[Exception](
+        spark.sql("SELECT key FROM graft_search('sb', '', '', 4294967297L)").collect())
+      assert(err.getMessage.contains("graft_search: limit must be an integer literal") &&
+        err.getMessage.contains("4294967297 out of int range"), err.getMessage)
+      assert(spark.sql("SELECT key FROM graft_search('sb', '', '', 2L)").count() == 2)
+    } finally engine.close()
+  }
+
   test("analytics suite drives from pure SQL with plan-identical results over EVERY key") {
     GraftEngine.registerAnalyticsSurface(spark, sf)
     // Keys whose canonicalized plans legitimately differ between two
