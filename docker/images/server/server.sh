@@ -14,10 +14,13 @@
 #
 # Either way all connections multiplex onto the same warm process, so the
 # per-bucket snapshot cache amortizes across every client: each bucket's
-# merge is published once per state of its files to the snapshot zone
-# (under spark.graft.derived.dir) and cached, a warm search needs no merge,
-# and superseded zone files stay for spark.graft.derived.purgeGraceMs after
-# they are superseded, so running requests finish on them. The reference
+# merge is published once per state of its files to the snapshot zone and
+# cached, a warm search needs no merge, and superseded zone files stay for
+# spark.graft.derived.purgeGraceMs after they are superseded, so running
+# requests finish on them. The zone lives under the process's private temp
+# root, removed on exit; to keep snapshots across restarts, set
+# GRAFT_JAVA_OPTS="-Dspark.graft.derived.dir=<durable dir>" (bin/common.sh
+# passes it to java, and Spark reads spark.* system properties). The reference
 # achieves the same with Livy fronting its resident MetadataQueryExecutor
 # (clueso-docker-livy/entrypoint.sh).
 #

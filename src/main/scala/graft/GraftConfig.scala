@@ -2,8 +2,13 @@ package graft
 
 /** Deployment configuration for the search-engine half of the library
   * (reference: src/main/scala/com/scality/clueso/CluesoConfig.scala — the
-  * subset that governs zone layout and runtime behavior; connection
-  * settings live with the session, not here).
+  * subset that governs zone layout and runtime behavior). Session
+  * settings are not here: the object-store connection
+  * (`spark.hadoop.fs.s3a.*`), `spark.graft.derived.dir`,
+  * `spark.graft.refine.rounds` and `spark.graft.scratch.bytes` are Spark
+  * properties, given as `-Dspark.*` in `GRAFT_JAVA_OPTS` or in
+  * `spark-defaults.conf`, and every CLI session ([[GraftConfig.cliSession]])
+  * picks them up when it is built.
   *
   * @param landingDir      streaming-append zone, partitioned `(bucket, opGroup)`
   * @param stagingDir      compacted zone, same layout
@@ -20,40 +25,6 @@ package graft
   *                        footprint; 0 disables the [[graft.search.PlanGuard]]
   *                        gate (cartesian/nested-loop joins are still
   *                        rejected whenever the gate is on)
-  * @param scratchBytes    per-host shuffle-scratch budget for disk-bounded
-  *                        builds (the near-dup pair build shards its pair
-  *                        space so one pass's shuffle fits this — see
-  *                        [[graft.ops.Tuning.pairShardPasses]]); 0 (the
-  *                        default) means scratch is a cluster-aggregate
-  *                        resource and builds run single-pass
-  * @param refineRounds    NN-descent rounds for the kNN-graph family
-  *                        ([[graft.analytics.Similarity]], published as
-  *                        `spark.graft.refine.rounds`). Deployment
-  *                        default 2: the measured ×1000 recall curve
-  *                        (`CLUSTERED_RECALL_X1000.json`, 2M vectors /
-  *                        20k planted clusters) shows bounded-LSH recall
-  *                        degrading 68% → 42% as cluster density grows
-  *                        10×, while refine round 2 recovers 82.7% —
-  *                        ABOVE the 79.3% unbounded-LSH ceiling — for
-  *                        one more linear candidate pass (127 s at
-  *                        ×1000). The library-level default stays 1 (the
-  *                        oracle-gated shape); this is the shipped
-  *                        deployment recommendation.
-  * @param s3Endpoint      S3-compatible object-store endpoint for `s3a://`
-  *                        zone paths (the reference's entire deployment
-  *                        premise — SparkUtils.scala:26-70 wires endpoint/
-  *                        credentials/path-style/SSL from CluesoConfig
-  *                        into every session and filesystem handle);
-  *                        empty → the Hadoop defaults (IAM/instance
-  *                        profile on AWS proper) are left alone
-  * @param s3AccessKey     access key; empty → env (`AWS_ACCESS_KEY_ID`) or
-  *                        provider-chain credentials
-  * @param s3SecretKey     secret key; empty → env (`AWS_SECRET_ACCESS_KEY`)
-  *                        or provider-chain credentials
-  * @param s3PathStyleAccess path-style addressing (required by most
-  *                        non-AWS S3 implementations, incl. the
-  *                        reference's target store)
-  * @param s3SslEnabled    TLS to the endpoint
   */
 case class GraftConfig(landingDir: String, stagingDir: String,
                        checkpointDir: String,
@@ -63,82 +34,17 @@ case class GraftConfig(landingDir: String, stagingDir: String,
                        purgeToleranceMs: Long = 0L,
                        kafkaBootstrap: String = "",
                        kafkaTopic: String = "",
-                       maxSearchScanBytes: Long = 0L,
-                       scratchBytes: Long = 0L,
-                       refineRounds: Int = 2,
-                       derivedDir: String = "",
-                       s3Endpoint: String = "",
-                       s3AccessKey: String = "",
-                       s3SecretKey: String = "",
-                       s3PathStyleAccess: Boolean = false,
-                       s3SslEnabled: Boolean = true) {
+                       maxSearchScanBytes: Long = 0L) {
   require(groupInterval > 0, "groupInterval must be positive")
   require(purgeToleranceMs >= 0, "purgeToleranceMs must be non-negative")
   require(maxSearchScanBytes >= 0, "maxSearchScanBytes must be non-negative")
-  require(scratchBytes >= 0, "scratchBytes must be non-negative")
-  require(refineRounds >= 1, "refineRounds must be >= 1")
-
-  /** Publish the session-scoped knobs onto `spark.conf` so engine code
-    * that takes only a session (the analytics families) sees the
-    * deployment's resource shape — e.g. [[graft.analytics.Dedup]] reads
-    * `spark.graft.scratch.bytes` to size its pair-shard pass count — and
-    * wire the object-store connection into the session's Hadoop conf so
-    * `s3a://` zone paths resolve without out-of-band `--conf` flags
-    * (reference: SparkUtils.confSparkSession, SparkUtils.scala:58-70).
-    *
-    * An explicit `scratchBytes = 0` in a conf FILE means "unset", not
-    * "force single-pass" — the key is left alone so local-master
-    * sessions keep the free-disk fallback; a deployment that wants the
-    * cluster single-pass shape on a local master sets the session conf
-    * directly. S3 settings are applied per-field only when non-empty:
-    * a deployment on real AWS with instance-profile credentials sets
-    * only what it overrides and the Hadoop provider chain supplies the
-    * rest. */
-  def applySessionConfs(spark: org.apache.spark.sql.SparkSession): Unit = {
-    if (scratchBytes > 0L)
-      spark.conf.set(GraftConfig.ScratchBytesConf, scratchBytes.toString)
-    // deployment default 2 (measured recall, see the field doc) — always
-    // published, so a config-driven session gets the recommended shape
-    // without a separate --conf flag
-    spark.conf.set(GraftConfig.RefineRoundsConf, refineRounds.toString)
-    // durable DerivedZone store: only deployments opt in — unset, each
-    // process keeps its private temp root (removed on exit), so ad-hoc
-    // runs always recompute derived artifacts from the source tables
-    if (derivedDir.nonEmpty)
-      spark.conf.set(GraftConfig.DerivedDirConf, derivedDir)
-    // fs.s3a.* must land on the CONTEXT Hadoop configuration: session
-    // `spark.hadoop.*` confs are only folded in at session build, and
-    // every FileSystem.get in the engine (zones, compactor, journal)
-    // reads sparkContext.hadoopConfiguration — setting both keeps the
-    // session conf introspectable and the filesystem handles correct.
-    def set(k: String, v: String): Unit = {
-      spark.conf.set(s"spark.hadoop.$k", v)
-      spark.sparkContext.hadoopConfiguration.set(k, v)
-    }
-    if (s3Endpoint.nonEmpty) {
-      set("fs.s3a.endpoint", s3Endpoint)
-      set("fs.s3a.path.style.access", s3PathStyleAccess.toString)
-      set("fs.s3a.connection.ssl.enabled", s3SslEnabled.toString)
-    }
-    if (s3AccessKey.nonEmpty) set("fs.s3a.access.key", s3AccessKey)
-    if (s3SecretKey.nonEmpty) set("fs.s3a.secret.key", s3SecretKey)
-  }
 }
 
 object GraftConfig {
 
-  /** Session-conf key carrying [[GraftConfig.scratchBytes]] (also
-    * settable directly — `spark.conf.set` or `--conf` — for processes
-    * that never build a GraftConfig, e.g. the scaling benches). */
+  /** Session-conf key of the per-host scratch budget read by
+    * [[scratchBytes]]. */
   val ScratchBytesConf = "spark.graft.scratch.bytes"
-
-  /** Session-conf key carrying [[GraftConfig.refineRounds]] — read by
-    * [[graft.analytics.Similarity]]'s NN-descent refine. */
-  val RefineRoundsConf = "spark.graft.refine.rounds"
-
-  /** Session-conf key carrying [[GraftConfig.derivedDir]] — read by
-    * [[graft.ops.DerivedZone.root]]. */
-  val DerivedDirConf = "spark.graft.derived.dir"
 
   /** The session's per-host scratch budget: the session conf if set,
     * else the `SPARK_GRAFT_SCRATCH_BYTES` env (so bench/CLI runs can
@@ -249,12 +155,26 @@ object GraftConfig {
     fromProperties(props)
   }
 
-  /** Load from Java properties (`graft.landing.dir`, `graft.staging.dir`,
-    * `graft.checkpoint.dir`, `graft.group.interval`, `graft.cache.ttl.ms`,
-    * `graft.exclude.bucket`), e.g. a `--properties-file` passed to
-    * spark-submit.
+  /** The `graft.*` keys [[fromProperties]] reads. */
+  private val Keys = Seq("graft.landing.dir", "graft.staging.dir",
+    "graft.checkpoint.dir", "graft.group.interval", "graft.cache.ttl.ms",
+    "graft.exclude.bucket", "graft.purge.tolerance.ms", "graft.kafka.bootstrap",
+    "graft.kafka.topic", "graft.search.max.scan.bytes")
+
+  /** Load from Java properties (the [[Keys]]), e.g. a `--properties-file`
+    * passed to spark-submit: keys outside `graft.*` are left to Spark, and
+    * a `graft.*` key this does not read fails loudly rather than being
+    * dropped, since a session setting in the wrong file would otherwise
+    * silently not apply.
     */
   def fromProperties(props: java.util.Properties): GraftConfig = {
+    props.stringPropertyNames().forEach { k =>
+      require(!k.startsWith("graft.") || Keys.contains(k),
+        s"unknown config key $k: graft reads ${Keys.mkString(", ")}; session " +
+          "settings (spark.hadoop.fs.s3a.*, spark.graft.derived.dir, " +
+          "spark.graft.refine.rounds, spark.graft.scratch.bytes) are spark.* " +
+          "properties: -Dspark.<key> in GRAFT_JAVA_OPTS or spark-defaults.conf")
+    }
     def get(k: String): String = {
       val v = props.getProperty(k)
       require(v != null, s"missing required property $k")
@@ -271,20 +191,23 @@ object GraftConfig {
       purgeToleranceMs = props.getProperty("graft.purge.tolerance.ms", "0").toLong,
       kafkaBootstrap = props.getProperty("graft.kafka.bootstrap", ""),
       kafkaTopic = props.getProperty("graft.kafka.topic", ""),
-      maxSearchScanBytes = props.getProperty("graft.search.max.scan.bytes", "0").toLong,
-      scratchBytes = props.getProperty("graft.scratch.bytes", "0").toLong,
-      refineRounds = props.getProperty("graft.refine.rounds", "2").toInt,
-      derivedDir = props.getProperty("graft.derived.dir", ""),
-      // credentials fall back to the standard AWS env vars (the
-      // reference's envOrElseConfig order: environment wins over file —
-      // keeps secrets out of checked-in conf files)
-      s3Endpoint = props.getProperty("graft.s3.endpoint", ""),
-      s3AccessKey = sys.env.getOrElse("AWS_ACCESS_KEY_ID",
-        props.getProperty("graft.s3.access.key", "")),
-      s3SecretKey = sys.env.getOrElse("AWS_SECRET_ACCESS_KEY",
-        props.getProperty("graft.s3.secret.key", "")),
-      s3PathStyleAccess =
-        props.getProperty("graft.s3.path.style", "false").toBoolean,
-      s3SslEnabled = props.getProperty("graft.s3.ssl", "true").toBoolean)
+      maxSearchScanBytes = props.getProperty("graft.search.max.scan.bytes", "0").toLong)
+  }
+
+  /** The session of every graft CLI (search, search server, ingest,
+    * compactor, storage info, populator): master `SPARK_MASTER` (default
+    * `local[4]`), `SPARK_GRAFT_CPUS` shuffle partitions (default 4), no
+    * UI, `WARN` logging. Any other setting comes from Spark's own
+    * `spark.*` properties, which the builder loads from the JVM's system
+    * properties and `spark-defaults.conf`. */
+  def cliSession(appName: String): org.apache.spark.sql.SparkSession = {
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

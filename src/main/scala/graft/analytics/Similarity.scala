@@ -345,20 +345,6 @@ object Similarity {
       .as(Seq("tbl", "code")))
       .withColumn("bucket", expr(s"code div ${1L << GraphSplitBits}"))
 
-  /** Distinct candidate pairs of the multi-table build under `cap`: one
-    * `(tbl, bucket, cell)` equality self-join over the slim code frame,
-    * then a distinct on `(q_id, n_id)` so a pair co-occurring in several
-    * tables is scored ONCE (and cannot occupy two top-k slots). The
-    * shuffle moves only id pairs — ≤ T·cap·N rows of two longs. */
-  private def graphPairs(codes: DataFrame, cap: Int): DataFrame = {
-    val cc = withCells(codes, bucketDivisors(codes, cap))
-    cc.select(col("vec_id").as("q_id"), col("tbl"), col("bucket"), col("cell"))
-      .join(cc.select(col("vec_id").as("n_id"), col("tbl"), col("bucket"),
-        col("cell")), Seq("tbl", "bucket", "cell"))
-      .filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id")).distinct()
-  }
-
   /** Exact-cosine scores for an id-pair stream: two equi-joins against
     * the vector base — the single place embeddings attach. */
   private def scorePairs(pairs: DataFrame, base: DataFrame): DataFrame =
@@ -436,9 +422,10 @@ object Similarity {
     }.mkString(",\n")
   }
 
-  /** DuckDB twin of [[bucketDivisors]] + [[withCells]] + [[graphPairs]]
-    * under `cap`: per-table `cells${t}$tag`/`bvc${t}$tag` CTEs and the
-    * deduped union `pairs$tag(q_id, n_id)`; `qPred` optionally restricts
+  /** DuckDB twin of [[bucketDivisors]] + [[withCells]] and the
+    * `(tbl, bucket, cell)` self-join under `cap`: per-table
+    * `cells${t}$tag`/`bvc${t}$tag` CTEs and the deduped union
+    * `pairs$tag(q_id, n_id)`; `qPred` optionally restricts
     * the q side (the recall harness's bounded sample). */
   private def graphPairsSql(tag: String, cap: Int, qPred: String = ""): String = {
     val perTable = (0 until GraphTables).map { t =>
@@ -621,8 +608,7 @@ object Similarity {
     * Recall lift is measured by [[knnGraphRefineRecall]]; further rounds
     * compound (each is this same operator over its own output).
     */
-  /** NN-descent round count: `spark.graft.refine.rounds` (or the
-    * `SPARK_GRAFT_REFINE_ROUNDS` env for bench chains), default 1 — the
+  /** NN-descent round count: `spark.graft.refine.rounds`, default 1 — the
     * oracle-gated shape. Rounds compound (each is [[refineRound]] over
     * the previous round's edges); the measured cost/recall curve on the
     * planted-cluster corpus is 68% → 78% (round 1) → 82% (round 2)
@@ -630,8 +616,8 @@ object Similarity {
     * `tools/ClusteredRecallBench`), so round 2 buys half the remaining
     * headroom for one more linear 4k²N candidate pass.
     *
-    * THE DEPLOYMENT DEFAULT IS 2 ([[graft.GraftConfig.refineRounds]] —
-    * any config-driven session gets it via `applySessionConfs`): at
+    * THE DEPLOYMENT RECOMMENDATION IS 2 (`-Dspark.graft.refine.rounds=2`
+    * in `GRAFT_JAVA_OPTS`, or the same key in `spark-defaults.conf`): at
     * ×1000 density (`CLUSTERED_RECALL_X1000.json`) capped LSH degrades
     * 68% → 42% while round 2 recovers 82.7%, above the 79.3%
     * unbounded-LSH ceiling — the cap is the scale-survival mechanism
@@ -639,7 +625,6 @@ object Similarity {
     * bare-library shape the oracle pins. */
   private[graft] def refineRounds(spark: SparkSession): Int = {
     val r = spark.conf.getOption("spark.graft.refine.rounds")
-      .orElse(sys.env.get("SPARK_GRAFT_REFINE_ROUNDS"))
       .map(_.trim.toInt).getOrElse(1)
     require(r >= 1, s"spark.graft.refine.rounds must be >= 1, got $r")
     r

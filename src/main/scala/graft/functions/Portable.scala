@@ -117,8 +117,6 @@ object Portable {
       s"CAST($a[k+1] AS DOUBLE) * CAST($b[k+1] AS DOUBLE))")
 
   /** L2 norm via the same sequential fold. */
-  def l2norm(a: Column): Column = sqrt(seqSum(transform(a, x => x * x)))
-
   def l2normSql(a: String, dim: Int): String =
     s"sqrt(${seqSumSql(s"list_transform(range($dim), k -> " +
       s"CAST($a[k+1] AS DOUBLE) * CAST($a[k+1] AS DOUBLE))")})"

@@ -1011,8 +1011,9 @@ object GraftFunctions {
 
   /** Resolve a registration-time scalar argument that must be a foldable
     * integer literal (e.g. `graft_hash_features(toks, 64)`). SQL callers
-    * can pass INT or BIGINT literals (or any foldable integral
-    * expression); anything non-foldable or non-integral gets a clear
+    * can pass TINYINT, SMALLINT, INT or BIGINT literals (or any foldable
+    * integral expression); anything non-foldable or non-integral — a
+    * `2.5D` is not narrowed to 2 — gets a clear
     * AnalysisException instead of a ClassCastException/NPE out of the
     * resolver.
     */
@@ -1022,8 +1023,9 @@ object GraftFunctions {
     if (!e.foldable) fail(s"got non-foldable expression ${e.sql}")
     e.eval() match {
       case null => fail("got NULL")
-      case n: java.lang.Number =>
-        val v = n.longValue
+      case n @ (_: java.lang.Byte | _: java.lang.Short | _: java.lang.Integer |
+                _: java.lang.Long) =>
+        val v = n.asInstanceOf[java.lang.Number].longValue
         if (v < Int.MinValue || v > Int.MaxValue) fail(s"$v out of int range")
         v.toInt
       case other => fail(s"got ${other.getClass.getSimpleName} literal")

@@ -25,34 +25,10 @@ object IngestPipeline {
 
   private val rawSchema = new StructType().add("value", StringType)
 
-  /** Name under which [[writeLanding]] publishes per-batch data-quality
+  /** Name under which [[journalStream]] publishes per-batch data-quality
     * metrics (rows written, delete-marker share) — read them from
     * `StreamingQueryProgress.observedMetrics`. */
   val ObservedMetricsName = "graft_ingest"
-
-  /** Shared landing sink for every source variant. The `observe` call
-    * attaches data-quality counters to the SAME pass that writes the
-    * batch — no second job, no sampling — surfaced per micro-batch in
-    * the query's progress events (the streaming face of the
-    * SearchMetricsSource counters).
-    */
-  private def writeLanding(parsed: DataFrame, landingDir: String,
-                           checkpointDir: String, trigger: Trigger): StreamingQuery =
-    parsed
-      .observe(ObservedMetricsName,
-        org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("rows_written"),
-        org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.when(col("type") === "delete", 1))
-          .as("delete_markers"))
-      .writeStream
-      .trigger(trigger)
-      .outputMode(OutputMode.Append())
-      .format("parquet")
-      .partitionBy("bucket", "opGroup")
-      .option("checkpointLocation", checkpointDir)
-      .option("path", landingDir)
-      .start()
 
   /** Kafka-shaped frame (binary `key`/`value` + topic/partition/offset
     * metadata) → journal lines: the value payload cast to string, ready
@@ -78,8 +54,7 @@ object IngestPipeline {
       .schema(rawSchema)
       .options(sourceOptions)
       .text(inputDir)
-    writeLanding(EventParser.parse(raw, "value", excludeBucket, groupInterval),
-      landingDir, checkpointDir, trigger)
+    journalStream(raw, landingDir, checkpointDir, trigger, excludeBucket, groupInterval)
   }
 
   /** Production source: Kafka metadata journal → landing
@@ -99,22 +74,37 @@ object IngestPipeline {
       .option("startingOffsets", "earliest")
       .option("failOnDataLoss", "false")
       .load()
-    writeLanding(
-      EventParser.parse(fromKafkaFrame(raw), "value", excludeBucket, groupInterval),
-      landingDir, checkpointDir, trigger)
+    journalStream(fromKafkaFrame(raw), landingDir, checkpointDir, trigger,
+      excludeBucket, groupInterval)
   }
 
-  /** Any pre-built streaming frame with a string `value` column → landing:
-    * the seam the Kafka spec drives with a memory stream shaped like the
-    * connector's output (and the hook for custom sources).
+  /** Any streaming frame with a string `value` column → landing: the one
+    * parse and sink behind every source (the file and Kafka journals, the
+    * memory stream the Kafka spec drives, custom sources). The `observe`
+    * call attaches data-quality counters to the SAME pass that writes the
+    * batch — no second job, no sampling — surfaced per micro-batch in the
+    * query's progress events (the streaming face of the
+    * SearchMetricsSource counters).
     */
-  def journalStream(parsedSource: DataFrame, landingDir: String, checkpointDir: String,
+  def journalStream(raw: DataFrame, landingDir: String, checkpointDir: String,
                     trigger: Trigger = Trigger.AvailableNow(),
                     excludeBucket: String = "",
                     groupInterval: Long = 10000L): StreamingQuery =
-    writeLanding(
-      EventParser.parse(parsedSource, "value", excludeBucket, groupInterval),
-      landingDir, checkpointDir, trigger)
+    EventParser.parse(raw, "value", excludeBucket, groupInterval)
+      .observe(ObservedMetricsName,
+        org.apache.spark.sql.functions.count(
+          org.apache.spark.sql.functions.lit(1)).as("rows_written"),
+        org.apache.spark.sql.functions.count(
+          org.apache.spark.sql.functions.when(col("type") === "delete", 1))
+          .as("delete_markers"))
+      .writeStream
+      .trigger(trigger)
+      .outputMode(OutputMode.Append())
+      .format("parquet")
+      .partitionBy("bucket", "opGroup")
+      .option("checkpointLocation", checkpointDir)
+      .option("path", landingDir)
+      .start()
 
   /** Batch backfill of the same pipeline (identical transform + layout). */
   def batchIngest(spark: SparkSession, raw: DataFrame, landingDir: String,

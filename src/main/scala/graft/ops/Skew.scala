@@ -6,18 +6,13 @@ import org.apache.spark.sql.functions._
 /** Skew mitigation for the cases AQE can't fix.
   *
   * AQE's runtime skew-join splitting (on by default) handles sort-merge
-  * joins; these helpers cover the remaining patterns:
+  * joins; this helper covers the remaining pattern:
   *
   *  - [[saltedJoin]]: equi-join where one side has pathological key skew
   *    and the other is too large to broadcast — salt the skewed side,
   *    replicate the other over the salt domain, join on (key, salt). Each
   *    hot key's rows spread over `saltFactor` shuffle partitions instead
   *    of one.
-  *  - [[saltedCountSum]]: two-stage aggregation under key skew with very
-  *    high per-key row counts; partial aggregates by (key, salt) collapse
-  *    the hot key before the final narrow merge by key. (Plain
-  *    `groupBy(key)` already does map-side partial aggregation — this is
-  *    only for when single-key volume still overwhelms one reducer.)
   */
 object Skew {
 
@@ -38,15 +33,4 @@ object Skew {
       explode(sequence(lit(0L), lit(saltFactor - 1L))))
     s.join(o, Seq(key, "__salt")).drop("__salt")
   }
-
-  /** Two-stage `groupBy(key).agg(count, sum(valueCol))` with a spreading
-    * salt on the first stage.
-    */
-  def saltedCountSum(df: DataFrame, key: String, valueCol: String,
-                     saltFactor: Int): DataFrame =
-    df.withColumn("__salt", salt(df, saltFactor))
-      .groupBy(col(key), col("__salt"))
-      .agg(count(lit(1)).as("__n"), sum(col(valueCol)).as("__s"))
-      .groupBy(col(key))
-      .agg(sum(col("__n")).as("n"), sum(col("__s")).as(s"sum_$valueCol"))
 }

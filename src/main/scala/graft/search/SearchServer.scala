@@ -400,14 +400,7 @@ object SearchServer {
     require(rest.length >= 2,
       "usage: SearchServer [--http <port>] <landingDir> <stagingDir> [cacheTtlMillis]")
     val ttl = if (rest.length > 2) rest(2).toLong else 60000L
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-search-server")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftConfig.cliSession("graft-search-server")
     val server = new SearchServer(spark, rest(0), rest(1), ttl)
     try httpPort match {
       case Some(p) =>

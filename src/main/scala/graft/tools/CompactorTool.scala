@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.GraftConfig
 import graft.compact.Compactor
-import org.apache.spark.sql.SparkSession
 
 /** CLI compaction entrypoint — the cron-job face of
   * [[graft.compact.Compactor]] (reference:
@@ -40,14 +39,7 @@ object CompactorTool {
       catch { case _: IllegalArgumentException => return usage() }
     val conf = GraftConfig.fromFile(args(0))
     val bucket = if (args.length > 2) Some(args(2)) else None
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-compactor")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftConfig.cliSession("graft-compactor")
     val compactor = new Compactor(spark, conf.landingDir, conf.stagingDir,
       conf.purgeToleranceMs)
     val failures: Map[String, Throwable] = bucket match {

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.{GraftConfig, GraftEngine}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 /** Long-lived ingestion entrypoint — the process the reference's master
@@ -28,14 +27,7 @@ object IngestTool {
       "no kafka.bootstrap configured: a <journalDir> argument is required")
     val journalDir = if (args.length > 1) args(1) else ""
     val intervalMs = if (args.length > 2) args(2).toLong else 10000L
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-ingest")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftConfig.cliSession("graft-ingest")
     new GraftEngine(spark, conf)
       .startIngest(journalDir, Trigger.ProcessingTime(intervalMs))
       .awaitTermination()

@@ -1,6 +1,7 @@
 package graft.tools
 
-import graft.ingest.EventParser
+import graft.GraftConfig
+import graft.ingest.IngestPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -45,11 +46,9 @@ object Populator {
 
   /** Generate + parse + write straight into a landing zone. */
   def populateLanding(spark: SparkSession, landingDir: String, bucket: String,
-                      n: Long, numFiles: Int = 1, groupInterval: Long = 10000L): Unit = {
-    EventParser.parse(journalLines(spark, bucket, n, numFiles), "value",
-        excludeBucket = "", groupInterval = groupInterval)
-      .write.partitionBy("bucket", "opGroup").mode("append").parquet(landingDir)
-  }
+                      n: Long, numFiles: Int = 1, groupInterval: Long = 10000L): Unit =
+    IngestPipeline.batchIngest(spark, journalLines(spark, bucket, n, numFiles),
+      landingDir, groupInterval = groupInterval)
 
   /** CLI (reference: LandingMetadataPopulatorTool's main):
     * `runMain graft.tools.Populator <landingDir> <bucket> <n> [numFiles] [groupInterval]`
@@ -57,13 +56,7 @@ object Populator {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
       "usage: Populator <landingDir> <bucket> <nRecords> [numFiles] [groupInterval]")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-populator")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftConfig.cliSession("graft-populator")
     populateLanding(spark, args(0), args(1), args(2).toLong,
       if (args.length > 3) args(3).toInt else 1,
       if (args.length > 4) args(4).toLong else 10000L)

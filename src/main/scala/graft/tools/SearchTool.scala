@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.GraftConfig
 import graft.search.{MetadataSearch, SearchQuery}
-import org.apache.spark.sql.SparkSession
 
 /** CLI search entrypoint
   * (reference: MetadataQueryExecutor's `main` — bucket + where + limit in,
@@ -17,14 +17,7 @@ object SearchTool {
     val Array(landing, staging, bucket, where) = args.take(4)
     val limit = if (args.length > 4) args(4).toInt else 1000
     val startKey = if (args.length > 5) Some(args(5)) else None
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-search")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftConfig.cliSession("graft-search")
     val search = new MetadataSearch(spark, landing, staging)
     search.searchJson(SearchQuery(bucket, where, startKey, limit)).foreach(println)
     spark.stop()

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.GraftConfig
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
@@ -40,14 +41,7 @@ object StorageInfo {
     */
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: StorageInfo <zoneDir> [zoneDir ...]")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-storage-info")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftConfig.cliSession("graft-storage-info")
     args.foreach { dir =>
       val s = zoneStats(spark, dir)
       println(s"""{"path":"${s.path}","parquetFiles":${s.parquetFiles},""" +

@@ -88,77 +88,45 @@ class ConfigToolsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("quote URIs"))
   }
 
-  test("s3 block wires the object-store connection onto the session") {
-    // the reference's deployment premise (SparkUtils.scala:26-70):
-    // endpoint/credentials/path-style/SSL flow from the conf file into
-    // the session AND the context Hadoop conf every FileSystem.get reads
-    val conf = GraftConfig.fromFile(writeConf(
-      "s3a://md-bucket/zones/landing", "s3a://md-bucket/zones/staging",
-      extra =
-        """  s3 {
-          |    endpoint = "object.example.internal:8000"
-          |    access.key = AKTEST
-          |    secret.key = sk-test
-          |    path.style = true
-          |    ssl = false
-          |  }
-          |""".stripMargin))
-    assert(conf.landingDir == "s3a://md-bucket/zones/landing",
-      "zone paths must accept s3a:// URIs")
-    assert(conf.s3Endpoint == "object.example.internal:8000")
-    assert(conf.s3PathStyleAccess && !conf.s3SslEnabled)
-    // env-provided credentials would override the file; only assert the
-    // file values when the env doesn't carry them
-    if (!sys.env.contains("AWS_ACCESS_KEY_ID"))
-      assert(conf.s3AccessKey == "AKTEST" && conf.s3SecretKey == "sk-test")
-    conf.applySessionConfs(spark)
-    try {
-      val hc = spark.sparkContext.hadoopConfiguration
-      assert(hc.get("fs.s3a.endpoint") == "object.example.internal:8000")
-      assert(hc.get("fs.s3a.path.style.access") == "true")
-      assert(hc.get("fs.s3a.connection.ssl.enabled") == "false")
-      assert(spark.conf.get("spark.hadoop.fs.s3a.endpoint") ==
-        "object.example.internal:8000")
-      // an s3a zone root resolves as a path (scheme survives; no
-      // filesystem I/O — the sandbox has no S3 endpoint)
-      spark.conf.set("spark.graft.derived.dir", "s3a://md-bucket/derived")
-      assert(new org.apache.hadoop.fs.Path(
-        graft.ops.DerivedZone.root(spark), "x").toUri.getScheme == "s3a")
-    } finally {
-      spark.conf.unset("spark.graft.derived.dir")
-      // applySessionConfs publishes the deployment refine-rounds default;
-      // the suites share one session, and a leaked 2 would change the ANN
-      // plans (and scan budgets) other specs pin against the library
-      // default of 1
-      spark.conf.unset(GraftConfig.RefineRoundsConf)
-      Seq("fs.s3a.endpoint", "fs.s3a.path.style.access",
-        "fs.s3a.connection.ssl.enabled", "fs.s3a.access.key",
-        "fs.s3a.secret.key").foreach { k =>
-        spark.sparkContext.hadoopConfiguration.unset(k)
-        spark.conf.unset(s"spark.hadoop.$k")
-      }
+  test("fromFile rejects a graft.* key it does not read, naming the key") {
+    // session settings are spark.* properties; a graft.* copy of one in
+    // the conf file would otherwise be dropped without a word
+    Seq(
+      """  s3 {
+        |    endpoint = "object.example.internal:8000"
+        |  }
+        |""".stripMargin -> "graft.s3.endpoint",
+      "  derived.dir = \"/zones/derived\"\n" -> "graft.derived.dir",
+      "  refine.rounds = 2\n" -> "graft.refine.rounds"
+    ).foreach { case (extra, key) =>
+      val e = intercept[IllegalArgumentException](
+        GraftConfig.fromFile(writeConf("/zones/landing", "/zones/staging", extra)))
+      assert(e.getMessage.contains(s"unknown config key $key") &&
+        e.getMessage.contains("-Dspark.<key> in GRAFT_JAVA_OPTS"), e.getMessage)
     }
   }
 
-  test("the deployment refine-rounds default is 2 and publishes onto the session") {
-    val conf = GraftConfig.fromFile("conf/graft.conf.example")
-    assert(conf.refineRounds == 2,
-      "shipped deployment default must be the measured recall recommendation")
-    conf.applySessionConfs(spark)
-    try assert(spark.conf.get(GraftConfig.RefineRoundsConf) == "2")
-    finally spark.conf.unset(GraftConfig.RefineRoundsConf)
-    // the library-level default (no config) stays the oracle-gated 1
-    assert(graft.analytics.Similarity.refineRounds(spark) == 1)
-    intercept[IllegalArgumentException](GraftConfig(
-      landingDir = "/l", stagingDir = "/s", checkpointDir = "/c",
-      refineRounds = 0))
-  }
-
-  test("the example config's s3 block is parseable when uncommented") {
-    val text = java.nio.file.Files.readString(
-      java.nio.file.Paths.get("conf/graft.conf.example"))
-    assert(text.contains("s3 {") || text.contains("# s3"),
-      "example config must document the s3 connection block")
+  test("a properties file of spark.* keys plus the graft zone dirs parses, s3a zones included") {
+    // a spark-submit --properties-file carries Spark's keys beside graft's
+    val f = SparkTestSession.tempFile("graft", ".properties")
+    java.nio.file.Files.writeString(f,
+      """spark.hadoop.fs.s3a.endpoint = object.example.internal:8000
+        |spark.hadoop.fs.s3a.path.style.access = true
+        |spark.graft.derived.dir = "s3a://md-bucket/derived"
+        |spark.graft.refine.rounds = 2
+        |graft.landing.dir = "s3a://md-bucket/zones/landing"
+        |graft.staging.dir = "s3a://md-bucket/zones/staging"
+        |""".stripMargin)
+    val conf = GraftConfig.fromFile(f.toString)
+    assert(conf.landingDir == "s3a://md-bucket/zones/landing",
+      "zone paths must accept s3a:// URIs")
+    assert(conf.stagingDir == "s3a://md-bucket/zones/staging")
+    // the derived-zone root keeps its scheme (the path is only resolved,
+    // never opened)
+    spark.conf.set("spark.graft.derived.dir", "s3a://md-bucket/derived")
+    try assert(new org.apache.hadoop.fs.Path(
+      graft.ops.DerivedZone.root(spark), "x").toUri.getScheme == "s3a")
+    finally spark.conf.unset("spark.graft.derived.dir")
   }
 
   test("scratch budget: explicit conf wins; unset local master derives from free disk") {

@@ -189,4 +189,109 @@ class EventOpsSpec extends AnyFunSuite {
     // slots but must count once per window
     assert(got.nonEmpty && reference.nonEmpty)
   }
+
+  test("events_growth: classes partition actives; totals reconcile with the log") {
+    import graft.analytics.EventOps
+    val out = EventOps.growth(spark, sf).collect()
+    assert(out.nonEmpty)
+    out.foreach { r =>
+      assert(r.getAs[Long]("n_active") ==
+        r.getAs[Long]("n_new") + r.getAs[Long]("n_retained") +
+          r.getAs[Long]("n_resurrected"))
+    }
+    // every user is new exactly once
+    val users = Tables.events(spark, sf).select("user_id").distinct().count()
+    assert(out.map(_.getAs[Long]("n_new")).sum == users)
+    // per-day actives equal a direct distinct recount
+    val direct = Tables.events(spark, sf)
+      .select(col("user_id"),
+        date_format(timestamp_seconds(expr("ts div 1000000000")), "yyyy-MM-dd").as("day"))
+      .distinct().groupBy("day").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    out.foreach(r =>
+      assert(r.getAs[Long]("n_active") == direct(r.getAs[String]("day"))))
+  }
+
+  test("events_cooccurrence: lift recomputes from the marginals; bounds hold") {
+    import graft.analytics.EventOps
+    val out = EventOps.cooccurrence(spark, sf).collect()
+    assert(out.nonEmpty)
+    val users = Tables.events(spark, sf).select("user_id").distinct().count()
+    out.foreach { r =>
+      val (both, na, nb) = (r.getAs[Long]("n_both"),
+        r.getAs[Long]("n_a"), r.getAs[Long]("n_b"))
+      assert(both <= math.min(na, nb))
+      assert(r.getAs[String]("type_a") < r.getAs[String]("type_b"))
+      val lift = math.rint(both.toDouble * users / (na.toDouble * nb) * 1e6) / 1e6
+      assert(math.abs(r.getAs[Double]("lift") - lift) < 1e-9)
+    }
+  }
+
+  test("events_stickiness: DAU ≤ MAU, window recount matches for every day") {
+    import graft.analytics.EventOps
+    val out = EventOps.stickiness(spark, sf).collect()
+    assert(out.nonEmpty)
+    // independent recount from the raw log
+    val ud = Tables.events(spark, sf)
+      .select(col("user_id"), expr("ts div 1000000000 div 86400").as("eday"))
+      .distinct().collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val days = ud.map(_._2).distinct.sorted
+    val fmt = java.time.format.DateTimeFormatter.ISO_LOCAL_DATE
+    val expect = days.map { d =>
+      val label = java.time.LocalDate.ofEpochDay(d).format(fmt)
+      val dau = ud.count(_._2 == d).toLong
+      val mau = ud.filter(t => t._2 <= d && t._2 > d - 30).map(_._1).distinct.length.toLong
+      label -> ((dau, mau))
+    }.toMap
+    assert(out.length == days.length)
+    out.foreach { r =>
+      val (d, m) = expect(r.getAs[String]("day"))
+      assert(r.getAs[Long]("dau") == d && r.getAs[Long]("mau") == m)
+      assert(d <= m)
+      assert(r.getAs[Long]("stickiness_ppm") == d * 1000000L / m)
+    }
+  }
+
+  test("events_seasonality: cells bounded, shares exact, counts recount") {
+    import graft.analytics.EventOps
+    val out = EventOps.seasonality(spark, sf).collect()
+    assert(out.nonEmpty && out.length <= 168)
+    val total = out.map(_.getAs[Long]("n")).sum
+    assert(total == Tables.events(spark, sf).count())
+    out.foreach { r =>
+      assert(r.getAs[Long]("day_of_week") >= 0 && r.getAs[Long]("day_of_week") <= 6)
+      assert(r.getAs[Long]("hour_of_day") >= 0 && r.getAs[Long]("hour_of_day") <= 23)
+      assert(r.getAs[Long]("share_ppm") == r.getAs[Long]("n") * 1000000L / total)
+    }
+    // 2024-01-01 (the stream head) was a Monday = day 1
+    val direct = Tables.events(spark, sf)
+      .select(expr("(ts div 1000000000 div 86400 + 4) % 7").as("dw"))
+      .groupBy("dw").count().collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val byDw = out.groupBy(_.getAs[Long]("day_of_week"))
+      .view.mapValues(_.map(_.getAs[Long]("n")).sum).toMap
+    assert(byDw == direct)
+  }
+
+  test("events_concentration: decades reconcile with a naive sorted recount") {
+    import graft.analytics.EventOps
+    val out = EventOps.concentration(spark, sf).collect()
+    assert(out.nonEmpty)
+    // naive recount: sort user counts desc, take ranks 1..999, bucket by
+    // rank length — ties interchangeable for every emitted statistic
+    val counts = Tables.events(spark, sf)
+      .groupBy("user_id").count().collect().map(_.getLong(1)).sortBy(-_)
+    val total = counts.sum
+    val byDecade = counts.take(999).zipWithIndex
+      .groupBy { case (_, i) => (i + 1).toString.length }
+      .view.mapValues(v => (v.length.toLong, v.map(_._1).sum)).toMap
+    assert(out.length == byDecade.size)
+    out.foreach { r =>
+      val (nu, ne) = byDecade(r.getAs[Int]("decade"))
+      assert(r.getAs[Long]("n_users") == nu)
+      assert(r.getAs[Long]("n_events") == ne)
+      assert(r.getAs[Long]("share_ppm") == ne * 1000000L / total)
+    }
+  }
 }

@@ -214,6 +214,12 @@ class SigExpressionsSpec extends AnyFunSuite {
     }
     assert(rootChain(nullLit).exists(c =>
       Option(c.getMessage).exists(_.contains("integer literal"))))
+    val fracLit = intercept[Exception] {
+      spark.sql("SELECT graft_hash_features('a', 2.5D)").head()
+    }
+    assert(rootChain(fracLit).exists(c => Option(c.getMessage)
+      .exists(_.contains("nBuckets must be an integer literal (got Double literal)"))),
+      s"a fractional literal must not be narrowed, got: $fracLit")
     // a boolean argument's error names it as the expression does
     val badDedupe = intercept[Exception] {
       spark.sql("SELECT graft_topk(named_struct('score', 1.0d, 'id', 1L), 2, 1)").head()

@@ -77,6 +77,7 @@ class SimilaritySpec extends AnyFunSuite {
       assert(got.toSeq == expected.toSeq)
     } finally spark.conf.unset("spark.graft.refine.rounds")
     // default (knob unset) stays the oracle-gated single round
+    assert(Similarity.refineRounds(spark) == 1)
     val single = Similarity.knnGraphRefine(spark, sf)
       .collect().map(_.toString).sorted
     assert(single.toSeq == r1.collect().map(_.toString).sorted.toSeq)

@@ -99,6 +99,10 @@ class SqlSurfaceSpec extends AnyFunSuite {
         spark.sql("SELECT key FROM graft_search('sb', '', '', 4294967297L)").collect())
       assert(err.getMessage.contains("graft_search: limit must be an integer literal") &&
         err.getMessage.contains("4294967297 out of int range"), err.getMessage)
+      val frac = intercept[Exception](
+        spark.sql("SELECT key FROM graft_search('sb', '', '', 2.5D)").collect())
+      assert(frac.getMessage.contains("graft_search: limit must be an integer literal") &&
+        frac.getMessage.contains("got Double literal"), frac.getMessage)
       assert(spark.sql("SELECT key FROM graft_search('sb', '', '', 2L)").count() == 2)
     } finally engine.close()
   }
